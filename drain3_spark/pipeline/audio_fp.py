@@ -14,7 +14,9 @@ Pipeline shape (all Catalyst between the Arrow kernels):
 
 1. ``audio_fingerprints``: decode → framed log-power STFT on a fixed
    Hz bin grid → 2-D local-max PEAKS → anchor/target PAIR HASHES.
-   One ``mapInPandas`` pass, one output row per hash:
+   One pass of the shared per-clip Arrow loop
+   (:func:`drain3_spark.audio.runner.map_clips`), one output row per
+   hash:
    ``(clip_id, hash, t)`` with ``t`` the anchor frame index.
 2. The corpus' hash rows are the INVERTED INDEX — a plain DataFrame
    you persist once and reuse across query batches (same asset shape
@@ -45,11 +47,12 @@ mirrors drain3's miner/matcher split (drain3/template_miner.py:96 vs
 
 from __future__ import annotations
 
-from typing import Dict, Iterator, Optional, Tuple
+from typing import Dict, Optional, Tuple
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
+
+from drain3_spark.audio.runner import map_clips
 
 FINGERPRINT_SCHEMA = T.StructType([
     T.StructField("clip_id", T.StringType()),
@@ -182,38 +185,29 @@ def audio_fingerprints(clips: DataFrame, frame_ms: int = FRAME_MS,
     yield no rows (the decode CHECK family owns flagging them).  The
     output over a corpus IS the inverted index: persist it, then join
     query fingerprints against it (:func:`fingerprint_matches`)."""
-    from drain3_spark.shipping import ship_package
-    ship_package(clips.sparkSession)
     kw = dict(frame_ms=frame_ms, hop_ms=hop_ms, f_lo=f_lo, f_hi=f_hi,
               t_nb=t_nb, f_nb=f_nb, thresh_db=thresh_db,
               per_frame=per_frame, zone_t=zone_t, zone_f=zone_f,
               fanout=fanout)
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from drain3_spark.audio.codecs import decode
-        for b in batches:
-            ids, hs, ts = [], [], []
-            for cid, payload, sr, codec in zip(b["clip_id"], b["bytes"],
-                                               b["sr_hz"], b["codec"]):
-                try:
-                    pcm = decode(bytes(payload), codec).astype(np.float64)
-                except Exception:
-                    continue
-                if len(pcm) == 0 or not sr:
-                    continue
-                hashes, anchors = fingerprint_kernel(pcm, int(sr), **kw)
-                ids.extend([cid] * len(hashes))
-                hs.append(hashes)
-                ts.append(anchors)
-            yield pd.DataFrame({
-                "clip_id": ids,
-                "hash": np.concatenate(hs) if hs else np.zeros(0, np.int64),
-                "t": (np.concatenate(ts) if ts
-                      else np.zeros(0, np.int64)).astype(np.int32),
-            })
+    def extract(rows):
+        ids, hs, ts = [], [], []
+        for (cid, _, sr, _c), pcm in rows:
+            if pcm is None or len(pcm) == 0 or not sr:
+                continue
+            hashes, anchors = fingerprint_kernel(pcm.astype(np.float64),
+                                                 int(sr), **kw)
+            ids.extend([cid] * len(hashes))
+            hs.append(hashes)
+            ts.append(anchors)
+        return {
+            "clip_id": ids,
+            "hash": np.concatenate(hs) if hs else np.zeros(0, np.int64),
+            "t": (np.concatenate(ts) if ts
+                  else np.zeros(0, np.int64)).astype(np.int32),
+        }
 
-    return (clips.select("clip_id", "bytes", "sr_hz", "codec")
-            .mapInPandas(extract, FINGERPRINT_SCHEMA))
+    return map_clips(clips, extract, FINGERPRINT_SCHEMA)
 
 
 def update_fingerprint_index(index_fps: DataFrame, new_fps: DataFrame,

@@ -39,9 +39,10 @@ the python worker process, so at scale each executor derives each
 sample rate once.
 
 100-TB shape: measurement is embarrassingly parallel (one decode +
-one rFFT-convolve per clip inside batched Arrow ``mapInPandas``, no
-shuffle until the consumer aggregates); normalization re-encodes
-in-task and carries the same payload-column contract as
+one rFFT-convolve per clip inside the shared per-clip Arrow loop,
+:func:`drain3_spark.audio.runner.map_clips`; no shuffle until the
+consumer aggregates); normalization re-encodes in-task and carries
+the same payload-column contract as
 ``resample_clips``/``trim_silence`` (rejoin transcript/ds on
 ``clip_id``).  The reference (/root/reference/drain3) has no audio
 surface; this extends the validation engine's payload family (C8).
@@ -50,11 +51,13 @@ surface; this extends the validation engine's payload family (C8).
 from __future__ import annotations
 
 import math
-from typing import Iterator, Optional
+from typing import Optional
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, types as T
+
+from drain3_spark.audio.codecs import encode
+from drain3_spark.audio.runner import PAYLOAD_COLS, map_clips
 
 # analog prototype parameters of the two K-weighting stages (public
 # derivation — module docstring); the spec's 48 kHz table is the
@@ -340,44 +343,28 @@ def loudness_stats(clips: DataFrame, carry: tuple = ()) -> DataFrame:
     corpus scale a rollup keyed on ds/codec should carry them here
     rather than re-join on ``clip_id`` (a second full scan plus a
     corpus-sized shuffle)."""
-    from drain3_spark.shipping import ship_package
-    from drain3_spark.util import carry_schema
     from drain3_spark.audio.synth import SR_CHOICES
-    ship_package(clips.sparkSession)
     nulls = (None, None, 0, 0, None, None)
-    schema = carry_schema(LOUDNESS_SCHEMA, clips, carry)
     # standard-rate IRs computed once on the driver and shipped in the
     # closure: reused workers skip the per-rate IR build entirely
     pre_irs = {int(s): k_weighting_ir(int(s)) for s in SR_CHOICES}
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from drain3_spark.audio.codecs import decode
-        from drain3_spark.pipeline.audio_loudness import preseed_ir_cache
+    def extract(rows):
         preseed_ir_cache(pre_irs)
-        for b in batches:
-            out = []
-            for cid, payload, sr, codec, *extra in zip(
-                    b["clip_id"], b["bytes"], b["sr_hz"], b["codec"],
-                    *(b[c] for c in carry)):
-                try:
-                    pcm = decode(bytes(payload), codec)
-                except Exception:
-                    out.append((cid, 0) + nulls + tuple(extra))
-                    continue
-                if not sr or len(pcm) == 0:
-                    out.append((cid, len(pcm)) + nulls + tuple(extra))
-                    continue
+        for (cid, _, sr, _c, *extra), pcm in rows:
+            if pcm is None:
+                yield (cid, 0) + nulls + tuple(extra)
+            elif not sr or len(pcm) == 0:
+                yield (cid, len(pcm)) + nulls + tuple(extra)
+            else:
                 y = k_weight(np.asarray(pcm, dtype=np.float64), int(sr))
-                out.append((cid, len(pcm))
-                           + lufs_kernel(pcm, int(sr), _kw=y)
-                           + (lra_kernel(pcm, int(sr), _kw=y),
-                              true_peak_dbfs(pcm))
-                           + tuple(extra))
-            yield pd.DataFrame(out, columns=[f.name for f in schema])
+                yield ((cid, len(pcm))
+                       + lufs_kernel(pcm, int(sr), _kw=y)
+                       + (lra_kernel(pcm, int(sr), _kw=y),
+                          true_peak_dbfs(pcm))
+                       + tuple(extra))
 
-    cols = ["clip_id", "bytes", "sr_hz", "codec"] + [
-        c for c in carry if c not in ("clip_id", "bytes", "sr_hz", "codec")]
-    return clips.select(*cols).mapInPandas(extract, schema)
+    return map_clips(clips, extract, LOUDNESS_SCHEMA, carry=carry)
 
 
 NORMALIZED_SCHEMA = T.StructType([
@@ -407,8 +394,6 @@ def normalize_loudness(clips: DataFrame, target_lufs: float = -23.0,
     Measure + apply in ONE decode pass; re-encodes with the clip's own
     codec and carries the shared payload-column contract (rejoin
     transcript/ds on ``clip_id``)."""
-    from drain3_spark.shipping import ship_package
-    ship_package(clips.sparkSession)
     if peak_mode not in ("sample", "true"):
         raise ValueError(f"unknown peak_mode: {peak_mode}")
     ceil_db = float(peak_ceiling_dbfs)
@@ -418,44 +403,31 @@ def normalize_loudness(clips: DataFrame, target_lufs: float = -23.0,
     from drain3_spark.audio.synth import SR_CHOICES
     pre_irs = {int(s): k_weighting_ir(int(s)) for s in SR_CHOICES}
 
-    def norm(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from drain3_spark.audio.codecs import decode, encode
-        from drain3_spark.pipeline.audio_loudness import preseed_ir_cache
+    def norm(rows):
         preseed_ir_cache(pre_irs)
-        for b in batches:
-            out = []
-            for cid, payload, sr, dur, codec in zip(
-                    b["clip_id"], b["bytes"], b["sr_hz"], b["dur_ms"],
-                    b["codec"]):
-                try:
-                    pcm = decode(bytes(payload), codec).astype(np.float64)
-                except Exception:
-                    out.append((cid, payload, int(sr), int(dur), codec,
-                                None, 0.0, False))
-                    continue
-                lufs = lufs_kernel(pcm, int(sr))[0] if sr else None
-                if lufs is None:
-                    out.append((cid, payload, int(sr), int(dur), codec,
-                                None, 0.0, False))
-                    continue
-                gain_db = tgt - lufs
-                limited = False
-                if use_tp:
-                    tp = true_peak_dbfs(pcm)
-                    if tp is not None and gain_db > ceil_db - tp:
-                        gain_db, limited = ceil_db - tp, True
-                else:
-                    peak = float(np.max(np.abs(pcm))) if len(pcm) else 0.0
-                    if peak > 0:
-                        max_gain = 20.0 * math.log10(ceil_lin / peak)
-                        if gain_db > max_gain:
-                            gain_db, limited = max_gain, True
-                y = (pcm * 10.0 ** (gain_db / 20.0)).astype(np.float32)
-                out.append((cid, bytearray(encode(y, codec, int(sr))),
-                            int(sr), int(dur), codec, lufs,
-                            round(gain_db, 6), limited))
-            yield pd.DataFrame(out, columns=[f.name for f in
-                                             NORMALIZED_SCHEMA])
+        for (cid, payload, sr, dur, codec), pcm in rows:
+            lufs = None
+            if pcm is not None and sr:
+                pcm = pcm.astype(np.float64)
+                lufs = lufs_kernel(pcm, int(sr))[0]
+            if lufs is None:
+                yield (cid, payload, int(sr), int(dur), codec, None, 0.0,
+                       False)
+                continue
+            gain_db = tgt - lufs
+            limited = False
+            if use_tp:
+                tp = true_peak_dbfs(pcm)
+                if tp is not None and gain_db > ceil_db - tp:
+                    gain_db, limited = ceil_db - tp, True
+            else:
+                peak = float(np.max(np.abs(pcm))) if len(pcm) else 0.0
+                if peak > 0:
+                    max_gain = 20.0 * math.log10(ceil_lin / peak)
+                    if gain_db > max_gain:
+                        gain_db, limited = max_gain, True
+            y = (pcm * 10.0 ** (gain_db / 20.0)).astype(np.float32)
+            yield (cid, bytearray(encode(y, codec, int(sr))), int(sr),
+                   int(dur), codec, lufs, round(gain_db, 6), limited)
 
-    return (clips.select("clip_id", "bytes", "sr_hz", "dur_ms", "codec")
-            .mapInPandas(norm, NORMALIZED_SCHEMA))
+    return map_clips(clips, norm, NORMALIZED_SCHEMA, PAYLOAD_COLS)

@@ -25,19 +25,21 @@ frame count — deterministic arithmetic, so aggregates pin in closed
 form against synthesized tones.
 
 100-TB shape: one decode + one batched rFFT autocorrelation per clip
-inside bounded Arrow ``mapInPandas``; no shuffle until the consumer
-aggregates.  The reference (/root/reference/drain3) has no audio
-surface; this extends the curation family next to
+inside the shared per-clip Arrow loop
+(:func:`drain3_spark.audio.runner.map_clips`); no shuffle until the
+consumer aggregates.  The reference Drain3 has no audio surface;
+this extends the curation family next to
 :mod:`audio_quality` and :mod:`audio_vad`.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Optional, Tuple
+from typing import Optional, Tuple
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, types as T
+
+from drain3_spark.audio.runner import map_clips
 
 
 def yin_frame_f0(frames: np.ndarray, sr: int, f_lo: float = 50.0,
@@ -149,33 +151,13 @@ def pitch_stats(clips: DataFrame, frame_ms: int = 40, hop_ms: int = 20,
     voiced_ratio 0 (the decode CHECK family owns flagging them).
     ``carry`` passes input columns through so rollups need no corpus
     re-join."""
-    from drain3_spark.shipping import ship_package
-    from drain3_spark.util import carry_schema
-    ship_package(clips.sparkSession)
-    schema = carry_schema(PITCH_SCHEMA, clips, carry)
+    def extract(rows):
+        for (cid, _, sr, _c, *extra), pcm in rows:
+            if pcm is None or not sr:
+                yield (cid, 0, 0.0, None, None, None) + tuple(extra)
+            else:
+                yield ((cid,) + pitch_kernel(pcm, int(sr), frame_ms, hop_ms,
+                                             f_lo, f_hi, threshold)
+                       + tuple(extra))
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from drain3_spark.audio.codecs import decode
-        for b in batches:
-            out = []
-            for cid, payload, sr, codec, *extra in zip(
-                    b["clip_id"], b["bytes"], b["sr_hz"], b["codec"],
-                    *(b[c] for c in carry)):
-                try:
-                    pcm = decode(bytes(payload), codec)
-                except Exception:
-                    out.append((cid, 0, 0.0, None, None, None)
-                               + tuple(extra))
-                    continue
-                if not sr:
-                    out.append((cid, 0, 0.0, None, None, None)
-                               + tuple(extra))
-                    continue
-                out.append((cid,) + pitch_kernel(pcm, int(sr), frame_ms,
-                                                 hop_ms, f_lo, f_hi,
-                                                 threshold) + tuple(extra))
-            yield pd.DataFrame(out, columns=[f.name for f in schema])
-
-    cols = ["clip_id", "bytes", "sr_hz", "codec"] + [
-        c for c in carry if c not in ("clip_id", "bytes", "sr_hz", "codec")]
-    return clips.select(*cols).mapInPandas(extract, schema)
+    return map_clips(clips, extract, PITCH_SCHEMA, carry=carry)

@@ -3,9 +3,9 @@ audio analog of the text family's ``quality_score``
 (:mod:`drain3_spark.pipeline.text`): level metrics, an SNR estimate,
 and a composite [0,1] score a pipeline can filter or stratify on.
 
-One decode pass per clip (batched Arrow ``mapInPandas``, the same
-bounded-batch shape as :func:`multimodal.audio_spectral_features`),
-all metrics plain numpy:
+One decode pass per clip (the shared per-clip Arrow loop,
+:func:`drain3_spark.audio.runner.map_clips`), all metrics plain
+numpy:
 
 * ``peak_dbfs`` / ``rms_dbfs`` — digital level (0 dBFS = full scale);
 * ``est_snr_db`` — frame-power decile estimate: noise floor = mean
@@ -33,11 +33,10 @@ a curation filter should still drop them).
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
+
+from drain3_spark.audio.runner import map_clips
 
 AUDIO_QUALITY_SCHEMA = T.StructType([
     T.StructField("clip_id", T.StringType()),
@@ -108,30 +107,17 @@ def audio_quality(clips: DataFrame, frame_ms: int = 20,
                   silence_rms: float = 0.01) -> DataFrame:
     """Per-clip quality metrics + composite score (module docstring).
     One decode per clip; undecodable → null metrics, score 0."""
-    from drain3_spark.shipping import ship_package
-    ship_package(clips.sparkSession)
     nulls = (None,) * 6 + (0.0,)
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from drain3_spark.audio.codecs import decode
-        for b in batches:
-            out = []
-            for cid, payload, sr, codec in zip(b["clip_id"], b["bytes"],
-                                               b["sr_hz"], b["codec"]):
-                try:
-                    pcm = decode(bytes(payload), codec).astype(np.float64)
-                except Exception:
-                    out.append((cid, 0) + nulls)
-                    continue
-                if not sr:
-                    out.append((cid, len(pcm)) + nulls)
-                    continue
-                out.append((cid, len(pcm))
-                           + quality_kernel(pcm, int(sr), frame_ms,
-                                            silence_rms))
-            yield pd.DataFrame(out,
-                               columns=[f.name for f in
-                                        AUDIO_QUALITY_SCHEMA])
+    def extract(rows):
+        for (cid, _, sr, _c), pcm in rows:
+            if pcm is None:
+                yield (cid, 0) + nulls
+            elif not sr:
+                yield (cid, len(pcm)) + nulls
+            else:
+                yield ((cid, len(pcm))
+                       + quality_kernel(pcm.astype(np.float64), int(sr),
+                                        frame_ms, silence_rms))
 
-    return (clips.select("clip_id", "bytes", "sr_hz", "codec")
-            .mapInPandas(extract, AUDIO_QUALITY_SCHEMA))
+    return map_clips(clips, extract, AUDIO_QUALITY_SCHEMA)

@@ -2,10 +2,9 @@
 pipeline: mel-spectral embeddings, MFCCs, audio near-duplicate
 detection, resampling, and silence trimming.
 
-All DSP is pure numpy (rFFT + mel filterbank) inside batched Arrow
-``mapInPandas`` UDFs — no media or DSP library, no per-row Python —
-the same bounded-batch shape as :mod:`drain3_spark.pipeline.multimodal`
-(binary payloads dominate Arrow batch memory).
+All DSP is pure numpy (rFFT + mel filterbank) inside the shared
+per-clip Arrow loop (:func:`drain3_spark.audio.runner.map_clips`) — no
+media or DSP library, no per-row JVM crossing.
 
 The near-dup operator shares the blocked-pair shape of the embedding
 dedup family (:mod:`drain3_spark.pipeline.similarity`): a spectral
@@ -32,11 +31,14 @@ Key invariances of the embedding (measured, pinned by tests):
 
 from __future__ import annotations
 
-from typing import Dict, Iterator, Optional, Tuple
+from typing import Dict, Optional, Tuple
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
+
+from drain3_spark.audio.codecs import encode
+from drain3_spark.audio.runner import PAYLOAD_COLS, map_clips
 
 AUDIO_EMBEDDING_SCHEMA = T.StructType([
     T.StructField("clip_id", T.StringType()),
@@ -190,52 +192,39 @@ def audio_embeddings(clips: DataFrame, n_mels: int = 64,
     UDF pass (one extra matmul per Arrow batch) — the near-dup
     operators request it so their tasks chain two python workers
     (synth-like source + this extract), not three."""
-    from drain3_spark.shipping import ship_package
-    ship_package(clips.sparkSession)
+    def extract(rows):
+        out = []
+        by_sr: Dict[int, list] = {}        # sr -> [(row_idx, cid, pcm)]
+        for j, ((cid, _, sr, _c), pcm) in enumerate(rows):
+            out.append((cid, 0, None, None, None))
+            if pcm is not None and len(pcm) and sr:
+                by_sr.setdefault(int(sr), []).append(
+                    (j, cid, pcm.astype(np.float64)))
+        vecs = {}
+        for sr, items in by_sr.items():
+            E, counts = _mel_frames_many([p for _, _, p in items], sr,
+                                         frame_ms, hop_ms, n_mels,
+                                         f_lo, f_hi)
+            pos = 0
+            for (j, cid, _), nf in zip(items, counts):
+                v = E[pos:pos + nf].mean(axis=0)
+                pos += nf
+                nrm = float(np.linalg.norm(v))
+                if nrm > 0.0:
+                    v = v / nrm
+                vecs[j] = v
+                top = np.argsort(v)[::-1][:2]
+                out[j] = (cid, nf, [float(x) for x in v],
+                          [int(x) for x in top], None)
+        if lsh_bits is not None and vecs:
+            idxs = sorted(vecs)
+            B = lsh_bucket_ids(np.vstack([vecs[j] for j in idxs]),
+                               int(lsh_bits), lsh_bands, lsh_seed)
+            for row_of_B, j in enumerate(idxs):
+                out[j] = out[j][:4] + (B[row_of_B].tolist(),)
+        return out
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from drain3_spark.audio.codecs import decode
-        for b in batches:
-            out = [None] * len(b)
-            by_sr: Dict[int, list] = {}        # sr -> [(row_idx, pcm)]
-            for j, (cid, payload, sr, codec) in enumerate(
-                    zip(b["clip_id"], b["bytes"], b["sr_hz"], b["codec"])):
-                try:
-                    pcm = decode(bytes(payload), codec).astype(np.float64)
-                except Exception:
-                    out[j] = (cid, 0, None, None, None)
-                    continue
-                if len(pcm) == 0 or not sr:
-                    out[j] = (cid, 0, None, None, None)
-                    continue
-                by_sr.setdefault(int(sr), []).append((j, cid, pcm))
-            vecs = {}
-            for sr, items in by_sr.items():
-                E, counts = _mel_frames_many([p for _, _, p in items], sr,
-                                             frame_ms, hop_ms, n_mels,
-                                             f_lo, f_hi)
-                pos = 0
-                for (j, cid, _), nf in zip(items, counts):
-                    v = E[pos:pos + nf].mean(axis=0)
-                    pos += nf
-                    nrm = float(np.linalg.norm(v))
-                    if nrm > 0.0:
-                        v = v / nrm
-                    vecs[j] = v
-                    top = np.argsort(v)[::-1][:2]
-                    out[j] = (cid, nf, [float(x) for x in v],
-                              [int(x) for x in top], None)
-            if lsh_bits is not None and vecs:
-                idxs = sorted(vecs)
-                B = lsh_bucket_ids(np.vstack([vecs[j] for j in idxs]),
-                                   int(lsh_bits), lsh_bands, lsh_seed)
-                for row_of_B, j in enumerate(idxs):
-                    out[j] = out[j][:4] + (B[row_of_B].tolist(),)
-            yield pd.DataFrame(out,
-                               columns=[f.name for f in AUDIO_EMBEDDING_SCHEMA])
-
-    return (clips.select("clip_id", "bytes", "sr_hz", "codec")
-            .mapInPandas(extract, AUDIO_EMBEDDING_SCHEMA))
+    return map_clips(clips, extract, AUDIO_EMBEDDING_SCHEMA)
 
 
 def audio_mfcc(clips: DataFrame, n_mfcc: int = 13, n_mels: int = 26,
@@ -248,9 +237,6 @@ def audio_mfcc(clips: DataFrame, n_mfcc: int = 13, n_mels: int = 26,
     log becomes an additive constant — it moves ONLY coefficient 0
     (the DCT's constant basis); c1..c12 are gain-invariant (pinned by
     ``test_audio_mfcc_gain_invariance``)."""
-    from drain3_spark.shipping import ship_package
-    ship_package(clips.sparkSession)
-
     # orthonormal DCT-II matrix (n_mfcc x n_mels), built once per plan
     k = np.arange(n_mfcc)[:, None]
     n = np.arange(n_mels)[None, :]
@@ -258,36 +244,27 @@ def audio_mfcc(clips: DataFrame, n_mfcc: int = 13, n_mels: int = 26,
     dct *= np.sqrt(2.0 / n_mels)
     dct[0] /= np.sqrt(2.0)
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from drain3_spark.audio.codecs import decode
-        for b in batches:
-            out = [None] * len(b)
-            by_sr: Dict[int, list] = {}
-            for j, (cid, payload, sr, codec) in enumerate(
-                    zip(b["clip_id"], b["bytes"], b["sr_hz"], b["codec"])):
-                try:
-                    pcm = decode(bytes(payload), codec).astype(np.float64)
-                except Exception:
-                    out[j] = (cid, 0, None)
-                    continue
-                if len(pcm) == 0 or not sr:
-                    out[j] = (cid, 0, None)
-                    continue
-                by_sr.setdefault(int(sr), []).append((j, cid, pcm))
-            for sr, items in by_sr.items():
-                E, counts = _mel_frames_many([p for _, _, p in items], sr,
-                                             frame_ms, hop_ms, n_mels,
-                                             f_lo, f_hi)
-                C = np.log(E + 1e-12) @ dct.T
-                pos = 0
-                for (j, cid, _), nf in zip(items, counts):
-                    co = C[pos:pos + nf].mean(axis=0)
-                    pos += nf
-                    out[j] = (cid, nf, [float(x) for x in co])
-            yield pd.DataFrame(out, columns=[f.name for f in AUDIO_MFCC_SCHEMA])
+    def extract(rows):
+        out = []
+        by_sr: Dict[int, list] = {}
+        for j, ((cid, _, sr, _c), pcm) in enumerate(rows):
+            out.append((cid, 0, None))
+            if pcm is not None and len(pcm) and sr:
+                by_sr.setdefault(int(sr), []).append(
+                    (j, cid, pcm.astype(np.float64)))
+        for sr, items in by_sr.items():
+            E, counts = _mel_frames_many([p for _, _, p in items], sr,
+                                         frame_ms, hop_ms, n_mels,
+                                         f_lo, f_hi)
+            C = np.log(E + 1e-12) @ dct.T
+            pos = 0
+            for (j, cid, _), nf in zip(items, counts):
+                co = C[pos:pos + nf].mean(axis=0)
+                pos += nf
+                out[j] = (cid, nf, [float(x) for x in co])
+        return out
 
-    return (clips.select("clip_id", "bytes", "sr_hz", "codec")
-            .mapInPandas(extract, AUDIO_MFCC_SCHEMA))
+    return map_clips(clips, extract, AUDIO_MFCC_SCHEMA)
 
 
 # ----------------------------------------------- random-hyperplane LSH
@@ -583,38 +560,27 @@ def normalize_gain(clips: DataFrame, target_rms: float = 0.1,
     to pure noise; all-zero clips pass through at gain 1.  Emits the
     applied ``gain_db`` per clip; peaks above full scale after gain are
     clipped by the codec (reported via ``clipped_frac``)."""
-    from drain3_spark.shipping import ship_package
-    ship_package(clips.sparkSession)
     schema = T.StructType(list(RESAMPLED_SCHEMA.fields) + [
         T.StructField("gain_db", T.DoubleType()),
         T.StructField("clipped_frac", T.DoubleType()),
     ])
     tgt = float(target_rms)
 
-    def norm(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from drain3_spark.audio.codecs import decode, encode
-        for b in batches:
-            out = []
-            for cid, payload, sr, dur, codec in zip(
-                    b["clip_id"], b["bytes"], b["sr_hz"], b["dur_ms"],
-                    b["codec"]):
-                try:
-                    pcm = decode(bytes(payload), codec).astype(np.float64)
-                except Exception:
-                    continue
-                rms = float(np.sqrt(np.mean(pcm ** 2))) if len(pcm) else 0.0
-                g = 1.0 if rms == 0.0 else min(tgt / rms, float(max_gain))
-                y = pcm * g
-                clipped = float(np.mean(np.abs(y) > 1.0)) if len(y) else 0.0
-                y = np.clip(y, -1.0, 1.0).astype(np.float32)
-                out.append((cid, bytearray(encode(y, codec, int(sr))), int(sr),
-                            int(dur), codec,
-                            float(20.0 * np.log10(g)) if g > 0 else 0.0,
-                            clipped))
-            yield pd.DataFrame(out, columns=[f.name for f in schema])
+    def norm(rows):
+        for (cid, _, sr, dur, codec), pcm in rows:
+            if pcm is None:
+                continue
+            pcm = pcm.astype(np.float64)
+            rms = float(np.sqrt(np.mean(pcm ** 2))) if len(pcm) else 0.0
+            g = 1.0 if rms == 0.0 else min(tgt / rms, float(max_gain))
+            y = pcm * g
+            clipped = float(np.mean(np.abs(y) > 1.0)) if len(y) else 0.0
+            y = np.clip(y, -1.0, 1.0).astype(np.float32)
+            yield (cid, bytearray(encode(y, codec, int(sr))), int(sr),
+                   int(dur), codec,
+                   float(20.0 * np.log10(g)) if g > 0 else 0.0, clipped)
 
-    return (clips.select("clip_id", "bytes", "sr_hz", "dur_ms", "codec")
-            .mapInPandas(norm, schema))
+    return map_clips(clips, norm, schema, PAYLOAD_COLS)
 
 
 def sinc_resample_kernel(pcm: np.ndarray, sr: int, tsr: int,
@@ -666,40 +632,31 @@ def resample_clips(clips: DataFrame, target_sr: int,
     Output carries the payload columns only — rejoin transcript/ds on
     ``clip_id`` when the downstream step needs them (all three
     transformation ops share this contract)."""
-    from drain3_spark.shipping import ship_package
-    ship_package(clips.sparkSession)
     if method not in ("linear", "sinc"):
         raise ValueError(f"unknown resample method: {method}")
     tsr = int(target_sr)
     n_taps = int(taps)
 
-    def rs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from drain3_spark.audio.codecs import decode, encode
-        for b in batches:
-            out = []
-            for cid, payload, sr, dur, codec in zip(
-                    b["clip_id"], b["bytes"], b["sr_hz"], b["dur_ms"],
-                    b["codec"]):
-                if int(sr) == tsr:
-                    out.append((cid, payload, int(sr), int(dur), codec))
-                    continue
-                try:
-                    pcm = decode(bytes(payload), codec).astype(np.float64)
-                except Exception:
-                    continue
-                if method == "sinc":
-                    y = sinc_resample_kernel(pcm, int(sr), tsr, n_taps)
-                else:
-                    n_new = max(int(round(len(pcm) * tsr / float(sr))), 1)
-                    t_new = np.arange(n_new, dtype=np.float64) / tsr
-                    t_old = np.arange(len(pcm), dtype=np.float64) / float(sr)
-                    y = np.interp(t_new, t_old, pcm).astype(np.float32)
-                out.append((cid, bytearray(encode(y, codec, tsr)), tsr,
-                            int(round(len(y) * 1000.0 / tsr)), codec))
-            yield pd.DataFrame(out, columns=[f.name for f in RESAMPLED_SCHEMA])
+    def rs(rows):
+        for (cid, payload, sr, dur, codec), pcm in rows:
+            if int(sr) == tsr:
+                yield (cid, payload, int(sr), int(dur), codec)
+                continue
+            if pcm is None:
+                continue
+            pcm = pcm.astype(np.float64)
+            if method == "sinc":
+                y = sinc_resample_kernel(pcm, int(sr), tsr, n_taps)
+            else:
+                n_new = max(int(round(len(pcm) * tsr / float(sr))), 1)
+                t_new = np.arange(n_new, dtype=np.float64) / tsr
+                t_old = np.arange(len(pcm), dtype=np.float64) / float(sr)
+                y = np.interp(t_new, t_old, pcm).astype(np.float32)
+            yield (cid, bytearray(encode(y, codec, tsr)), tsr,
+                   int(round(len(y) * 1000.0 / tsr)), codec)
 
-    return (clips.select("clip_id", "bytes", "sr_hz", "dur_ms", "codec")
-            .mapInPandas(rs, RESAMPLED_SCHEMA))
+    return map_clips(clips, rs, RESAMPLED_SCHEMA, PAYLOAD_COLS,
+                     decode_if=lambda row: int(row[2]) != tsr)
 
 
 def _wiener_denoise(pcm: np.ndarray, sr: int, frame_ms: int = 32,
@@ -748,28 +705,17 @@ def denoise_clips(clips: DataFrame, frame_ms: int = 32,
     passing through unharmed (``test_denoise_clips``).  Same
     payload-column contract as :func:`resample_clips`; undecodable
     payloads are dropped."""
-    from drain3_spark.shipping import ship_package
-    ship_package(clips.sparkSession)
+    def dn(rows):
+        for (cid, _, sr, dur, codec), pcm in rows:
+            if pcm is None:
+                continue
+            y = _wiener_denoise(pcm.astype(np.float64), int(sr), frame_ms,
+                                alpha)
+            y = np.clip(y, -1.0, 1.0).astype(np.float32)
+            yield (cid, bytearray(encode(y, codec, int(sr))), int(sr),
+                   int(dur), codec)
 
-    def dn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from drain3_spark.audio.codecs import decode, encode
-        for b in batches:
-            out = []
-            for cid, payload, sr, dur, codec in zip(
-                    b["clip_id"], b["bytes"], b["sr_hz"], b["dur_ms"],
-                    b["codec"]):
-                try:
-                    pcm = decode(bytes(payload), codec).astype(np.float64)
-                except Exception:
-                    continue
-                y = _wiener_denoise(pcm, int(sr), frame_ms, alpha)
-                y = np.clip(y, -1.0, 1.0).astype(np.float32)
-                out.append((cid, bytearray(encode(y, codec, int(sr))), int(sr),
-                            int(dur), codec))
-            yield pd.DataFrame(out, columns=[f.name for f in RESAMPLED_SCHEMA])
-
-    return (clips.select("clip_id", "bytes", "sr_hz", "dur_ms", "codec")
-            .mapInPandas(dn, RESAMPLED_SCHEMA))
+    return map_clips(clips, dn, RESAMPLED_SCHEMA, PAYLOAD_COLS)
 
 
 SEGMENT_SCHEMA = T.StructType([
@@ -801,44 +747,34 @@ def segment_clips(clips: DataFrame, win_ms: int = 1000, hop_ms: int = 800,
     operator never amplifies beyond it.  Undecodable payloads are
     dropped (the decode CHECK family owns flagging them); clips shorter
     than ``min_tail_ms`` yield no segments."""
-    from drain3_spark.shipping import ship_package
-    ship_package(clips.sparkSession)
     if hop_ms <= 0 or win_ms <= 0:
         raise ValueError("win_ms and hop_ms must be positive")
 
-    def seg(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from drain3_spark.audio.codecs import decode, encode
-        for b in batches:
-            out = []
-            for cid, payload, sr, codec in zip(b["clip_id"], b["bytes"],
-                                               b["sr_hz"], b["codec"]):
-                try:
-                    pcm = decode(bytes(payload), codec).astype(np.float32)
-                except Exception:
-                    continue
-                sr = int(sr)
-                n = len(pcm)
-                k = 0
-                while True:
-                    lo = int(round(sr * k * hop_ms / 1000.0))
-                    if lo >= n:
-                        break
-                    hi = min(lo + int(round(sr * win_ms / 1000.0)), n)
-                    seg_ms = int(round((hi - lo) * 1000.0 / sr))
-                    if hi < lo + int(round(sr * win_ms / 1000.0)) \
-                            and seg_ms < min_tail_ms:
-                        break
-                    out.append((cid, k, f"{cid}#{k}",
-                                bytearray(encode(pcm[lo:hi], codec, sr)),
-                                sr, seg_ms, codec,
-                                int(round(lo * 1000.0 / sr))))
-                    if hi >= n:
-                        break
-                    k += 1
-            yield pd.DataFrame(out, columns=[f.name for f in SEGMENT_SCHEMA])
+    def seg(rows):
+        for (cid, _, sr, codec), pcm in rows:
+            if pcm is None:
+                continue
+            pcm = pcm.astype(np.float32)
+            sr = int(sr)
+            n = len(pcm)
+            k = 0
+            while True:
+                lo = int(round(sr * k * hop_ms / 1000.0))
+                if lo >= n:
+                    break
+                hi = min(lo + int(round(sr * win_ms / 1000.0)), n)
+                seg_ms = int(round((hi - lo) * 1000.0 / sr))
+                if hi < lo + int(round(sr * win_ms / 1000.0)) \
+                        and seg_ms < min_tail_ms:
+                    break
+                yield (cid, k, f"{cid}#{k}",
+                       bytearray(encode(pcm[lo:hi], codec, sr)),
+                       sr, seg_ms, codec, int(round(lo * 1000.0 / sr)))
+                if hi >= n:
+                    break
+                k += 1
 
-    return (clips.select("clip_id", "bytes", "sr_hz", "codec")
-            .mapInPandas(seg, SEGMENT_SCHEMA))
+    return map_clips(clips, seg, SEGMENT_SCHEMA)
 
 
 def trim_silence(clips: DataFrame, frame_ms: int = 20,
@@ -847,40 +783,30 @@ def trim_silence(clips: DataFrame, frame_ms: int = 20,
     ``silence_rms``) and re-encode; reports how much was cut from each
     end.  An all-silent clip keeps its first frame (never emits empty
     audio).  Undecodable payloads are dropped."""
-    from drain3_spark.shipping import ship_package
-    ship_package(clips.sparkSession)
+    def trim(rows):
+        for (cid, _, sr, codec), pcm in rows:
+            if pcm is None:
+                continue
+            pcm = pcm.astype(np.float64)
+            sr = int(sr)
+            frame = max(sr * frame_ms // 1000, 1)
+            nf = max(len(pcm) // frame, 1)
+            padded = np.pad(pcm, (0, nf * frame - len(pcm))) \
+                if nf * frame > len(pcm) else pcm[:nf * frame]
+            rms = np.sqrt((padded.reshape(nf, frame) ** 2).mean(axis=1))
+            live = np.flatnonzero(rms >= silence_rms)
+            if len(live) == 0:
+                lo_f, hi_f = 0, 1
+            else:
+                lo_f, hi_f = int(live[0]), int(live[-1]) + 1
+            lo, hi = lo_f * frame, min(hi_f * frame, len(pcm))
+            y = pcm[lo:hi].astype(np.float32)
+            yield (cid, bytearray(encode(y, codec, sr)), sr,
+                   int(round(len(y) * 1000.0 / sr)), codec,
+                   int(round(lo * 1000.0 / sr)),
+                   int(round((len(pcm) - hi) * 1000.0 / sr)))
 
-    def trim(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from drain3_spark.audio.codecs import decode, encode
-        for b in batches:
-            out = []
-            for cid, payload, sr, codec in zip(b["clip_id"], b["bytes"],
-                                               b["sr_hz"], b["codec"]):
-                try:
-                    pcm = decode(bytes(payload), codec).astype(np.float64)
-                except Exception:
-                    continue
-                sr = int(sr)
-                frame = max(sr * frame_ms // 1000, 1)
-                nf = max(len(pcm) // frame, 1)
-                padded = np.pad(pcm, (0, nf * frame - len(pcm))) \
-                    if nf * frame > len(pcm) else pcm[:nf * frame]
-                rms = np.sqrt((padded.reshape(nf, frame) ** 2).mean(axis=1))
-                live = np.flatnonzero(rms >= silence_rms)
-                if len(live) == 0:
-                    lo_f, hi_f = 0, 1
-                else:
-                    lo_f, hi_f = int(live[0]), int(live[-1]) + 1
-                lo, hi = lo_f * frame, min(hi_f * frame, len(pcm))
-                y = pcm[lo:hi].astype(np.float32)
-                out.append((cid, bytearray(encode(y, codec, sr)), sr,
-                            int(round(len(y) * 1000.0 / sr)), codec,
-                            int(round(lo * 1000.0 / sr)),
-                            int(round((len(pcm) - hi) * 1000.0 / sr))))
-            yield pd.DataFrame(out, columns=[f.name for f in TRIMMED_SCHEMA])
-
-    return (clips.select("clip_id", "bytes", "sr_hz", "codec")
-            .mapInPandas(trim, TRIMMED_SCHEMA))
+    return map_clips(clips, trim, TRIMMED_SCHEMA)
 
 
 # ----------------------------------------------------------- spec augment
@@ -940,54 +866,42 @@ def spec_augment(clips: DataFrame, n_mels: int = 64, frame_ms: int = 64,
     the same Arrow UDF (shared `_mel_frames_many` kernel), no shuffle;
     output is written straight to the feature store.  Undecodable
     payloads are dropped (the decode CHECK family owns them)."""
-    from drain3_spark.shipping import ship_package
-    ship_package(clips.sparkSession)
+    def aug(rows):
+        out = []
+        by_sr: Dict[int, list] = {}
+        for (cid, _, sr, _c), pcm in rows:
+            if pcm is not None and len(pcm) and sr:
+                by_sr.setdefault(int(sr), []).append(
+                    (cid, pcm.astype(np.float64)))
+        for sr, items in by_sr.items():
+            E, counts = _mel_frames_many([p for _, p in items], sr,
+                                         frame_ms, hop_ms, n_mels,
+                                         f_lo, f_hi)
+            L = np.log(E + 1e-12)
+            pos = 0
+            for (cid, _), nf in zip(items, counts):
+                M = L[pos:pos + nf].copy()
+                pos += nf
+                t_masks, f_masks = _augment_geometry(
+                    cid, seed, nf, n_mels, n_time_masks,
+                    max_time_frames, n_freq_masks, max_freq_bands)
+                # report the UNION of masked frames/bands — summing
+                # per-mask widths double-counts overlapping masks
+                # (could even exceed nf/n_mels)
+                t_hit = np.zeros(nf, dtype=bool)
+                f_hit = np.zeros(n_mels, dtype=bool)
+                for s, w in t_masks:
+                    M[s:s + w, :] = 0.0
+                    t_hit[s:s + w] = True
+                for s, w in f_masks:
+                    M[:, s:s + w] = 0.0
+                    f_hit[s:s + w] = True
+                tm, fm = int(t_hit.sum()), int(f_hit.sum())
+                out.append((cid, nf, tm, fm,
+                            [[float(x) for x in row] for row in M]))
+        return out
 
-    def aug(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from drain3_spark.audio.codecs import decode
-        for b in batches:
-            out = []
-            by_sr: Dict[int, list] = {}
-            for cid, payload, sr, codec in zip(b["clip_id"], b["bytes"],
-                                               b["sr_hz"], b["codec"]):
-                try:
-                    pcm = decode(bytes(payload), codec).astype(np.float64)
-                except Exception:
-                    continue
-                if len(pcm) == 0 or not sr:
-                    continue
-                by_sr.setdefault(int(sr), []).append((cid, pcm))
-            for sr, items in by_sr.items():
-                E, counts = _mel_frames_many([p for _, p in items], sr,
-                                             frame_ms, hop_ms, n_mels,
-                                             f_lo, f_hi)
-                L = np.log(E + 1e-12)
-                pos = 0
-                for (cid, _), nf in zip(items, counts):
-                    M = L[pos:pos + nf].copy()
-                    pos += nf
-                    t_masks, f_masks = _augment_geometry(
-                        cid, seed, nf, n_mels, n_time_masks,
-                        max_time_frames, n_freq_masks, max_freq_bands)
-                    # report the UNION of masked frames/bands — summing
-                    # per-mask widths double-counts overlapping masks
-                    # (could even exceed nf/n_mels)
-                    t_hit = np.zeros(nf, dtype=bool)
-                    f_hit = np.zeros(n_mels, dtype=bool)
-                    for s, w in t_masks:
-                        M[s:s + w, :] = 0.0
-                        t_hit[s:s + w] = True
-                    for s, w in f_masks:
-                        M[:, s:s + w] = 0.0
-                        f_hit[s:s + w] = True
-                    tm, fm = int(t_hit.sum()), int(f_hit.sum())
-                    out.append((cid, nf, tm, fm,
-                                [[float(x) for x in row] for row in M]))
-            yield pd.DataFrame(out,
-                               columns=[f.name for f in SPEC_AUGMENT_SCHEMA])
-
-    return (clips.select("clip_id", "bytes", "sr_hz", "codec")
-            .mapInPandas(aug, SPEC_AUGMENT_SCHEMA))
+    return map_clips(clips, aug, SPEC_AUGMENT_SCHEMA)
 
 
 PERTURBED_SCHEMA = T.StructType([
@@ -1015,48 +929,36 @@ def perturb_speed(clips: DataFrame,
     own codec; undecodable payloads are dropped (the decode CHECK
     family flags them).  100-TB shape: embarrassingly parallel,
     output = input × len(factors), no shuffle."""
-    from drain3_spark.shipping import ship_package
-    ship_package(clips.sparkSession)
     fs = tuple(float(f) for f in factors)
     if any(f <= 0 for f in fs):
         raise ValueError(f"speed factors must be positive: {factors}")
 
-    def ps(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from drain3_spark.audio.codecs import decode, encode
-        for b in batches:
-            out = []
-            for cid, payload, sr, dur, codec in zip(
-                    b["clip_id"], b["bytes"], b["sr_hz"], b["dur_ms"],
-                    b["codec"]):
-                # null/zero sr skips the row like the sibling operators
-                # (a NULL here raised TypeError and failed the task)
-                if not sr:
+    def ps(rows):
+        for (cid, payload, sr, dur, codec), pcm in rows:
+            # zero sr skips the row like the sibling operators
+            if not sr:
+                continue
+            sr = int(sr)
+            if pcm is None:
+                continue
+            pcm = pcm.astype(np.float64)
+            for f in fs:
+                if f == 1.0:
+                    yield (f"{cid}@1.0", cid, 1.0, payload, sr, int(dur),
+                           codec)
                     continue
-                sr = int(sr)
-                try:
-                    pcm = decode(bytes(payload), codec).astype(np.float64)
-                except Exception:
-                    continue
-                for f in fs:
-                    if f == 1.0:
-                        out.append((f"{cid}@1.0", cid, 1.0, payload, sr,
-                                    int(dur), codec))
-                        continue
-                    n_new = max(int(round(len(pcm) / f)), 1)
-                    # x(f*t) at the original rate: sample the source at
-                    # positions f * i (same lattice as resampling to
-                    # sr/f and relabeling the rate as sr)
-                    t_new = np.arange(n_new, dtype=np.float64) * f
-                    t_old = np.arange(len(pcm), dtype=np.float64)
-                    y = np.interp(t_new, t_old, pcm).astype(np.float32)
-                    out.append((f"{cid}@{f:g}", cid, float(f),
-                                bytearray(encode(y, codec, sr)), sr,
-                                int(round(n_new * 1000.0 / sr)), codec))
-            yield pd.DataFrame(out, columns=[f.name for f in
-                                             PERTURBED_SCHEMA])
+                n_new = max(int(round(len(pcm) / f)), 1)
+                # x(f*t) at the original rate: sample the source at
+                # positions f * i (same lattice as resampling to
+                # sr/f and relabeling the rate as sr)
+                t_new = np.arange(n_new, dtype=np.float64) * f
+                t_old = np.arange(len(pcm), dtype=np.float64)
+                y = np.interp(t_new, t_old, pcm).astype(np.float32)
+                yield (f"{cid}@{f:g}", cid, float(f),
+                       bytearray(encode(y, codec, sr)), sr,
+                       int(round(n_new * 1000.0 / sr)), codec)
 
-    return (clips.select("clip_id", "bytes", "sr_hz", "dur_ms", "codec")
-            .mapInPandas(ps, PERTURBED_SCHEMA))
+    return map_clips(clips, ps, PERTURBED_SCHEMA, PAYLOAD_COLS)
 
 
 def transcode_clips(clips: DataFrame, target_codec: str) -> DataFrame:
@@ -1067,27 +969,16 @@ def transcode_clips(clips: DataFrame, target_codec: str) -> DataFrame:
     codec pass through byte-identical; undecodable payloads are dropped
     (the decode CHECK family owns flagging them).  Same payload-columns
     contract and one-decode-per-clip shape as :func:`resample_clips`."""
-    from drain3_spark.shipping import ship_package
-    ship_package(clips.sparkSession)
     tgt = str(target_codec)
 
-    def tc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from drain3_spark.audio.codecs import decode, encode
-        for b in batches:
-            out = []
-            for cid, payload, sr, dur, codec in zip(
-                    b["clip_id"], b["bytes"], b["sr_hz"], b["dur_ms"],
-                    b["codec"]):
-                if codec == tgt:
-                    out.append((cid, payload, int(sr), int(dur), codec))
-                    continue
-                try:
-                    pcm = decode(bytes(payload), codec).astype(np.float32)
-                except Exception:
-                    continue
-                out.append((cid, bytearray(encode(pcm, tgt, int(sr))),
-                            int(sr), int(dur), tgt))
-            yield pd.DataFrame(out, columns=[f.name for f in RESAMPLED_SCHEMA])
+    def tc(rows):
+        for (cid, payload, sr, dur, codec), pcm in rows:
+            if codec == tgt:
+                yield (cid, payload, int(sr), int(dur), codec)
+            elif pcm is not None:
+                yield (cid, bytearray(encode(pcm.astype(np.float32), tgt,
+                                             int(sr))),
+                       int(sr), int(dur), tgt)
 
-    return (clips.select("clip_id", "bytes", "sr_hz", "dur_ms", "codec")
-            .mapInPandas(tc, RESAMPLED_SCHEMA))
+    return map_clips(clips, tc, RESAMPLED_SCHEMA, PAYLOAD_COLS,
+                     decode_if=lambda row: row[4] != tgt)

@@ -16,22 +16,25 @@ This is the classical energy VAD (Rabiner & Sambur 1975 shape), not a
 model: it separates speech-with-pauses from silence/noise floors,
 which is exactly what the synthetic fixture corpus encodes
 (tone+noise program with silent padding).  A model VAD would ride the
-same ``mapInPandas`` contract.
+same per-clip loop.
 
 100-TB shape: embarrassingly parallel, one decode + one reshaped-RMS
-pass per clip inside batched Arrow ``mapInPandas``; no shuffle until
-the consumer aggregates.  The reference (/root/reference/drain3) has
-no audio surface; this extends the validation engine's payload family
+pass per clip inside the shared per-clip Arrow loop
+(:func:`drain3_spark.audio.runner.map_clips`); no shuffle until the
+consumer aggregates.  The reference Drain3 has no audio surface;
+this extends the validation engine's payload family
 (C8) the way speech_rate extends the cross-column family.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, List, Tuple
+from typing import List, Tuple
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, types as T
+
+from drain3_spark.audio.codecs import encode
+from drain3_spark.audio.runner import PAYLOAD_COLS, map_clips
 
 
 def vad_kernel(pcm: np.ndarray, sr: int, frame_ms: int = 20,
@@ -117,21 +120,6 @@ SPEECH_RATIO_SCHEMA = T.StructType([
 ])
 
 
-def _decode_batch(b, cols, codec_idx=None):
-    """Decode one Arrow batch's rows — callers yield one output
-    DataFrame PER BATCH so executor memory stays bounded by the Arrow
-    batch size, never the partition size."""
-    from drain3_spark.audio.codecs import decode
-    ci = cols.index("codec") if codec_idx is None else codec_idx
-    for row in zip(*(b[c] for c in cols)):
-        payload, codec = row[1], row[ci]
-        try:
-            pcm = decode(bytes(payload), codec)
-        except Exception:
-            pcm = None
-        yield row, pcm
-
-
 def vad_segments(clips: DataFrame, frame_ms: int = 20, on_db: float = 9.0,
                  off_db: float = 3.0, abs_floor: float = 0.004,
                  min_speech_ms: int = 60,
@@ -139,24 +127,15 @@ def vad_segments(clips: DataFrame, frame_ms: int = 20, on_db: float = 9.0,
     """One row per detected speech segment (module docstring).
     Undecodable / silent clips emit no rows (speech_ratio_stats is the
     per-clip view that keeps them)."""
-    from drain3_spark.shipping import ship_package
-    ship_package(clips.sparkSession)
+    def extract(rows):
+        for (cid, _, sr, _c), pcm in rows:
+            if pcm is None or not sr:
+                continue
+            segs, _ = vad_kernel(pcm, int(sr), frame_ms, on_db, off_db,
+                                 abs_floor, min_speech_ms, min_gap_ms)
+            yield from ((cid, i, a, e) for i, (a, e) in enumerate(segs))
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("clip_id", "bytes", "sr_hz", "codec")
-        for b in batches:
-            out = []
-            for (cid, _, sr, _c), pcm in _decode_batch(b, cols):
-                if pcm is None or not sr:
-                    continue
-                segs, _ = vad_kernel(pcm, int(sr), frame_ms, on_db, off_db,
-                                     abs_floor, min_speech_ms, min_gap_ms)
-                out.extend((cid, i, a, e) for i, (a, e) in enumerate(segs))
-            yield pd.DataFrame(out, columns=[f.name for f in
-                                             VAD_SEGMENTS_SCHEMA])
-
-    return (clips.select("clip_id", "bytes", "sr_hz", "codec")
-            .mapInPandas(extract, VAD_SEGMENTS_SCHEMA))
+    return map_clips(clips, extract, VAD_SEGMENTS_SCHEMA)
 
 
 def speech_ratio_stats(clips: DataFrame, frame_ms: int = 20,
@@ -169,33 +148,20 @@ def speech_ratio_stats(clips: DataFrame, frame_ms: int = 20,
     with n_segments null (the decode CHECK family owns flagging them);
     a curation filter drops low-ratio clips either way.  ``carry``
     passes input columns through so rollups need no corpus re-join."""
-    from drain3_spark.shipping import ship_package
-    from drain3_spark.util import carry_schema
-    ship_package(clips.sparkSession)
-    schema = carry_schema(SPEECH_RATIO_SCHEMA, clips, carry)
-    base = ("clip_id", "bytes", "sr_hz", "dur_ms", "codec")
+    def extract(rows):
+        for (cid, _, sr, dur, _c, *extra), pcm in rows:
+            if pcm is None or not sr:
+                yield (cid, int(dur), None, None, 0.0) + tuple(extra)
+                continue
+            segs, ratio = vad_kernel(pcm, int(sr), frame_ms, on_db,
+                                     off_db, abs_floor, min_speech_ms,
+                                     min_gap_ms)
+            yield ((cid, int(dur), len(segs),
+                    int(sum(e - a for a, e in segs)), ratio)
+                   + tuple(extra))
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # zip may name a column twice (base + carried); the deduped
-        # select below keeps the DataFrame itself unambiguous
-        for b in batches:
-            out = []
-            for (cid, _, sr, dur, _c, *extra), pcm in _decode_batch(
-                    b, base + tuple(carry), codec_idx=4):
-                if pcm is None or not sr:
-                    out.append((cid, int(dur), None, None, 0.0)
-                               + tuple(extra))
-                    continue
-                segs, ratio = vad_kernel(pcm, int(sr), frame_ms, on_db,
-                                         off_db, abs_floor, min_speech_ms,
-                                         min_gap_ms)
-                out.append((cid, int(dur), len(segs),
-                            int(sum(e - a for a, e in segs)), ratio)
-                           + tuple(extra))
-            yield pd.DataFrame(out, columns=[f.name for f in schema])
-
-    cols = list(base) + [c for c in carry if c not in base]
-    return clips.select(*cols).mapInPandas(extract, schema)
+    return map_clips(clips, extract, SPEECH_RATIO_SCHEMA, PAYLOAD_COLS,
+                     carry)
 
 
 UTTERANCES_SCHEMA = T.StructType([
@@ -226,32 +192,23 @@ def split_on_silence(clips: DataFrame, pad_ms: int = 100,
     output rows ≈ speech segments.  All-silent and undecodable clips
     emit nothing (speech_ratio_stats is the per-clip view that keeps
     them; the decode CHECK family owns flagging undecodables)."""
-    from drain3_spark.shipping import ship_package
-    ship_package(clips.sparkSession)
     pad = int(pad_ms)
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from drain3_spark.audio.codecs import encode
-        cols = ("clip_id", "bytes", "sr_hz", "codec")
-        for b in batches:
-            out = []
-            for (cid, _, sr, codec), pcm in _decode_batch(b, cols):
-                if pcm is None or not sr:
+    def extract(rows):
+        for (cid, _, sr, codec), pcm in rows:
+            if pcm is None or not sr:
+                continue
+            sr = int(sr)
+            segs, _ = vad_kernel(pcm, sr, frame_ms, on_db, off_db,
+                                 abs_floor, min_speech_ms, min_gap_ms)
+            n_ms = len(pcm) * 1000 // sr
+            for i, (a, e) in enumerate(segs):
+                a2, e2 = max(a - pad, 0), min(e + pad, n_ms)
+                lo, hi = a2 * sr // 1000, min(e2 * sr // 1000, len(pcm))
+                if hi <= lo:
                     continue
-                sr = int(sr)
-                segs, _ = vad_kernel(pcm, sr, frame_ms, on_db, off_db,
-                                     abs_floor, min_speech_ms, min_gap_ms)
-                n_ms = len(pcm) * 1000 // sr
-                for i, (a, e) in enumerate(segs):
-                    a2, e2 = max(a - pad, 0), min(e + pad, n_ms)
-                    lo, hi = a2 * sr // 1000, min(e2 * sr // 1000, len(pcm))
-                    if hi <= lo:
-                        continue
-                    out.append((cid, i, a2, e2,
-                                bytearray(encode(pcm[lo:hi], codec, sr)),
-                                sr, e2 - a2, codec))
-            yield pd.DataFrame(out, columns=[f.name for f in
-                                             UTTERANCES_SCHEMA])
+                yield (cid, i, a2, e2,
+                       bytearray(encode(pcm[lo:hi], codec, sr)),
+                       sr, e2 - a2, codec)
 
-    return (clips.select("clip_id", "bytes", "sr_hz", "codec")
-            .mapInPandas(extract, UTTERANCES_SCHEMA))
+    return map_clips(clips, extract, UTTERANCES_SCHEMA)

@@ -313,7 +313,13 @@ def minhash_band_index(df: DataFrame, id_col: str = "doc_id",
     band's sorted ``seed:minhash`` strings are a literal-indexed array,
     no ``collect_list``), so the whole index is ONE aggregation — the
     former signature-explode + second band aggregation (two extra
-    corpus-sized Exchanges) is gone; band_key values are identical."""
+    corpus-sized Exchanges) is gone; band_key values are identical.
+
+    ``num_hashes`` must split evenly into ``bands``: a remainder would
+    leave seeds in no band and silently weaken the index."""
+    if bands <= 0 or num_hashes % bands:
+        raise ValueError(f"num_hashes={num_hashes} does not split into "
+                         f"{bands} equal bands")
     rows_per_band = num_hashes // bands
     wide = _minhash_wide(df, id_col, text_col, k, num_hashes)
     band_structs = []

@@ -6,7 +6,8 @@ feature-extract / resize / frame-sample run as batched Arrow
 Arrow batch memory — ``spark.sql.execution.arrow.maxRecordsPerBatch``).
 
 Audio is REAL end-to-end here (drain3_spark.audio implements the
-codecs).  Image decode is real — library-free — for binary PPM/PGM
+codecs; audio operators run in the shared per-clip loop,
+:func:`drain3_spark.audio.runner.map_clips`).  Image decode is real — library-free — for binary PPM/PGM
 (P6/P5), 24-bit BI_RGB BMP, PNG (stdlib zlib), baseline JPEG
 (:mod:`drain3_spark.pipeline.jpeg`), GIF87a/89a (real LZW), and
 baseline TIFF (uncompressed + PackBits, both byte orders); Pillow is
@@ -25,6 +26,8 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
+
+from drain3_spark.audio.runner import map_clips
 
 AUDIO_FEATURES_SCHEMA = T.StructType([
     T.StructField("clip_id", T.StringType()),
@@ -66,29 +69,18 @@ RESIZED_SCHEMA = T.StructType([
 
 def audio_features(clips: DataFrame) -> DataFrame:
     """Real decode → per-clip acoustic features (RMS, peak, ZCR)."""
-    from drain3_spark.shipping import ship_package
-    ship_package(clips.sparkSession)
+    def extract(rows):
+        for (cid, _, sr, _c), pcm in rows:
+            if pcm is None:
+                yield (cid, 0, 0.0, 0.0, 0.0, 0)
+                continue
+            n = len(pcm)
+            zc = int(np.count_nonzero(np.diff(np.signbit(pcm)))) if n > 1 else 0
+            yield (cid, n, n / float(sr) if sr else 0.0,
+                   float(np.sqrt(np.mean(pcm ** 2))) if n else 0.0,
+                   float(np.max(np.abs(pcm))) if n else 0.0, zc)
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from drain3_spark.audio.codecs import decode
-        for b in batches:
-            out = []
-            for cid, payload, sr, codec in zip(b["clip_id"], b["bytes"],
-                                               b["sr_hz"], b["codec"]):
-                try:
-                    pcm = decode(bytes(payload), codec)
-                except Exception:
-                    out.append((cid, 0, 0.0, 0.0, 0.0, 0))
-                    continue
-                n = len(pcm)
-                zc = int(np.count_nonzero(np.diff(np.signbit(pcm)))) if n > 1 else 0
-                out.append((cid, n, n / float(sr) if sr else 0.0,
-                            float(np.sqrt(np.mean(pcm ** 2))) if n else 0.0,
-                            float(np.max(np.abs(pcm))) if n else 0.0, zc))
-            yield pd.DataFrame(out, columns=[f.name for f in AUDIO_FEATURES_SCHEMA])
-
-    return (clips.select("clip_id", "bytes", "sr_hz", "codec")
-            .mapInPandas(extract, AUDIO_FEATURES_SCHEMA))
+    return map_clips(clips, extract, AUDIO_FEATURES_SCHEMA)
 
 
 def audio_spectral_features(clips: DataFrame,
@@ -108,61 +100,52 @@ def audio_spectral_features(clips: DataFrame,
       RMS is below ``silence_rms`` (dead-air detector);
     * ``clipping_ratio`` — fraction of samples at digital full scale.
 
-    Same bounded-Arrow-batch ``mapInPandas`` shape as
-    :func:`audio_features`; FFT length is the clip length (one clip
-    never leaves its task).  Undecodable payloads yield null features
-    (the decode CHECK family owns flagging them)."""
-    from drain3_spark.shipping import ship_package
-    ship_package(clips.sparkSession)
+    Same per-clip Arrow loop as :func:`audio_features`
+    (:func:`drain3_spark.audio.runner.map_clips`); FFT length is the
+    clip length (one clip never leaves its task).  Undecodable
+    payloads yield null features (the decode CHECK family owns
+    flagging them)."""
     nulls = (None,) * 6
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from drain3_spark.audio.codecs import decode
-        for b in batches:
-            out = []
-            for cid, payload, sr, codec in zip(b["clip_id"], b["bytes"],
-                                               b["sr_hz"], b["codec"]):
-                try:
-                    pcm = decode(bytes(payload), codec).astype(np.float64)
-                except Exception:
-                    out.append((cid, 0) + nulls)
-                    continue
-                n = len(pcm)
-                if n == 0 or not sr:
-                    out.append((cid, n) + nulls)
-                    continue
-                mag = np.abs(np.fft.rfft(pcm))
-                freqs = np.fft.rfftfreq(n, d=1.0 / float(sr))
-                mag[0] = 0.0                     # drop DC for all stats
-                power = mag ** 2
-                ptot = float(power.sum())
-                if ptot <= 0.0:
-                    dom = cen = roll = 0.0
-                    flat = None
-                else:
-                    dom = float(freqs[int(np.argmax(mag))])
-                    cen = float((freqs * mag).sum() / mag.sum())
-                    cum = np.cumsum(power)
-                    roll = float(freqs[int(np.searchsorted(
-                        cum, rolloff_pct * ptot))])
-                    p = power[1:]
-                    flat = float(np.exp(np.mean(np.log(p + 1e-20)))
-                                 / (np.mean(p) + 1e-20))
-                frame = max(int(sr) * silence_frame_ms // 1000, 1)
-                nf = n // frame
-                if nf > 0:
-                    fr = pcm[:nf * frame].reshape(nf, frame)
-                    frms = np.sqrt(np.mean(fr ** 2, axis=1))
-                    sil = float(np.mean(frms < silence_rms))
-                else:
-                    sil = float(np.sqrt(np.mean(pcm ** 2)) < silence_rms)
-                clip_r = float(np.mean(np.abs(pcm) >= 0.999))
-                out.append((cid, n, dom, cen, roll, flat, sil, clip_r))
-            yield pd.DataFrame(out,
-                               columns=[f.name for f in AUDIO_SPECTRAL_SCHEMA])
+    def extract(rows):
+        for (cid, _, sr, _c), pcm in rows:
+            if pcm is None:
+                yield (cid, 0) + nulls
+                continue
+            pcm = pcm.astype(np.float64)
+            n = len(pcm)
+            if n == 0 or not sr:
+                yield (cid, n) + nulls
+                continue
+            mag = np.abs(np.fft.rfft(pcm))
+            freqs = np.fft.rfftfreq(n, d=1.0 / float(sr))
+            mag[0] = 0.0                     # drop DC for all stats
+            power = mag ** 2
+            ptot = float(power.sum())
+            if ptot <= 0.0:
+                dom = cen = roll = 0.0
+                flat = None
+            else:
+                dom = float(freqs[int(np.argmax(mag))])
+                cen = float((freqs * mag).sum() / mag.sum())
+                cum = np.cumsum(power)
+                roll = float(freqs[int(np.searchsorted(
+                    cum, rolloff_pct * ptot))])
+                p = power[1:]
+                flat = float(np.exp(np.mean(np.log(p + 1e-20)))
+                             / (np.mean(p) + 1e-20))
+            frame = max(int(sr) * silence_frame_ms // 1000, 1)
+            nf = n // frame
+            if nf > 0:
+                fr = pcm[:nf * frame].reshape(nf, frame)
+                frms = np.sqrt(np.mean(fr ** 2, axis=1))
+                sil = float(np.mean(frms < silence_rms))
+            else:
+                sil = float(np.sqrt(np.mean(pcm ** 2)) < silence_rms)
+            clip_r = float(np.mean(np.abs(pcm) >= 0.999))
+            yield (cid, n, dom, cen, roll, flat, sil, clip_r)
 
-    return (clips.select("clip_id", "bytes", "sr_hz", "codec")
-            .mapInPandas(extract, AUDIO_SPECTRAL_SCHEMA))
+    return map_clips(clips, extract, AUDIO_SPECTRAL_SCHEMA)
 
 
 def _pnm_header(data: bytes):

@@ -88,7 +88,10 @@ def stratified_take(df: DataFrame, strata_col: str, n: int, key_col: str,
     a stratum keeps >= n survivors the output is IDENTICAL to the
     unfiltered take; a starved stratum (expected survivors = rate ×
     stratum size, binomial slack) returns fewer than n — the caller
-    owns the margin."""
+    owns the margin.  NULL-key rows have a NULL hash: they rank LAST
+    (after every keyed row, as in the DuckDB oracle's default order)
+    and the prefilter drops them, so they only fill a stratum holding
+    fewer than n keyed rows and never change a non-starved take."""
     from pyspark.sql import Window
     if n <= 0:
         raise ValueError(f"n must be positive: {n}")
@@ -97,7 +100,7 @@ def stratified_take(df: DataFrame, strata_col: str, n: int, key_col: str,
     if prefilter_rate is not None:
         src = df.filter(h < F.lit(int(round(prefilter_rate * _DENOM))))
     w = (Window.partitionBy(strata_col)
-         .orderBy(h.asc(), F.col(key_col).asc()))
+         .orderBy(h.asc_nulls_last(), F.col(key_col).asc_nulls_last()))
     return (src.withColumn("_rk", F.row_number().over(w))
             .filter(F.col("_rk") <= n).drop("_rk"))
 

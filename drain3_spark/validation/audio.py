@@ -1,26 +1,26 @@
 """Audio payload validation (SURVEY.md C8, BASELINE.json per-row invariant).
 
-Decode ``bytes`` per ``codec`` into PCM inside a batched Arrow
-``mapInPandas`` UDF — no per-row Python crossing the JVM boundary, one
-Arrow batch per few thousand clips (bounded by
-``spark.sql.execution.arrow.maxRecordsPerBatch`` because payloads are
-large) — and assert SNR >= ``snr_min`` dB against the reference signal
-regenerated from ``clip_id`` (drain3_spark.audio.synth).
+Decode ``bytes`` per ``codec`` into PCM inside the shared per-clip
+Arrow loop (:func:`drain3_spark.audio.runner.map_clips`) — no per-row
+Python crossing the JVM boundary, one Arrow batch per few thousand
+clips (bounded by ``spark.sql.execution.arrow.maxRecordsPerBatch``
+because payloads are large) — and assert SNR >= ``snr_min`` dB against
+the reference signal regenerated from ``clip_id``
+(drain3_spark.audio.synth).
 
 Only structurally valid rows are decodable (legal codec, sr in domain,
 dur in bounds); the others are already their own checks' findings, so
 they are filtered out *before* the scan — Catalyst prunes every column
-except the five this check needs.
+except the six this check needs.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Optional, Sequence, Tuple
+from typing import Optional, Sequence, Tuple
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from drain3_spark.fixtures import CHECK_AUDIO_DECODE
+from drain3_spark.audio.runner import map_clips
 
 AUDIO_RESULT_SCHEMA = T.StructType([
     T.StructField("clip_id", T.StringType()),
@@ -28,6 +28,9 @@ AUDIO_RESULT_SCHEMA = T.StructType([
     T.StructField("snr_db", T.DoubleType()),
     T.StructField("passed", T.BooleanType()),
 ])
+
+# the columns every payload check reads, in kernel row order
+AUDIO_COLS = ("clip_id", "ds", "bytes", "sr_hz", "dur_ms", "codec")
 
 
 # codec-aware SNR gates: IMA ADPCM is a 4-bit ADPCM codec whose
@@ -38,46 +41,63 @@ AUDIO_RESULT_SCHEMA = T.StructType([
 SNR_MIN_BY_CODEC = {"wav:adpcm_ima": 15.0}
 
 
+def _structurally_valid(clips: DataFrame, dur_bounds: Tuple[int, int],
+                        sr_domain: Sequence[int]) -> DataFrame:
+    from drain3_spark.audio.codecs import CODECS, CONTAINER_CODECS
+    lo, hi = dur_bounds
+    return clips.filter(F.col("codec").isin(*CODECS, *CONTAINER_CODECS)
+                        & F.col("sr_hz").isin(*[int(s) for s in sr_domain])
+                        & F.col("dur_ms").between(lo, hi)
+                        & F.col("bytes").isNotNull())
+
+
+def _snr_verdict(cid, sr, dur, codec, pcm, snr_min: float):
+    """``(snr_db, passed)`` for one clip: the SNR of its decoded ``pcm``
+    against the reference regenerated from ``cid`` (``-inf`` when the
+    payload did not decode), gated at ``snr_min`` except where
+    :data:`SNR_MIN_BY_CODEC` lowers it for an inherently lossier
+    codec."""
+    from drain3_spark.audio.codecs import snr_db
+    from drain3_spark.audio.synth import reference_pcm
+    s = (float("-inf") if pcm is None or cid is None
+         else snr_db(reference_pcm(cid, int(sr), int(dur)), pcm))
+    gate = min(snr_min, SNR_MIN_BY_CODEC.get(codec, snr_min))
+    return s, bool(s >= gate)
+
+
+def _container_header(payload, codec, sr, dur, dur_tol_ms: int):
+    """``(container_codec, container_sr_hz, container_dur_ms, sr_ok,
+    dur_ok, parse_ok)`` for one wav/flac payload: its HEADER alone
+    (:func:`drain3_spark.audio.wav.wav_header` /
+    :func:`drain3_spark.audio.flac.flac_header`, no sample decode)
+    against the table's ``sr_hz``/``dur_ms`` columns."""
+    from drain3_spark.audio.flac import flac_header
+    from drain3_spark.audio.wav import wav_header
+    try:
+        if codec == "flac":
+            c_codec, (c_sr, n) = "flac", flac_header(bytes(payload))
+        else:
+            c_codec, c_sr, n = wav_header(bytes(payload))
+    except Exception:
+        return None, None, None, False, False, False
+    c_dur = int(round(n * 1000.0 / c_sr)) if c_sr else 0
+    return (c_codec, int(c_sr), c_dur, bool(int(c_sr) == int(sr)),
+            bool(abs(c_dur - int(dur)) <= dur_tol_ms), True)
+
+
 def audio_decode_results(clips: DataFrame,
                          snr_min: float = 30.0,
                          dur_bounds: Tuple[int, int] = (100, 5000),
                          sr_domain: Sequence[int] = (8000, 16000, 22050, 44100, 48000),
                          ) -> DataFrame:
-    """Per-clip (snr_db, passed) for structurally valid rows; the pass
-    gate is ``snr_min`` except where :data:`SNR_MIN_BY_CODEC` lowers it
-    for an inherently lossier codec."""
-    from drain3_spark.audio.codecs import CODECS, CONTAINER_CODECS
-    from drain3_spark.shipping import ship_package
-    ship_package(clips.sparkSession)
+    """Per-clip (snr_db, passed) for structurally valid rows
+    (:func:`_snr_verdict`)."""
+    def check(rows):
+        for (cid, ds, _, sr, dur, codec), pcm in rows:
+            yield (cid, ds) + _snr_verdict(cid, sr, dur, codec, pcm, snr_min)
 
-    lo, hi = dur_bounds
-    valid = (clips
-             .filter(F.col("codec").isin(*CODECS, *CONTAINER_CODECS)
-                     & F.col("sr_hz").isin(*[int(s) for s in sr_domain])
-                     & F.col("dur_ms").between(lo, hi)
-                     & F.col("bytes").isNotNull())
-             .select("clip_id", "ds", "bytes", "sr_hz", "dur_ms", "codec"))
-
-    def check(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from drain3_spark.audio.codecs import decode, snr_db
-        from drain3_spark.audio.synth import reference_pcm
-        for b in batches:
-            snrs, oks = [], []
-            for cid, payload, sr, dur, codec in zip(
-                    b["clip_id"], b["bytes"], b["sr_hz"], b["dur_ms"], b["codec"]):
-                try:
-                    got = decode(bytes(payload), codec)
-                    ref = reference_pcm(cid, int(sr), int(dur))
-                    s = snr_db(ref, got)
-                except Exception:
-                    s = float("-inf")
-                snrs.append(s)
-                gate = min(snr_min, SNR_MIN_BY_CODEC.get(codec, snr_min))
-                oks.append(bool(s >= gate))
-            yield pd.DataFrame({"clip_id": b["clip_id"], "ds": b["ds"],
-                                "snr_db": snrs, "passed": oks})
-
-    return valid.mapInPandas(check, AUDIO_RESULT_SCHEMA)
+    return map_clips(_structurally_valid(clips, dur_bounds, sr_domain),
+                     check, AUDIO_RESULT_SCHEMA, AUDIO_COLS)
 
 
 CONTAINER_META_SCHEMA = T.StructType([
@@ -100,46 +120,21 @@ def container_metadata_results(clips: DataFrame,
     the table's ``sr_hz``/``dur_ms`` columns — a check raw
     sample-stream codecs cannot express, and the first thing to drift
     when an ingest job transcodes without rewriting metadata.
-    HEADER-ONLY parse (:func:`drain3_spark.audio.wav.wav_header` /
-    :func:`drain3_spark.audio.flac.flac_header`): no sample data is
-    decoded, so the pass is cheap enough to run on every ingest batch
-    even when the SNR decode check is sampled."""
-    from drain3_spark.shipping import ship_package
-    ship_package(clips.sparkSession)
-
-    wav_rows = (clips.filter((F.col("codec").startswith("wav")
-                              | (F.col("codec") == "flac"))
-                             & F.col("bytes").isNotNull())
-                .select("clip_id", "ds", "bytes", "sr_hz", "dur_ms",
-                        "codec"))
+    HEADER-ONLY parse (:func:`_container_header`): no sample data
+    is decoded, so the pass is cheap enough to run on every ingest
+    batch even when the SNR decode check is sampled."""
+    wav_rows = clips.filter((F.col("codec").startswith("wav")
+                             | (F.col("codec") == "flac"))
+                            & F.col("bytes").isNotNull())
     tol = int(dur_tol_ms)
 
-    def check(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from drain3_spark.audio.flac import flac_header
-        from drain3_spark.audio.wav import wav_header
-        for b in batches:
-            rows = []
-            for cid, ds, payload, sr, dur, col_codec in zip(
-                    b["clip_id"], b["ds"], b["bytes"], b["sr_hz"],
-                    b["dur_ms"], b["codec"]):
-                try:
-                    if col_codec == "flac":
-                        c_sr, n = flac_header(bytes(payload))
-                        codec = "flac"
-                    else:
-                        codec, c_sr, n = wav_header(bytes(payload))
-                except Exception:
-                    rows.append((cid, ds, None, None, None,
-                                 False, False, False))
-                    continue
-                c_dur = int(round(n * 1000.0 / c_sr)) if c_sr else 0
-                rows.append((cid, ds, codec, int(c_sr), c_dur,
-                             bool(int(c_sr) == int(sr)),
-                             bool(abs(c_dur - int(dur)) <= tol), True))
-            yield pd.DataFrame(rows, columns=[f.name for f in
-                                              CONTAINER_META_SCHEMA])
+    def check(rows):
+        for (cid, ds, payload, sr, dur, codec), _ in rows:
+            yield (cid, ds) + _container_header(payload, codec, sr, dur,
+                                                tol)
 
-    return wav_rows.mapInPandas(check, CONTAINER_META_SCHEMA)
+    return map_clips(wav_rows, check, CONTAINER_META_SCHEMA, AUDIO_COLS,
+                     decode_if=lambda row: False)
 
 
 def container_metadata_violations(clips: DataFrame,
@@ -197,83 +192,49 @@ def audio_and_container_violations(clips: DataFrame, snr_min: float = 30.0,
     * ``min_speech_ratio=r`` — energy-VAD speech coverage below ``r``
       flags a dead-air clip whose transcript claims content.
     """
-    from drain3_spark.audio.codecs import CODECS, CONTAINER_CODECS
     from drain3_spark.fixtures import (CHECK_AUDIO_DECODE,
                                        CHECK_CONTAINER_META, CHECK_LOUDNESS,
                                        CHECK_SPEECH_RATIO)
-    from drain3_spark.shipping import ship_package
-    ship_package(clips.sparkSession)
+    from drain3_spark.pipeline.audio_loudness import lufs_kernel
+    from drain3_spark.pipeline.audio_vad import vad_kernel
 
-    lo, hi = dur_bounds
     tol = int(dur_tol_ms)
     loud_lo, loud_hi = loudness_bounds or (None, None)
     min_ratio = min_speech_ratio
-    valid = (clips
-             .filter(F.col("codec").isin(*CODECS, *CONTAINER_CODECS)
-                     & F.col("sr_hz").isin(*[int(s) for s in sr_domain])
-                     & F.col("dur_ms").between(lo, hi)
-                     & F.col("bytes").isNotNull())
-             .select("clip_id", "ds", "bytes", "sr_hz", "dur_ms", "codec"))
 
-    def check(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from drain3_spark.audio.codecs import decode, snr_db
-        from drain3_spark.audio.flac import flac_header
-        from drain3_spark.audio.synth import reference_pcm
-        from drain3_spark.audio.wav import wav_header
-        from drain3_spark.pipeline.audio_loudness import lufs_kernel
-        from drain3_spark.pipeline.audio_vad import vad_kernel
-        for b in batches:
-            rows = []
-            for cid, ds, payload, sr, dur, codec in zip(
-                    b["clip_id"], b["ds"], b["bytes"], b["sr_hz"],
-                    b["dur_ms"], b["codec"]):
-                raw = bytes(payload)
-                try:
-                    got = decode(raw, codec)
-                    ref = reference_pcm(cid, int(sr), int(dur))
-                    s = snr_db(ref, got)
-                except Exception:
-                    s = float("-inf")
-                gate = min(snr_min, SNR_MIN_BY_CODEC.get(codec, snr_min))
-                if not s >= gate:
-                    rows.append((cid, ds, CHECK_AUDIO_DECODE,
-                                 f"snr below {snr_min} dB"))
-                decoded = s > float("-inf")
-                if loud_lo is not None and decoded:
-                    lufs = lufs_kernel(got, int(sr))[0]
-                    if lufs is None:
-                        rows.append((cid, ds, CHECK_LOUDNESS,
-                                     "unmeasurable loudness (silence)"))
-                    elif not loud_lo <= lufs <= loud_hi:
-                        rows.append((cid, ds, CHECK_LOUDNESS,
-                                     f"integrated_lufs={lufs:.2f} outside "
-                                     f"[{loud_lo}, {loud_hi}]"))
-                if min_ratio is not None and decoded:
-                    _, ratio = vad_kernel(got, int(sr))
-                    if ratio < min_ratio:
-                        rows.append((cid, ds, CHECK_SPEECH_RATIO,
-                                     f"speech_ratio={ratio:.4f} below "
-                                     f"{min_ratio}"))
-                if check_container and (codec.startswith("wav")
-                                        or codec == "flac"):
-                    try:
-                        if codec == "flac":
-                            c_sr, n = flac_header(raw)
-                        else:
-                            _, c_sr, n = wav_header(raw)
-                    except Exception:
-                        rows.append((cid, ds, CHECK_CONTAINER_META,
-                                     "unparseable container"))
-                        continue
-                    c_dur = int(round(n * 1000.0 / c_sr)) if c_sr else 0
-                    if int(c_sr) != int(sr):
-                        rows.append((cid, ds, CHECK_CONTAINER_META,
-                                     f"container sr_hz={int(c_sr)} != column"))
-                    elif abs(c_dur - int(dur)) > tol:
-                        rows.append((cid, ds, CHECK_CONTAINER_META,
-                                     f"container dur_ms={c_dur} != column"))
-            yield pd.DataFrame(rows, columns=["clip_id", "ds", "check",
-                                              "detail"])
+    def check(rows):
+        for (cid, ds, payload, sr, dur, codec), pcm in rows:
+            s, passed = _snr_verdict(cid, sr, dur, codec, pcm, snr_min)
+            if not passed:
+                yield (cid, ds, CHECK_AUDIO_DECODE, f"snr below {snr_min} dB")
+            decoded = s > float("-inf")
+            if loud_lo is not None and decoded:
+                lufs = lufs_kernel(pcm, int(sr))[0]
+                if lufs is None:
+                    yield (cid, ds, CHECK_LOUDNESS,
+                           "unmeasurable loudness (silence)")
+                elif not loud_lo <= lufs <= loud_hi:
+                    yield (cid, ds, CHECK_LOUDNESS,
+                           f"integrated_lufs={lufs:.2f} outside "
+                           f"[{loud_lo}, {loud_hi}]")
+            if min_ratio is not None and decoded:
+                _, ratio = vad_kernel(pcm, int(sr))
+                if ratio < min_ratio:
+                    yield (cid, ds, CHECK_SPEECH_RATIO,
+                           f"speech_ratio={ratio:.4f} below {min_ratio}")
+            if check_container and (codec.startswith("wav")
+                                    or codec == "flac"):
+                _, c_sr, c_dur, sr_ok, dur_ok, parse_ok = \
+                    _container_header(payload, codec, sr, dur, tol)
+                if not parse_ok:
+                    yield (cid, ds, CHECK_CONTAINER_META,
+                           "unparseable container")
+                elif not sr_ok:
+                    yield (cid, ds, CHECK_CONTAINER_META,
+                           f"container sr_hz={c_sr} != column")
+                elif not dur_ok:
+                    yield (cid, ds, CHECK_CONTAINER_META,
+                           f"container dur_ms={c_dur} != column")
 
     schema = T.StructType([
         T.StructField("clip_id", T.StringType()),
@@ -281,16 +242,5 @@ def audio_and_container_violations(clips: DataFrame, snr_min: float = 30.0,
         T.StructField("check", T.StringType()),
         T.StructField("detail", T.StringType()),
     ])
-    return valid.mapInPandas(check, schema).distinct()
-
-
-def audio_violations(clips: DataFrame, snr_min: float = 30.0,
-                     dur_bounds: Tuple[int, int] = (100, 5000),
-                     sr_domain: Sequence[int] = (8000, 16000, 22050, 44100, 48000),
-                     ) -> DataFrame:
-    res = audio_decode_results(clips, snr_min, dur_bounds, sr_domain)
-    return (res.filter(~F.col("passed"))
-            .select("clip_id", "ds",
-                    F.lit(CHECK_AUDIO_DECODE).alias("check"),
-                    F.lit(f"snr below {snr_min} dB").alias("detail"))
-            .distinct())
+    return map_clips(_structurally_valid(clips, dur_bounds, sr_domain),
+                     check, schema, AUDIO_COLS).distinct()

@@ -31,8 +31,7 @@ from pyspark.sql import DataFrame, functions as F, types as T
 
 from drain3_spark.fixtures import VIOLATION_SCHEMA
 from drain3_spark.validation import checks as C
-from drain3_spark.validation.audio import (
-    audio_and_container_violations, audio_violations)
+from drain3_spark.validation.audio import audio_and_container_violations
 from drain3_spark.validation.drift import chisq_drift, ks_drift
 from drain3_spark.util import local_df
 
@@ -123,19 +122,15 @@ class ValidationEngine:
                 clips, transcripts_ref, include_orphans=include_orphans))
         if not cfg.with_audio:
             return v
-        # SNR decode + (when enabled) container metadata in ONE bytes
-        # scan — a separate container pass doubled the engine's payload
-        # I/O (measured +51% per 4M-clip validation iteration)
-        if (cfg.check_container_meta or cfg.loudness_bounds is not None
-                or cfg.min_speech_ratio is not None):
-            a = audio_and_container_violations(
-                clips, cfg.snr_min, cfg.dur_bounds, cfg.sr_domain,
-                check_container=cfg.check_container_meta,
-                loudness_bounds=cfg.loudness_bounds,
-                min_speech_ratio=cfg.min_speech_ratio)
-        else:
-            a = audio_violations(clips, cfg.snr_min, cfg.dur_bounds,
-                                 cfg.sr_domain)
+        # SNR decode + (when enabled) container metadata, loudness and
+        # speech ratio in ONE bytes scan — a separate container pass
+        # doubled the engine's payload I/O (measured +51% per 4M-clip
+        # validation iteration)
+        a = audio_and_container_violations(
+            clips, cfg.snr_min, cfg.dur_bounds, cfg.sr_domain,
+            check_container=cfg.check_container_meta,
+            loudness_bounds=cfg.loudness_bounds,
+            min_speech_ratio=cfg.min_speech_ratio)
         if materialize:
             # profiler sections time each job; sample counts are in-job
             # Observation counters (A17, drain3/simple_profiler.py)
@@ -173,9 +168,9 @@ class ValidationEngine:
         # the drift cube reads only the metadata columns of clips and is
         # independent of every check — launch its aggregation as a
         # concurrent job (guide §2.6) so it back-fills while the check
-        # and audio jobs materialize, and harvest it where the rows are
-        # first needed below
-        cube_future = None
+        # and audio jobs materialize; it is awaited once those are done
+        # (or have failed) and harvested where the rows are first needed
+        cube_future = cube_pool = None
         if cfg.with_drift:
             from concurrent.futures import ThreadPoolExecutor
             lo, hi = cfg.dur_bounds
@@ -190,20 +185,32 @@ class ValidationEngine:
                 with prof_sec("drift_cube"):
                     return (clips.groupBy("ds", dur_b, "codec", "sr_hz")
                             .agg(F.count(F.lit(1)).alias("n")).collect())
-            _cube_pool = ThreadPoolExecutor(max_workers=1)
-            cube_future = _cube_pool.submit(_cube)
-            _cube_pool.shutdown(wait=False)
-        violations = self.violations(clips, transcripts_ref,
-                                     include_orphans=include_orphans,
-                                     profiler=profiler)
-        schema_rows: List[tuple] = []
-        if cfg.expected_schema is not None:
-            with prof_sec("schema_check"):
-                schema_rows = [tuple(r) for r in
-                               C.schema_violations(clips, cfg.expected_schema).collect()]
-            if schema_rows:
-                violations = violations.unionByName(
-                    local_df(spark, schema_rows, VIOLATION_SCHEMA))
+            cube_pool = ThreadPoolExecutor(max_workers=1)
+            cube_future = cube_pool.submit(_cube)
+        try:
+            violations = self.violations(clips, transcripts_ref,
+                                         include_orphans=include_orphans,
+                                         profiler=profiler)
+            schema_rows: List[tuple] = []
+            if cfg.expected_schema is not None:
+                with prof_sec("schema_check"):
+                    schema_rows = [tuple(r) for r in C.schema_violations(
+                        clips, cfg.expected_schema).collect()]
+                if schema_rows:
+                    violations = violations.unionByName(
+                        local_df(spark, schema_rows, VIOLATION_SCHEMA))
+        except BaseException as err:
+            # the check error wins; the cube job is cancelled if it has
+            # not started, else awaited and its own failure noted — never
+            # left running unobserved behind the propagating error
+            if cube_future is not None and not cube_future.cancel():
+                cube_err = cube_future.exception()
+                if cube_err is not None:
+                    err.add_note(f"drift cube also failed: {cube_err!r}")
+            raise
+        finally:
+            if cube_pool is not None:
+                cube_pool.shutdown(wait=True)
         violations = violations.persist()
 
         # ONE aggregation pass feeds rows_scanned AND all three drift

