@@ -68,11 +68,9 @@ def main() -> None:
         import drain3_spark.pipeline.audio_quality  # noqa
         import drain3_spark.pipeline.audio_sim  # noqa
         import drain3_spark.pipeline.dedup  # noqa
-        import drain3_spark.pipeline.jpeg  # noqa
         import drain3_spark.pipeline.multimodal  # noqa
         import drain3_spark.pipeline.similarity  # noqa
         import drain3_spark.pipeline.text  # noqa
-        import drain3_spark.pipeline.webp  # noqa
         import drain3_spark.core.kernel  # noqa
         import drain3_spark.operators.mining  # noqa
         return x
@@ -102,7 +100,7 @@ def main() -> None:
                 "q34_dedup_groups", "q35_percentiles", "q36_incremental_dedup",
                 "q37_audio_spectral", "q38_neardup_auto", "q39_audio_neardup",
                 "q40_audio_mfcc", "q41_audio_resample",
-                "q42_audio_incremental", "q43_image_formats",
+                "q42_audio_incremental",
                 "q44_audio_dedup_groups", "q45_audio_pipeline",
                 "q46_audio_fingerprint", "q47_audio_quality",
                 "q48_audio_codec_matrix", "q49_audio_segments",

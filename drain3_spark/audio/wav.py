@@ -2,8 +2,7 @@
 
 Real audio corpora rarely arrive as raw sample streams: they are WAV
 files whose ``fmt `` chunk names the codec and sample rate.  This
-module gives the engine the same container realism the image matrix
-has (PNG/JPEG/GIF/TIFF/WebP containers over one decode path):
+module reads and writes that container:
 
 * :func:`decode_wav` walks the RIFF chunk list and dispatches on
   ``wFormatTag`` — PCM16 (1), IEEE float32 (3), A-law (6), mu-law (7),

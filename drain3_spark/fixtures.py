@@ -300,170 +300,6 @@ def gen_clips_padded(spark: SparkSession, n: int, n_ds: int = 7,
     return spark.range(0, n, numPartitions=parts).mapInPandas(synth, CLIPS_SCHEMA)
 
 
-IMAGES_SCHEMA = T.StructType([
-    T.StructField("item_id", T.StringType()),
-    T.StructField("fmt", T.StringType()),
-    T.StructField("payload", T.BinaryType()),
-])
-
-
-def gen_images(spark: SparkSession, n: int, width: int = 16, height: int = 16,
-               partitions: Optional[int] = None) -> DataFrame:
-    """Deterministic uncompressed image corpus (PPM/BMP alternating),
-    synthesized on executors: pixels are md5-keystream bytes of the item
-    index, so every engine reproduces them bit-exactly."""
-    from drain3_spark.shipping import ship_package
-    ship_package(spark)
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-        npx = width * height * 3
-        for b in batches:
-            rows: List[tuple] = []
-            for i in b["id"]:
-                i = int(i)
-                stream = b""
-                k = 0
-                while len(stream) < npx:
-                    stream += hashlib.md5(f"img-{i}-{k}".encode()).digest()
-                    k += 1
-                img = np.frombuffer(stream[:npx], np.uint8).reshape(
-                    height, width, 3)
-                if i % 2 == 0:
-                    fmt = "ppm"
-                    payload = (b"P6\n%d %d\n255\n" % (width, height)
-                               + img.tobytes())
-                else:
-                    fmt = "bmp"
-                    stride = (width * 3 + 3) & ~3
-                    padded = np.zeros((height, stride), np.uint8)
-                    padded[:, :width * 3] = img[::-1, :, ::-1].reshape(
-                        height, width * 3)
-                    px = padded.tobytes()
-                    off = 14 + 40
-                    payload = (b"BM" + struct.pack("<IHHI", off + len(px),
-                                                   0, 0, off)
-                               + struct.pack("<IiiHHIIiiII", 40, width,
-                                             height, 1, 24, 0, len(px),
-                                             2835, 2835, 0, 0) + px)
-                rows.append((f"img-{i:08d}", fmt, payload))
-            yield pd.DataFrame(rows, columns=[f.name for f in IMAGES_SCHEMA])
-
-    parts = partitions or max(spark.sparkContext.defaultParallelism, 8)
-    return spark.range(0, n, numPartitions=parts).mapInPandas(
-        synth, IMAGES_SCHEMA)
-
-
-VIDEOS_SCHEMA = T.StructType([
-    T.StructField("item_id", T.StringType()),
-    T.StructField("n_frames", T.IntegerType()),
-    T.StructField("payload", T.BinaryType()),
-])
-
-
-def gen_videos(spark: SparkSession, n: int, width: int = 16, height: int = 12,
-               n_frames: int = 8,
-               partitions: Optional[int] = None) -> DataFrame:
-    """Deterministic raw Y4M (4:2:0) video corpus synthesized on
-    executors: per-item md5-seeded gradient frames."""
-    from drain3_spark.shipping import ship_package
-    ship_package(spark)
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ysz = width * height
-        csz = (width // 2) * ((height + 1) // 2)
-        for b in batches:
-            rows: List[tuple] = []
-            for i in b["id"]:
-                i = int(i)
-                seed = int.from_bytes(hashlib.md5(f"vid-{i}".encode()).digest()[:4],
-                                      "big")
-                parts = [b"YUV4MPEG2 W%d H%d F25:1 Ip A0:0 C420jpeg\n"
-                         % (width, height)]
-                for k in range(n_frames):
-                    y = ((np.arange(ysz, dtype=np.int64) * 7 + seed + 11 * k)
-                         % 256).astype(np.uint8)
-                    u = ((np.arange(csz, dtype=np.int64) * 3 + seed // 2 + 5 * k)
-                         % 256).astype(np.uint8)
-                    v = ((np.arange(csz, dtype=np.int64) * 5 + seed // 3 + 3 * k)
-                         % 256).astype(np.uint8)
-                    parts.append(b"FRAME\n" + y.tobytes() + u.tobytes()
-                                 + v.tobytes())
-                rows.append((f"vid-{i:08d}", n_frames, b"".join(parts)))
-            yield pd.DataFrame(rows, columns=[f.name for f in VIDEOS_SCHEMA])
-
-    parts = partitions or max(spark.sparkContext.defaultParallelism, 8)
-    return spark.range(0, n, numPartitions=parts).mapInPandas(
-        synth, VIDEOS_SCHEMA)
-
-
-VIDEOS_FMT_SCHEMA = T.StructType([
-    T.StructField("item_id", T.StringType()),
-    T.StructField("fmt", T.StringType()),
-    T.StructField("n_frames", T.IntegerType()),
-    T.StructField("payload", T.BinaryType()),
-])
-
-
-def _mjpeg_frame(i: int, k: int, width: int, height: int) -> np.ndarray:
-    """md5-keystream RGB frame for mjpeg video ``i``, frame ``k`` —
-    regenerable by pins exactly like the image fixtures."""
-    npx = width * height * 3
-    stream = b""
-    j = 0
-    while len(stream) < npx:
-        stream += hashlib.md5(f"vidm-{i}-{k}-{j}".encode()).digest()
-        j += 1
-    return np.frombuffer(stream[:npx], np.uint8).reshape(height, width, 3)
-
-
-def gen_videos_all_formats(spark: SparkSession, n: int, width: int = 16,
-                           height: int = 12, n_frames: int = 8,
-                           partitions: Optional[int] = None) -> DataFrame:
-    """Video corpus cycling the native containers — raw Y4M 4:2:0
-    (even ids, same gradient frames as :func:`gen_videos`) and
-    COMPRESSED Motion-JPEG AVI (odd ids, md5-keystream frames through
-    our own JPEG encoder)."""
-    from drain3_spark.shipping import ship_package
-    ship_package(spark)
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from drain3_spark.pipeline.multimodal import encode_avi_mjpeg
-        ysz = width * height
-        csz = (width // 2) * ((height + 1) // 2)
-        for b in batches:
-            rows: List[tuple] = []
-            for i in b["id"]:
-                i = int(i)
-                if i % 2 == 0:
-                    seed = int.from_bytes(
-                        hashlib.md5(f"vid-{i}".encode()).digest()[:4], "big")
-                    parts = [b"YUV4MPEG2 W%d H%d F25:1 Ip A0:0 C420jpeg\n"
-                             % (width, height)]
-                    for k in range(n_frames):
-                        y = ((np.arange(ysz, dtype=np.int64) * 7 + seed
-                              + 11 * k) % 256).astype(np.uint8)
-                        u = ((np.arange(csz, dtype=np.int64) * 3 + seed // 2
-                              + 5 * k) % 256).astype(np.uint8)
-                        v = ((np.arange(csz, dtype=np.int64) * 5 + seed // 3
-                              + 3 * k) % 256).astype(np.uint8)
-                        parts.append(b"FRAME\n" + y.tobytes() + u.tobytes()
-                                     + v.tobytes())
-                    rows.append((f"vid-{i:08d}", "y4m", n_frames,
-                                 b"".join(parts)))
-                else:
-                    frames = [_mjpeg_frame(i, k, width, height)
-                              for k in range(n_frames)]
-                    rows.append((f"vid-{i:08d}", "mjpeg-avi", n_frames,
-                                 bytearray(encode_avi_mjpeg(frames))))
-            yield pd.DataFrame(rows,
-                               columns=[f.name for f in VIDEOS_FMT_SCHEMA])
-
-    parts = partitions or max(spark.sparkContext.defaultParallelism, 8)
-    return spark.range(0, n, numPartitions=parts).mapInPandas(
-        synth, VIDEOS_FMT_SCHEMA)
-
-
 def gen_transcripts_ref(spark: SparkSession, n: int, dirty: bool = False,
                         n_ds: int = 7, dur_lo: int = 200, dur_hi: int = 3000,
                         partitions: Optional[int] = None) -> DataFrame:
@@ -687,84 +523,3 @@ def gen_fp_queries(spark: SparkSession, n: int, every: int = 10,
     parts = partitions or max(spark.sparkContext.defaultParallelism, 8)
     return (spark.range(0, total, numPartitions=min(parts, max(total, 1)))
             .mapInPandas(synth, CLIPS_SCHEMA))
-
-
-def _md5_pixels(i: int, width: int, height: int) -> np.ndarray:
-    """The md5-keystream pixel block shared by every image fixture."""
-    npx = width * height * 3
-    stream = b""
-    k = 0
-    while len(stream) < npx:
-        stream += hashlib.md5(f"img-{i}-{k}".encode()).digest()
-        k += 1
-    return np.frombuffer(stream[:npx], np.uint8).reshape(height, width, 3)
-
-
-def gen_images_all_formats(spark: SparkSession, n: int, width: int = 16,
-                           height: int = 16,
-                           partitions: Optional[int] = None) -> DataFrame:
-    """Image corpus cycling through EVERY native container — PPM, BMP,
-    PNG, JPEG (lossy baseline), GIF (palette-quantized to the 216-color
-    web cube), TIFF (PackBits), progressive JPEG (SOF2, same
-    quantization ladder as baseline), WebP (lossless VP8L:
-    subtract-green + LZ77 + color cache) — same md5-keystream pixels as
-    :func:`gen_images`, so each row's decoded output is checkable
-    against the regenerated source (exactly for the lossless
-    containers, to PSNR for JPEG, to the web-cube quantization for
-    GIF)."""
-    from drain3_spark.shipping import ship_package
-    ship_package(spark)
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _st
-        from drain3_spark.pipeline.jpeg import (encode_jpeg,
-                                                encode_jpeg_progressive)
-        from drain3_spark.pipeline.multimodal import (encode_gif, encode_png,
-                                                      encode_tiff)
-        from drain3_spark.pipeline.webp import encode_webp_lossless
-        cube = np.array([(r, g, b) for r in range(0, 256, 51)
-                         for g in range(0, 256, 51)
-                         for b in range(0, 256, 51)], np.uint8)
-        for b in batches:
-            rows: List[tuple] = []
-            for i in b["id"]:
-                i = int(i)
-                img = _md5_pixels(i, width, height)
-                f = i % 8
-                if f == 0:
-                    fmt, payload = "ppm", (b"P6\n%d %d\n255\n"
-                                           % (width, height) + img.tobytes())
-                elif f == 1:
-                    stride = (width * 3 + 3) & ~3
-                    padded = np.zeros((height, stride), np.uint8)
-                    padded[:, :width * 3] = img[::-1, :, ::-1].reshape(
-                        height, width * 3)
-                    px = padded.tobytes()
-                    off = 54
-                    fmt, payload = "bmp", (
-                        b"BM" + _st.pack("<IHHI", off + len(px), 0, 0, off)
-                        + _st.pack("<IiiHHIIiiII", 40, width, height, 1, 24,
-                                   0, len(px), 2835, 2835, 0, 0) + px)
-                elif f == 2:
-                    fmt, payload = "png", encode_png(img)
-                elif f == 3:
-                    fmt, payload = "jpeg", encode_jpeg(img, quality=92)
-                elif f == 4:
-                    idx = ((np.round(img[..., 0] / 51.0) * 36
-                            + np.round(img[..., 1] / 51.0) * 6
-                            + np.round(img[..., 2] / 51.0))
-                           .astype(np.uint8))
-                    fmt, payload = "gif", encode_gif(idx, cube)
-                elif f == 5:
-                    fmt, payload = "tiff", encode_tiff(img, packbits=True)
-                elif f == 6:
-                    fmt, payload = "jpeg-prog", encode_jpeg_progressive(
-                        img, quality=92)
-                else:
-                    fmt, payload = "webp", encode_webp_lossless(img)
-                rows.append((f"img-{i:08d}", fmt, bytearray(payload)))
-            yield pd.DataFrame(rows, columns=[f.name for f in IMAGES_SCHEMA])
-
-    parts = partitions or max(spark.sparkContext.defaultParallelism, 8)
-    return spark.range(0, n, numPartitions=parts).mapInPandas(
-        synth, IMAGES_SCHEMA)

@@ -15,10 +15,7 @@ DECODE_ALLOWED = {"audio/runner.py", "audio/wav.py"}
 AUDIO_MODULES = ("pipeline/audio_sim.py", "pipeline/audio_loudness.py",
                  "pipeline/audio_pitch.py", "pipeline/audio_quality.py",
                  "pipeline/audio_fp.py", "pipeline/audio_vad.py",
-                 "validation/audio.py")
-# multimodal.py also holds the image/video operators
-AUDIO_FUNCS = {"pipeline/multimodal.py": ("audio_features",
-                                          "audio_spectral_features")}
+                 "pipeline/multimodal.py", "validation/audio.py")
 
 
 def _tree(rel):
@@ -72,11 +69,6 @@ def test_audio_operators_use_the_runner():
         assert _loop_calls(tree) == [], rel
         assert any(isinstance(n, ast.Name) and n.id == "map_clips"
                    for n in ast.walk(tree)), rel
-    for rel, funcs in AUDIO_FUNCS.items():
-        defs = {n.name: n for n in ast.walk(_tree(rel))
-                if isinstance(n, ast.FunctionDef)}
-        for fn in funcs:
-            assert _loop_calls(defs[fn]) == [], (rel, fn)
 
 
 def test_retired_copies_are_gone():

@@ -113,17 +113,6 @@ def test_multimodal_plumbing(spark):
     assert all(f.n_samples > 0 and 0 < f.rms < 1 and f.zero_crossings > 0
                for f in feats)
 
-    items = clips.select(F.col("clip_id").alias("item_id"),
-                         F.col("bytes").alias("payload"))
-    hist = multimodal.image_features(items, fake_decoder=True).collect()
-    assert len(hist) == 20
-    assert all(abs(sum(h.histogram) - 1.0) < 1e-9 for h in hist)
-
-    with pytest.raises(Exception) as ei:
-        multimodal.image_features(items, fake_decoder=False).collect()
-    assert "NotImplementedError" in str(ei.value) or isinstance(
-        ei.value, NotImplementedError)
-
 
 def test_ivf_assignment_narrow_and_paths_agree(spark, emb):
     """Bucket assignment must be a narrow pass (zero Exchange) and the
@@ -421,163 +410,6 @@ def test_near_dup_blas_path_matches_catalyst(spark, emb):
         assert abs(cat[k] - blas[k]) <= 1e-6, (k, cat[k], blas[k])
 
 
-def _encode_ppm(img):
-    h, w = img.shape[:2]
-    return b"P6\n# test\n%d %d\n255\n" % (w, h) + img.tobytes()
-
-
-def _encode_bmp(img):
-    import struct
-    h, w = img.shape[:2]
-    stride = (w * 3 + 3) & ~3
-    rows = np.zeros((h, stride), np.uint8)
-    rows[:, :w * 3] = img[::-1, :, ::-1].reshape(h, w * 3)   # bottom-up BGR
-    px = rows.tobytes()
-    off = 14 + 40
-    fh = b"BM" + struct.pack("<IHHI", off + len(px), 0, 0, off)
-    ih = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(px),
-                     2835, 2835, 0, 0)
-    return fh + ih + px
-
-
-def test_image_decode_real_formats(spark):
-    """PPM and BMP decode natively (pure numpy) end-to-end through the
-    Spark image path: dimensions, luma histogram, and nearest-neighbor
-    resize all verified against numpy ground truth."""
-    rng = np.random.RandomState(7)
-    img = rng.randint(0, 256, size=(24, 17, 3), dtype=np.uint8)
-
-    # kernel-level roundtrip for both containers
-    assert np.array_equal(multimodal.decode_image(_encode_ppm(img)), img)
-    assert np.array_equal(multimodal.decode_image(_encode_bmp(img)), img)
-
-    items = spark.createDataFrame(
-        [("ppm", bytearray(_encode_ppm(img))),
-         ("bmp", bytearray(_encode_bmp(img)))],
-        "item_id string, payload binary")
-    feats = {r.item_id: r for r in multimodal.image_features(items).collect()}
-    luma = img.mean(axis=2).astype(np.uint8).ravel()
-    want = np.bincount(luma >> 4, minlength=16) / luma.size
-    for r in feats.values():
-        assert (r.width, r.height, r.channels) == (17, 24, 3)
-        assert np.allclose(r.histogram, want)
-
-    resized = {r.item_id: r for r in
-               multimodal.resize_images(items, out_w=8, out_h=6).collect()}
-    truth = multimodal._resize_nn(img, 6, 8)
-    for r in resized.values():
-        got = np.frombuffer(bytes(r.pixels), np.uint8).reshape(6, 8, 3)
-        assert np.array_equal(got, truth)
-
-    # grayscale PGM path
-    gray = rng.randint(0, 256, size=(5, 9), dtype=np.uint8)
-    pgm = b"P5\n9 5\n255\n" + gray.tobytes()
-    dec = multimodal.decode_image(pgm)
-    assert dec.shape == (5, 9, 1) and np.array_equal(dec[:, :, 0], gray)
-
-    # PNG and JPEG are real decoders now: corrupt payloads (signature
-    # but truncated structure) are decode ERRORS, not missing-codec stubs
-    with pytest.raises(ValueError):
-        multimodal.decode_image(b"\x89PNG\r\n\x1a\n....")
-    with pytest.raises(ValueError):
-        multimodal.decode_image(b"\xff\xd8\xff\xe0....")
-    # GIF is real too: a signature with no image descriptor is a
-    # decode error
-    with pytest.raises(ValueError):
-        multimodal.decode_image(b"GIF89a" + b"\x00" * 7 + b"\x3b")
-    # WebP lossless is a real decoder now: an empty container is a
-    # decode error; only the LOSSY VP8 path stays a declared stub
-    with pytest.raises(ValueError):
-        multimodal.decode_image(b"RIFF\x00\x00\x00\x00WEBP")
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_image(
-            b"RIFF\x10\x00\x00\x00WEBPVP8 \x04\x00\x00\x00junk")
-
-
-def _encode_y4m(frames_rgb):
-    """Encode RGB frames as raw Y4M 4:2:0 (BT.601 full range) for the
-    decoder roundtrip test."""
-    h, w = frames_rgb[0].shape[:2]
-    out = [b"YUV4MPEG2 W%d H%d F25:1 Ip A0:0 C420jpeg\n" % (w, h)]
-    for rgb in frames_rgb:
-        f = rgb.astype(np.float64)
-        r, g, b = f[:, :, 0], f[:, :, 1], f[:, :, 2]
-        y = np.clip(np.rint(0.299 * r + 0.587 * g + 0.114 * b), 0, 255)
-        u = np.clip(np.rint(-0.168736 * r - 0.331264 * g + 0.5 * b + 128), 0, 255)
-        v = np.clip(np.rint(0.5 * r - 0.418688 * g - 0.081312 * b + 128), 0, 255)
-        u2 = u.reshape(h // 2, 2, w // 2, 2).mean(axis=(1, 3))
-        v2 = v.reshape(h // 2, 2, w // 2, 2).mean(axis=(1, 3))
-        out.append(b"FRAME\n" + y.astype(np.uint8).tobytes()
-                   + np.rint(u2).astype(np.uint8).tobytes()
-                   + np.rint(v2).astype(np.uint8).tobytes())
-    return b"".join(out)
-
-
-def test_video_frame_sampling_y4m(spark):
-    """Raw Y4M decodes natively: frame count, sampling stride,
-    dimensions, and (approximate, due to 4:2:0 chroma subsampling)
-    pixel roundtrip verified through the Spark path."""
-    # smooth gradient frames: 4:2:0 chroma subsampling averages 2x2
-    # blocks, so only smooth content roundtrips closely
-    yy, xx = np.mgrid[0:8, 0:12]
-    base = np.stack([xx * 255 // 11, yy * 255 // 7,
-                     (xx + yy) * 255 // 18], axis=2).astype(np.uint8)
-    frames = [np.clip(base.astype(int) + 10 * k, 0, 255).astype(np.uint8)
-              for k in range(6)]
-    payload = _encode_y4m(frames)
-
-    # kernel-level: every frame, correct count and shape
-    decoded = list(multimodal.decode_y4m_frames(payload))
-    assert [i for i, _ in decoded] == list(range(6))
-    assert all(f.shape == (8, 12, 3) for _, f in decoded)
-    for (_, got), want in zip(decoded, frames):
-        assert np.abs(got.astype(int) - want.astype(int)).mean() < 16
-
-    items = spark.createDataFrame([("vid0", bytearray(payload))],
-                                  "item_id string, payload binary")
-    rows = multimodal.sample_video_frames(items, every_nth=2).collect()
-    assert [r.frame_idx for r in sorted(rows, key=lambda r: r.frame_idx)] == [0, 2, 4]
-    assert all((r.width, r.height) == (12, 8) for r in rows)
-
-    with pytest.raises(NotImplementedError):
-        list(multimodal.decode_y4m_frames(b"\x00\x00\x01\xba mpeg-ps"))
-
-
-def test_video_frame_sampling_mjpeg_avi(spark):
-    """Motion-JPEG AVI decodes natively end-to-end: container walk,
-    per-frame JPEG decode pixel-identical to a direct decode of the
-    same encoder's output, stride through the Spark path, and the
-    fixture corpus's frames regenerable by id."""
-    from drain3_spark import fixtures as FX
-    from drain3_spark.pipeline.jpeg import decode_jpeg, encode_jpeg
-
-    rng = np.random.default_rng(31)
-    frames = [rng.integers(0, 256, (12, 16, 3), dtype=np.uint8)
-              for _ in range(5)]
-    payload = multimodal.encode_avi_mjpeg(frames, fps=10)
-    decoded = list(multimodal.decode_avi_mjpeg_frames(payload))
-    assert [i for i, _ in decoded] == list(range(5))
-    for (_, got), src in zip(decoded, frames):
-        assert np.array_equal(got, decode_jpeg(encode_jpeg(src,
-                                                           quality=92)))
-
-    items = spark.createDataFrame([("vidm", bytearray(payload))],
-                                  "item_id string, payload binary")
-    rows = multimodal.sample_video_frames(items, every_nth=2).collect()
-    assert sorted(r.frame_idx for r in rows) == [0, 2, 4]
-    assert all((r.width, r.height) == (16, 12) for r in rows)
-
-    # fixture contract: odd ids are mjpeg-avi with md5-keystream frames
-    vids = {r.item_id: r for r in
-            FX.gen_videos_all_formats(spark, 4).collect()}
-    assert vids["vid-00000001"].fmt == "mjpeg-avi"
-    got = dict(multimodal.decode_avi_mjpeg_frames(
-        bytes(vids["vid-00000001"].payload)))
-    want = decode_jpeg(encode_jpeg(FX._mjpeg_frame(1, 0, 16, 12),
-                                   quality=92))
-    assert np.array_equal(got[0], want)
-
-
 def test_connected_components_string_ids(spark):
     """String id columns (clip_id-style corpora) work natively — ids are
     never cast; group_id is the lexicographically smallest member."""
@@ -751,128 +583,6 @@ def test_auto_near_dup_multiprobe_recall(spark):
     assert r2 >= 0.9, f"multi-probe recall too low: {r2} (single-probe {r1})"
 
 
-def _png_forward_filter(img: np.ndarray, ftypes) -> bytes:
-    """Test-side PNG builder applying a GIVEN filter type per scanline
-    (independent forward implementation of RFC 2083 §6, so the
-    decoder's unfiltering is exercised adversarially, not just against
-    our own filter-0 writer)."""
-    import struct as _st
-    import zlib
-    h, w, nch = img.shape
-    ctype = {1: 0, 2: 4, 3: 2, 4: 6}[nch]
-    stride = w * nch
-    flat = img.reshape(h, stride).astype(np.int32)
-    out = []
-    for y in range(h):
-        f = ftypes[y % len(ftypes)]
-        cur = flat[y]
-        prev = flat[y - 1] if y > 0 else np.zeros(stride, np.int32)
-        enc = np.zeros(stride, np.int32)
-        for i in range(stride):
-            a = cur[i - nch] if i >= nch else 0
-            b = prev[i]
-            c = prev[i - nch] if (i >= nch and y > 0) else 0
-            if f == 0:
-                pred = 0
-            elif f == 1:
-                pred = a
-            elif f == 2:
-                pred = b
-            elif f == 3:
-                pred = (a + b) >> 1
-            else:
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-            enc[i] = (cur[i] - pred) & 0xFF
-        out.append(bytes([f]) + enc.astype(np.uint8).tobytes())
-
-    def chunk(tag, body):
-        return (_st.pack(">I", len(body)) + tag + body
-                + _st.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF))
-
-    ihdr = _st.pack(">IIBBBBB", w, h, 8, ctype, 0, 0, 0)
-    return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", zlib.compress(b"".join(out)))
-            + chunk(b"IEND", b""))
-
-
-def test_png_roundtrip_and_all_filters():
-    rng = np.random.RandomState(89)
-    img = rng.randint(0, 256, (13, 17, 3), np.uint8)
-
-    # our own writer (filter 0) -> our decoder
-    got = multimodal.decode_image(multimodal.encode_png(img))
-    assert np.array_equal(got, img)
-    gray = img[..., :1]
-    assert np.array_equal(multimodal.decode_image(multimodal.encode_png(gray)),
-                          gray)
-
-    # every scanline filter type, cycled across rows, via the
-    # independent forward filterer
-    for ftypes in ([1], [2], [3], [4], [0, 1, 2, 3, 4]):
-        payload = _png_forward_filter(img, ftypes)
-        assert np.array_equal(multimodal.decode_image(payload), img), ftypes
-
-    # RGBA: alpha dropped, RGB planes exact (Pillow convert('RGB') parity)
-    rgba = rng.randint(0, 256, (9, 7, 4), np.uint8)
-    got = multimodal.decode_image(_png_forward_filter(rgba, [4]))
-    assert np.array_equal(got, rgba[..., :3])
-    # gray+alpha: alpha dropped, stays 1-channel
-    ga = rng.randint(0, 256, (6, 5, 2), np.uint8)
-    got = multimodal.decode_image(_png_forward_filter(ga, [2]))
-    assert np.array_equal(got, ga[..., :1])
-
-
-def test_png_palette_and_declared_limits():
-    import struct as _st
-    import zlib
-
-    def chunk(tag, body):
-        return (_st.pack(">I", len(body)) + tag + body
-                + _st.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF))
-
-    # palette image: indices 0..3 mapped through a 4-entry PLTE
-    rng = np.random.RandomState(3)
-    idx = rng.randint(0, 4, (5, 6), np.uint8)
-    plte = np.array([[255, 0, 0], [0, 255, 0], [0, 0, 255], [9, 9, 9]],
-                    np.uint8)
-    rows = b"".join(b"\x00" + idx[y].tobytes() for y in range(5))
-    payload = (b"\x89PNG\r\n\x1a\n"
-               + chunk(b"IHDR", _st.pack(">IIBBBBB", 6, 5, 8, 3, 0, 0, 0))
-               + chunk(b"PLTE", plte.tobytes())
-               + chunk(b"IDAT", zlib.compress(rows))
-               + chunk(b"IEND", b""))
-    assert np.array_equal(multimodal.decode_image(payload), plte[idx])
-
-    # declared limits: 16-bit and interlaced raise NotImplementedError
-    for depth, interlace in ((16, 0), (8, 1)):
-        bad = (b"\x89PNG\r\n\x1a\n"
-               + chunk(b"IHDR", _st.pack(">IIBBBBB", 2, 2, depth, 2, 0, 0,
-                                         interlace))
-               + chunk(b"IDAT", zlib.compress(b"\x00" * 14))
-               + chunk(b"IEND", b""))
-        with pytest.raises(NotImplementedError):
-            multimodal.decode_image(bad)
-
-
-def test_png_through_spark_image_ops(spark):
-    """PNG payloads flow through the same mapInPandas feature/resize
-    plumbing as the uncompressed formats."""
-    rng = np.random.RandomState(31)
-    rows = []
-    for i in range(6):
-        img = rng.randint(0, 256, (16, 16, 3), np.uint8)
-        rows.append((f"png-{i}", bytearray(multimodal.encode_png(img))))
-    items = spark.createDataFrame(rows, "item_id string, payload binary")
-    feats = {r.item_id: r for r in multimodal.image_features(items).collect()}
-    assert len(feats) == 6
-    assert all(r.width == 16 and r.height == 16 and r.channels == 3
-               for r in feats.values())
-    resized = multimodal.resize_images(items, out_w=4, out_h=4).collect()
-    assert all(len(r.pixels) == 4 * 4 * 3 for r in resized)
-
-
 def test_auto_near_dup_blas_matches_catalyst(spark, emb):
     """The self-blocking near-dup's BLAS scale path must produce the
     same pairs as the Catalyst expression path, cosines to float
@@ -886,88 +596,3 @@ def test_auto_near_dup_blas_matches_catalyst(spark, emb):
                 method="blas").collect()}
     assert set(cat) == set(blas)
     assert cat and all(abs(cat[k] - blas[k]) <= 1e-6 for k in cat)
-
-
-def test_gif_roundtrip_and_through_spark(spark):
-    """GIF87a/89a decode (real LZW incl. variable code widths, table
-    reset at 4096, interlace) — round trips against our own encoder and
-    flows through the Spark image plumbing."""
-    rng = np.random.RandomState(41)
-    pal = rng.randint(0, 256, (256, 3), np.uint8)
-
-    # plain, interlaced, width-growth, and table-reset cases
-    small = rng.randint(0, 7, (23, 31), np.uint8)
-    assert np.array_equal(
-        multimodal.decode_image(multimodal.encode_gif(small, pal[:7])),
-        pal[:7][small])
-    assert np.array_equal(
-        multimodal.decode_image(
-            multimodal.encode_gif(small, pal[:7], interlace=True)),
-        pal[:7][small])
-    big = rng.randint(0, 256, (64, 101), np.uint8)
-    assert np.array_equal(
-        multimodal.decode_image(multimodal.encode_gif(big, pal)), pal[big])
-    grad = (np.add.outer(np.arange(200), np.arange(300)) % 256).astype(np.uint8)
-    assert np.array_equal(
-        multimodal.decode_image(multimodal.encode_gif(grad, pal)), pal[grad])
-
-    rows = []
-    for i in range(4):
-        idx = rng.randint(0, 256, (16, 16), np.uint8)
-        rows.append((f"gif-{i}", bytearray(multimodal.encode_gif(idx, pal))))
-    items = spark.createDataFrame(rows, "item_id string, payload binary")
-    feats = {r.item_id: r for r in multimodal.image_features(items).collect()}
-    assert len(feats) == 4
-    assert all(r.width == 16 and r.height == 16 and r.channels == 3
-               for r in feats.values())
-
-
-def test_tiff_roundtrip_and_through_spark(spark):
-    """Baseline TIFF decode (uncompressed + PackBits, II and MM byte
-    orders, gray photometric inversion) — exact round trips and the
-    Spark plumbing."""
-    rng = np.random.RandomState(17)
-    img = rng.randint(0, 256, (23, 31, 3), np.uint8)
-    gray = rng.randint(0, 256, (9, 14, 1), np.uint8)
-    for bo in ("<", ">"):
-        for pb in (False, True):
-            assert np.array_equal(
-                multimodal.decode_image(
-                    multimodal.encode_tiff(img, packbits=pb, byte_order=bo)),
-                img), (bo, pb)
-            assert np.array_equal(
-                multimodal.decode_image(
-                    multimodal.encode_tiff(gray, packbits=pb, byte_order=bo)),
-                gray), (bo, pb)
-    # run-heavy payload exercises PackBits repeats
-    rep = np.repeat(rng.randint(0, 256, (23, 4, 3), np.uint8), 8, axis=1)
-    assert np.array_equal(
-        multimodal.decode_image(multimodal.encode_tiff(rep, packbits=True)),
-        rep)
-    # literal segments longer than 128 bytes must split: a 129-byte
-    # literal would emit header 128 — the PackBits NO-OP — and desync
-    # the decoder (regression: fixture img-53 hit this)
-    runfree = np.tile(np.arange(256, dtype=np.uint8), 3)[:600]
-    long_lit = np.concatenate([runfree, np.full(24, 7, np.uint8)])
-    img_ll = long_lit[:624].reshape(13, 16, 3)
-    assert np.array_equal(
-        multimodal.decode_image(multimodal.encode_tiff(img_ll, packbits=True)),
-        img_ll)
-    # declared limit: LZW-compressed TIFF
-    payload = bytearray(multimodal.encode_tiff(gray))
-    # compression tag (259) is the 4th sorted entry; set value to 5 (LZW)
-    import struct as _st
-    off = 8 + 2 + 3 * 12
-    assert _st.unpack_from("<H", payload, off)[0] == 259
-    _st.pack_into("<H", payload, off + 8, 5)
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_image(bytes(payload))
-
-    rows = [(f"tif-{i}", bytearray(multimodal.encode_tiff(
-        rng.randint(0, 256, (16, 16, 3), np.uint8), packbits=bool(i % 2))))
-        for i in range(4)]
-    items = spark.createDataFrame(rows, "item_id string, payload binary")
-    feats = multimodal.image_features(items).collect()
-    assert len(feats) == 4
-    assert all(r.width == 16 and r.height == 16 and r.channels == 3
-               for r in feats)

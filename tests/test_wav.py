@@ -2,8 +2,7 @@
 
 The vectorized block-parallel ADPCM decoder is verified bit-for-bit
 against a straight-line scalar transcription of the public IMA spec
-state machine (the same differential discipline the JPEG/PNG codecs
-use); containers round-trip through our own encoder; the
+state machine; containers round-trip through our own encoder; the
 container-metadata consistency check flags exactly the planted lies.
 """
 
