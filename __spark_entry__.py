@@ -373,7 +373,8 @@ def _q38_neardup_auto(spark, sf):
 def _q34_dedup_groups(spark, sf):
     """Connected components over embedding near-dup pairs -> dedup
     groups with keeper selection (the transitive-closure step after any
-    pair finder; hash-min + pointer-jump label propagation)."""
+    pair finder; one Spark pass: an exact numpy union-find over the
+    pair list in one worker, which holds the whole graph)."""
     from drain3_spark.pipeline.dedup import dedup_groups
     from drain3_spark.pipeline.similarity import cosine_near_dup_pairs
     emb = _t(spark, sf, "embeddings")
@@ -615,9 +616,10 @@ def _q42_audio_incremental(spark, sf):
 
 def _q44_audio_dedup_groups(spark, sf):
     """The audio dedup family's transitive-closure step: q39's
-    near-dup pairs fed through dedup_groups (hash-min connected
-    components + keeper selection) — the decision table a real pipeline
-    consumes (drop rows where is_keeper=0).  Rows-only (FFT embeddings
+    near-dup pairs fed through dedup_groups (connected components by an
+    exact one-worker union-find in one Spark pass + keeper selection) —
+    the decision table a real pipeline consumes (drop rows where
+    is_keeper=0).  Rows-only (FFT embeddings
     upstream); the planted components ({clip-i, dup-i} same group, one
     keeper per group) are pinned by test_q44_audio_groups_pin."""
     from drain3_spark import fixtures as FX

@@ -111,10 +111,10 @@ def main() -> None:
         timed(name, lambda n=name: qs[n](spark, sf_dir).count())
 
     # ---- connected components at realistic pair-graph scale ----
-    # the q34 fixture is ~650 nodes; this certifies the O(log diameter)
-    # pointer-jumping claim on a >=1M-edge graph: 800 worst-case chains
-    # of 1024 nodes (diameter 1023 -> ~log2 generations) + 256 dense
-    # star blobs (the shape near-dup components actually take)
+    # the q34 fixture is ~650 nodes; this times the one-pass union-find
+    # on the largest pair graph the engine builds, >=1M edges held by one
+    # worker: 800 long chains of 1024 nodes (the worst diameter per edge)
+    # + 256 dense star blobs (the shape near-dup components actually take)
     from drain3_spark.pipeline.dedup import connected_components
     chains = (spark.range(800 * 1023)
               .select(((F.col("id") / 1023).cast("long") * 100000
@@ -126,16 +126,12 @@ def main() -> None:
                      (F.lit(1_000_000_000)
                       + (F.col("id") / 800).cast("long") * 10000
                       + F.pmod(F.col("id"), 800) + 1).alias("id_b")))
-    # right-size the edge partitioning: 1M tiny rows do not want the
-    # range scan's task count carried through 10 checkpointed
-    # generations (measured: 64-128-task stages are pure scheduling
-    # overhead at this row count)
     graph = chains.unionByName(blobs).repartition(cpus)
     n_edges = 800 * 1023 + 256 * 800
     cc_stats: dict = {}
 
     def run_cc():
-        labels = connected_components(graph, max_iter=64, stats=cc_stats)
+        labels = connected_components(graph, stats=cc_stats)
         return labels.select(F.countDistinct("group_id")).collect()[0][0]
 
     n_components = timed("cc_graph_1m", run_cc)

@@ -125,7 +125,7 @@ def main() -> None:
             spark.sparkContext.setJobDescription(f"cc_graph_1m rep{i}")
             stats = {}
             t0 = time.time()
-            labels = connected_components(graph, max_iter=64, stats=stats)
+            labels = connected_components(graph, stats=stats)
             n = labels.select(F.countDistinct("group_id")).collect()[0][0]
             samples.append(round(time.time() - t0, 3))
             assert n == 800 + 256, n

@@ -59,14 +59,6 @@ def run_incremental(spark: SparkSession,
     cfg = cfg or EngineConfig()
     engine = ValidationEngine(vcfg or ValidationConfig())
     store = CheckpointStore(state_dir)
-    # default the SESSION checkpoint dir to the engine's reliable state
-    # location: iterative operators run inside this driver (e.g.
-    # dedup_groups / connected_components) then truncate lineage with a
-    # fault-tolerant checkpoint instead of executor-local blocks — on a
-    # cluster that state_dir is HDFS/S3, exactly where generations
-    # should live (VERDICT r04 #3).  Never overrides a caller's choice.
-    if spark.sparkContext.getCheckpointDir() is None:
-        spark.sparkContext.setCheckpointDir(f"{state_dir}/spark_checkpoints")
     hw, prior, counter, _ = store.latest(spark)
 
     all_ds = sorted(r["ds"] for r in clips.select("ds").distinct().collect())

@@ -270,6 +270,7 @@ def mine_templates(df: DataFrame,
             if "prefix_key" in pdf.columns:
                 gkey_parts.append(str(pdf.iloc[0]["prefix_key"]))
         group_key = KEY_SEP.join(gkey_parts)
+        group_token_count = int(pdf.iloc[0]["token_count"])
 
         mine = [r for r in bc_prior.value if r[1] == group_key]
         state_rows = cluster_tuples_to_state(mine)
@@ -297,7 +298,7 @@ def mine_templates(df: DataFrame,
             out["size"].append(size)
             out["template"].append(template)
             out["group_key"].append(group_key)
-            out["token_count"].append(int(pdf.iloc[0]["token_count"])
+            out["token_count"].append(group_token_count
                                        if token_count is None else int(token_count))
             out["updated_key"].append(updated_key)
             out["routing"].append(routing)

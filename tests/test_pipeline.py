@@ -284,16 +284,9 @@ def test_connected_components_and_dedup_groups(spark):
     assert keepers == {10, 30, 40, 50}
 
 
-def test_connected_components_random_vs_union_find(spark):
-    """Randomized (seeded) graph: the distributed label propagation must
-    agree with a sequential union-find on every node."""
-    import numpy as np
-    rng = np.random.RandomState(4242)
-    n = 300
-    edges = [(int(a), int(b)) for a, b in rng.randint(0, n, size=(400, 2))
-             if a != b]
-
-    parent = list(range(n))
+def _union_find_min_labels(edges):
+    """Sequential reference: ``{id: smallest id of its component}``."""
+    parent = {}
 
     def find(x):
         while parent[x] != x:
@@ -302,16 +295,91 @@ def test_connected_components_random_vs_union_find(spark):
         return x
 
     for a, b in edges:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    involved = {v for e in edges for v in e}
-    want = {v: find(v) for v in involved}
+    return {v: find(v) for v in parent}
 
-    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+
+def test_connected_components_random_vs_union_find(spark):
+    """Seeded inputs — a random graph, a long path with shuffled ids
+    (the most hook rounds per edge) and a string-id graph — must agree
+    with a sequential union-find on every node.  A pair with a NULL
+    endpoint is not an edge."""
+    import numpy as np
+    rng = np.random.RandomState(4242)
+    n = 300
+    random_edges = [(int(a), int(b))
+                    for a, b in rng.randint(0, n, size=(400, 2)) if a != b]
+    order = [int(x) * 7 + 3 for x in rng.permutation(2000)]
+    path_edges = [(order[i], order[i + 1]) for i in range(len(order) - 1)]
+    rng.shuffle(path_edges)
+    string_edges = [(f"clip-{a:03d}", f"clip-{b:03d}")
+                    for a, b in rng.randint(0, 120, size=(90, 2))]
+    for edges, ddl in ((random_edges, "id_a long, id_b long"),
+                       (path_edges, "id_a long, id_b long"),
+                       (string_edges, "id_a string, id_b string")):
+        want = _union_find_min_labels(edges)
+        pairs = spark.createDataFrame(edges, ddl)
+        got = {r.id: r.group_id
+               for r in dedup.connected_components(pairs).collect()}
+        assert got == want
+
+    with_null = spark.createDataFrame(string_edges + [(None, "lone")],
+                                      "id_a string, id_b string")
     got = {r.id: r.group_id
-           for r in dedup.connected_components(pairs).collect()}
-    assert got == want
+           for r in dedup.connected_components(with_null).collect()}
+    assert got == _union_find_min_labels(string_edges)
+
+
+def test_connected_components_job_count_independent_of_diameter(spark):
+    """One Spark pass: a 256-node path (diameter 255) submits exactly as
+    many Spark jobs as a single pair."""
+    sc = spark.sparkContext
+    counts = []
+    for i, edges in enumerate(([(k, k + 1) for k in range(255)], [(0, 1)])):
+        pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+        group = f"cc-job-count-{i}"
+        sc.setJobGroup(group, group)
+        try:
+            rows = dedup.connected_components(pairs).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert {r.group_id for r in rows} == {0}
+        counts.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert counts[0] == counts[1], counts
+
+
+def test_connected_components_leaves_session_conf_alone(spark):
+    """The session conf is shared by every thread's queries: while CC
+    runs on another thread, AQE and the shuffle partition count must
+    read the same as before it started."""
+    import threading
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    before = {k: spark.conf.get(k) for k in keys}
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(255)],
+                                  "id_a long, id_b long")
+    result, errors = [], []
+
+    def run():
+        try:
+            result.extend(dedup.connected_components(pairs).collect())
+        except Exception as e:  # surfaced by the assert below
+            errors.append(e)
+
+    t = threading.Thread(target=run)
+    seen = []
+    t.start()
+    while t.is_alive():
+        seen.append({k: spark.conf.get(k) for k in keys})
+        t.join(timeout=0.005)
+    t.join(timeout=300)
+    assert not t.is_alive() and not errors, errors
+    assert len(result) == 256
+    assert seen and all(s == before for s in seen), [
+        s for s in seen if s != before][:3]
 
 
 def test_jaccard_default_cap_keeps_recall_on_straddling_pairs(spark):
@@ -429,62 +497,6 @@ def test_connected_components_rejects_mixed_id_types(spark):
     pairs = spark.createDataFrame([(1, "a")], "id_a long, id_b string")
     with pytest.raises(TypeError, match="integer or string"):
         dedup.connected_components(pairs)
-
-
-def test_connected_components_checkpoint_dir(spark, tmp_path):
-    """Passing a reliable checkpoint_dir must actually land generations
-    there (fault-tolerant truncation on cluster runs)."""
-    ckpt = str(tmp_path / "cc_ckpt")
-    edges = [(i, i + 1) for i in range(0, 12)]
-    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    sc = spark.sparkContext
-    try:
-        stats = {}
-        got = {r.id: r.group_id
-               for r in dedup.connected_components(
-                   pairs, checkpoint_dir=ckpt, stats=stats).collect()}
-        assert got == {i: 0 for i in range(13)}
-        assert stats["converged"] and stats["iterations"] >= 1
-        import os
-        found = [os.path.join(dp, f) for dp, _, fs in os.walk(ckpt) for f in fs]
-        assert found, "no checkpoint files written to the reliable dir"
-    finally:
-        # best-effort unset so later tests keep the localCheckpoint default
-        try:
-            none_obj = getattr(getattr(sc._jvm.scala, "None$"), "MODULE$")
-            getattr(sc._jsc.sc(), "checkpointDir_$eq")(none_obj)
-        except Exception:
-            pass
-
-
-def test_connected_components_max_iter_warning(spark, caplog):
-    """Exhausting max_iter without convergence must WARN and set
-    stats['converged']=False (ADVICE r04: silent non-convergence)."""
-    import logging
-    # a long path needs several generations; max_iter=1 cannot converge
-    edges = [(i, i + 1) for i in range(0, 40)]
-    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    stats = {}
-    with caplog.at_level(logging.WARNING, logger="drain3_spark.pipeline.dedup"):
-        dedup.connected_components(pairs, max_iter=1, stats=stats).collect()
-    assert stats["converged"] is False
-    assert any("without converging" in r.message for r in caplog.records)
-
-
-def test_connected_components_iterations_logarithmic(spark):
-    """Pointer jumping certifies O(log diameter): a 256-node path (the
-    worst diameter per edge) converges in <= 2*ceil(log2(n)) + 2
-    generations, far below the O(n) a plain hash-min propagation needs."""
-    import math
-    n = 256
-    pairs = spark.createDataFrame([(i, i + 1) for i in range(n - 1)],
-                                  "id_a long, id_b long")
-    stats = {}
-    got = {r.id: r.group_id
-           for r in dedup.connected_components(pairs, stats=stats).collect()}
-    assert got == {i: 0 for i in range(n)}
-    assert stats["converged"]
-    assert stats["iterations"] <= 2 * math.ceil(math.log2(n)) + 2, stats
 
 
 def test_update_band_index_sequential_equals_one_shot(spark):

@@ -110,27 +110,3 @@ def test_incremental_snapshot_cadence(spark, tmp_path):
     # final state carries ds2's size increments through the ds3 commit
     final = {r[3]: r[4] for r in res[-1].clusters}
     assert final["alpha beta gamma"] == 8
-
-
-def test_incremental_defaults_session_checkpoint_dir(spark, tmp_path):
-    """run_incremental points the session checkpoint dir at the engine
-    state dir (unless the caller already set one), so iterative
-    operators invoked inside the driver truncate lineage with
-    fault-tolerant checkpoints (VERDICT r04 #3)."""
-    sc = spark.sparkContext
-    prior = sc.getCheckpointDir()
-    try:
-        if prior is not None:
-            none_obj = getattr(getattr(sc._jvm.scala, "None$"), "MODULE$")
-            getattr(sc._jsc.sc(), "checkpointDir_$eq")(none_obj)
-        clips = spark.createDataFrame(
-            [("2026-08-01", "clip-0", "hello world 1")],
-            "ds string, clip_id string, transcript string")
-        run_incremental(spark, clips, str(tmp_path / "st"), validate=False)
-        got = sc.getCheckpointDir()
-        assert got is not None and str(tmp_path / "st") in got
-    finally:
-        none_obj = getattr(getattr(sc._jvm.scala, "None$"), "MODULE$")
-        getattr(sc._jsc.sc(), "checkpointDir_$eq")(none_obj)
-        if prior is not None:
-            sc.setCheckpointDir(prior)
