@@ -35,47 +35,16 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    n_clips = int(os.environ.get("SPARK_GRAFT_BENCH_CLIPS", "200000"))
-
-    from pyspark.sql import functions as F
 
     import __spark_entry__ as entry
-    from drain3_spark import fixtures as FX
+    import bench_setup as BS
     from drain3_spark.session import get_spark
     from drain3_spark.validation.runner import ValidationConfig, ValidationEngine
 
     spark = get_spark("drain3_spark_bench", master=f"local[{cpus}]",
                       shuffle_partitions=max(cpus, 16))
 
-    # warm up the JVM/codegen path and the python worker pool so the
-    # first timed query isn't charged session/worker initialization
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    from pyspark.sql.functions import pandas_udf as _pu
-
-    def _warm_fn(x):
-        # import EVERY module a timed Arrow stage will touch: the
-        # per-worker import storm (numpy/pandas/pyarrow + the engine's
-        # DSP/codec modules, ~seconds x 32 workers under contention)
-        # must land here, in the untimed prewarm, not inside the first
-        # audio query's clock
-        import numpy, pandas  # noqa
-        import drain3_spark.audio.codecs  # noqa
-        import drain3_spark.audio.flac  # noqa
-        import drain3_spark.audio.wav  # noqa
-        import drain3_spark.audio.synth  # noqa
-        import drain3_spark.fixtures  # noqa
-        import drain3_spark.pipeline.audio_fp  # noqa
-        import drain3_spark.pipeline.audio_quality  # noqa
-        import drain3_spark.pipeline.audio_sim  # noqa
-        import drain3_spark.pipeline.dedup  # noqa
-        import drain3_spark.pipeline.multimodal  # noqa
-        import drain3_spark.pipeline.similarity  # noqa
-        import drain3_spark.pipeline.text  # noqa
-        import drain3_spark.core.kernel  # noqa
-        import drain3_spark.operators.mining  # noqa
-        return x
-    _warm = _pu(_warm_fn, "long")
-    spark.range(0, cpus * 4, numPartitions=cpus * 4).select(_warm("id")).count()
+    BS.prewarm(spark, cpus)
 
     timings: dict[str, float] = {}
 
@@ -112,22 +81,10 @@ def main() -> None:
 
     # ---- connected components at realistic pair-graph scale ----
     # the q34 fixture is ~650 nodes; this times the one-pass union-find
-    # on the largest pair graph the engine builds, >=1M edges held by one
-    # worker: 800 long chains of 1024 nodes (the worst diameter per edge)
-    # + 256 dense star blobs (the shape near-dup components actually take)
+    # on the largest pair graph the engine builds (bench_setup.cc_graph)
+    from pyspark.sql import functions as F
     from drain3_spark.pipeline.dedup import connected_components
-    chains = (spark.range(800 * 1023)
-              .select(((F.col("id") / 1023).cast("long") * 100000
-                       + F.pmod(F.col("id"), 1023)).alias("id_a"))
-              .withColumn("id_b", F.col("id_a") + 1))
-    blobs = (spark.range(256 * 800)
-             .select((F.lit(1_000_000_000)
-                      + (F.col("id") / 800).cast("long") * 10000).alias("id_a"),
-                     (F.lit(1_000_000_000)
-                      + (F.col("id") / 800).cast("long") * 10000
-                      + F.pmod(F.col("id"), 800) + 1).alias("id_b")))
-    graph = chains.unionByName(blobs).repartition(cpus)
-    n_edges = 800 * 1023 + 256 * 800
+    graph = BS.cc_graph(spark, cpus)
     cc_stats: dict = {}
 
     def run_cc():
@@ -135,7 +92,7 @@ def main() -> None:
         return labels.select(F.countDistinct("group_id")).collect()[0][0]
 
     n_components = timed("cc_graph_1m", run_cc)
-    assert n_components == 800 + 256, n_components
+    assert n_components == BS.CC_COMPONENTS, n_components
 
     # ---- audio dedup throughput at corpus scale ----
     # q39's fixture corpus is 220 clips; this times the same operator
@@ -150,12 +107,7 @@ def main() -> None:
     # to parquet and excluded from the timing.
     from drain3_spark.pipeline.audio_sim import (audio_embeddings,
                                                  audio_near_dup_pairs)
-    n_audio = int(os.environ.get("SPARK_GRAFT_BENCH_AUDIO_CLIPS", "50000"))
-    awork = f"/tmp/drain3_spark_bench_audio_v1/clips_{n_audio}"
-    if not os.path.exists(awork + "/_SUCCESS"):
-        FX.write_clips(FX.gen_clips(spark, n_audio, dirty=False, dur_lo=20,
-                                    dur_hi=60, partitions=cpus * 2), awork)
-    aclips = spark.read.parquet(awork)
+    aclips, n_audio = BS.audio_clips(spark, cpus)
     timed("audio_embed_50k",
           lambda: audio_embeddings(aclips).count())
     n_audio_pairs = timed(
@@ -165,17 +117,7 @@ def main() -> None:
     audio_embed_cps = round(n_audio / timings["audio_embed_50k"], 1)
 
     # ---- clips validation throughput (north metric) ----
-    work = "/tmp/drain3_spark_bench_clips_v2"  # v2: fixture adds sr-flip on the drift partition
-    clips_path = f"{work}/clips_{n_clips}"
-    ref_path = f"{work}/ref_{n_clips}"
-    if not os.path.exists(clips_path + "/_SUCCESS"):
-        FX.write_clips(FX.gen_clips(spark, n_clips, dirty=True, dur_lo=20,
-                                    dur_hi=60, partitions=cpus * 2), clips_path)
-        FX.gen_transcripts_ref(spark, n_clips, dirty=True, dur_lo=20, dur_hi=60,
-                               partitions=cpus * 2) \
-            .write.mode("overwrite").parquet(ref_path)
-    clips = spark.read.parquet(clips_path)
-    ref = spark.read.parquet(ref_path)
+    clips, ref, n_clips = BS.validation_tables(spark, cpus)
 
     # bench clips are 20-60 ms; bounds must admit them or the audio
     # decode pass would skip every row (and everything flags dur_bounds)
@@ -221,7 +163,7 @@ def main() -> None:
         "violations_found": n_viol,
         "clusters_mined": n_clusters,
         "cpus": cpus,
-        "cc_graph": {"edges": n_edges, "components": n_components,
+        "cc_graph": {"edges": BS.CC_EDGES, "components": n_components,
                      "iterations": cc_stats.get("iterations"),
                      "converged": cc_stats.get("converged"),
                      "iter_secs": cc_stats.get("iter_secs")},

@@ -50,25 +50,12 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     import __spark_entry__ as entry
+    import bench_setup as BS
     from drain3_spark.session import get_spark
 
     spark = get_spark("drain3_spark_bench_extra", master=f"local[{cpus}]",
                       shuffle_partitions=max(cpus, 16))
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    # same python-worker prewarm as bench.py
-    from pyspark.sql.functions import pandas_udf as _pu
-
-    def _warm_fn(x):
-        import numpy, pandas  # noqa
-        import drain3_spark.audio.codecs  # noqa
-        import drain3_spark.audio.synth  # noqa
-        import drain3_spark.fixtures  # noqa
-        import drain3_spark.pipeline.audio_sim  # noqa
-        import drain3_spark.pipeline.dedup  # noqa
-        import drain3_spark.core.kernel  # noqa
-        return x
-    _warm = _pu(_warm_fn, "long")
-    spark.range(0, cpus * 4, numPartitions=cpus * 4).select(_warm("id")).count()
+    BS.prewarm(spark, cpus)
 
     qs = dict(entry.queries(), **entry.extra_bench_queries())
     names = args.queries or [n for n in qs
@@ -108,17 +95,7 @@ def main() -> None:
 
     if args.cc:
         from drain3_spark.pipeline.dedup import connected_components
-        chains = (spark.range(800 * 1023)
-                  .select(((F.col("id") / 1023).cast("long") * 100000
-                           + F.pmod(F.col("id"), 1023)).alias("id_a"))
-                  .withColumn("id_b", F.col("id_a") + 1))
-        blobs = (spark.range(256 * 800)
-                 .select((F.lit(1_000_000_000)
-                          + (F.col("id") / 800).cast("long") * 10000).alias("id_a"),
-                         (F.lit(1_000_000_000)
-                          + (F.col("id") / 800).cast("long") * 10000
-                          + F.pmod(F.col("id"), 800) + 1).alias("id_b")))
-        graph = chains.unionByName(blobs).repartition(cpus)
+        graph = BS.cc_graph(spark, cpus)
         samples = []
         stats: dict = {}
         for i in range(args.repeats):
@@ -128,29 +105,16 @@ def main() -> None:
             labels = connected_components(graph, stats=stats)
             n = labels.select(F.countDistinct("group_id")).collect()[0][0]
             samples.append(round(time.time() - t0, 3))
-            assert n == 800 + 256, n
+            assert n == BS.CC_COMPONENTS, n
         timings["cc_graph_1m"] = samples
         timings["cc_iter_secs"] = [round(s, 3) for s in stats.get("iter_secs", [])]
 
     if args.validate:
-        from drain3_spark import fixtures as FX
         from drain3_spark.validation.runner import (ValidationConfig,
                                                     ValidationEngine)
         from drain3_spark.config import EngineConfig
         from drain3_spark.operators.mining import mine_templates
-        n_clips = int(os.environ.get("SPARK_GRAFT_BENCH_CLIPS", "200000"))
-        work = "/tmp/drain3_spark_bench_clips_v2"
-        clips_path = f"{work}/clips_{n_clips}"
-        ref_path = f"{work}/ref_{n_clips}"
-        if not os.path.exists(clips_path + "/_SUCCESS"):
-            FX.write_clips(FX.gen_clips(spark, n_clips, dirty=True, dur_lo=20,
-                                        dur_hi=60, partitions=cpus * 2),
-                           clips_path)
-            FX.gen_transcripts_ref(spark, n_clips, dirty=True, dur_lo=20,
-                                   dur_hi=60, partitions=cpus * 2) \
-                .write.mode("overwrite").parquet(ref_path)
-        clips = spark.read.parquet(clips_path)
-        ref = spark.read.parquet(ref_path)
+        clips, ref, _ = BS.validation_tables(spark, cpus)
         engine = ValidationEngine(ValidationConfig(drift_alpha=0.01,
                                                    dur_bounds=(10, 5000)))
         samples = []
@@ -169,15 +133,9 @@ def main() -> None:
         timings["validate_clips"] = samples
 
     if args.audio50k:
-        from drain3_spark import fixtures as FX
         from drain3_spark.pipeline.audio_sim import (audio_embeddings,
                                                      audio_near_dup_pairs)
-        n_audio = int(os.environ.get("SPARK_GRAFT_BENCH_AUDIO_CLIPS", "50000"))
-        awork = f"/tmp/drain3_spark_bench_audio_v1/clips_{n_audio}"
-        if not os.path.exists(awork + "/_SUCCESS"):
-            FX.write_clips(FX.gen_clips(spark, n_audio, dirty=False, dur_lo=20,
-                                        dur_hi=60, partitions=cpus * 2), awork)
-        aclips = spark.read.parquet(awork)
+        aclips, _ = BS.audio_clips(spark, cpus)
         for nm, fn in (("audio_embed_50k",
                         lambda: audio_embeddings(aclips).count()),
                        ("audio_neardup_50k",

@@ -294,10 +294,7 @@ class TemplateBank:
             merged = self.merge_template(tokens, rec.tokens)
             change = "none" if merged == rec.tokens else "cluster_template_changed"
             rec.tokens = merged
-            rec.size += 1
-            rec.updated_key = order_key
-            if self.max_clusters is not None:
-                self.registry.move_to_end(rec.cid)  # recency touch
+            self.record_hit(rec, order_key)
         return {
             "cluster_id": rec.cid,
             "change_type": change,
@@ -306,6 +303,14 @@ class TemplateBank:
             "cluster_count": len(self.registry),
             "created_key": rec.created_key,
         }
+
+    def record_hit(self, rec: ClusterRec, order_key: str) -> None:
+        """Bookkeeping of an ingest that lands in an existing cluster:
+        size, last-update key and the LRU recency touch."""
+        rec.size += 1
+        rec.updated_key = order_key
+        if self.max_clusters is not None:
+            self.registry.move_to_end(rec.cid)  # recency touch
 
     # ------------------------------------------------------------------ infer
 

@@ -330,10 +330,7 @@ def mine_templates(df: DataFrame,
             hit = memo.get(mstr) if use_memo else None
             if hit is not None:
                 rec, tmpl = hit
-                rec.size += 1
-                rec.updated_key = ckeys[i]
-                if bank.max_clusters is not None:
-                    bank.registry.move_to_end(rec.cid)
+                bank.record_hit(rec, ckeys[i])
                 emit("a", [col[i] for col in ovals_cols], ckeys[i],
                      ref_of(rec), "none", int(rec.size), tmpl, ckeys[i])
                 continue

@@ -14,8 +14,10 @@ bucket space of ``lsh_bands * 2**lsh_bits`` keys that grows with a
 real knob, unlike the earlier top-mel-band key whose cardinality was
 capped at ``n_mels`` regardless of corpus size; see
 :func:`audio_near_dup_pairs` for the sizing recipe and the legacy
-``blocking="peak"`` escape hatch), and the exact cosine verify in
-either Catalyst-expression or one-task BLAS form — candidate-bounded
+``blocking="peak"`` escape hatch), and the family's one exact cosine
+verify — :func:`drain3_spark.pipeline.similarity._verify_pairs`
+(Catalyst expressions) or ``_blas_pairs_by_block`` (one BLAS task per
+bucket, string clip ids passed straight through) — candidate-bounded
 at any corpus size.
 
 Key invariances of the embedding (measured, pinned by tests):
@@ -31,6 +33,7 @@ Key invariances of the embedding (measured, pinned by tests):
 
 from __future__ import annotations
 
+import operator
 from typing import Dict, Optional, Tuple
 
 import numpy as np
@@ -392,71 +395,36 @@ def audio_near_dup_pairs(clips: DataFrame, threshold: float = 0.999,
 
     Verification is the exact per-pair cosine: ``method="catalyst"``
     (default) as a pure expression; ``method="blas"`` one Gram-matrix
-    Arrow task per bucket (string ids ride through the BLAS kernel as
-    ``xxhash64`` longs, collision probability ~n²/2⁶⁴).  Gain-adjusted,
+    Arrow task per bucket.  Gain-adjusted,
     re-encoded, noise-perturbed, and RESAMPLED copies of a clip are all
     found (embedding invariances, module docstring)."""
     # the decode+FFT embedding pass AND the bucket-assignment UDF feed
-    # BOTH sides of the candidate self-join (and the id-resolution
-    # joins on the BLAS path) — Catalyst does not reuse exchanges
-    # across DAG branches, so persist at the ASSIGNED boundary: one
-    # decode pass and one LSH pass total, instead of one decode (via
-    # an embedding-level persist) but two bucket-UDF executions
+    # BOTH sides of the candidate self-join — Catalyst does not reuse
+    # exchanges across DAG branches, so persist at the ASSIGNED
+    # boundary: one decode pass and one LSH pass total, instead of one
+    # decode (via an embedding-level persist) but two bucket-UDF
+    # executions
     from drain3_spark.pipeline.dedup import _SharedScope
+    from drain3_spark.pipeline.similarity import (_blas_pairs_by_block,
+                                                  _verify_pairs)
     scope = _SharedScope()
     assigned = scope.share(
         _embed_assigned(clips, blocking, n_mels, frame_ms, hop_ms, f_lo,
                         f_hi, lsh_bits, lsh_bands, lsh_seed))
+    e = assigned.select(F.col("clip_id").alias("id"),
+                        F.col("bucket").alias("blk"), "vec")
 
     if method == "blas":
-        from drain3_spark.pipeline.similarity import _blas_pairs_by_block
-        hashed = assigned.select(
-            F.xxhash64("clip_id").alias("id"), F.col("bucket").alias("blk"),
-            "vec", "clip_id")
-        pairs = (_blas_pairs_by_block(hashed.select("id", "blk", "vec"),
-                                      threshold)
+        pairs = (_blas_pairs_by_block(e, threshold)
                  .dropDuplicates(["id_a", "id_b"]))
-        ids = hashed.select("id", "clip_id").dropDuplicates(["id"])
-        resolved = (pairs
-                    .join(ids.select(F.col("id").alias("id_a"),
-                                     F.col("clip_id").alias("ca")), "id_a")
-                    .join(ids.select(F.col("id").alias("id_b"),
-                                     F.col("clip_id").alias("cb")), "id_b"))
-        return scope.attach(
-            resolved.select(F.least("ca", "cb").alias("clip_id_a"),
-                            F.greatest("ca", "cb").alias("clip_id_b"),
-                            "cosine"))
+        return scope.attach(pairs.select(F.col("id_a").alias("clip_id_a"),
+                                         F.col("id_b").alias("clip_id_b"),
+                                         "cosine"))
 
-    from drain3_spark.pipeline.similarity import _dot, _norm
     from drain3_spark.util import widen_small_scan
-    # per-row norms computed once on each join input (bit-identical to
-    # the inlined cosine — same doubles, no reassociation) so each
-    # candidate pair evaluates only the dot fold, not dot + 2 norms
-    # twice (threshold pushed into the join condition + projection)
-    assigned = widen_small_scan(assigned).withColumn(
-        "_nrm", _norm(F.col("vec")))
-    a = assigned.select(F.col("clip_id").alias("clip_id_a"), "bucket",
-                        F.col("vec").alias("vec_a"),
-                        F.col("_nrm").alias("_nrm_a"))
-    b = assigned.select(F.col("clip_id").alias("clip_id_b"),
-                        F.col("bucket").alias("bucket_b"),
-                        F.col("vec").alias("vec_b"),
-                        F.col("_nrm").alias("_nrm_b"))
-    # dedupe cross-band pairs AFTER the threshold filter on the slim
-    # (id, id, cosine) rows — the former pre-cosine dropDuplicates
-    # shuffled every candidate pair with both embedding vectors
-    # attached (guide §2.3; see cosine_near_dup_pairs_auto).  Each
-    # shared-band occurrence yields the same cosine, so the result is
-    # identical.
-    cosine = F.round(_dot(F.col("vec_a"), F.col("vec_b"))
-                     / (F.col("_nrm_a") * F.col("_nrm_b")), 6)
-    return scope.attach(
-        a.join(b, (F.col("bucket") == F.col("bucket_b"))
-               & (F.col("clip_id_a") < F.col("clip_id_b")))
-        .withColumn("cosine", cosine)
-        .filter(F.col("cosine") >= threshold)
-        .select("clip_id_a", "clip_id_b", "cosine")
-        .dropDuplicates(["clip_id_a", "clip_id_b"]))
+    e = widen_small_scan(e)
+    return scope.attach(_verify_pairs(e, e, threshold, operator.lt,
+                                      ("clip_id_a", "clip_id_b")))
 
 
 # -------------------------------------------------- incremental dedup
@@ -503,32 +471,21 @@ def audio_incremental_duplicates(new_clips: DataFrame, index: DataFrame,
     ``lsh_bits``/``lsh_bands``/``lsh_seed``) must match the arguments
     here — bucket ids and embedding dimensions are only comparable
     within one parameterization."""
-    from drain3_spark.pipeline.similarity import _dot, _norm
+    from drain3_spark.pipeline.similarity import _verify_pairs
     from drain3_spark.util import widen_small_scan
 
     new_idx = widen_small_scan(
         audio_embedding_index(new_clips, n_mels, frame_ms, hop_ms,
                               f_lo, f_hi, blocking, lsh_bits, lsh_bands,
                               lsh_seed))
-    # per-row norms once per side (bit-identical cosine, see
-    # audio_near_dup_pairs) — the per-pair work is the dot fold alone;
-    # cross-band dedup happens AFTER the threshold filter on the slim
-    # (new_id, old_id, cosine) rows so candidate pairs never shuffle
-    # with their embedding payloads (guide §2.3)
-    cosine = F.round(_dot(F.col("vec_new"), F.col("vec_old"))
-                     / (F.col("_nrm_new") * F.col("_nrm_old")), 6)
-    return (new_idx.select(F.col("clip_id").alias("new_id"), "bucket",
-                           F.col("embedding").alias("vec_new"),
-                           _norm(F.col("embedding")).alias("_nrm_new"))
-            .join(index.select(F.col("clip_id").alias("old_id"), "bucket",
-                               F.col("embedding").alias("vec_old"),
-                               _norm(F.col("embedding")).alias("_nrm_old")),
-                  "bucket")
-            .filter(F.col("new_id") != F.col("old_id"))
-            .withColumn("cosine", cosine)
-            .filter(F.col("cosine") >= threshold)
-            .select("new_id", "old_id", "cosine")
-            .dropDuplicates(["new_id", "old_id"]))
+
+    def side(idx: DataFrame) -> DataFrame:
+        return idx.select(F.col("clip_id").alias("id"),
+                          F.col("bucket").alias("blk"),
+                          F.col("embedding").alias("vec"))
+
+    return _verify_pairs(side(new_idx), side(index), threshold, operator.ne,
+                         ("new_id", "old_id"))
 
 
 def update_audio_index(index: DataFrame, new_index: DataFrame,

@@ -6,15 +6,23 @@
   ``orderBy().limit(k)`` is a per-partition heap + driver merge, not a
   full sort).
 * IVF top-k — the scale path: deterministic coarse centroids (the first
-  C vectors by id), every vector assigned to its nearest centroid once
-  (broadcast join + ``min_by``), queries probe only the P nearest
-  buckets.  Recall < 1 by construction; the bench reports both.
-* cosine near-dup pairs within blocks (embedding dedup).
+  C vectors by id), every vector assigned to its ``probes`` nearest
+  centroids in one narrow pass (:func:`assign_ivf_buckets_multiprobe`;
+  single-probe assignment is its ``probes=1`` case), queries probe only
+  the P nearest buckets.  Recall < 1 by construction; the bench reports
+  both.
+* cosine near-dup pairs within blocks (embedding dedup).  Every near-dup
+  operator — labeled, self-blocking, and the audio operators in
+  :mod:`drain3_spark.pipeline.audio_sim` — blocks its candidates its own
+  way and then runs ONE exact verify: :func:`_verify_pairs` (Catalyst
+  expressions, bit-reproducible against the DuckDB oracle) or
+  :func:`_blas_pairs_by_block` (one Gram-matrix Arrow task per block).
 """
 
 from __future__ import annotations
 
-from typing import Iterator, List, Sequence
+import operator
+from typing import Callable, Iterator, Sequence, Tuple
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
@@ -90,56 +98,21 @@ def assign_ivf_buckets(embeddings: DataFrame, num_centroids: int = 16,
                        id_col: str = "vec_id",
                        vec_col: str = "embedding") -> DataFrame:
     """Assign each vector to its nearest coarse centroid in ONE NARROW
-    PASS — zero Exchange.
+    PASS — zero Exchange: ``(id, bucket, vec)``, the ``probes=1`` case of
+    :func:`assign_ivf_buckets_multiprobe`.
 
     Centroids are the first ``num_centroids`` vectors by id —
     deterministic, no iterative k-means needed for a bucketing layout.
     The centroid table is tiny and bounded, so it is collected once and
-    pushed to executors (as a literal array for small C, as a broadcast
-    numpy matrix above ``_IVF_LITERAL_MAX``); the argmin happens per row
-    with no join and no shuffle.  (The naive broadcast-join + min_by
+    pushed to executors (as a broadcast one-row array for small C, as a
+    broadcast numpy matrix above ``_IVF_LITERAL_MAX``); the argmin
+    happens per row with no shuffle.  (The naive broadcast-join + min_by
     formulation materializes N x C rows through an Exchange — a 1024x
     row blowup at C=1024; at 10^12 rows that Exchange IS the job.)
     Ties break to the lowest centroid id in both paths.
     """
-    cent_rows = _collect_centroids(embeddings, num_centroids, id_col, vec_col)
-    e = embeddings.select(id_col, F.col(vec_col).cast("array<double>").alias("vec"))
-
-    if len(cent_rows) <= _IVF_LITERAL_MAX:
-        cents = _centroid_array_df(embeddings.sparkSession, cent_rows)
-        scored = F.transform(
-            F.col("_cents"),
-            lambda c: F.struct(
-                F.aggregate(F.zip_with(F.col("vec"), c["cvec"],
-                                       lambda x, y: (x - y) * (x - y)),
-                            F.lit(0.0), lambda acc, v: acc + v).alias("d"),
-                c["cid"].alias("cid")))
-        # struct min orders by (d, cid): deterministic low-cid tie-break
-        return (e.crossJoin(F.broadcast(cents))
-                .select(id_col, F.array_min(scored)["cid"].alias("bucket"),
-                        "vec"))
-
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql import types as T
-    ids = [int(r["centroid_id"]) for r in cent_rows]
-    mat = np.asarray([r["cvec"] for r in cent_rows], dtype=np.float64)
-    bc = embeddings.sparkSession.sparkContext.broadcast((ids, mat))
-
-    @pandas_udf(T.LongType())
-    def nearest(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        import numpy as _np
-        cids, cmat = bc.value
-        cids = _np.asarray(cids, dtype=_np.int64)
-        cnorm = (cmat * cmat).sum(axis=1)
-        for series in it:
-            X = _np.asarray([list(v) for v in series], dtype=_np.float64)
-            # ||x-c||^2 = ||x||^2 - 2 x.c + ||c||^2; argmin over c drops ||x||^2
-            d = cnorm[None, :] - 2.0 * (X @ cmat.T)
-            import pandas as _pd
-            yield _pd.Series(cids[_np.argmin(d, axis=1)])
-
-    return e.select(id_col, nearest(F.col("vec")).alias("bucket"), "vec")
+    return assign_ivf_buckets_multiprobe(embeddings, num_centroids, 1,
+                                         id_col, vec_col).drop("probe")
 
 
 def assign_ivf_buckets_multiprobe(embeddings: DataFrame,
@@ -149,8 +122,8 @@ def assign_ivf_buckets_multiprobe(embeddings: DataFrame,
     """Multi-probe IVF assignment: each vector lands in its ``probes``
     NEAREST coarse buckets — ``(id, probe, bucket, vec)``, one row per
     (vector, probe), still a single narrow pass with zero Exchange
-    (same argument as :func:`assign_ivf_buckets`; the explode is a
-    per-row generator, not a shuffle).
+    (see :func:`assign_ivf_buckets`; the explode is a per-row
+    generator, not a shuffle).
 
     This is the SELF-BLOCKING layer for unlabeled corpora: with
     ``probes=1`` a near-dup pair straddling a Voronoi boundary is
@@ -159,7 +132,7 @@ def assign_ivf_buckets_multiprobe(embeddings: DataFrame,
     of a close pair have nearly equal distances to their two nearest
     centroids, so the probe sets intersect).  Index blowup is bounded:
     ``probes``× rows, never quadratic.  Ties break to the lowest
-    centroid id in both paths, matching the single-probe operator.
+    centroid id in both paths.
     """
     cent_rows = _collect_centroids(embeddings, num_centroids, id_col, vec_col)
     probes = min(probes, len(cent_rows))
@@ -221,8 +194,8 @@ def cosine_near_dup_pairs_auto(embeddings: DataFrame, threshold: float = 0.95,
     :func:`assign_ivf_buckets_multiprobe` supplies the block column,
     then pairs form only within shared buckets (the pair space is
     bounded by the largest bucket, never the corpus) and a pair probed
-    into several common buckets is deduplicated by a candidate-bounded
-    ``dropDuplicates`` before the cosine is evaluated once.
+    into several common buckets is deduplicated after the verify, on
+    the slim pair rows (:func:`_verify_pairs`).
 
     Approximate by construction: a pair whose probe sets are disjoint
     is missed.  With ``probes=2`` the boundary-straddling pairs that
@@ -242,45 +215,16 @@ def cosine_near_dup_pairs_auto(embeddings: DataFrame, threshold: float = 0.95,
     """
     assigned = assign_ivf_buckets_multiprobe(embeddings, num_centroids,
                                              probes, id_col, vec_col)
+    e = assigned.select(F.col(id_col).alias("id"),
+                        F.col("bucket").alias("blk"), "vec")
     if method == "blas":
-        e = assigned.select(F.col(id_col).alias("id"),
-                            F.col("bucket").alias("blk"), "vec")
         return (_blas_pairs_by_block(e, threshold)
                 .dropDuplicates(["id_a", "id_b"]))
-    # the per-pair cosine below is an interpreted HOF expression: widen
-    # a one-partition scan (no-op at scale, see widen_small_scan).
-    # Norms are computed once per row (same bit-identical refactor as
-    # cosine_near_dup_pairs) so the per-pair work is the dot alone.
+    # the per-pair cosine is an interpreted HOF expression: widen a
+    # one-partition scan (no-op at scale, see widen_small_scan)
     from drain3_spark.util import widen_small_scan
-    assigned = widen_small_scan(assigned).withColumn("_nrm",
-                                                     _norm(F.col("vec")))
-    a = assigned.select(F.col(id_col).alias("id_a"), "bucket",
-                        F.col("vec").alias("vec_a"),
-                        F.col("_nrm").alias("_nrm_a"))
-    b = assigned.select(F.col(id_col).alias("id_b"),
-                        F.col("bucket").alias("bucket_b"),
-                        F.col("vec").alias("vec_b"),
-                        F.col("_nrm").alias("_nrm_b"))
-    # Deduplicate cross-probe pairs AFTER the threshold filter, on the
-    # slim (id_a, id_b, cosine) rows: the former shape ran
-    # dropDuplicates on the raw candidate rows, shuffling every
-    # candidate pair WITH both dim-length vectors attached (guide §2.3:
-    # shuffle keys, not payloads — measured 736s for this query on a
-    # 20k-vector corpus, where ~10^8 candidate pairs x ~1 KB crossed
-    # the dedup Exchange).  The threshold is pushed into the join
-    # condition, so candidates die inside the join operator and only
-    # survivors shuffle; a pair probed into several shared buckets
-    # evaluates its dot once per occurrence (bounded by probes²) but
-    # every occurrence yields the SAME cosine, so the slim dedup
-    # returns the identical row set.
-    cosine = F.round(_dot(F.col("vec_a"), F.col("vec_b"))
-                     / (F.col("_nrm_a") * F.col("_nrm_b")), 6)
-    return (a.join(b, (F.col("bucket") == F.col("bucket_b"))
-                   & (F.col("id_a") < F.col("id_b")))
-            .withColumn("cosine", cosine)
-            .filter(F.col("cosine") >= threshold)
-            .select("id_a", "id_b", "cosine")
-            .dropDuplicates(["id_a", "id_b"]))
+    e = widen_small_scan(e)
+    return _verify_pairs(e, e, threshold, operator.lt)
 
 
 def ivf_topk(embeddings: DataFrame, query: Sequence[float], k: int = 10,
@@ -305,25 +249,71 @@ def ivf_topk(embeddings: DataFrame, query: Sequence[float], k: int = 10,
             .limit(k))
 
 
+def _verify_pairs(a: DataFrame, b: DataFrame, threshold: float,
+                  pair: Callable[[Column, Column], Column],
+                  names: Tuple[str, str] = ("id_a", "id_b")) -> DataFrame:
+    """The exact Catalyst cosine verify of every near-dup operator: join
+    the ``(id, blk, vec)`` sides ``a`` and ``b`` on ``blk`` where
+    ``pair(id_a, id_b)`` holds (``operator.lt`` for a self-join,
+    ``operator.ne`` for batch-vs-index), keep the pairs whose rounded
+    cosine reaches ``threshold``, and return one slim
+    ``(names[0], names[1], cosine)`` row per id pair.
+
+    * Norms are per-ROW quantities, computed once on each side, so each
+      candidate pair evaluates the dot fold alone.  dot/(norm_a*norm_b)
+      over the SAME doubles is bit-identical to the inlined cosine — no
+      float reassociation, so the rounded cosine (and the oracle hash)
+      cannot move.
+    * The threshold sits in the join condition: candidates die inside
+      the join operator and only survivors leave it.
+    * A pair that shares several blocks (multi-probe IVF buckets, LSH
+      bands) is deduplicated AFTER the threshold, on the slim rows.
+      Deduplicating the raw candidates shuffled every pair WITH both
+      vectors attached (guide §2.3: shuffle keys, not payloads —
+      measured 736 s for q38 on a 20k-vector corpus).  Every occurrence
+      of a pair yields the same cosine, so the row set is identical.
+    """
+    ia, ib = names
+
+    def side(df: DataFrame, id_name: str, s: str) -> DataFrame:
+        return df.select(F.col("id").alias(id_name),
+                         F.col("blk").alias(f"_blk_{s}"),
+                         F.col("vec").alias(f"_vec_{s}"),
+                         _norm(F.col("vec")).alias(f"_nrm_{s}"))
+
+    cosine = F.round(_dot(F.col("_vec_a"), F.col("_vec_b"))
+                     / (F.col("_nrm_a") * F.col("_nrm_b")), 6)
+    return (side(a, ia, "a")
+            .join(side(b, ib, "b"),
+                  (F.col("_blk_a") == F.col("_blk_b"))
+                  & pair(F.col(ia), F.col(ib)) & (cosine >= threshold))
+            .select(ia, ib, cosine.alias("cosine"))
+            .dropDuplicates([ia, ib]))
+
+
 def _blas_pairs_by_block(e: DataFrame, threshold: float) -> DataFrame:
     """Gram-matrix near-dup pairs within blocks: ONE shuffle groups each
     block's ``(id, blk, vec)`` rows into an Arrow task, numpy computes
     the normalized ``X @ X.T`` (BLAS, dim-vectorized) and emits only
-    above-threshold pairs — per-block work is O(n² d) in native code and
-    the quadratic intermediate never leaves the task.  The Gram matrix
-    is computed in ROW CHUNKS so peak allocation is O(chunk x n), not
-    O(n²) — a hot block stays memory-bounded (n=8k with full
-    ``triu_indices`` would transiently allocate ~1 GB of index arrays
-    alone).  Shared by the labeled (:func:`cosine_near_dup_pairs`),
-    self-blocking (:func:`cosine_near_dup_pairs_auto`), and audio
+    above-threshold pairs ``(id_a, id_b, cosine)`` with ``id_a < id_b`` —
+    per-block work is O(n² d) in native code and the quadratic
+    intermediate never leaves the task.  The Gram matrix is computed in
+    ROW CHUNKS so peak allocation is O(chunk x n), not O(n²) — a hot
+    block stays memory-bounded (n=8k with full ``triu_indices`` would
+    transiently allocate ~1 GB of index arrays alone).  The output ids
+    keep the input ``id`` type: numpy sorts strings by code point, which
+    is the UTF-8 byte order of Spark's ``<``.  Shared by the labeled
+    (:func:`cosine_near_dup_pairs`), self-blocking
+    (:func:`cosine_near_dup_pairs_auto`), and audio
     (:func:`drain3_spark.pipeline.audio_sim.audio_near_dup_pairs`)
     operators."""
     import numpy as np
     from pyspark.sql import types as T
 
+    id_type = e.schema["id"].dataType
     out_schema = T.StructType([
-        T.StructField("id_a", T.LongType()),
-        T.StructField("id_b", T.LongType()),
+        T.StructField("id_a", id_type),
+        T.StructField("id_b", id_type),
         T.StructField("cosine", T.DoubleType()),
     ])
     th = float(threshold)
@@ -342,7 +332,7 @@ def _blas_pairs_by_block(e: DataFrame, threshold: float) -> DataFrame:
         Xn = X / norms[:, None]
         n = len(ids)
         chunk = 1024
-        ia, ib, cs = [], [], []
+        ia, ib, cs = [ids[:0]], [ids[:0]], [np.array([], "float64")]
         for i0 in range(0, n - 1, chunk):
             i1 = min(i0 + chunk, n)
             S = np.round(Xn[i0:i1] @ Xn.T, 6)        # (chunk, n)
@@ -354,12 +344,8 @@ def _blas_pairs_by_block(e: DataFrame, threshold: float) -> DataFrame:
             ia.append(ids[ii + i0])
             ib.append(ids[jj])
             cs.append(S[ii, jj])
-        if not ia:
-            return pd.DataFrame({"id_a": np.array([], "int64"),
-                                 "id_b": np.array([], "int64"),
-                                 "cosine": np.array([], "float64")})
-        return pd.DataFrame({"id_a": np.concatenate(ia).astype("int64"),
-                             "id_b": np.concatenate(ib).astype("int64"),
+        return pd.DataFrame({"id_a": np.concatenate(ia),
+                             "id_b": np.concatenate(ib),
                              "cosine": np.concatenate(cs)})
 
     return e.groupBy("blk").applyInPandas(block_pairs, out_schema)
@@ -372,8 +358,9 @@ def cosine_near_dup_pairs(embeddings: DataFrame, threshold: float = 0.95,
     """Embedding near-duplicate pairs within blocks: the block column
     bounds the pair space (label, LSH bucket, or IVF bucket).
 
-    ``method="catalyst"`` (default) is the pure-expression self-join —
-    bit-reproducible against the DuckDB oracle (sequential double sums).
+    ``method="catalyst"`` (default) is the pure-expression self-join
+    (:func:`_verify_pairs`) — bit-reproducible against the DuckDB oracle
+    (sequential double sums).
     ``method="blas"`` is the scale path: ONE shuffle groups each block
     into an Arrow task, numpy computes the normalized Gram matrix
     (X @ X.T — BLAS, dim-vectorized) and emits only above-threshold
@@ -385,29 +372,9 @@ def cosine_near_dup_pairs(embeddings: DataFrame, threshold: float = 0.95,
                           F.col(vec_col).cast("array<double>").alias("vec"))
     if method == "blas":
         return _blas_pairs_by_block(e, threshold)
-
-    # the per-pair cosine below is a HOF expression (interpreted, see
+    # the per-pair cosine is a HOF expression (interpreted, see
     # PLANS.md): widen the probe side so a one-partition scan doesn't
     # serialize every pair's dot product onto a single task
     from drain3_spark.util import widen_small_scan
     e = widen_small_scan(e)
-    # norms are per-ROW quantities: compute them once on each join input
-    # instead of re-running the two norm aggregates inside every pair's
-    # cosine (the planner pushes the threshold into the join condition,
-    # so each candidate pair was evaluating dot + 2 norms there and
-    # again in the output projection — 6 interpreted O(dim) folds per
-    # pair; now it is the dot alone).  dot/(norm_a*norm_b) over the SAME
-    # doubles is bit-identical to the inlined expression — no float
-    # reassociation, so the rounded cosine (and the oracle hash) cannot
-    # move.
-    e = e.withColumn("_nrm", _norm(F.col("vec")))
-    a = e.select(F.col("id").alias("id_a"), "blk", F.col("vec").alias("vec_a"),
-                 F.col("_nrm").alias("_nrm_a"))
-    b = e.select(F.col("id").alias("id_b"), F.col("blk").alias("blk_b"),
-                 F.col("vec").alias("vec_b"), F.col("_nrm").alias("_nrm_b"))
-    return (a.join(b, (F.col("blk") == F.col("blk_b")) & (F.col("id_a") < F.col("id_b")))
-            .withColumn("cosine",
-                        F.round(_dot(F.col("vec_a"), F.col("vec_b"))
-                                / (F.col("_nrm_a") * F.col("_nrm_b")), 6))
-            .filter(F.col("cosine") >= threshold)
-            .select("id_a", "id_b", "cosine"))
+    return _verify_pairs(e, e, threshold, operator.lt)

@@ -71,21 +71,6 @@ def get_spark(app_name: str = "drain3_spark",
         .config("spark.driver.memory",
                 os.environ.get("SPARK_DRIVER_MEMORY", default_mem))
     )
-    # Local-mode shuffle/spill files on tmpfs: the sandbox's /tmp is a
-    # virtualized disk whose latency spikes stall shuffle writes for
-    # seconds at a time (observed as sporadic 3-10x per-query outliers);
-    # /dev/shm is RAM-backed and 4-5x faster sequentially.  Only when
-    # the tmpfs is comfortably larger than this workload's shuffle
-    # footprint (>= 8 GiB free), and never on a real cluster (masters
-    # other than local keep Spark's defaults; SPARK_LOCAL_DIRS
-    # overrides either way).
-    if master.startswith("local") and "SPARK_LOCAL_DIRS" not in os.environ:
-        try:
-            st = os.statvfs("/dev/shm")
-            if st.f_bavail * st.f_frsize >= 8 << 30:
-                b = b.config("spark.local.dir", "/dev/shm/spark_local")
-        except OSError:
-            pass
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()
@@ -106,10 +91,7 @@ def _prewarm_python_runners(spark: SparkSession) -> None:
     mapInPandas stage of a session otherwise pays JVM Arrow-runner
     setup plus a python-worker handshake (~1-2s at local[32]) inside
     whatever operator happens to run first — template mining and the
-    audio decode family here.  Disable with
-    ``SPARK_GRAFT_SESSION_PREWARM=0``."""
-    if os.environ.get("SPARK_GRAFT_SESSION_PREWARM", "1") == "0":
-        return
+    audio decode family here."""
     app_id = spark.sparkContext.applicationId
     if app_id in _PREWARMED:
         return

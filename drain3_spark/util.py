@@ -30,7 +30,7 @@ def local_df(spark: SparkSession, rows: Sequence[tuple],
     return spark.createDataFrame(pdf, schema=schema)
 
 
-def widen_small_scan(df: DataFrame, min_parts: int = None) -> DataFrame:
+def widen_small_scan(df: DataFrame) -> DataFrame:
     """Repartition an input whose scan plans NARROWER than the session's
     parallelism — and only then.
 
@@ -49,8 +49,7 @@ def widen_small_scan(df: DataFrame, min_parts: int = None) -> DataFrame:
     itself.  Operators that consume this remain order-insensitive
     (mining sorts per group on the order key; set/count aggregations are
     partition-invariant), so results are identical either way."""
-    sc = df.sparkSession.sparkContext
-    target = min_parts or sc.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     try:
         n = df.rdd.getNumPartitions()
     except Exception:
