@@ -1,5 +1,9 @@
 """Batch / incremental engine drivers (reference A21,
-examples/drain_bigfile_demo.py + drain_stdin_demo.py recast).
+examples/drain_bigfile_demo.py + drain_stdin_demo.py recast) and
+:class:`MicroBatchStep`, the one committed micro-batch step that both
+``run_incremental`` and ``streaming.make_batch_processor`` run: they
+differ only in the batch key, the commit id, the replay guard and the
+outputs.
 
 ``run_incremental`` processes ds partitions in order as micro-batches —
 mining templates through the checkpointed state store and validating
@@ -16,17 +20,108 @@ Spark's own state store, no driver round-trip per micro-batch — lives in
 from __future__ import annotations
 
 import time as _time
-from dataclasses import dataclass
-from typing import List, Optional
+from dataclasses import dataclass, replace
+from typing import List, Optional, Sequence, Tuple
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from drain3_spark.config import EngineConfig
-from drain3_spark.operators.mining import mine_templates
+from drain3_spark.operators.mining import (CLUSTER_SCHEMA, MiningResult,
+                                           mine_templates)
 from drain3_spark.state.store import CheckpointStore
 from drain3_spark.util import local_df
 from drain3_spark.validation.runner import (ValidationConfig, ValidationEngine,
                                             ValidationReport)
+
+
+@dataclass
+class MinedBatch:
+    """One batch mined against the carried state, not yet committed."""
+    result: MiningResult
+    rows: List[tuple]        # cluster rows after the batch
+    counter: int
+    n_rows: int              # rows mined
+    n_changes: int           # rows whose change_type is not "none"
+    new_clusters: int
+
+
+class MicroBatchStep:
+    """Mining state carried across committed micro-batches.
+
+    The state is read from ``store`` once, on construction; ``hw`` and
+    ``key`` are the id and batch key of the latest commit.  Between
+    commits the state lives here, the way the reference miner object
+    lives across messages, so a cadence-deferred batch's increments
+    reach the next commit; only a crash loses them, exactly the
+    reference's un-snapshotted-messages window.
+
+    Crash safety: a driver writes ALL of a batch's outputs before it
+    calls :meth:`commit`.  The marker written by ``store.commit`` is then
+    the single point after which the batch counts as done, so a crash
+    before it replays the batch onto the last committed state (the
+    mining is deterministic, the outputs are overwritten), and a crash
+    after it finds every output already on disk."""
+
+    def __init__(self, spark: SparkSession, store: CheckpointStore,
+                 cfg: EngineConfig) -> None:
+        self.spark, self.store, self.cfg = spark, store, cfg
+        self.hw, self.rows, self.counter, self.key = store.latest(spark)
+        self._deferred: Optional[Tuple[int, str]] = None
+
+    def mine(self, batch: DataFrame,
+             order_cols: Sequence[str] = ("ds", "clip_id")) -> MinedBatch:
+        result = mine_templates(batch, self.cfg, order_cols=order_cols,
+                                prior_clusters=self.rows,
+                                prior_counter=self.counter)
+        rows = [tuple(r) for r in result.clusters.collect()]
+        # one aggregation feeds rows_mined AND the cluster-delta signal
+        agg = result.assignments.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum((F.col("change_type") != "none").cast("long")).alias("nc")
+        ).first()
+        # monotonic counter: prior + clusters created this batch — NOT
+        # max(live ids), which would reuse the ids of LRU-evicted
+        # clusters (reference drain3/drain.py:201-202 never reuses ids)
+        return MinedBatch(result, rows, result.updated_counter(),
+                          int(agg["n"]), int(agg["nc"] or 0),
+                          len(rows) - len(self.rows))
+
+    def commit(self, mined: MinedBatch, commit_id: int, key: str) -> bool:
+        """Commit ``mined`` as batch ``commit_id`` under ``key``, or defer
+        it; either way it becomes the carried state.  Returns whether it
+        was committed.  Call it only once the batch's outputs are written
+        (see the class docstring).
+
+        Snapshot cadence (reference template_miner.py:124-132): commit
+        when the batch CHANGED a cluster (created / template changed),
+        else only when the periodic interval elapsed — pure size
+        increments don't force a snapshot."""
+        last_save = self.store.latest_commit_time()
+        periodic_due = (last_save is None or
+                        _time.time() - last_save
+                        >= self.cfg.snapshot_interval_minutes * 60)
+        committed = mined.n_changes > 0 or periodic_due
+        if committed:
+            self.store.commit(commit_id, mined.result.clusters, mined.counter,
+                              batch_key=key)
+            self.hw, self.key, self._deferred = commit_id, key, None
+        else:
+            self._deferred = (commit_id, key)
+        self.rows, self.counter = mined.rows, mined.counter
+        mined.result.unpersist()
+        return committed
+
+    def flush(self) -> None:
+        """Commit cadence-deferred state (the analog of the reference's
+        final save before exit) under the LAST processed batch's id and
+        key, so a driver's replay guard recognizes that batch as done."""
+        if self._deferred is None:
+            return
+        commit_id, key = self._deferred
+        self.store.commit(commit_id,
+                          local_df(self.spark, self.rows, CLUSTER_SCHEMA),
+                          self.counter, batch_key=key)
+        self.hw, self.key, self._deferred = commit_id, key, None
 
 
 @dataclass
@@ -52,35 +147,39 @@ def run_incremental(spark: SparkSession,
                     profiler=None) -> List[BatchResult]:
     """Mine + validate each ds partition as one committed micro-batch.
 
+    Raises ``ValueError`` when the input's partitions do not line up with
+    the committed state: the partition at the high-watermark's ordinal
+    must be the committed batch key.  Deferred state is committed before
+    returning, so a repeated call on the same input processes nothing.
+
     ``profiler`` (an EngineProfiler) accumulates per-stage sections
     across all batches; lineage rows always carry per-batch wall times
     (mine/validate/total), the timing the reference profiler attaches to
     its mining stats (drain3/simple_profiler.py:101-119)."""
     cfg = cfg or EngineConfig()
-    engine = ValidationEngine(vcfg or ValidationConfig())
-    store = CheckpointStore(state_dir)
-    hw, prior, counter, _ = store.latest(spark)
+    vcfg = vcfg or ValidationConfig()
+    # drift is corpus-level and handled after the loop
+    batch_engine = ValidationEngine(replace(vcfg, with_drift=False))
+    step = MicroBatchStep(spark, CheckpointStore(state_dir), cfg)
+    hw = step.hw
 
     all_ds = sorted(r["ds"] for r in clips.select("ds").distinct().collect())
+    if hw is not None and not (hw < len(all_ds) and all_ds[hw] == step.key):
+        raise ValueError(
+            f"{state_dir} committed ds {step.key!r} as batch {hw}, but the "
+            f"input's partitions at or below it are "
+            f"{[ds for ds in all_ds if ds <= step.key]}: a partition before "
+            f"the committed one was added or removed")
     results: List[BatchResult] = []
     for idx, ds in enumerate(all_ds):
         if hw is not None and idx <= hw:
             continue  # already committed — resume point
         batch = clips.filter(F.col("ds") == ds)
         t_batch = _time.monotonic()
-        mined = mine_templates(batch, cfg, prior_clusters=prior,
-                               prior_counter=counter)
-        clusters_df = mined.clusters
+        mined = step.mine(batch)
         if out_dir:
-            mined.assignments.write.mode("overwrite").parquet(
+            mined.result.assignments.write.mode("overwrite").parquet(
                 f"{out_dir}/assignments/ds={ds}")
-        rows = [tuple(r) for r in clusters_df.collect()]
-        # one aggregation feeds rows_mined AND the cluster-delta signal
-        agg = mined.assignments.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum((F.col("change_type") != "none").cast("long")).alias("nc")
-        ).first()
-        n_assign, n_changes = int(agg["n"]), int(agg["nc"] or 0)
         mine_sec = _time.monotonic() - t_batch
 
         report = None
@@ -88,8 +187,6 @@ def run_incremental(spark: SparkSession,
         if validate:
             t_val = _time.monotonic()
             # orphan detection is corpus-level and handled after the loop
-            from dataclasses import replace as _replace
-            batch_engine = ValidationEngine(_replace(engine.cfg, with_drift=False))
             report = batch_engine.validate(batch, transcripts_ref,
                                            include_orphans=False,
                                            profiler=profiler)
@@ -101,45 +198,27 @@ def run_incremental(spark: SparkSession,
                 report.metrics.write.mode("overwrite").parquet(
                     f"{out_dir}/metrics/ds={ds}")
             validate_sec = _time.monotonic() - t_val
-        # monotonic counter: prior + clusters created this batch — NOT
-        # max(live ids), which would reuse the ids of LRU-evicted
-        # clusters (reference drain3/drain.py:201-202 never reuses ids)
-        counter = mined.updated_counter()
-        new_clusters = len(rows) - len(prior)
         if out_dir:
             # per-partition lineage with stage wall times (SURVEY.md C12;
             # reference profiler analog drain3/simple_profiler.py:101-119)
             total_sec = _time.monotonic() - t_batch
             lineage = local_df(spark,
-                [(ds, idx, n_assign, len(rows), new_clusters,
+                [(ds, idx, mined.n_rows, len(mined.rows), mined.new_clusters,
                   int(report.violations.count()) if report is not None else None,
                   round(mine_sec, 3),
                   round(validate_sec, 3) if validate_sec is not None else None,
                   round(total_sec, 3),
-                  round(n_assign / total_sec, 1) if total_sec > 0 else None)],
+                  round(mined.n_rows / total_sec, 1) if total_sec > 0 else None)],
                 "ds string, batch_id long, rows_mined long, templates_seen long, "
                 "clusters_created long, violations long, mine_sec double, "
                 "validate_sec double, total_sec double, rows_per_sec double")
             lineage.write.mode("overwrite").parquet(f"{out_dir}/lineage/ds={ds}")
-        # snapshot cadence (reference template_miner.py:124-132): write
-        # state when the batch CHANGED a cluster (created / template
-        # changed), else only when the periodic interval elapsed — pure
-        # size increments don't force a snapshot.  Skipped batches stay
-        # above the high-watermark, so a crash replays them onto the
-        # last committed state (deterministic => same result).
-        last_save = store.latest_commit_time()
-        periodic_due = (last_save is None or
-                        _time.time() - last_save
-                        >= cfg.snapshot_interval_minutes * 60)
-        committed = n_changes > 0 or periodic_due
-        if committed:
-            store.commit(idx, clusters_df, counter, batch_key=ds)
-        mined.unpersist()
+        committed = step.commit(mined, idx, ds)
         if report is not None:
             report.violations.unpersist()
-        prior = rows
-        results.append(BatchResult(idx, ds, rows, counter, report,
-                                   n_assign, new_clusters, committed))
+        results.append(BatchResult(idx, ds, mined.rows, mined.counter, report,
+                                   mined.n_rows, mined.new_clusters, committed))
+    step.flush()
 
     # corpus-level passes, rewritten (not appended) every invocation so a
     # resume replaces any partial-corpus result:
@@ -151,17 +230,16 @@ def run_incremental(spark: SparkSession,
             from drain3_spark.validation.checks import corpus_orphan_violations
             corpus_orphan_violations(clips, transcripts_ref) \
                 .write.mode("overwrite").parquet(f"{out_dir}/violations_corpus")
-        vcfg_obj = engine.cfg
-        if vcfg_obj.with_drift:
+        if vcfg.with_drift:
             from drain3_spark.validation.drift import chisq_drift, ks_drift
             from drain3_spark.validation.runner import PARTITION_REPORT_SCHEMA
             drift_rows = []
-            for rec in (ks_drift(clips, "dur_ms", vcfg_obj.drift_baseline_ds,
-                                 vcfg_obj.drift_alpha)
-                        + chisq_drift(clips, "codec", vcfg_obj.drift_baseline_ds,
-                                      vcfg_obj.drift_alpha)
-                        + chisq_drift(clips, "sr_hz", vcfg_obj.drift_baseline_ds,
-                                      vcfg_obj.drift_alpha)):
+            for rec in (ks_drift(clips, "dur_ms", vcfg.drift_baseline_ds,
+                                 vcfg.drift_alpha)
+                        + chisq_drift(clips, "codec", vcfg.drift_baseline_ds,
+                                      vcfg.drift_alpha)
+                        + chisq_drift(clips, "sr_hz", vcfg.drift_baseline_ds,
+                                      vcfg.drift_alpha)):
                 drift_rows.append((rec["ds"], rec["check"], bool(rec["passed"]),
                                    0 if rec["passed"] else int(rec["rows"]),
                                    int(rec["rows"]),

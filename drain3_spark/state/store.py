@@ -14,13 +14,16 @@ the parquet, so a crash mid-write leaves no partial state ("latest
 committed marker wins" == the reference Kafka backend's "last message of
 the topic wins", drain3/kafka_persistence.py:26-34).  Iceberg deployments
 swap this directory protocol for table snapshots (same semantics).
+
+This is the engine's one state path: the reference's pluggable file /
+Kafka / Redis / memory handlers reduce to where ``root`` lives, and both
+drivers commit through ``jobs.MicroBatchStep``.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
 from typing import List, Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
@@ -81,13 +84,3 @@ class CheckpointStore:
         rows = [tuple(r) for r in
                 spark.read.schema(CLUSTER_SCHEMA).parquet(path).collect()]
         return hw, rows, int(meta["counter"]), meta.get("batch_key", "")
-
-    # ------------------------------------------------------------------ admin
-
-    def prune(self, keep_last: int = 2) -> None:
-        """Drop all but the newest ``keep_last`` committed batches."""
-        batches = self.committed_batches()
-        for b in batches[:-keep_last] if keep_last else batches:
-            os.remove(os.path.join(self.root, f"_committed_{b}"))
-            shutil.rmtree(os.path.join(self.root, "batches", str(b)),
-                          ignore_errors=True)

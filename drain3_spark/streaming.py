@@ -8,13 +8,18 @@ validated, mirroring the reference's one-at-a-time
 ``add_log_message`` loop at micro-batch granularity
 (drain3/template_miner.py:134-162).
 
-Snapshot cadence: the reference snapshots on every cluster change and
-periodically (drain3/template_miner.py:124-132); here every micro-batch
-commits its state atomically — change-driven cadence with the trigger
-interval as the periodic bound.  Late data: the reference has no event
-time (arrival order IS processing order, drain3/drain.py:188); the
-stream preserves that by processing batches in arrival order with the
-batch id as the order prefix.
+Every micro-batch goes through ``jobs.MicroBatchStep``, the same step
+``jobs.run_incremental`` runs per ``ds``: mining against the carried
+state, the snapshot cadence of the reference (commit on cluster change,
+else when ``snapshot_interval_minutes`` elapsed,
+drain3/template_miner.py:124-132) and the atomic commit.  What is
+streaming's own is the batch key ``stream-<id>``, the commit id (one
+past the last commit), the replay guard for re-delivered batches, the
+seen-id index behind the cross-batch uniqueness check, and the per-batch
+outputs.  Late data: the reference has no event time (arrival order IS
+processing order, drain3/drain.py:188); the stream preserves that by
+processing batches in arrival order with the batch id as the order
+prefix.
 """
 
 from __future__ import annotations
@@ -24,7 +29,7 @@ from typing import NamedTuple, Optional
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from drain3_spark.config import EngineConfig
-from drain3_spark.operators.mining import mine_templates
+from drain3_spark.jobs import MicroBatchStep
 from drain3_spark.state.store import CheckpointStore
 from drain3_spark.validation.runner import ValidationConfig, ValidationEngine
 
@@ -104,7 +109,8 @@ def make_batch_processor(store: CheckpointStore,
                          order_cols=("ds", "clip_id"),
                          validate: bool = True,
                          seen_compact_every: int = 16):
-    """foreachBatch callback: mine + validate + commit one micro-batch.
+    """foreachBatch callback: mine + validate + commit one micro-batch
+    through one :class:`~drain3_spark.jobs.MicroBatchStep`.
 
     Idempotent under at-least-once replay: ``foreachBatch`` may re-deliver
     a batch whose state commit already happened (crash between
@@ -113,29 +119,27 @@ def make_batch_processor(store: CheckpointStore,
     replaying it onto the already-updated state would double-count
     cluster sizes.  The reference's analog is restoring the latest
     snapshot on init (drain3/template_miner.py:80-122): state already
-    containing a message's effect is never re-fed that message."""
+    containing a message's effect is never re-fed that message.
 
-    # in-memory state carried across micro-batches within one query run
-    # (the reference miner object lives across messages the same way);
-    # the store is read only on (re)start.  Snapshot-skipped deltas thus
-    # survive to the next commit; only a crash loses them — exactly the
-    # reference's un-snapshotted-messages window.
-    mem: dict = {"hw": None, "rows": None, "counter": 0, "dirty": False,
-                 "last_batch_id": None}
+    ``process_batch.flush(spark)`` commits cadence-deferred state at
+    query shutdown, keyed by the LAST processed batch: if the query
+    stopped after foreachBatch completed a skip-commit batch but before
+    the stream checkpoint committed it, restart re-delivers that batch
+    and the replay guard recognizes it."""
+    step: Optional[MicroBatchStep] = None  # loaded on the first batch
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        nonlocal step
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        if mem["rows"] is None:
-            hw, prior, counter, last_key = store.latest(spark)
-            if last_key == f"stream-{batch_id}":
+        if step is None:
+            loaded = MicroBatchStep(spark, store, cfg)
+            if loaded.key == f"stream-{batch_id}":
                 return  # at-least-once replay of an already-committed batch
-        else:
-            hw, prior, counter = mem["hw"], mem["rows"], mem["counter"]
-        mined = mine_templates(batch_df, cfg, order_cols=order_cols,
-                               prior_clusters=prior, prior_counter=counter)
-        mined.assignments.write.mode("overwrite").parquet(
+            step = loaded
+        mined = step.mine(batch_df, order_cols=order_cols)
+        mined.result.assignments.write.mode("overwrite").parquet(
             f"{out_dir}/assignments/batch={batch_id}")
         # cross-batch uniqueness index: the per-batch engine can only
         # see duplicates WITHIN a micro-batch; a clip_id that already
@@ -180,49 +184,12 @@ def make_batch_processor(store: CheckpointStore,
             report.partition_report.write.mode("overwrite").parquet(
                 f"{out_dir}/partition_report/batch={batch_id}")
             report.violations.unpersist()
-        # monotonic: prior + created, never max(live ids) (see jobs.py)
-        new_counter = mined.updated_counter()
-        rows = [tuple(r) for r in mined.clusters.collect()]
-        # snapshot cadence (reference template_miner.py:124-132): commit
-        # on cluster change, else only when the interval elapsed
-        import time as _time
-        n_changes = int(mined.assignments.agg(
-            F.sum((F.col("change_type") != "none").cast("long"))).first()[0] or 0)
-        last_save = store.latest_commit_time()
-        periodic_due = (last_save is None or
-                        _time.time() - last_save
-                        >= cfg.snapshot_interval_minutes * 60)
-        next_id = (hw + 1) if hw is not None else 0
-        if n_changes > 0 or periodic_due:
-            store.commit(next_id, mined.clusters, new_counter,
-                         batch_key=f"stream-{batch_id}")
-            mem["hw"], mem["dirty"] = next_id, False
-        else:
-            mem["hw"], mem["dirty"] = hw, True
-        mem["rows"], mem["counter"] = rows, new_counter
-        mem["last_batch_id"] = batch_id
-        mined.unpersist()
+        step.commit(mined, step.hw + 1 if step.hw is not None else 0,
+                    f"stream-{batch_id}")
 
     def flush(spark: SparkSession) -> None:
-        """Snapshot any cadence-deferred state (query shutdown — the
-        analog of the reference's final save before exit).
-
-        The commit carries the LAST PROCESSED batch's key, not a
-        synthetic one: if the query stopped after foreachBatch completed
-        a skip-commit batch but before the stream checkpoint committed
-        it, restart re-delivers that batch — the replay guard above only
-        recognizes it if the flushed state is keyed by its id (otherwise
-        the batch would be re-mined onto already-flushed state and
-        double-count cluster sizes)."""
-        if not mem["dirty"] or mem["rows"] is None:
-            return
-        from drain3_spark.operators.mining import CLUSTER_SCHEMA
-        from drain3_spark.util import local_df
-        clusters = local_df(spark, mem["rows"], CLUSTER_SCHEMA)
-        next_id = (mem["hw"] + 1) if mem["hw"] is not None else 0
-        store.commit(next_id, clusters, mem["counter"],
-                     batch_key=f"stream-{mem['last_batch_id']}")
-        mem["hw"], mem["dirty"] = next_id, False
+        if step is not None:
+            step.flush()
 
     process_batch.flush = flush
     return process_batch
@@ -298,8 +265,8 @@ def run_streaming(spark: SparkSession,
             query.stop()
     # snapshot any cadence-deferred state before handing the store back —
     # but ONLY once the query has stopped: flushing while the streaming
-    # thread is live would race process_batch over the shared mem dict
-    # and the store (both could commit the same next_id).  A still-
+    # thread is live would race process_batch over the shared step and
+    # the store (both could commit the same next id).  A still-
     # running query (once=False, no timeout) keeps ownership; the caller
     # shuts it down via the returned handle (StreamingRun.stop_and_flush).
     if not query.isActive:

@@ -7,8 +7,6 @@ from pyspark.sql import functions as F
 
 from drain3_spark import fixtures as FX
 from drain3_spark.config import EngineConfig
-from drain3_spark.state.backends import (FileBackend, MemoryBackend,
-                                         load_snapshot_blob, snapshot_blob)
 from drain3_spark.state.store import CheckpointStore
 from drain3_spark.streaming import run_streaming
 
@@ -43,24 +41,6 @@ def test_streaming_equals_batch(spark, tmp_path):
     assert os.path.exists(str(tmp_path / "out" / "violations"))
     batch.unpersist()
     clips.unpersist()
-
-
-def test_backends_blob_roundtrip(tmp_path):
-    rows = [(1, "6\x1fuser", 6, "user <*> logged in", 10, "a", "b"),
-            (2, "3\x1fcache", 3, "cache flush completed", 5, "c", "d")]
-    blob = snapshot_blob(rows, counter=7)
-    got_rows, counter = load_snapshot_blob(blob)
-    assert counter == 7 and got_rows == rows
-
-    fb = FileBackend(str(tmp_path / "snap.bin"))
-    assert fb.load_state() is None
-    fb.save_state(blob)
-    assert fb.load_state() == blob
-
-    mb = MemoryBackend()
-    assert mb.load_state() is None
-    mb.save_state(blob)
-    assert mb.load_state() == blob
 
 
 def test_config_ini_surface(tmp_path):
@@ -267,87 +247,6 @@ def test_counter_monotonic_under_lru_eviction(spark):
     assert 4 in ids2 and 3 not in ids2 - live
     assert m2.updated_counter() == 4
     m1.unpersist(); m2.unpersist()
-
-
-class _FakeTopic:
-    def __init__(self):
-        self.messages = []
-
-
-class _FakeProducer:
-    def __init__(self, topic_store, **_):
-        self._store = topic_store
-        self.flushed = False
-
-    def send(self, topic, value):
-        self._store.setdefault(topic, _FakeTopic()).messages.append(value)
-
-    def flush(self):
-        self.flushed = True
-
-
-class _FakeConsumer:
-    def __init__(self, topic_store, **_):
-        self._store = topic_store
-        self._pos = {}
-        self._assigned = []
-
-    def assign(self, tps):
-        self._assigned = list(tps)
-
-    def end_offsets(self, tps):
-        return {tp: len(self._store.get(tp[0], _FakeTopic()).messages)
-                for tp in tps}
-
-    def seek(self, tp, offset):
-        self._pos[tp] = offset
-
-    def __iter__(self):
-        for tp in self._assigned:
-            msgs = self._store.get(tp[0], _FakeTopic()).messages
-            for i in range(self._pos.get(tp, 0), len(msgs)):
-                class R:  # minimal record shape
-                    value = msgs[i]
-                yield R()
-
-
-class _FakeRedis:
-    def __init__(self):
-        self._kv = {}
-
-    def set(self, k, v):
-        self._kv[k] = v
-
-    def get(self, k):
-        return self._kv.get(k)
-
-
-def test_kafka_backend_last_message_wins():
-    """Reference kafka semantics (drain3/kafka_persistence.py:26-34):
-    the snapshot is the LAST message of the topic; empty topic -> None."""
-    from drain3_spark.state.backends import KafkaBackend
-    store: dict = {}
-    be = KafkaBackend("snapshots",
-                      producer_factory=lambda **kw: _FakeProducer(store, **kw),
-                      consumer_factory=lambda **kw: _FakeConsumer(store, **kw))
-    assert be.load_state() is None
-    blob1 = snapshot_blob([(1, "k", 1, "a b", 2, "x", "y", "a b")], counter=1)
-    blob2 = snapshot_blob([(2, "k", 2, "c d", 3, "x", "y", "c d")], counter=2)
-    be.save_state(blob1)
-    be.save_state(blob2)
-    got = be.load_state()
-    assert got == blob2                     # last message wins
-    rows, counter = load_snapshot_blob(got)
-    assert counter == 2 and rows[0][3] == "c d"
-
-
-def test_redis_backend_set_get():
-    from drain3_spark.state.backends import RedisBackend
-    be = RedisBackend("drain3:snapshot", client=_FakeRedis())
-    assert be.load_state() is None
-    blob = snapshot_blob([(7, "g", 3, "t u v", 4, "c", "u", "t u v")], counter=9)
-    be.save_state(blob)
-    assert load_snapshot_blob(be.load_state())[1] == 9
 
 
 def test_stateful_ids_renumber_to_reference_ids(spark, tmp_path):
