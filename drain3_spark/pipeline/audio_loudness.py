@@ -1,9 +1,8 @@
-"""ITU-R BS.1770-4 integrated loudness (LUFS) measurement and
-loudness normalization — the level-management pass a speech training
-pipeline runs before mixing corpora recorded at different gains
-(podcast vs telephony vs studio), complementing the RMS-based
-:func:`audio_sim.normalize_gain` (which equalizes energy, not
-perceived loudness).
+"""ITU-R BS.1770-4 integrated loudness (LUFS) measurement — the level
+check a speech corpus needs before it mixes sources recorded at
+different gains (podcast vs telephony vs studio).  The kernels feed
+:func:`loudness_stats` (q55) and the validator's opt-in
+``loudness_bounds`` check.
 
 Spec surface implemented (mono channel, weight 1.0):
 
@@ -41,11 +40,8 @@ sample rate once.
 100-TB shape: measurement is embarrassingly parallel (one decode +
 one rFFT-convolve per clip inside the shared per-clip Arrow loop,
 :func:`drain3_spark.audio.runner.map_clips`; no shuffle until the
-consumer aggregates); normalization re-encodes in-task and carries
-the same payload-column contract as
-``resample_clips``/``trim_silence`` (rejoin transcript/ds on
-``clip_id``).  The reference (/root/reference/drain3) has no audio
-surface; this extends the validation engine's payload family (C8).
+consumer aggregates).  The reference Drain3 has no audio surface;
+this extends the validation engine's payload family (C8).
 """
 
 from __future__ import annotations
@@ -56,8 +52,7 @@ from typing import Optional
 import numpy as np
 from pyspark.sql import DataFrame, types as T
 
-from drain3_spark.audio.codecs import encode
-from drain3_spark.audio.runner import PAYLOAD_COLS, map_clips
+from drain3_spark.audio.runner import map_clips
 
 # analog prototype parameters of the two K-weighting stages (public
 # derivation — module docstring); the spec's 48 kHz table is the
@@ -365,69 +360,3 @@ def loudness_stats(clips: DataFrame, carry: tuple = ()) -> DataFrame:
                        + tuple(extra))
 
     return map_clips(clips, extract, LOUDNESS_SCHEMA, carry=carry)
-
-
-NORMALIZED_SCHEMA = T.StructType([
-    T.StructField("clip_id", T.StringType()),
-    T.StructField("bytes", T.BinaryType()),
-    T.StructField("sr_hz", T.IntegerType()),
-    T.StructField("dur_ms", T.IntegerType()),
-    T.StructField("codec", T.StringType()),
-    T.StructField("input_lufs", T.DoubleType()),
-    T.StructField("gain_db", T.DoubleType()),
-    T.StructField("limited", T.BooleanType()),
-])
-
-
-def normalize_loudness(clips: DataFrame, target_lufs: float = -23.0,
-                       peak_ceiling_dbfs: float = -1.0,
-                       peak_mode: str = "sample") -> DataFrame:
-    """Gain every clip to ``target_lufs`` integrated loudness (EBU R128
-    broadcast target by default), limiting the gain where it would push
-    the peak above ``peak_ceiling_dbfs`` (``limited = true`` — a static
-    headroom cap, not a dynamics limiter).  ``peak_mode="sample"``
-    caps the sample peak; ``"true"`` caps the Annex-2 4x-oversampled
-    TRUE peak — the R128 deliverable spec (-1 dBTP): an off-crest
-    near-Nyquist signal can exceed the ceiling between samples by up
-    to ~3 dB under the sample cap.  Silence (unmeasurable loudness)
-    and undecodable payloads pass through with ``gain_db = 0``.
-    Measure + apply in ONE decode pass; re-encodes with the clip's own
-    codec and carries the shared payload-column contract (rejoin
-    transcript/ds on ``clip_id``)."""
-    if peak_mode not in ("sample", "true"):
-        raise ValueError(f"unknown peak_mode: {peak_mode}")
-    ceil_db = float(peak_ceiling_dbfs)
-    ceil_lin = 10.0 ** (ceil_db / 20.0)
-    tgt = float(target_lufs)
-    use_tp = peak_mode == "true"
-    from drain3_spark.audio.synth import SR_CHOICES
-    pre_irs = {int(s): k_weighting_ir(int(s)) for s in SR_CHOICES}
-
-    def norm(rows):
-        preseed_ir_cache(pre_irs)
-        for (cid, payload, sr, dur, codec), pcm in rows:
-            lufs = None
-            if pcm is not None and sr:
-                pcm = pcm.astype(np.float64)
-                lufs = lufs_kernel(pcm, int(sr))[0]
-            if lufs is None:
-                yield (cid, payload, int(sr), int(dur), codec, None, 0.0,
-                       False)
-                continue
-            gain_db = tgt - lufs
-            limited = False
-            if use_tp:
-                tp = true_peak_dbfs(pcm)
-                if tp is not None and gain_db > ceil_db - tp:
-                    gain_db, limited = ceil_db - tp, True
-            else:
-                peak = float(np.max(np.abs(pcm))) if len(pcm) else 0.0
-                if peak > 0:
-                    max_gain = 20.0 * math.log10(ceil_lin / peak)
-                    if gain_db > max_gain:
-                        gain_db, limited = max_gain, True
-            y = (pcm * 10.0 ** (gain_db / 20.0)).astype(np.float32)
-            yield (cid, bytearray(encode(y, codec, int(sr))), int(sr),
-                   int(dur), codec, lufs, round(gain_db, 6), limited)
-
-    return map_clips(clips, norm, NORMALIZED_SCHEMA, PAYLOAD_COLS)

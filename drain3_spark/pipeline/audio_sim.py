@@ -859,83 +859,3 @@ def spec_augment(clips: DataFrame, n_mels: int = 64, frame_ms: int = 64,
         return out
 
     return map_clips(clips, aug, SPEC_AUGMENT_SCHEMA)
-
-
-PERTURBED_SCHEMA = T.StructType([
-    T.StructField("clip_id", T.StringType()),
-    T.StructField("src_clip_id", T.StringType()),
-    T.StructField("speed", T.DoubleType()),
-    T.StructField("bytes", T.BinaryType()),
-    T.StructField("sr_hz", T.IntegerType()),
-    T.StructField("dur_ms", T.IntegerType()),
-    T.StructField("codec", T.StringType()),
-])
-
-
-def perturb_speed(clips: DataFrame,
-                  factors: tuple = (0.9, 1.1)) -> DataFrame:
-    """Speed perturbation — the standard ASR training augmentation
-    (Ko et al., "Audio augmentation for speech recognition",
-    Interspeech 2015): emit one copy of every clip per factor f,
-    resampled so playback runs f× faster (y(t) = x(f·t) — duration
-    scales by 1/f and pitch shifts with it, the sox ``speed`` effect).
-    Output ``clip_id = src_clip_id @ f`` so copies stay joinable to
-    their source transcript; 1.0 factors pass payload bytes through
-    untouched.  One decode per (clip, factor), linear-interp kernel
-    shared with :func:`resample_clips`, re-encoded with the clip's
-    own codec; undecodable payloads are dropped (the decode CHECK
-    family flags them).  100-TB shape: embarrassingly parallel,
-    output = input × len(factors), no shuffle."""
-    fs = tuple(float(f) for f in factors)
-    if any(f <= 0 for f in fs):
-        raise ValueError(f"speed factors must be positive: {factors}")
-
-    def ps(rows):
-        for (cid, payload, sr, dur, codec), pcm in rows:
-            # zero sr skips the row like the sibling operators
-            if not sr:
-                continue
-            sr = int(sr)
-            if pcm is None:
-                continue
-            pcm = pcm.astype(np.float64)
-            for f in fs:
-                if f == 1.0:
-                    yield (f"{cid}@1.0", cid, 1.0, payload, sr, int(dur),
-                           codec)
-                    continue
-                n_new = max(int(round(len(pcm) / f)), 1)
-                # x(f*t) at the original rate: sample the source at
-                # positions f * i (same lattice as resampling to
-                # sr/f and relabeling the rate as sr)
-                t_new = np.arange(n_new, dtype=np.float64) * f
-                t_old = np.arange(len(pcm), dtype=np.float64)
-                y = np.interp(t_new, t_old, pcm).astype(np.float32)
-                yield (f"{cid}@{f:g}", cid, float(f),
-                       bytearray(encode(y, codec, sr)), sr,
-                       int(round(n_new * 1000.0 / sr)), codec)
-
-    return map_clips(clips, ps, PERTURBED_SCHEMA, PAYLOAD_COLS)
-
-
-def transcode_clips(clips: DataFrame, target_codec: str) -> DataFrame:
-    """Re-encode every clip into ``target_codec`` (raw codec or
-    self-describing container — anything :mod:`drain3_spark.audio.codecs`
-    can encode): the normalization pass that gives a mixed-codec corpus
-    one storage format before training.  Clips already in the target
-    codec pass through byte-identical; undecodable payloads are dropped
-    (the decode CHECK family owns flagging them).  Same payload-columns
-    contract and one-decode-per-clip shape as :func:`resample_clips`."""
-    tgt = str(target_codec)
-
-    def tc(rows):
-        for (cid, payload, sr, dur, codec), pcm in rows:
-            if codec == tgt:
-                yield (cid, payload, int(sr), int(dur), codec)
-            elif pcm is not None:
-                yield (cid, bytearray(encode(pcm.astype(np.float32), tgt,
-                                             int(sr))),
-                       int(sr), int(dur), tgt)
-
-    return map_clips(clips, tc, RESAMPLED_SCHEMA, PAYLOAD_COLS,
-                     decode_if=lambda row: row[4] != tgt)

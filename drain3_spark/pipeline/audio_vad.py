@@ -1,7 +1,8 @@
-"""Energy-based voice-activity detection (VAD) — speech/silence
-segmentation and per-clip speech-ratio stats for training-data
-curation (drop dead-air clips, window ASR training on speech regions,
-cross-check dur_ms against actual speech content).
+"""Energy-based voice-activity detection (VAD) — per-clip speech
+coverage for training-data curation: drop dead-air clips and
+cross-check dur_ms against actual speech content.  The kernel feeds
+:func:`speech_ratio_stats` (q56) and the validator's opt-in
+``min_speech_ratio`` check.
 
 Library-free and deterministic: 20 ms frame RMS, an adaptive
 threshold anchored on the clip's own noise floor (the quietest decile
@@ -33,7 +34,6 @@ from typing import List, Tuple
 import numpy as np
 from pyspark.sql import DataFrame, types as T
 
-from drain3_spark.audio.codecs import encode
 from drain3_spark.audio.runner import PAYLOAD_COLS, map_clips
 
 
@@ -44,8 +44,8 @@ def vad_kernel(pcm: np.ndarray, sr: int, frame_ms: int = 20,
                active_cap: float = 0.02) -> Tuple[List[Tuple[int, int]],
                                                   float]:
     """Segments + speech ratio for one decoded mono PCM buffer — the
-    single source of truth the Spark operators batch; tests replay it
-    directly.  Returns ([(start_ms, end_ms), ...], speech_ratio) where
+    single source of truth that :func:`speech_ratio_stats` and the
+    validator batch; tests replay it directly.  Returns ([(start_ms, end_ms), ...], speech_ratio) where
     speech_ratio = speech samples / total samples.
 
     The open gate is ``max(abs_floor, min(noise_floor · 10^(on_db/20),
@@ -104,13 +104,6 @@ def vad_kernel(pcm: np.ndarray, sr: int, frame_ms: int = 20,
              for a, b in kept], round(float(ratio), 6))
 
 
-VAD_SEGMENTS_SCHEMA = T.StructType([
-    T.StructField("clip_id", T.StringType()),
-    T.StructField("seg_idx", T.IntegerType()),
-    T.StructField("start_ms", T.IntegerType()),
-    T.StructField("end_ms", T.IntegerType()),
-])
-
 SPEECH_RATIO_SCHEMA = T.StructType([
     T.StructField("clip_id", T.StringType()),
     T.StructField("dur_ms", T.IntegerType()),
@@ -118,24 +111,6 @@ SPEECH_RATIO_SCHEMA = T.StructType([
     T.StructField("speech_ms", T.IntegerType()),
     T.StructField("speech_ratio", T.DoubleType()),
 ])
-
-
-def vad_segments(clips: DataFrame, frame_ms: int = 20, on_db: float = 9.0,
-                 off_db: float = 3.0, abs_floor: float = 0.004,
-                 min_speech_ms: int = 60,
-                 min_gap_ms: int = 100) -> DataFrame:
-    """One row per detected speech segment (module docstring).
-    Undecodable / silent clips emit no rows (speech_ratio_stats is the
-    per-clip view that keeps them)."""
-    def extract(rows):
-        for (cid, _, sr, _c), pcm in rows:
-            if pcm is None or not sr:
-                continue
-            segs, _ = vad_kernel(pcm, int(sr), frame_ms, on_db, off_db,
-                                 abs_floor, min_speech_ms, min_gap_ms)
-            yield from ((cid, i, a, e) for i, (a, e) in enumerate(segs))
-
-    return map_clips(clips, extract, VAD_SEGMENTS_SCHEMA)
 
 
 def speech_ratio_stats(clips: DataFrame, frame_ms: int = 20,
@@ -162,53 +137,3 @@ def speech_ratio_stats(clips: DataFrame, frame_ms: int = 20,
 
     return map_clips(clips, extract, SPEECH_RATIO_SCHEMA, PAYLOAD_COLS,
                      carry)
-
-
-UTTERANCES_SCHEMA = T.StructType([
-    T.StructField("clip_id", T.StringType()),
-    T.StructField("utt_idx", T.IntegerType()),
-    T.StructField("start_ms", T.IntegerType()),
-    T.StructField("end_ms", T.IntegerType()),
-    T.StructField("bytes", T.BinaryType()),
-    T.StructField("sr_hz", T.IntegerType()),
-    T.StructField("dur_ms", T.IntegerType()),
-    T.StructField("codec", T.StringType()),
-])
-
-
-def split_on_silence(clips: DataFrame, pad_ms: int = 100,
-                     frame_ms: int = 20, on_db: float = 9.0,
-                     off_db: float = 3.0, abs_floor: float = 0.004,
-                     min_speech_ms: int = 60,
-                     min_gap_ms: int = 100) -> DataFrame:
-    """Utterance segmentation: split each clip at VAD-detected pauses
-    into one payload row per speech segment (``clip_id``/``utt_idx``
-    joinable back to the source transcript), each padded by ``pad_ms``
-    of surrounding context (clamped to the clip; padding may re-overlap
-    a close neighbor — segments are emitted independently).  The
-    standard ASR preprocessing step that turns long-form audio into
-    trainable utterances, here computed where the data lives: one
-    decode + one VAD pass + in-task re-encode per clip, no shuffle,
-    output rows ≈ speech segments.  All-silent and undecodable clips
-    emit nothing (speech_ratio_stats is the per-clip view that keeps
-    them; the decode CHECK family owns flagging undecodables)."""
-    pad = int(pad_ms)
-
-    def extract(rows):
-        for (cid, _, sr, codec), pcm in rows:
-            if pcm is None or not sr:
-                continue
-            sr = int(sr)
-            segs, _ = vad_kernel(pcm, sr, frame_ms, on_db, off_db,
-                                 abs_floor, min_speech_ms, min_gap_ms)
-            n_ms = len(pcm) * 1000 // sr
-            for i, (a, e) in enumerate(segs):
-                a2, e2 = max(a - pad, 0), min(e + pad, n_ms)
-                lo, hi = a2 * sr // 1000, min(e2 * sr // 1000, len(pcm))
-                if hi <= lo:
-                    continue
-                yield (cid, i, a2, e2,
-                       bytearray(encode(pcm[lo:hi], codec, sr)),
-                       sr, e2 - a2, codec)
-
-    return map_clips(clips, extract, UTTERANCES_SCHEMA)

@@ -46,20 +46,13 @@ OPS = {
     "segment_clips": audio_sim.segment_clips,
     "trim_silence": audio_sim.trim_silence,
     "spec_augment": audio_sim.spec_augment,
-    "perturb_speed": audio_sim.perturb_speed,
-    "transcode_clips": lambda df: audio_sim.transcode_clips(df, "pcm_f32le"),
-    "transcode_clips_same_codec":
-        lambda df: audio_sim.transcode_clips(df, "flac"),
     "loudness_stats": lambda df: audio_loudness.loudness_stats(
         df, carry=("ds",)),
-    "normalize_loudness": audio_loudness.normalize_loudness,
     "pitch_stats": lambda df: audio_pitch.pitch_stats(df, carry=("ds",)),
     "audio_quality": audio_quality.audio_quality,
     "audio_fingerprints": audio_fp.audio_fingerprints,
-    "vad_segments": audio_vad.vad_segments,
     "speech_ratio_stats": lambda df: audio_vad.speech_ratio_stats(
         df, carry=("ds",)),
-    "split_on_silence": audio_vad.split_on_silence,
     "audio_features": multimodal.audio_features,
     "audio_spectral_features": multimodal.audio_spectral_features,
     "audio_decode_results": VA.audio_decode_results,
@@ -179,23 +172,6 @@ EXPECTED = {
         "pcm": D,
         "wav": D,
     },
-    "normalize_loudness": {
-        "flac": ("flac", "=payload", 16000, 500, "flac", None, 0.0, False),
-        "g711": ("g711", "=payload", 16000, 500, "g711_mulaw", None, 0.0,
-                 False),
-        "law": ("law", None, 16000, 500, "alaw", None, 0.0, False),
-        "nullsr": E,
-        "pcm": ("pcm", "=payload", 16000, 500, "pcm_s16le", None, 0.0, False),
-        "wav": ("wav", "=payload", 16000, 500, "wav", None, 0.0, False),
-    },
-    "perturb_speed": {
-        "flac": D,
-        "g711": E,
-        "law": D,
-        "nullsr": E,
-        "pcm": D,
-        "wav": D,
-    },
     "pitch_stats": {
         "flac": ("flac", 0, 0.0, None, None, None, "d1"),
         "g711": ("g711", 0, 0.0, None, None, None, "d1"),
@@ -244,41 +220,9 @@ EXPECTED = {
         "pcm": ("pcm", 500, None, None, 0.0, "d1"),
         "wav": ("wav", 500, None, None, 0.0, "d1"),
     },
-    "split_on_silence": {
-        "flac": D,
-        "g711": D,
-        "law": D,
-        "nullsr": E,
-        "pcm": D,
-        "wav": D,
-    },
-    "transcode_clips": {
-        "flac": D,
-        "g711": ("g711", "=payload", 16000, 500, "pcm_f32le"),
-        "law": D,
-        "nullsr": E,
-        "pcm": D,
-        "wav": D,
-    },
-    "transcode_clips_same_codec": {
-        "flac": ("flac", "=payload", 16000, 500, "flac"),
-        "g711": ("g711", "bytes[42]", 16000, 500, "flac"),
-        "law": D,
-        "nullsr": E,
-        "pcm": D,
-        "wav": D,
-    },
     "trim_silence": {
         "flac": D,
         "g711": ("g711", "=payload", 16000, 0, "g711_mulaw", 0, 0),
-        "law": D,
-        "nullsr": E,
-        "pcm": D,
-        "wav": D,
-    },
-    "vad_segments": {
-        "flac": D,
-        "g711": D,
         "law": D,
         "nullsr": E,
         "pcm": D,

@@ -1,8 +1,7 @@
 """BS.1770 loudness: the 48 kHz re-derivation reproduces the spec
 table, the FFT-IR filter equals the direct biquad recursion, known
 signals measure at their known LUFS, gating drops silence, and the
-Spark operators match the local kernel / hit the normalization
-target."""
+Spark operator matches the local kernel."""
 
 import numpy as np
 
@@ -10,7 +9,7 @@ from drain3_spark import fixtures as FX
 from drain3_spark.audio.codecs import decode, encode
 from drain3_spark.pipeline.audio_loudness import (
     k_weight, k_weighting_coeffs, loudness_stats, lra_kernel, lufs_kernel,
-    normalize_loudness, true_peak_dbfs)
+    true_peak_dbfs)
 
 # ITU-R BS.1770-4 Tables 1 and 2 (48 kHz filter coefficients)
 _SPEC_B1 = [1.53512485958697, -2.69169618940638, 1.19839281085285]
@@ -111,71 +110,6 @@ def test_loudness_spark_matches_kernel(spark):
         assert r.true_peak_dbfs == true_peak_dbfs(pcm), m["clip_id"]
 
 
-def _clip_df(spark, rows):
-    """rows: (clip_id, pcm float32, sr, codec) -> clips-shaped DF."""
-    data = [(cid, bytearray(encode(pcm, codec, sr)), sr,
-             int(len(pcm) * 1000 / sr), codec)
-            for cid, pcm, sr, codec in rows]
-    return spark.createDataFrame(
-        data, "clip_id string, bytes binary, sr_hz int, dur_ms int, "
-              "codec string")
-
-
-def test_normalize_hits_target(spark):
-    """f32-encoded program material normalizes to within 0.1 LU of the
-    target (the gain is exact; re-measurement closes the loop)."""
-    fs = 16000
-    rng = np.random.default_rng(3)
-    t = np.arange(4 * fs) / fs
-    rows = []
-    for i, amp in enumerate((0.02, 0.1, 0.4)):
-        x = (amp * np.sin(2 * np.pi * 300.0 * t)
-             + 0.3 * amp * rng.standard_normal(len(t))).astype(np.float32)
-        rows.append((f"c{i}", np.clip(x, -1, 1), fs, "pcm_f32le"))
-    out = normalize_loudness(_clip_df(spark, rows), target_lufs=-23.0)
-    re = {r.clip_id: r for r in loudness_stats(out).collect()}
-    for r in out.collect():
-        assert not r.limited
-        assert abs(re[r.clip_id].integrated_lufs - (-23.0)) < 0.1, r.clip_id
-        assert abs((r.input_lufs + r.gain_db) - (-23.0)) < 1e-6
-
-
-def test_normalize_limits_at_peak_ceiling(spark):
-    """A clip whose target gain would push the sample peak over the
-    ceiling gets the capped gain instead (limited = true), and the
-    output peak lands exactly at the ceiling."""
-    fs = 16000
-    t = np.arange(3 * fs) / fs
-    # very quiet tone with one loud spike: loudness wants +~30 dB but
-    # the spike hits the ceiling long before that
-    x = 0.01 * np.sin(2 * np.pi * 500.0 * t)
-    x[fs] = 0.5
-    out = normalize_loudness(
-        _clip_df(spark, [("spiky", x.astype(np.float32), fs, "pcm_f32le")]),
-        target_lufs=-16.0, peak_ceiling_dbfs=-1.0).collect()
-    r = out[0]
-    assert r.limited
-    y = decode(bytes(r.bytes), "pcm_f32le")
-    peak_dbfs = 20 * np.log10(np.max(np.abs(y)))
-    assert abs(peak_dbfs - (-1.0)) < 0.01
-    assert r.input_lufs + r.gain_db < -16.0  # fell short of target
-
-
-def test_normalize_passthrough_silence_and_undecodable(spark):
-    fs = 16000
-    df = _clip_df(spark, [("quiet", np.zeros(fs, np.float32), fs,
-                           "pcm_s16le")])
-    bad = spark.createDataFrame(
-        [("junk", bytearray(b"\x01\x02\x03"), fs, 100, "flac")],
-        df.schema)
-    out = {r.clip_id: r for r in
-           normalize_loudness(df.unionAll(bad)).collect()}
-    for cid in ("quiet", "junk"):
-        r = out[cid]
-        assert r.gain_db == 0.0 and r.input_lufs is None and not r.limited
-    assert bytes(out["junk"].bytes) == b"\x01\x02\x03"
-
-
 def test_true_peak_catches_intersample_crest():
     """The classic meter case: a tone at fs/4 whose samples all land
     pi/4 off-crest reads -3.01 dBFS sample peak but ~0 dBTP — the
@@ -206,38 +140,6 @@ def test_loudness_range_two_level_program():
     assert lra_kernel(0.1 * tone[: fs], fs) == 0.0  # < one 3 s window
     assert lra_kernel(np.zeros(5 * fs), fs) is None
     assert lra_kernel(np.zeros(0), fs) is None
-
-
-def test_normalize_true_peak_mode(spark):
-    """An off-crest fs/4 tone hides ~3 dB of inter-sample crest: the
-    sample-peak cap lets the TRUE peak overshoot the ceiling; the
-    peak_mode="true" cap keeps it at the ceiling (dBTP)."""
-    import pytest
-
-    fs = 48000
-    n = np.arange(2 * fs)
-    # quiet off-crest fs/4 tone: every sample sits 3.01 dB below the
-    # inter-sample crest.  Ceiling -4 dBTP, target -3 LUFS: the gained
-    # SAMPLE peak lands ~-6.3 dBFS (sample cap never fires) while the
-    # gained TRUE peak lands ~-3.3 dBTP — through the ceiling.
-    x = (0.05 * np.sin(2 * np.pi * 0.25 * n + np.pi / 4)).astype(np.float32)
-    df = _clip_df(spark, [("q", x, fs, "pcm_f32le")])
-
-    r_s = normalize_loudness(df, target_lufs=-3.0,
-                             peak_ceiling_dbfs=-4.0).collect()[0]
-    r_t = normalize_loudness(df, target_lufs=-3.0, peak_ceiling_dbfs=-4.0,
-                             peak_mode="true").collect()[0]
-    assert not r_s.limited   # the sample meter saw no problem...
-    assert r_t.limited       # ...the true-peak meter did
-    tp_s = true_peak_dbfs(decode(bytes(r_s.bytes), "pcm_f32le"))
-    tp_t = true_peak_dbfs(decode(bytes(r_t.bytes), "pcm_f32le"))
-    assert tp_s > -4.0 + 0.5         # sample mode overshot the ceiling
-    assert abs(tp_t - (-4.0)) < 0.1  # true-peak cap lands on it
-    assert r_t.gain_db < r_s.gain_db
-
-    with pytest.raises(ValueError):
-        normalize_loudness(df, peak_mode="rms")
-
 
 def test_carry_columns_pass_through(spark):
     """carry= appends input columns to the stats output (incl. for

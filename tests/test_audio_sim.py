@@ -520,66 +520,6 @@ def test_spec_augment_matches_local_replay(spark):
                for c in rows)
 
 
-def test_transcode_clips(spark):
-    """Mixed-codec corpus normalized to one container: every clip
-    re-encoded (same-codec passthrough byte-identical), content
-    preserved through the lossless target bit-for-bit and through the
-    companded target at its SNR class."""
-    from drain3_spark.pipeline.audio_sim import transcode_clips
-
-    clips = FX.gen_clips_wav(spark, 40, partitions=4)
-    orig = {r.clip_id: r for r in clips.collect()}
-    out = {r.clip_id: r for r in transcode_clips(clips, "flac").collect()}
-    assert set(out) == set(orig)
-    for cid, r in out.items():
-        o = orig[cid]
-        if o.codec == "flac":
-            assert bytes(r.bytes) == bytes(o.bytes)   # passthrough
-            continue
-        assert r.codec == "flac" and r.sr_hz == o.sr_hz
-        got = decode(bytes(r.bytes), "flac")
-        want = decode(bytes(o.bytes), o.codec)
-        # float32 sources round to the int16 lattice; 16-bit-class
-        # sources survive bit-for-bit
-        assert np.allclose(got, want, atol=1.0 / 32767.0)
-
-
-def test_perturb_speed(spark):
-    """Speed perturbation: duration scales by 1/f, pitch scales by f
-    (dominant FFT bin of a pure tone), 1.0 is a byte-identical
-    passthrough, undecodable payloads are dropped, ids stay joinable
-    to the source."""
-    import pytest
-
-    from drain3_spark.audio.codecs import encode as enc
-    from drain3_spark.pipeline.audio_sim import perturb_speed
-
-    fs = 16000
-    t = np.arange(2 * fs) / fs
-    tone = (0.4 * np.sin(2 * np.pi * 400.0 * t)).astype(np.float32)
-    schema = ("clip_id string, bytes binary, sr_hz int, dur_ms int, "
-              "codec string")
-    clips = spark.createDataFrame(
-        [("tone", bytearray(enc(tone, "pcm_s16le")), fs, 2000, "pcm_s16le"),
-         ("junk", bytearray(b"\x00\x01\x02"), fs, 100, "flac")], schema)
-
-    rows = {r.clip_id: r for r in
-            perturb_speed(clips, factors=(0.9, 1.0, 1.1)).collect()}
-    assert set(rows) == {"tone@0.9", "tone@1.0", "tone@1.1"}  # junk dropped
-    assert bytes(rows["tone@1.0"].bytes) == bytes(enc(tone, "pcm_s16le"))
-    for f in (0.9, 1.1):
-        r = rows[f"tone@{f:g}"]
-        assert r.src_clip_id == "tone" and r.speed == f
-        assert abs(r.dur_ms - 2000 / f) <= 2, (f, r.dur_ms)
-        y = decode(bytes(r.bytes), "pcm_s16le")
-        spec = np.abs(np.fft.rfft(y))
-        dom = np.argmax(spec) * fs / len(y)
-        assert abs(dom - 400.0 * f) < 3.0, (f, dom)  # pitch scaled by f
-
-    with pytest.raises(ValueError):
-        perturb_speed(clips, factors=(0.0, 1.1))
-
-
 def test_sinc_resample_rejects_aliases(spark):
     """Downsampling content above the target Nyquist: the windowed-sinc
     method suppresses it (>25 dB below the linear method's aliased
