@@ -473,15 +473,13 @@ def _q26_jaccard_mining(spark, sf):
 
 
 def _q29_jaccard_match(spark, sf):
-    """Jaccard bulk inference via the Arrow kernel match path — the
-    measured-fast formulation (rows-only: set-similarity argmax,
-    reference drain3/jaccard_drain.py:204-227).  The pure-Catalyst
-    broadcast-join formulation (match_clusters_sql_jaccard) computes the
-    identical result but evaluates its scoring lambdas interpreted,
-    2-4x slower (operators/matching.py:252-262); it stays parity-locked
-    to this path by test_jaccard_sql_match_equals_kernel and the
-    reference differential, and result-pinned here by
-    test_q29_kernel_equals_sql_formulation."""
+    """Jaccard bulk inference via the Arrow kernel match path
+    (``match_clusters``, the engine's one Jaccard inference path;
+    rows-only: set-similarity argmax, reference
+    drain3/jaccard_drain.py:204-227).  Result-pinned against a
+    driver-side kernel match of the same corpus by
+    test_q29_kernel_equals_sql_formulation, and row-for-row against the
+    reference by the reference differential."""
     from drain3_spark.config import EngineConfig
     from drain3_spark.operators.matching import match_clusters
     cfg = EngineConfig(engine="jaccard")

@@ -8,18 +8,22 @@ state mutation; strategies ``never`` (tree descent only), ``fallback``
 
 Two implementations:
 
-* :func:`match_clusters_sql` — pure Catalyst broadcast joins for ALL
-  three strategies: the bounded cluster table is rebuilt into a kernel
-  bank on the driver, flattened into scan/leaf/tree-level join tables,
-  and the fixed-depth descent (exact child first, wildcard fallback, no
-  backtracking) is unrolled into one tiny broadcast join per tree level
-  (exactly ONE for the default depth=4).  Perfect-match filter via
-  ``forall(zip_with(...))``, argmax selection with ``array_max`` over
-  (wildcard_count, -iteration_rank).  No shuffle of the big side in any
-  strategy; this is the scale path for bulk inference (SURVEY.md §3.2).
-* :func:`match_clusters` — kernel-backed Arrow pandas UDF, the exact
-  sequential semantics for row-at-a-time parity testing; the bank is
-  built once per executor from the broadcast state and cached.
+* :func:`match_clusters_sql` — Drain engine only.  Pure Catalyst
+  broadcast joins for ALL three strategies: the bounded cluster table
+  is rebuilt into a kernel bank on the driver, flattened into
+  scan/leaf/tree-level join tables, and the fixed-depth descent (exact
+  child first, wildcard fallback, no backtracking) is unrolled into one
+  tiny broadcast join per tree level (exactly ONE for the default
+  depth=4).  Perfect-match filter via ``forall(zip_with(...))``, argmax
+  selection with ``array_max`` over (wildcard_count, -iteration_rank).
+  No shuffle of the big side in any strategy; this is the scale path
+  for Drain bulk inference (SURVEY.md §3.2).
+* :func:`match_clusters` — kernel-backed Arrow pandas UDF for both
+  engines; the bank is built once per executor from the broadcast state
+  and cached.  It is the one Jaccard inference path (q29): the Jaccard
+  similarity argmax is a set computation per (row, candidate), which
+  Catalyst can only express as interpreted higher-order-function
+  lambdas, measured 2-4x slower than python sets over the bank.
 """
 
 from __future__ import annotations
@@ -226,128 +230,6 @@ def match_clusters_sql(df: DataFrame,
             .withColumn("matched_cluster_id", F.col("_best.cid"))
             .withColumn("matched_template", F.col("_best.template"))
             .drop(*drop_cols))
-
-
-def match_clusters_sql_jaccard(df: DataFrame,
-                               clusters: DataFrame,
-                               cfg: EngineConfig,
-                               content_col: str = "transcript") -> DataFrame:
-    """Jaccard-engine bulk inference as one broadcast hash join — the
-    scale path for JaccardDrain matching (reference
-    drain3/jaccard_drain.py:204-227: candidate set = clusters under the
-    message's FIRST token, required similarity 0.8 with the 1.3 gain,
-    wildcard slots excluded per :150-180).
-
-    Candidates join on the cluster's creation-time first token (the
-    tree's level-1 key, jaccard_drain.py:22-31); similarity is set
-    Jaccard via ``array_intersect``/``array_union`` — pure Catalyst,
-    ZERO shuffle of the big side.  Ties argmax (sim, wildcard count,
-    lowest cluster id).
-
-    Tie-break note: the kernel keeps the FIRST candidate in node
-    iteration order on full (sim, wc) ties.  Every SQL inference bank is
-    rebuilt ``from_state`` (ascending cluster id insertion), where node
-    order IS ascending id — so the lowest-id tie-break here equals the
-    kernel's, which the reference differential verifies row-for-row.  A
-    live mid-merge bank could iterate in a different order; bulk SQL
-    inference never sees one (it always starts from a state table).
-
-    Performance note (measured, sf0.1, 5k docs × 1.5k clusters,
-    local[32]): Spark evaluates higher-order-function lambdas
-    (transform/filter/zip_with) INTERPRETED, outside whole-stage
-    codegen, so this scoring transform costs ~27µs per (row, candidate)
-    — the kernel Arrow-UDF path (:func:`match_clusters`, python sets
-    over the broadcast bank) measures 2-4x FASTER (2.5s vs 5.4-10s)
-    despite scanning more candidates.  Keep this formulation as the
-    pure-Catalyst, plan-transparent expression of the semantics; prefer
-    ``match_clusters`` for throughput-critical jaccard bulk inference.
-    The drain-engine SQL path is less affected (smaller per-token-count
-    candidate fan-out).
-    """
-    from drain3_spark.util import widen_small_scan
-    # the scoring lambdas below run INTERPRETED (see performance note):
-    # on a one-partition scan they would all run on a single task
-    df = widen_small_scan(df)
-    w = cfg.param_str
-    required = 0.8  # drain3/jaccard_drain.py:209
-    masked = mask_col(F.col(content_col), cfg.masking, cfg.mask_prefix, cfg.mask_suffix)
-    toks = tokens_col(masked, cfg.extra_delimiters)
-    lhs = (df.withColumn("_tokens", toks)
-           .withColumn("_first", F.coalesce(F.get("_tokens", 0), F.lit("")))
-           # hoisted per ROW: the unequal-length right side is always the
-           # distinct message tokens (jaccard_drain.py:150-166)
-           .withColumn("_mdis", F.array_distinct("_tokens"))
-           .withColumn("_nmdis", F.size("_mdis"))
-           .withColumn("_n", F.size("_tokens")))
-
-    # candidate structs per first-token key; everything that depends on
-    # the TEMPLATE alone (length, wildcard count, distinct non-wildcard
-    # set, display string) is computed once per cluster here — not per
-    # (row, candidate) pair inside the transform (measured 19s -> ~4s on
-    # 5k docs x 1.5k clusters).  The routing column carries the
-    # creation-time tokens whose head is the tree key.
-    route = F.coalesce(F.col("routing"), F.col("template"))
-    first_tok = F.coalesce(F.get(F.split(route, " "), 0), F.lit(""))
-    tpl = F.when(F.col("template") == "", F.array().cast("array<string>")) \
-        .otherwise(F.split(F.col("template"), " "))
-    rhs = (clusters
-           .select(first_tok.alias("_cfirst"),
-                   F.struct(
-                       F.col("cluster_id").alias("cid"),
-                       tpl.alias("tpl"),
-                       F.size(tpl).alias("n"),
-                       F.size(F.filter(tpl, lambda t: t == F.lit(w))).alias("wc"),
-                       F.array_distinct(
-                           F.filter(tpl, lambda t: t != F.lit(w))).alias("sa"),
-                       F.size(F.array_distinct(
-                           F.filter(tpl, lambda t: t != F.lit(w)))).alias("nsa"),
-                       F.col("template").alias("template"),
-                   ).alias("_cand"))
-           .groupBy("_cfirst")
-           .agg(F.collect_list("_cand").alias("_cands")))
-
-    mtoks = F.col("_tokens")
-
-    def scored(c):
-        # equal lengths: drop message tokens at wildcard slots
-        # (jaccard_drain.py:150-166); else compare whole sequences
-        is_eq = (c["n"] == F.col("_n")) & (c["wc"] > 0)
-        right = F.when(
-            is_eq,
-            F.array_distinct(
-                F.filter(F.zip_with(c["tpl"], mtoks,
-                                    lambda a, b: F.when(a == F.lit(w), F.lit(None))
-                                    .otherwise(b)),
-                         lambda x: x.isNotNull()))
-        ).otherwise(F.col("_mdis"))
-        # |A ∪ B| = |A| + |B| - |A ∩ B| for distinct arrays: one set op
-        # per (row, candidate) instead of two — the scoring transform is
-        # the operator's hot loop.  |sa| is hoisted per cluster, |right|
-        # per row except in the (minority) equal-length wildcard branch.
-        inter = F.size(F.array_intersect(c["sa"], right))
-        nright = F.when(is_eq, F.size(right)).otherwise(F.col("_nmdis"))
-        uni = c["nsa"] + nright - inter
-        sim0 = F.when(uni == 0,
-                      # empty template matches anything (kernel: len 0 -> 1.0)
-                      F.when(c["n"] == 0, F.lit(1.0)).otherwise(F.lit(0.0))) \
-            .otherwise(inter / uni)
-        sim = F.when(sim0 * 1.3 < 1.0, sim0 * 1.3).otherwise(F.lit(1.0))
-        return F.struct(sim.alias("sim"), c["wc"].alias("wc"),
-                        (-c["cid"]).alias("negcid"), c["cid"].alias("cid"),
-                        c["template"].alias("template"))
-
-    ranked = F.transform(F.col("_cands"), scored)
-    best = F.array_max(ranked)
-
-    return (lhs.join(F.broadcast(rhs), F.col("_first") == F.col("_cfirst"), "left")
-            .withColumn("_best", best)
-            .withColumn("matched_cluster_id",
-                        F.when(F.col("_best.sim") >= required, F.col("_best.cid")))
-            .withColumn("matched_template",
-                        F.when(F.col("_best.sim") >= required,
-                               F.col("_best.template")))
-            .drop("_tokens", "_first", "_mdis", "_nmdis", "_n",
-                  "_cfirst", "_cands", "_best"))
 
 
 def match_clusters(df: DataFrame,

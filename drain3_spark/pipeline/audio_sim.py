@@ -11,10 +11,9 @@ dedup family (:mod:`drain3_spark.pipeline.similarity`): a spectral
 embedding per clip, RANDOM-HYPERPLANE LSH blocking (``lsh_bands``
 independent ``lsh_bits``-bit sign signatures over the embedding — a
 bucket space of ``lsh_bands * 2**lsh_bits`` keys that grows with a
-real knob, unlike the earlier top-mel-band key whose cardinality was
-capped at ``n_mels`` regardless of corpus size; see
-:func:`audio_near_dup_pairs` for the sizing recipe and the legacy
-``blocking="peak"`` escape hatch), and the family's one exact cosine
+real knob, unlike a top-mel-band key whose cardinality is capped at
+``n_mels`` regardless of corpus size; see :func:`audio_near_dup_pairs`
+for the sizing recipe), and the family's one exact cosine
 verify — :func:`drain3_spark.pipeline.similarity._verify_pairs`
 (Catalyst expressions) or ``_blas_pairs_by_block`` (one BLAS task per
 bucket, string clip ids passed straight through) — candidate-bounded
@@ -47,9 +46,6 @@ AUDIO_EMBEDDING_SCHEMA = T.StructType([
     T.StructField("clip_id", T.StringType()),
     T.StructField("n_frames", T.IntegerType()),
     T.StructField("embedding", T.ArrayType(T.DoubleType())),
-    # two most energetic mel bands — the spectral-peak blocking keys
-    # for near-dup candidate generation (see audio_near_dup_pairs)
-    T.StructField("top_bands", T.ArrayType(T.IntegerType())),
     # random-hyperplane LSH bucket keys, computed INSIDE the same
     # extract UDF when lsh_bits is given (one matmul per Arrow batch) —
     # a separate bucket-assignment pandas_udf would chain a THIRD python
@@ -199,7 +195,7 @@ def audio_embeddings(clips: DataFrame, n_mels: int = 64,
         out = []
         by_sr: Dict[int, list] = {}        # sr -> [(row_idx, cid, pcm)]
         for j, ((cid, _, sr, _c), pcm) in enumerate(rows):
-            out.append((cid, 0, None, None, None))
+            out.append((cid, 0, None, None))
             if pcm is not None and len(pcm) and sr:
                 by_sr.setdefault(int(sr), []).append(
                     (j, cid, pcm.astype(np.float64)))
@@ -216,15 +212,13 @@ def audio_embeddings(clips: DataFrame, n_mels: int = 64,
                 if nrm > 0.0:
                     v = v / nrm
                 vecs[j] = v
-                top = np.argsort(v)[::-1][:2]
-                out[j] = (cid, nf, [float(x) for x in v],
-                          [int(x) for x in top], None)
+                out[j] = (cid, nf, [float(x) for x in v], None)
         if lsh_bits is not None and vecs:
             idxs = sorted(vecs)
             B = lsh_bucket_ids(np.vstack([vecs[j] for j in idxs]),
                                int(lsh_bits), lsh_bands, lsh_seed)
             for row_of_B, j in enumerate(idxs):
-                out[j] = out[j][:4] + (B[row_of_B].tolist(),)
+                out[j] = out[j][:3] + (B[row_of_B].tolist(),)
         return out
 
     return map_clips(clips, extract, AUDIO_EMBEDDING_SCHEMA)
@@ -334,28 +328,20 @@ def audio_lsh_buckets(emb: DataFrame, lsh_bits: int = 16,
     return emb.withColumn("buckets", buckets_udf(F.col("embedding")))
 
 
-def _embed_assigned(clips: DataFrame, blocking: str, n_mels: int,
-                    frame_ms: int, hop_ms: int, f_lo: float, f_hi: float,
-                    lsh_bits: int, lsh_bands: int,
-                    lsh_seed: int) -> DataFrame:
-    """(clip_id, bucket:long, vec) — one row per (clip, probe) under
-    either blocking scheme, the shared candidate-generation input of
-    the one-shot and incremental audio dedup operators.  The LSH keys
-    come out of the embedding extract itself (see
-    :func:`audio_embeddings`), so the whole assignment is ONE python
-    stage over the payload scan."""
-    if blocking not in ("peak", "lsh"):
-        raise ValueError(f"unknown blocking scheme: {blocking!r}")
+def _embed_assigned(clips: DataFrame, n_mels: int, frame_ms: int,
+                    hop_ms: int, f_lo: float, f_hi: float, lsh_bits: int,
+                    lsh_bands: int, lsh_seed: int) -> DataFrame:
+    """(clip_id, bucket:long, vec) — one row per (clip, LSH band), the
+    shared candidate-generation input of the one-shot and incremental
+    audio dedup operators.  The LSH keys come out of the embedding
+    extract itself (see :func:`audio_embeddings`), so the whole
+    assignment is ONE python stage over the payload scan."""
     emb = audio_embeddings(clips, n_mels, frame_ms, hop_ms, f_lo, f_hi,
-                           lsh_bits=(lsh_bits if blocking == "lsh" else None),
-                           lsh_bands=lsh_bands, lsh_seed=lsh_seed)
-    emb = emb.filter(F.col("embedding").isNotNull())
-    probe_col = "buckets" if blocking == "lsh" else "top_bands"
-    return (emb.select("clip_id",
-                       F.explode(probe_col).alias("_p"),
-                       F.col("embedding").alias("vec"))
-            .select("clip_id", F.col("_p").cast("long").alias("bucket"),
-                    "vec"))
+                           lsh_bits=lsh_bits, lsh_bands=lsh_bands,
+                           lsh_seed=lsh_seed)
+    return (emb.filter(F.col("embedding").isNotNull())
+            .select("clip_id", F.explode("buckets").alias("bucket"),
+                    F.col("embedding").alias("vec")))
 
 
 # ------------------------------------------------------------- near-dup
@@ -364,34 +350,29 @@ def audio_near_dup_pairs(clips: DataFrame, threshold: float = 0.999,
                          method: str = "catalyst", n_mels: int = 64,
                          frame_ms: int = 64, hop_ms: int = 32,
                          f_lo: float = 100.0, f_hi: float = 3500.0,
-                         blocking: str = "lsh", lsh_bits: int = 16,
-                         lsh_bands: int = 4,
+                         lsh_bits: int = 16, lsh_bands: int = 4,
                          lsh_seed: int = 7) -> DataFrame:
     """Audio near-duplicate pairs over an UNLABELED clip corpus:
     ``(clip_id_a, clip_id_b, cosine)`` with ``clip_id_a < clip_id_b``,
     where cosine is between the clips' spectral embeddings.
 
-    Blocking is RANDOM-HYPERPLANE LSH over the embedding (default):
-    each clip emits ``lsh_bands`` bucket keys (:func:`lsh_bucket_ids`)
-    and only same-bucket pairs are scored — candidate-bounded, nothing
-    quadratic in the corpus ever materializes.  The bucket space is
-    ``lsh_bands * 2**lsh_bits`` and — unlike the legacy top-mel-band
-    key, whose cardinality was CAPPED at ``n_mels`` however large the
-    corpus grew — it scales with a knob decoupled from the embedding
-    resolution.  Sizing recipe for a corpus of n clips: pick
-    ``lsh_bits ≈ log2(n)`` so uniform-random bucket occupancy stays
-    O(1), then size ``lsh_bands`` to the recall target — a pair at
+    Blocking is RANDOM-HYPERPLANE LSH over the embedding: each clip
+    emits ``lsh_bands`` bucket keys (:func:`lsh_bucket_ids`) and only
+    same-bucket pairs are scored — candidate-bounded, nothing quadratic
+    in the corpus ever materializes.  The bucket space is
+    ``lsh_bands * 2**lsh_bits`` and — unlike a top-mel-band key, whose
+    cardinality is CAPPED at ``n_mels`` however large the corpus grows
+    — it scales with a knob decoupled from the embedding resolution.
+    Sizing recipe for a corpus of n clips: pick ``lsh_bits ≈ log2(n)``
+    so uniform-random bucket occupancy stays O(1), then size
+    ``lsh_bands`` to the recall target — a pair at
     cosine c is missed with ``(1 - (1 - arccos(c)/π)**lsh_bits)
     ** lsh_bands`` (defaults 16/4: miss 1.8e-3 at c=0.999, 4.9e-4 at
     the ≥0.9995 the fixture's planted gain+codec+noise copies measure).
     Clips that merely SHARE a dominant mel band but differ in content
     (cosine ~0.8) spread across signatures instead of piling into one
-    band bucket — the hot-band pathology the peak key had (pinned by
-    ``test_audio_lsh_hot_band_bounded``).  ``blocking="peak"`` keeps
-    the old top-2-mel-band probes (still sound at small scale, and
-    stable where IVF centroid assignment degenerates on peaked
-    spectra — measured: two copies at cosine 1-1e-9 landing in four
-    distinct centroid buckets).
+    band bucket — the hot-band pathology of a peak key (pinned by
+    ``test_audio_lsh_hot_band_bounded``).
 
     Verification is the exact per-pair cosine: ``method="catalyst"``
     (default) as a pure expression; ``method="blas"`` one Gram-matrix
@@ -409,8 +390,8 @@ def audio_near_dup_pairs(clips: DataFrame, threshold: float = 0.999,
                                                   _verify_pairs)
     scope = _SharedScope()
     assigned = scope.share(
-        _embed_assigned(clips, blocking, n_mels, frame_ms, hop_ms, f_lo,
-                        f_hi, lsh_bits, lsh_bands, lsh_seed))
+        _embed_assigned(clips, n_mels, frame_ms, hop_ms, f_lo, f_hi,
+                        lsh_bits, lsh_bands, lsh_seed))
     e = assigned.select(F.col("clip_id").alias("id"),
                         F.col("bucket").alias("blk"), "vec")
 
@@ -432,21 +413,19 @@ def audio_near_dup_pairs(clips: DataFrame, threshold: float = 0.999,
 def audio_embedding_index(clips: DataFrame, n_mels: int = 64,
                           frame_ms: int = 64, hop_ms: int = 32,
                           f_lo: float = 100.0, f_hi: float = 3500.0,
-                          blocking: str = "lsh", lsh_bits: int = 16,
-                          lsh_bands: int = 4,
+                          lsh_bits: int = 16, lsh_bands: int = 4,
                           lsh_seed: int = 7) -> DataFrame:
     """``(clip_id, bucket, embedding)`` — the PERSISTED ASSET of an
     incremental audio-dedup pipeline: one row per (clip, probe),
-    ``lsh_bands`` LSH probes per clip (or two top-mel-band probes under
-    ``blocking="peak"``; same schemes and scale story as
+    ``lsh_bands`` LSH probes per clip (same scale story as
     :func:`audio_near_dup_pairs`).  Write it once per corpus; each new
     ingest batch joins its own probe rows against the stored index
     (:func:`audio_incremental_duplicates`) instead of re-decoding the
     corpus.  Unlike the text LSH index, the embedding itself rides in
     the index row, so the verify step needs NO payload fetch-back —
     ~1 KB per clip regardless of clip length."""
-    return (_embed_assigned(clips, blocking, n_mels, frame_ms, hop_ms,
-                            f_lo, f_hi, lsh_bits, lsh_bands, lsh_seed)
+    return (_embed_assigned(clips, n_mels, frame_ms, hop_ms, f_lo, f_hi,
+                            lsh_bits, lsh_bands, lsh_seed)
             .select("clip_id", "bucket", F.col("vec").alias("embedding")))
 
 
@@ -454,8 +433,7 @@ def audio_incremental_duplicates(new_clips: DataFrame, index: DataFrame,
                                  threshold: float = 0.999,
                                  n_mels: int = 64, frame_ms: int = 64,
                                  hop_ms: int = 32, f_lo: float = 100.0,
-                                 f_hi: float = 3500.0,
-                                 blocking: str = "lsh", lsh_bits: int = 16,
+                                 f_hi: float = 3500.0, lsh_bits: int = 16,
                                  lsh_bands: int = 4,
                                  lsh_seed: int = 7) -> DataFrame:
     """Near-duplicates of a NEW clip batch against an EXISTING corpus,
@@ -467,8 +445,8 @@ def audio_incremental_duplicates(new_clips: DataFrame, index: DataFrame,
     semi-join).  Returns ``(new_id, old_id, cosine)`` with the same
     exact-cosine verify semantics as :func:`audio_near_dup_pairs`.
 
-    The index's ``n_mels``/frame AND blocking parameters (scheme,
-    ``lsh_bits``/``lsh_bands``/``lsh_seed``) must match the arguments
+    The index's ``n_mels``/frame AND LSH parameters
+    (``lsh_bits``/``lsh_bands``/``lsh_seed``) must match the arguments
     here — bucket ids and embedding dimensions are only comparable
     within one parameterization."""
     from drain3_spark.pipeline.similarity import _verify_pairs
@@ -476,8 +454,7 @@ def audio_incremental_duplicates(new_clips: DataFrame, index: DataFrame,
 
     new_idx = widen_small_scan(
         audio_embedding_index(new_clips, n_mels, frame_ms, hop_ms,
-                              f_lo, f_hi, blocking, lsh_bits, lsh_bands,
-                              lsh_seed))
+                              f_lo, f_hi, lsh_bits, lsh_bands, lsh_seed))
 
     def side(idx: DataFrame) -> DataFrame:
         return idx.select(F.col("clip_id").alias("id"),

@@ -93,12 +93,12 @@ EXPECTED = {
         "wav": ("wav", "d1", -INF, False),
     },
     "audio_embeddings": {
-        "flac": ("flac", 0, None, None, None),
-        "g711": ("g711", 0, None, None, None),
-        "law": ("law", 0, None, None, None),
+        "flac": ("flac", 0, None, None),
+        "g711": ("g711", 0, None, None),
+        "law": ("law", 0, None, None),
         "nullsr": E,
-        "pcm": ("pcm", 0, None, None, None),
-        "wav": ("wav", 0, None, None, None),
+        "pcm": ("pcm", 0, None, None),
+        "wav": ("wav", 0, None, None),
     },
     "audio_features": {
         "flac": ("flac", 0, 0.0, 0.0, 0.0, 0),

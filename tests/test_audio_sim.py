@@ -349,9 +349,9 @@ def test_denoise_clips(spark):
 
 
 def test_audio_lsh_hot_band_bounded(spark):
-    """Pathological corpus for the OLD top-mel-band key: every clip's
+    """Pathological corpus for a top-mel-band key: every clip's
     dominant tone sits in the SAME mel band (hot band), secondary
-    content differs per clip.  Peak blocking piles the whole corpus
+    content differs per clip.  A peak key would pile the whole corpus
     into one bucket (occupancy n -> quadratic candidate work at scale);
     LSH blocking spreads it across signatures (per-bucket occupancy
     bounded) while the planted true duplicate is still found."""
@@ -375,34 +375,22 @@ def test_audio_lsh_hot_band_bounded(spark):
     df = spark.createDataFrame(
         rows, "clip_id string, bytes binary, sr_hz int, dur_ms int, codec string")
 
-    def max_occupancy(blocking):
-        idx = audio_sim.audio_embedding_index(df, blocking=blocking)
-        occ = idx.groupBy("bucket").count().agg(
-            {"count": "max"}).collect()[0][0]
-        return int(occ)
-
-    peak_occ = max_occupancy("peak")
-    lsh_occ = max_occupancy("lsh")
-    # every clip's top band is the 1 kHz band: the peak key collapses
-    assert peak_occ == n + 1, peak_occ
-    # LSH spreads the hot band across 2^16-key signatures per band
-    assert lsh_occ <= n // 4, (lsh_occ, peak_occ)
-
-    # candidate work is bounded accordingly: same-bucket pair count
-    # under LSH is a small fraction of the all-pairs peak blocking
     from pyspark.sql import functions as F
 
-    def candidate_pairs(blocking):
-        idx = audio_sim.audio_embedding_index(df, blocking=blocking)
-        a = idx.select(F.col("clip_id").alias("a"), "bucket")
-        b = idx.select(F.col("clip_id").alias("b"), "bucket")
-        return (a.join(b, "bucket").filter(F.col("a") < F.col("b"))
-                .select("a", "b").distinct().count())
+    idx = audio_sim.audio_embedding_index(df)
+    lsh_occ = int(idx.groupBy("bucket").count().agg(
+        {"count": "max"}).collect()[0][0])
+    # LSH spreads the hot band across 2^16-key signatures per band
+    assert lsh_occ <= n // 4, lsh_occ
 
-    n_peak = candidate_pairs("peak")
-    n_lsh = candidate_pairs("lsh")
-    assert n_peak >= n * (n - 1) // 2          # the quadratic pathology
-    assert n_lsh <= n_peak // 4, (n_lsh, n_peak)
+    # candidate work is bounded accordingly: the same-bucket pair count
+    # is a small fraction of the all-pairs count a one-bucket key gives
+    a = idx.select(F.col("clip_id").alias("a"), "bucket")
+    b = idx.select(F.col("clip_id").alias("b"), "bucket")
+    n_lsh = (a.join(b, "bucket").filter(F.col("a") < F.col("b"))
+             .select("a", "b").distinct().count())
+    all_pairs = (n + 1) * n // 2               # 121 clips incl. the dup
+    assert n_lsh <= all_pairs // 4, (n_lsh, all_pairs)
 
     # the true duplicate survives LSH blocking and the exact verify
     got = {(r.clip_id_a, r.clip_id_b)

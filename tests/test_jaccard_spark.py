@@ -1,7 +1,5 @@
 """Jaccard engine through the distributed mining path."""
 
-from pyspark.sql import functions as F
-
 from drain3_spark.config import EngineConfig
 from drain3_spark.operators.matching import match_clusters
 from drain3_spark.operators.mining import mine_templates
@@ -40,39 +38,59 @@ def test_jaccard_spark_mining_and_match(spark):
     res.unpersist()
 
 
+def _driver_match_always(state, cfg, texts):
+    """Driver-side reference for the Spark match path: rebuild the
+    Jaccard bank from the cluster rows and match each text with the
+    kernel's ``always`` strategy, one row at a time."""
+    from drain3_spark.core.kernel import tokenize
+    from drain3_spark.core.kernel_jaccard import JaccardBank
+    from drain3_spark.core.masking import Masker
+    from drain3_spark.operators.mining import cluster_tuples_to_state
+
+    rows = sorted(cluster_tuples_to_state(state), key=lambda s: s[0])
+    bank = JaccardBank.from_state(
+        rows, sim_th=cfg.sim_th, depth=cfg.depth,
+        max_children=cfg.max_children, max_clusters=None,
+        param_str=cfg.param_str,
+        parametrize_numeric_tokens=cfg.parametrize_numeric_tokens)
+    masker = Masker(cfg.masking, cfg.mask_prefix, cfg.mask_suffix)
+    out = []
+    for text in texts:
+        rec = bank.match_tokens(
+            tokenize(masker.mask(text), cfg.extra_delimiters), "always")
+        out.append(rec.cid if rec is not None else None)
+    return out
+
+
 def test_q29_kernel_equals_sql_formulation(spark):
-    """q29 grades the Arrow-kernel jaccard match (the measured-fast
-    path); its result must equal the pure-Catalyst broadcast-join
-    formulation aggregated identically over the same corpus."""
+    """q29 grades the Arrow-kernel jaccard match; its result must equal
+    a driver-side kernel match of the same corpus, aggregated
+    identically."""
     import os
+    from collections import Counter
 
     import pytest
     sf = "/root/testdata/sf0.001"
     if not os.path.exists(f"{sf}/documents.parquet"):
         pytest.skip("driver testdata not present")
     import __spark_entry__ as entry
-    from drain3_spark.operators.matching import match_clusters_sql_jaccard
 
     kernel = {(r.matched_cluster_id, r.n_docs)
               for r in entry._q29_jaccard_match(spark, sf).collect()}
     cfg = EngineConfig(engine="jaccard")
     clips = entry._docs_as_clips(spark, sf)
     res = entry._mined(spark, sf, engine="jaccard")
-    sql = {(r.matched_cluster_id, r.n_docs)
-           for r in (match_clusters_sql_jaccard(clips, res.clusters, cfg)
-                     .groupBy("matched_cluster_id")
-                     .agg(F.count(F.lit(1)).alias("n_docs"))).collect()}
-    assert kernel == sql
+    state = [tuple(r) for r in res.clusters.collect()]
+    texts = [r.transcript for r in clips.select("transcript").collect()]
+    driver = set(Counter(_driver_match_always(state, cfg, texts)).items())
+    assert kernel == driver
     assert len(kernel) > 1
 
 
 def test_jaccard_sql_match_equals_kernel(spark):
-    """Bulk SQL jaccard inference (broadcast first-token join +
-    array_intersect/union sim, 1.3 gain, 0.8 gate) must match the
-    kernel 'always' path row-for-row on the golden corpus."""
-    from drain3_spark.operators.matching import match_clusters_sql_jaccard
-    from drain3_spark.operators.mining import CLUSTER_SCHEMA
-
+    """Spark jaccard inference (``match_clusters``, strategy
+    ``always``) must equal the driver-side kernel match row-for-row on
+    the golden corpus."""
     corpus = LINES + [
         "check fail; user unknown",
         "disk /dev/sda1 is 97% full",
@@ -86,7 +104,6 @@ def test_jaccard_sql_match_equals_kernel(spark):
     cfg = EngineConfig(engine="jaccard")
     res = mine_templates(df, cfg)
     state = [tuple(r) for r in res.clusters.collect()]
-    clusters_df = spark.createDataFrame(state, CLUSTER_SCHEMA)
 
     probes = corpus + [
         "check pass; user zeta",
@@ -102,13 +119,10 @@ def test_jaccard_sql_match_equals_kernel(spark):
 
     want = {r.clip_id: r.matched_cluster_id
             for r in match_clusters(probe, state, cfg, strategy="always").collect()}
-    got_df = match_clusters_sql_jaccard(probe, clusters_df, cfg)
-    got = {r.clip_id: r.matched_cluster_id for r in got_df.collect()}
+    got = dict(zip((f"p-{i:04d}" for i in range(len(probes))),
+                   _driver_match_always(state, cfg, probes)))
     assert got == want, {k: (got[k], want[k]) for k in got if got[k] != want[k]}
     # at least one real match and one null in the comparison
     assert any(v is not None for v in want.values())
     assert any(v is None for v in want.values())
-    # big side never shuffles: broadcast join only
-    plan = got_df._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
     res.unpersist()

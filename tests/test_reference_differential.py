@@ -20,8 +20,7 @@ import pytest
 
 from drain3_spark.config import EngineConfig
 from drain3_spark.operators.matching import (match_clusters,
-                                             match_clusters_sql,
-                                             match_clusters_sql_jaccard)
+                                             match_clusters_sql)
 from drain3_spark.operators.mining import mine_templates
 
 from tests.ref_compat import install_reference_shims
@@ -136,12 +135,13 @@ def test_differential_jaccard_mining(spark):
         assert eng[cid].template == c.get_template(), cid
         assert eng[cid].size == c.size, cid
 
-    # the jaccard SQL bulk-inference path against the reference's match
+    # the jaccard bulk-inference path against the reference's match
     ref_match = []
     for r in rows:
         m = jd.match(r["text"], full_search_strategy="always")
         ref_match.append(m.cluster_id if m is not None else None)
-    out = (match_clusters_sql_jaccard(clips, res.clusters, cfg)
+    state = [tuple(r) for r in res.clusters.collect()]
+    out = (match_clusters(clips, state, cfg, strategy="always")
            .orderBy("ds", "clip_id").collect())
     assert [o.matched_cluster_id for o in out] == ref_match
     res.unpersist()
