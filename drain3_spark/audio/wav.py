@@ -291,8 +291,3 @@ def wav_header(payload: bytes) -> Tuple[str, int, int]:
     else:
         n = data_len // max(bits // 8, 1)
     return codec, int(sr), int(n)
-
-
-def wav_sample_rate(payload: bytes) -> int:
-    """The container's own sample rate (for metadata cross-checks)."""
-    return wav_header(payload)[1]

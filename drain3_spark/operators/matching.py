@@ -159,7 +159,15 @@ def match_clusters_sql(df: DataFrame,
     the kernel's first-winner-on-ties iteration order via driver-assigned
     candidate ranks (verified row-for-row against the reference in
     tests/test_reference_differential.py).
+
+    Drain engine only: the join tables encode Drain's perfect-match
+    semantics, so a Jaccard ``cfg`` raises ``ValueError`` (use
+    :func:`match_clusters`).
     """
+    if cfg.engine != "drain":
+        raise ValueError(
+            f"match_clusters_sql implements Drain matching only, not "
+            f"engine={cfg.engine!r}; use match_clusters")
     assert strategy in ("never", "fallback", "always")
     spark = df.sparkSession
     # no widen_small_scan (measured neutral): the per-row work here is

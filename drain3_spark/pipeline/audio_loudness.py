@@ -94,19 +94,6 @@ def k_weighting_coeffs(fs: float) -> tuple:
     return b1, a1, b2, a2
 
 
-def _biquad_ir(b: np.ndarray, a: np.ndarray, n: int) -> np.ndarray:
-    """Impulse response of one normalized biquad, length n (direct
-    recursion — runs once per (stage, fs) and is cached)."""
-    h = np.zeros(n)
-    x = np.zeros(n)
-    x[0] = 1.0
-    for i in range(n):
-        h[i] = (b[0] * x[i]
-                + (b[1] * x[i - 1] - a[1] * h[i - 1] if i >= 1 else 0.0)
-                + (b[2] * x[i - 2] - a[2] * h[i - 2] if i >= 2 else 0.0))
-    return h
-
-
 _IR_CACHE: dict = {}
 
 

@@ -46,8 +46,7 @@ class _SharedScope:
     strong reference, and a ``weakref.finalize`` unpersists every shared
     subtree when the caller drops it.  No global mutable cache — one
     operator call can never evict a subtree another in-flight call still
-    references.  ``release_shared(result)`` frees eagerly once the
-    caller has materialized what it needs."""
+    references."""
 
     def __init__(self):
         self._frames: List[DataFrame] = []
@@ -100,14 +99,6 @@ class _SharedScope:
         weakref.finalize(result, _SharedScope.release, self)
         return result
 
-
-def release_shared(result: DataFrame) -> None:
-    """Eagerly unpersist the shared subtrees backing an operator result
-    (after the consuming action).  A later action on the result or a
-    frame derived from it only recomputes — never wrong."""
-    scope = getattr(result, "_drain3_shared_scope", None)
-    if scope is not None:
-        scope.release()
 
 #: Default document-frequency cap for :func:`jaccard_pairs`.  The cap must
 #: be O(1) in corpus size — posting lists are materialized arrays and each

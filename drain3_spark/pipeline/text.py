@@ -1,7 +1,7 @@
 """Text analysis for training-data pipelines — all Catalyst-native.
 
-Language-ID (stopword n-gram heuristic), quality scoring, token
-counting (whitespace + BPE-ish regex), and document fingerprinting.
+Language-ID (stopword n-gram heuristic), quality scoring, whitespace
+token counting, and document fingerprinting.
 Every expression is a built-in ``pyspark.sql.functions`` call (JVM-side,
 whole-stage codegen) so the hot path has zero Python; the same formulas
 are expressible in ANSI SQL for the DuckDB oracle.
@@ -9,7 +9,7 @@ are expressible in ANSI SQL for the DuckDB oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
 # tiny per-language stopword families; a hit count heuristic, not a model
 LANG_MARKERS = {
@@ -19,17 +19,9 @@ LANG_MARKERS = {
     "es": r"(?i)\b(el|los|las|es|una|que|por|como)\b",
 }
 
-BPE_ISH_TOKEN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
-
-
 def token_count_ws(text: Column) -> Column:
     """Whitespace token count (empty string -> 0)."""
     return F.size(F.filter(F.split(F.trim(text), r"\s+"), lambda t: t != ""))
-
-
-def token_count_bpe(text: Column) -> Column:
-    """BPE-ish token count: letter runs, digit runs, single punctuation."""
-    return F.size(F.regexp_extract_all(text, F.lit(BPE_ISH_TOKEN), F.lit(0)))
 
 
 def lang_scores(text: Column) -> dict:
@@ -79,17 +71,6 @@ def fingerprint64(text: Column) -> Column:
     """64-bit integer fingerprint (first 15 hex chars of md5 -> bigint;
     15 chars keep it under 2^60, exactly representable both engines)."""
     return F.conv(F.substring(fingerprint_md5(text), 1, 15), 16, 10).cast("long")
-
-
-def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    t = F.col(text_col)
-    return (df
-            .withColumn("n_chars_obs", F.length(t))
-            .withColumn("tokens_ws", token_count_ws(t))
-            .withColumn("tokens_bpe", token_count_bpe(t))
-            .withColumn("lang_pred", lang_id(t))
-            .withColumn("quality", quality_score(t))
-            .withColumn("fingerprint", fingerprint_md5(t)))
 
 
 # ------------------------------------------------------------- PII scrub

@@ -283,8 +283,9 @@ def windowed_category_counts(stream_df: DataFrame,
                              watermark: str = "5 minutes") -> DataFrame:
     """Event-time windowed category frequencies with LATE-DATA handling —
     the streaming form of the chi-square drift check's contingency
-    input (``checks.codec_histogram``), keyed by tumbling event-time
-    windows instead of the batch ``ds`` partition.
+    input (the ``(ds, codec)`` histogram in ``drift.chisq_drift``),
+    keyed by tumbling event-time windows instead of the batch ``ds``
+    partition.
 
     ``withWatermark(ts_col, watermark)`` bounds the aggregation state:
     a window finalizes once the watermark (max observed event time

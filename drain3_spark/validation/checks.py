@@ -200,20 +200,6 @@ def schema_violations(clips: DataFrame, expected: T.StructType) -> DataFrame:
     return local_df(spark, problems, VIOLATION_SCHEMA)
 
 
-def column_stats(clips: DataFrame) -> DataFrame:
-    """Per-partition column statistics in one aggregation pass
-    (SURVEY.md C2; reference precedent: profiler counters,
-    drain3/simple_profiler.py:95-99)."""
-    return (clips.groupBy("ds").agg(
-        F.count(F.lit(1)).alias("rows"),
-        F.avg(F.col("transcript").isNull().cast("double")).alias("transcript_null_rate"),
-        F.min("dur_ms").alias("dur_ms_min"),
-        F.max("dur_ms").alias("dur_ms_max"),
-        F.avg("dur_ms").alias("dur_ms_avg"),
-        F.approx_count_distinct("clip_id").alias("clip_id_approx_distinct"),
-    ))
-
-
 def column_percentiles(df: DataFrame, value_col: str,
                        group_cols=("ds",),
                        percentiles=(0.5, 0.9, 0.99)) -> DataFrame:
@@ -229,12 +215,3 @@ def column_percentiles(df: DataFrame, value_col: str,
     aggs = [F.round(F.percentile(value_col, F.lit(p)), 6)
             .alias(f"p{int(p * 100)}") for p in percentiles]
     return df.groupBy(*group_cols).agg(*aggs)
-
-
-def codec_histogram(clips: DataFrame) -> DataFrame:
-    """(ds, codec) frequency contingency table — the chi-square input."""
-    return clips.groupBy("ds", "codec").agg(F.count(F.lit(1)).alias("n"))
-
-
-def sr_histogram(clips: DataFrame) -> DataFrame:
-    return clips.groupBy("ds", "sr_hz").agg(F.count(F.lit(1)).alias("n"))

@@ -38,6 +38,28 @@ def test_jaccard_spark_mining_and_match(spark):
     res.unpersist()
 
 
+def test_match_clusters_sql_rejects_jaccard_config(spark):
+    """The Catalyst matcher encodes Drain's perfect-match semantics: a
+    Jaccard config must be refused, not matched as Drain (which missed
+    even the training line ``check pass; user li Sa``)."""
+    import pytest
+
+    from drain3_spark.operators.matching import match_clusters_sql
+
+    df = spark.createDataFrame(
+        [("2026-08-01", f"clip-{i:010d}", t) for i, t in enumerate(LINES)],
+        "ds string, clip_id string, transcript string")
+    cfg = EngineConfig(engine="jaccard")
+    res = mine_templates(df, cfg)
+    with pytest.raises(ValueError, match="use match_clusters$"):
+        match_clusters_sql(df, res.clusters, cfg)
+    state = [tuple(r) for r in res.clusters.collect()]
+    m = {r.clip_id: r.matched_cluster_id
+         for r in match_clusters(df, state, cfg, strategy="always").collect()}
+    assert m["clip-0000000002"] == 1
+    res.unpersist()
+
+
 def _driver_match_always(state, cfg, texts):
     """Driver-side reference for the Spark match path: rebuild the
     Jaccard bank from the cluster rows and match each text with the

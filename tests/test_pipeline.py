@@ -21,8 +21,13 @@ def emb(spark):
 
 
 def test_text_stats(spark, docs):
-    out = text.with_text_stats(docs).collect()
-    assert all(r.tokens_ws >= 0 and r.tokens_bpe >= r.tokens_ws * 0 for r in out)
+    t = F.col("text")
+    out = docs.select("doc_id",
+                      text.token_count_ws(t).alias("tokens_ws"),
+                      text.lang_id(t).alias("lang_pred"),
+                      text.quality_score(t).alias("quality"),
+                      text.fingerprint_md5(t).alias("fingerprint")).collect()
+    assert all(r.tokens_ws >= 0 for r in out)
     assert all(0.0 <= r.quality <= 1.0 for r in out)
     assert all(len(r.fingerprint) == 32 for r in out)
     langs = {r.lang_pred for r in out}

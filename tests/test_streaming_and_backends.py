@@ -1,5 +1,5 @@
-"""Structured Streaming driver, persistence backends, config ini surface,
-diagnostics."""
+"""Structured Streaming driver, checkpoint-store resume, table IO,
+config ini surface, diagnostics."""
 
 import os
 

@@ -30,7 +30,7 @@ import __spark_entry__ as entry
 from drain3_spark import fixtures as FX
 from drain3_spark.audio.synth import clip_params
 
-SF = "/root/testdata/sf0.001"  # q24/q25/q31/q32/q37 ignore sf_dir
+SF = "/root/testdata/sf0.001"  # the queries pinned here ignore sf_dir
 
 
 # --------------------------------------------------------------- q24
