@@ -19,6 +19,7 @@ LANG_MARKERS = {
     "es": r"(?i)\b(el|los|las|es|una|que|por|como)\b",
 }
 
+
 def token_count_ws(text: Column) -> Column:
     """Whitespace token count (empty string -> 0)."""
     return F.size(F.filter(F.split(F.trim(text), r"\s+"), lambda t: t != ""))

@@ -141,6 +141,7 @@ def test_loudness_range_two_level_program():
     assert lra_kernel(np.zeros(5 * fs), fs) is None
     assert lra_kernel(np.zeros(0), fs) is None
 
+
 def test_carry_columns_pass_through(spark):
     """carry= appends input columns to the stats output (incl. for
     undecodable rows), plans with no join, and rejects collisions."""

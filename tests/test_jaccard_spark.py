@@ -53,10 +53,6 @@ def test_match_clusters_sql_rejects_jaccard_config(spark):
     res = mine_templates(df, cfg)
     with pytest.raises(ValueError, match="use match_clusters$"):
         match_clusters_sql(df, res.clusters, cfg)
-    state = [tuple(r) for r in res.clusters.collect()]
-    m = {r.clip_id: r.matched_cluster_id
-         for r in match_clusters(df, state, cfg, strategy="always").collect()}
-    assert m["clip-0000000002"] == 1
     res.unpersist()
 
 
