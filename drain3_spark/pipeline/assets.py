@@ -1,13 +1,19 @@
 """Persisted INDEX ASSETS, bucket-partitioned on their probe keys.
 
 The incremental pipelines keep three corpus-scale index assets between
-ingest batches: the text MinHash band index (``dedup.minhash_band_index``,
-probed on ``(band, band_key)``), the audio embedding index
-(``audio_sim.audio_embedding_index``, probed on ``bucket``), and the
-audio fingerprint index (``audio_fp.audio_fingerprints``, probed on
-``hash``).  Each batch's probe join has a tiny new-batch side and a
-corpus-scale stored side — at 100 TB the stored side must NEVER
-re-shuffle per batch.
+ingest batches.  Each is written with :func:`write_index_asset`, and
+the caller names its probe key:
+
+* the text MinHash band index (``dedup.minhash_band_index``), probed on
+  ``["band", "band_key"]``;
+* the audio embedding index (``audio_sim.audio_embedding_index``),
+  probed on ``["bucket"]``;
+* the audio fingerprint index (``audio_fp.audio_fingerprints``), probed
+  on ``["hash"]``.
+
+Each batch's probe join has a tiny new-batch side and a corpus-scale
+stored side — at 100 TB the stored side must NEVER re-shuffle per
+batch.  Appending a batch is ``index.unionByName(new_rows)``.
 
 ``write_index_asset`` persists any of them HASH-BUCKETED on the probe
 key(s): parquet files at ``path``, bucketing metadata in the catalog
@@ -19,8 +25,8 @@ side) and key-aggregates over the index plan with none.  Plan-asserted
 by ``test_fingerprint_index_bucketed_scan_no_exchange`` and
 ``test_index_assets_bucketed_no_corpus_exchange``.
 
-Reading back MUST go through :func:`load_index_asset` (the table, not
-``read.parquet(path)``) — bucketing metadata lives in the catalog, not
+Reading back MUST go through ``spark.table(table)``, not
+``read.parquet(path)`` — bucketing metadata lives in the catalog, not
 in the files.
 
 Reference analog: the miner's persisted snapshot state
@@ -30,51 +36,23 @@ asset contract, held as a distributed table instead of a blob.
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_index_asset(df: DataFrame, path: str, table: str,
-                      bucket_cols: Sequence[str], buckets: int = 32,
-                      sort_cols: Optional[Sequence[str]] = None) -> None:
+                      bucket_cols: Sequence[str], buckets: int = 32) -> None:
     """Persist ``df`` as external parquet table ``table`` at ``path``,
-    bucketed by ``bucket_cols`` (and sorted in-file by ``sort_cols``,
-    default the bucket columns — keeps postings for one key adjacent).
-    ``buckets`` should approximate the target parallelism of index
-    scans on the deployment; the probe keys are high-cardinality
-    (band hashes / LSH buckets / 24-bit pair hashes), so buckets stay
-    balanced."""
+    bucketed and sorted in-file by ``bucket_cols`` (keeps postings for
+    one key adjacent).  ``buckets`` should approximate the target
+    parallelism of index scans on the deployment; the probe keys are
+    high-cardinality (band hashes / LSH buckets / 24-bit pair hashes),
+    so buckets stay balanced."""
     cols = list(bucket_cols)
-    sort = list(sort_cols) if sort_cols is not None else cols
     (df.write.mode("overwrite")
        .bucketBy(buckets, cols[0], *cols[1:])
-       .sortBy(sort[0], *sort[1:])
+       .sortBy(cols[0], *cols[1:])
        .option("path", path)
        .format("parquet")
        .saveAsTable(table))
-
-
-def load_index_asset(spark: SparkSession, table: str) -> DataFrame:
-    """Read back a bucketed index asset written by
-    :func:`write_index_asset`."""
-    return spark.table(table)
-
-
-def write_band_index(banded: DataFrame, path: str, table: str,
-                     buckets: int = 32) -> None:
-    """Persist a text MinHash band index (``(id, band, band_key)``
-    rows) bucketed on its probe keys, so
-    ``dedup.lsh_incremental_duplicates`` joins each new batch against
-    the stored corpus index without shuffling the index side."""
-    write_index_asset(banded, path, table, ["band", "band_key"], buckets)
-
-
-def write_audio_index(index: DataFrame, path: str, table: str,
-                      buckets: int = 32) -> None:
-    """Persist an audio embedding index (``(clip_id, bucket,
-    embedding)`` rows) bucketed on ``bucket``, so
-    ``audio_sim.audio_incremental_duplicates`` probes the stored corpus
-    without shuffling the index side (the embedding rides in the index
-    row, so the verify step reads nothing else)."""
-    write_index_asset(index, path, table, ["bucket"], buckets)

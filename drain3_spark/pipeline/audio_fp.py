@@ -20,7 +20,11 @@ Pipeline shape (all Catalyst between the Arrow kernels):
    ``(clip_id, hash, t)`` with ``t`` the anchor frame index.
 2. The corpus' hash rows are the INVERTED INDEX — a plain DataFrame
    you persist once and reuse across query batches (same asset shape
-   as :func:`audio_sim.audio_embedding_index`).
+   as :func:`audio_sim.audio_embedding_index`).  Persist it bucketed on
+   its probe key with ``assets.write_index_asset(fps, path, table,
+   ["hash"])`` and read it back with ``spark.table(table)``; then the
+   df-cap aggregate and the retrieval join need no index-side
+   Exchange.
 3. ``fingerprint_matches``: join query hashes against index hashes on
    the 24-bit key, then vote: a true match aligns nearly all of the
    query's DISTINCT hash values at ONE time offset
@@ -32,7 +36,7 @@ Pipeline shape (all Catalyst between the Arrow kernels):
 key with a bounded postings list per value, because
 ``fingerprint_matches`` drops hashes whose document frequency exceeds
 ``df_cap`` before joining (the same hot-key guard as the text family's
-``jaccard_duplicate_pairs``; a hash seen in thousands of clips carries
+``jaccard_pairs``; a hash seen in thousands of clips carries
 no evidence — the vote histogram, not any single hash, identifies the
 match).  Candidate work per query is therefore ≤ hashes/query ×
 ``df_cap``, independent of corpus size.  The 24-bit pair-hash space is
@@ -47,7 +51,7 @@ mirrors drain3's miner/matcher split (drain3/template_miner.py:96 vs
 
 from __future__ import annotations
 
-from typing import Dict, Optional, Tuple
+from typing import Dict, Tuple
 
 import numpy as np
 from pyspark.sql import DataFrame, functions as F, types as T
@@ -208,50 +212,6 @@ def audio_fingerprints(clips: DataFrame, frame_ms: int = FRAME_MS,
         }
 
     return map_clips(clips, extract, FINGERPRINT_SCHEMA)
-
-
-def update_fingerprint_index(index_fps: DataFrame, new_fps: DataFrame,
-                             keeper_ids: Optional["DataFrame"] = None
-                             ) -> DataFrame:
-    """Maintain the persisted fingerprint index across ingest batches:
-    append the new batch's fingerprint rows so batch N+1's provenance
-    queries see batch N without re-decoding anything — the same
-    maintenance contract as the text band index
-    (``dedup.update_band_index``) and the audio embedding index
-    (``audio_sim.update_audio_index``).  ``keeper_ids`` (one-column
-    ``clip_id``) restricts the append to clips that SURVIVED dedup —
-    a rejected duplicate's fingerprints must not enter the index or
-    they would keep matching future excerpts of themselves."""
-    if keeper_ids is not None:
-        new_fps = new_fps.join(
-            F.broadcast(keeper_ids.select("clip_id").distinct()), "clip_id")
-    return index_fps.unionByName(new_fps)
-
-
-def write_fingerprint_index(fps: DataFrame, path: str, table: str,
-                            buckets: int = 32) -> None:
-    """Persist the fingerprint index HASH-BUCKETED on disk: parquet at
-    ``path``, registered as external table ``table``, ``bucketBy(buckets,
-    hash)`` + in-file sort.  A later session loads it with
-    :func:`load_fingerprint_index` and gets a scan whose output
-    partitioning already clusters on ``hash`` — so the df-cap aggregate
-    and the retrieval join (:func:`fingerprint_matches`) need NO
-    index-side Exchange: only the (small) query side shuffles.  At
-    corpus scale the index is by far the heavy side — this is the
-    write-once/shuffle-never asset shape the 100-TB deployment wants.
-    ``buckets`` should approximate the cluster's target parallelism for
-    index scans; postings stay balanced because the 24-bit hash key is
-    high-cardinality and df-capped at query time."""
-    from drain3_spark.pipeline.assets import write_index_asset
-    write_index_asset(fps, path, table, ["hash"], buckets)
-
-
-def load_fingerprint_index(spark, table: str) -> DataFrame:
-    """Read back a bucketed fingerprint index written by
-    :func:`write_fingerprint_index` (must go through the table, not
-    ``read.parquet(path)`` — bucketing metadata lives in the catalog)."""
-    from drain3_spark.pipeline.assets import load_index_asset
-    return load_index_asset(spark, table)
 
 
 def fingerprint_matches(query_fps: DataFrame, index_fps: DataFrame,

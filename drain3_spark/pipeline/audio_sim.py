@@ -421,7 +421,10 @@ def audio_embedding_index(clips: DataFrame, n_mels: int = 64,
     :func:`audio_near_dup_pairs`).  Write it once per corpus; each new
     ingest batch joins its own probe rows against the stored index
     (:func:`audio_incremental_duplicates`) instead of re-decoding the
-    corpus.  Unlike the text LSH index, the embedding itself rides in
+    corpus.  Persist it with ``assets.write_index_asset(index, path,
+    table, ["bucket"])`` so the probe join does not shuffle the stored
+    side, and append a batch with ``index.unionByName(batch_index)``.
+    Unlike the text LSH index, the embedding itself rides in
     the index row, so the verify step needs NO payload fetch-back —
     ~1 KB per clip regardless of clip length."""
     return (_embed_assigned(clips, n_mels, frame_ms, hop_ms, f_lo, f_hi,
@@ -463,25 +466,6 @@ def audio_incremental_duplicates(new_clips: DataFrame, index: DataFrame,
 
     return _verify_pairs(side(new_idx), side(index), threshold, operator.ne,
                          ("new_id", "old_id"))
-
-
-def update_audio_index(index: DataFrame, new_index: DataFrame,
-                       keeper_ids: Optional[DataFrame] = None) -> DataFrame:
-    """Maintain the persisted audio embedding index across ingest
-    batches: append the new batch's index rows
-    (:func:`audio_embedding_index` over the batch) so batch N+1 dedups
-    against batch N without re-embedding anything.  ``keeper_ids`` (a
-    one-column ``clip_id`` DataFrame of accepted clips) restricts the
-    append to clips that SURVIVED dedup — rejected duplicates must not
-    enter the index or they would keep matching future batches.
-    Invariant (pinned by
-    ``test_audio_incremental_two_batches_equal_one_shot``): two
-    sequential incremental batches over an updated index find exactly
-    the one-shot cross-pairs over the union."""
-    if keeper_ids is not None:
-        new_index = new_index.join(
-            F.broadcast(keeper_ids.select("clip_id").distinct()), "clip_id")
-    return index.unionByName(new_index)
 
 
 # --------------------------------------------------------- transformations

@@ -301,7 +301,10 @@ def minhash_band_index(df: DataFrame, id_col: str = "doc_id",
     document), then each new ingest batch joins its own banded
     signatures against the stored index
     (:func:`lsh_incremental_duplicates`) instead of re-reading and
-    re-shingling the whole corpus.
+    re-shingling the whole corpus.  Persist it with
+    ``assets.write_index_asset(index, path, table, ["band",
+    "band_key"])`` so the probe join does not shuffle the stored side,
+    and append a batch with ``index.unionByName(batch_index)``.
 
     Band keys are pure expressions over the wide minhash row (the
     band's sorted ``seed:minhash`` strings are a literal-indexed array,
@@ -471,33 +474,6 @@ def lsh_incremental_duplicates(new_df: DataFrame, corpus_df: DataFrame,
                                - F.col("n_common")), 6))
         .filter(F.col("jaccard") >= threshold)
         .select("new_id", "old_id", "jaccard"))
-
-
-def update_band_index(index: DataFrame, new_banded: DataFrame,
-                      keeper_ids: Optional[DataFrame] = None) -> DataFrame:
-    """Maintain the persisted LSH band index across ingest batches:
-    append a new batch's band rows (``minhash_band_index(new_df)`` —
-    same ``(id, band, band_key)`` schema) so batch N+1 dedups against
-    batch N without ever re-shingling the corpus.
-
-    ``keeper_ids`` (a one-column DataFrame of accepted ids) restricts
-    the append to documents that SURVIVED dedup — rejected duplicates
-    must not enter the index, or they would keep matching future
-    batches against documents the corpus no longer contains.  The
-    append is a union of tiny band rows (``bands`` per doc); with the
-    index stored partitioned by ``band_key`` prefix this is an
-    append-only write, no rewrite of the existing index.
-
-    Invariant (pinned by
-    ``test_update_band_index_sequential_equals_one_shot``): feeding two
-    sequential batches through ``lsh_incremental_duplicates`` +
-    ``update_band_index`` yields the same index as
-    :func:`minhash_band_index` over the unioned corpus."""
-    nb = new_banded
-    if keeper_ids is not None:
-        keep = keeper_ids.select(F.col(keeper_ids.columns[0]).alias("id"))
-        nb = nb.join(keep, "id", "left_semi")
-    return index.unionByName(nb)
 
 
 # ------------------------------------------------- connected components

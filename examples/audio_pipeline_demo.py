@@ -69,12 +69,11 @@ def main() -> None:
     # index straight from its files (no index-side shuffle)
     import tempfile
 
-    from drain3_spark.pipeline.assets import (load_index_asset,
-                                              write_audio_index)
+    from drain3_spark.pipeline.assets import write_index_asset
     work = tempfile.mkdtemp(prefix="audio_idx_")
-    write_audio_index(audio_embedding_index(kept), f"{work}/idx",
-                      "demo_audio_index", buckets=8)
-    idx = load_index_asset(spark, "demo_audio_index")
+    write_index_asset(audio_embedding_index(kept), f"{work}/idx",
+                      "demo_audio_index", ["bucket"], buckets=8)
+    idx = spark.table("demo_audio_index")
     batch = FX.gen_clip_dups(spark, 200, every=40, dur_lo=250, dur_hi=600) \
         .withColumn("clip_id", F.concat(F.lit("b2-"), F.col("clip_id")))
     inc = audio_incremental_duplicates(batch, idx, threshold=0.999)

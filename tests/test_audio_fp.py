@@ -121,29 +121,19 @@ def test_fingerprint_undecodable_payload_yields_no_rows(spark):
 
 
 def test_update_fingerprint_index_two_batches_equal_one_shot(spark):
-    """Index maintained across two ingest batches answers a query
-    exactly like a one-shot index over the union; a clip excluded via
-    keeper_ids stops matching."""
-    from drain3_spark.pipeline.audio_fp import update_fingerprint_index
-
+    """Index appended across two ingest batches answers a query
+    exactly like a one-shot index over the union."""
     b1 = FX.gen_clips_melody(spark, 40)
     b2 = FX.gen_clips_melody(spark, 80).filter(
         "clip_id >= 'mel-0000000040'")
     fp1, fp2 = audio_fingerprints(b1), audio_fingerprints(b2)
     oneshot = audio_fingerprints(FX.gen_clips_melody(spark, 80))
-    merged = update_fingerprint_index(fp1, fp2)
+    merged = fp1.unionByName(fp2)
     q = audio_fingerprints(FX.gen_fp_queries(spark, 80, every=10,
                                              n_negatives=0))
     a = sorted(tuple(r) for r in fingerprint_matches(q, merged).collect())
     b = sorted(tuple(r) for r in fingerprint_matches(q, oneshot).collect())
     assert a == b and len(a) == 8
-
-    # reject mel-50 (base of qry-5): its fingerprints must not enter
-    keep = b2.select("clip_id").filter("clip_id != 'mel-0000000050'")
-    merged2 = update_fingerprint_index(fp1, fp2, keeper_ids=keep)
-    got = {r.query_id for r in fingerprint_matches(q, merged2).collect()
-           if r.match_id == "mel-0000000050"}
-    assert got == set()
 
 
 def test_fingerprint_index_bucketed_scan_no_exchange(spark, tmp_path):
@@ -153,15 +143,14 @@ def test_fingerprint_index_bucketed_scan_no_exchange(spark, tmp_path):
     shuffles ONLY the query side, and (c) retrieval results equal the
     in-memory-index run."""
     from pyspark.sql import functions as F
-    from drain3_spark.pipeline.audio_fp import (load_fingerprint_index,
-                                                write_fingerprint_index)
+    from drain3_spark.pipeline.assets import write_index_asset
 
     n, every = 60, 15
     fps = audio_fingerprints(FX.gen_clips_melody(spark, n))
-    write_fingerprint_index(fps, str(tmp_path / "fp_idx"),
-                            "fp_idx_bucket_test", buckets=8)
+    write_index_asset(fps, str(tmp_path / "fp_idx"), "fp_idx_bucket_test",
+                      ["hash"], buckets=8)
     try:
-        idx = load_fingerprint_index(spark, "fp_idx_bucket_test")
+        idx = spark.table("fp_idx_bucket_test")
 
         # (a) groupBy on the bucket key: zero Exchange
         agg_plan = (idx.groupBy("hash").agg(F.count("*").alias("df"))

@@ -261,9 +261,9 @@ def test_audio_incremental_equals_full_cross_pairs(spark):
 
 
 def test_audio_incremental_two_batches_equal_one_shot(spark):
-    """Index maintenance: dedup batch1, update the index with batch1's
-    keepers, dedup batch2 — batch2's matches against batch1 keepers
-    appear, and rejected duplicates never re-enter the index."""
+    """Index maintenance: dedup batch1 against the corpus index, append
+    batch1's index rows, and dedup again — the appended index answers
+    exactly like a one-shot index over corpus + batch1."""
     corpus = FX.gen_clips(spark, 20, dirty=False, dur_lo=250, dur_hi=600)
     b1 = FX.gen_clip_dups(spark, 20, every=10, dur_lo=250,
                           dur_hi=600)            # dup-0, dup-10 (both dups)
@@ -273,27 +273,15 @@ def test_audio_incremental_two_batches_equal_one_shot(spark):
     dup_new_ids = {r.new_id for r in r1}
     assert dup_new_ids == {"dup-0000000000", "dup-0000000010"}
 
-    # no keeper from b1 (all were duplicates): index must NOT grow with
-    # them, so a b2 clone of dup-0 matches clip-0 but NOT dup-0
-    keepers = spark.createDataFrame([], "clip_id string")
-    b1_idx = audio_sim.audio_embedding_index(b1)
-    idx2 = audio_sim.update_audio_index(idx, b1_idx, keeper_ids=keepers)
-    assert idx2.count() == idx.count()
-
-    r2 = audio_sim.audio_incremental_duplicates(b1, idx2, 0.999).collect()
-    olds = {r.old_id for r in r2}
-    assert "dup-0000000000" not in olds and "dup-0000000010" not in olds
-
-    # with keepers accepted, batch2 DOES match against them
-    keepers2 = b1.select("clip_id")
-    idx3 = audio_sim.update_audio_index(idx, b1_idx, keeper_ids=keepers2)
-    r3 = audio_sim.audio_incremental_duplicates(b1, idx3, 0.999).collect()
-    self_pairs = {(r.new_id, r.old_id) for r in r3}
-    # each dup now also matches its own index copy? no — self-matches
-    # are filtered; it matches the OTHER planted dup's base only via
-    # clip ids, so assert the clip-base pairs remain
+    appended = idx.unionByName(audio_sim.audio_embedding_index(b1))
+    oneshot = audio_sim.audio_embedding_index(corpus.unionByName(b1))
+    got, want = ({(r.new_id, r.old_id) for r in
+                  audio_sim.audio_incremental_duplicates(b1, i, 0.999)
+                  .collect()} for i in (appended, oneshot))
+    # self-matches are filtered, so the clip-base pairs remain
+    assert got == want
     assert {("dup-0000000000", "clip-0000000000"),
-            ("dup-0000000010", "clip-0000000010")} <= self_pairs
+            ("dup-0000000010", "clip-0000000010")} <= got
 
 
 def test_normalize_gain(spark):

@@ -4,7 +4,8 @@ per-batch incremental joins never re-shuffle the corpus side.
 
 Plan comparisons are stored-vs-stored: the same rows written as plain
 parquet (scan loses clustering -> index-side Exchange) vs written
-through write_index_asset (bucketed scan -> no index-side Exchange),
+through write_index_asset and read back with spark.table (bucketed
+scan -> no index-side Exchange),
 with broadcast disabled so the join is sort-merge either way — the
 corpus-scale shape where bucketing matters."""
 
@@ -14,8 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from drain3_spark import fixtures as FX
-from drain3_spark.pipeline.assets import (load_index_asset, write_audio_index,
-                                          write_band_index)
+from drain3_spark.pipeline.assets import write_index_asset
 
 SF = "/root/testdata/sf0.001"
 
@@ -46,11 +46,11 @@ def test_band_index_asset_bucketed_no_corpus_exchange(spark, tmp_path):
     batch = docs.filter(F.col("doc_id") % 5 == 0)
 
     banded = minhash_band_index(corpus)
-    write_band_index(banded, str(tmp_path / "band_idx"),
-                     "band_idx_asset_test", buckets=8)
+    write_index_asset(banded, str(tmp_path / "band_idx"),
+                      "band_idx_asset_test", ["band", "band_key"], buckets=8)
     banded.write.mode("overwrite").parquet(str(tmp_path / "band_plain"))
     try:
-        loaded = load_index_asset(spark, "band_idx_asset_test")
+        loaded = spark.table("band_idx_asset_test")
         plain = spark.read.parquet(str(tmp_path / "band_plain"))
         new_banded = minhash_band_index(batch)
 
@@ -83,11 +83,11 @@ def test_audio_index_asset_bucketed_no_corpus_exchange(spark, tmp_path):
              .withColumn("clip_id", F.concat(F.lit("new-"), "clip_id")))
 
     idx = audio_embedding_index(corpus)
-    write_audio_index(idx, str(tmp_path / "audio_idx"),
-                      "audio_idx_asset_test", buckets=8)
+    write_index_asset(idx, str(tmp_path / "audio_idx"),
+                      "audio_idx_asset_test", ["bucket"], buckets=8)
     idx.write.mode("overwrite").parquet(str(tmp_path / "audio_plain"))
     try:
-        loaded = load_index_asset(spark, "audio_idx_asset_test")
+        loaded = spark.table("audio_idx_asset_test")
         plain = spark.read.parquet(str(tmp_path / "audio_plain"))
         probe_rows = audio_embedding_index(batch)
 

@@ -21,15 +21,6 @@ ALLOWED = {
     "EngineProfiler": "observability direction: engine profiler",
     "profile_report": "observability direction: profiler report",
     "audio_lsh_buckets": "perfbench/run.py wraps it by name",
-    "write_band_index": "index-asset family, kept for a later deletion pass",
-    "write_fingerprint_index":
-        "index-asset family, kept for a later deletion pass",
-    "load_fingerprint_index":
-        "index-asset family, kept for a later deletion pass",
-    "update_fingerprint_index":
-        "index-asset family, kept for a later deletion pass",
-    "update_audio_index": "index-asset family, kept for a later deletion pass",
-    "update_band_index": "index-asset family, kept for a later deletion pass",
     "container_metadata_violations": "kept for a later deletion pass",
     "stratified_take": "kept for a later deletion pass",
 }

@@ -505,8 +505,8 @@ def test_connected_components_rejects_mixed_id_types(spark):
 
 
 def test_update_band_index_sequential_equals_one_shot(spark):
-    """Two ingest batches maintained via update_band_index must leave
-    the stored index identical to minhash_band_index over the unioned
+    """Two ingest batches appended to the band index must leave the
+    stored index identical to minhash_band_index over the unioned
     corpus — and batch-2 incremental dedup against the maintained index
     must equal dedup against a freshly built index."""
     rows0 = [(i, f"base document number {i} with shared words alpha beta")
@@ -521,7 +521,7 @@ def test_update_band_index_sequential_equals_one_shot(spark):
     idx0 = dedup.minhash_band_index(corpus)
     d1 = dedup.lsh_incremental_duplicates(b1, corpus, index=idx0, threshold=0.5)
     assert d1.count() > 0
-    idx1 = dedup.update_band_index(idx0, dedup.minhash_band_index(b1))
+    idx1 = idx0.unionByName(dedup.minhash_band_index(b1))
 
     # index equivalence: maintained == one-shot over the union
     union1 = corpus.unionByName(b1)
@@ -538,23 +538,6 @@ def test_update_band_index_sequential_equals_one_shot(spark):
     assert got2 == want2 and got2
     # batch-2 must see batch-1 docs (ids 100+) through the maintained index
     assert any(r[1] >= 100 for r in got2)
-
-
-def test_update_band_index_keeper_filter(spark):
-    """Rejected duplicates must not enter the maintained index."""
-    corpus = spark.createDataFrame(
-        [(1, "totally unique corpus document one two three")],
-        "doc_id long, text string")
-    batch = spark.createDataFrame(
-        [(10, "accepted new document alpha beta gamma"),
-         (11, "rejected duplicate document delta epsilon zeta")],
-        "doc_id long, text string")
-    keep = spark.createDataFrame([(10,)], "id long")
-    idx = dedup.update_band_index(dedup.minhash_band_index(corpus),
-                                  dedup.minhash_band_index(batch),
-                                  keeper_ids=keep)
-    ids = {r.id for r in idx.select("id").distinct().collect()}
-    assert ids == {1, 10}
 
 
 def test_auto_near_dup_multiprobe_recall(spark):
