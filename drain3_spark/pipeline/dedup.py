@@ -21,14 +21,16 @@ Families, each scale-shaped for Spark:
                    minimum (one worker holds the graph; bound in
                    :func:`connected_components`)
 
-Hashes are md5-based so the DuckDB oracle reproduces them bit-exactly.
+The n-gram and MinHash families score pairs with one exact Jaccard
+verify (:func:`_exact_jaccard`).  Hashes are md5-based so the DuckDB
+oracle reproduces them bit-exactly.
 """
 
 from __future__ import annotations
 
 import time
 import weakref
-from typing import List, Optional, Union
+from typing import List, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F, types as T
 from pyspark.storagelevel import StorageLevel
@@ -111,6 +113,55 @@ class _SharedScope:
 DEFAULT_DF_CAP = 256
 
 
+# ---------------------------------------------------------- exact verify
+
+def _shingle_counts(sh: DataFrame) -> DataFrame:
+    """``(id, n_sh)``: distinct shingles per document."""
+    return sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
+
+
+def _exact_jaccard(common: DataFrame, sizes_a: DataFrame,
+                   sizes_b: DataFrame, threshold: float,
+                   names: Sequence[str] = ("id_a", "id_b")) -> DataFrame:
+    """The one exact k-gram Jaccard verify of every Jaccard operator:
+    ``common`` holds ``(a, b, n_common)`` per pair, ``sizes_a`` and
+    ``sizes_b`` hold ``(id, n_sh)`` per document of each side, and
+    ``names`` are the output id columns.  |A∪B| = n_a + n_b - n_common;
+    returns ``(a, b, jaccard)`` with ``jaccard >= threshold``, rounded
+    to 6 places (the DuckDB oracles round the same way)."""
+    a, b = names
+    return (common
+            .join(sizes_a.select(F.col("id").alias(a),
+                                 F.col("n_sh").alias("n_a")), a)
+            .join(sizes_b.select(F.col("id").alias(b),
+                                 F.col("n_sh").alias("n_b")), b)
+            .withColumn("jaccard",
+                        F.round(F.col("n_common")
+                                / (F.col("n_a") + F.col("n_b")
+                                   - F.col("n_common")), 6))
+            .filter(F.col("jaccard") >= threshold)
+            .select(a, b, "jaccard"))
+
+
+def _verify_candidates(cand: DataFrame, sh_a: DataFrame, sh_b: DataFrame,
+                       threshold: float,
+                       names: Sequence[str] = ("id_a", "id_b")) -> DataFrame:
+    """Exact Jaccard of candidate pairs ``cand`` (columns ``names``)
+    over the shingle rows ``sh_a``/``sh_b`` of each side.  The common
+    count joins the candidate table against the shingles, keyed on a
+    candidate id at every step, so the work is O(candidate_pairs ×
+    shingles_per_doc), never all-pairs."""
+    a, b = names
+    common = (cand
+              .join(sh_a.select(F.col("id").alias(a), "shingle"), a)
+              .join(sh_b.select(F.col("id").alias(b), "shingle"),
+                    [b, "shingle"])
+              .groupBy(a, b)
+              .agg(F.count(F.lit(1)).alias("n_common")))
+    return _exact_jaccard(common, _shingle_counts(sh_a),
+                          _shingle_counts(sh_b), threshold, names)
+
+
 # --------------------------------------------------------------------- exact
 
 def exact_duplicates(df: DataFrame, id_col: str = "doc_id",
@@ -153,13 +204,13 @@ def shingle_rows(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
 def jaccard_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
                   k: int = 3, threshold: float = 0.7,
                   block_col: Optional[str] = None,
-                  df_cap: Union[int, None, str] = "auto") -> DataFrame:
+                  df_cap: Optional[int] = DEFAULT_DF_CAP) -> DataFrame:
     """Near-duplicate pairs by k-gram Jaccard >= threshold.
 
     Returns (id_a, id_b, jaccard) with id_a < id_b.
 
-    ``df_cap`` is the scale guard, ON BY DEFAULT (``"auto"`` resolves to
-    :data:`DEFAULT_DF_CAP`): a shingle shared by s documents contributes
+    ``df_cap`` is the scale guard, ON BY DEFAULT
+    (:data:`DEFAULT_DF_CAP`): a shingle shared by s documents contributes
     s² join rows, so stopword-like k-grams make a naive shingle
     self-join quadratic on a large corpus.  The capped operator uses an
     INVERTED-INDEX formulation: one aggregation builds per-shingle
@@ -179,8 +230,6 @@ def jaccard_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     |A∪B| from per-doc distinct counts).  That plan is quadratic in the
     hottest shingle's document frequency — never the default.
     """
-    if df_cap == "auto":
-        df_cap = DEFAULT_DF_CAP
     scope = _SharedScope()
     sh = shingle_rows(df, id_col, text_col, k, block_col=block_col)
 
@@ -217,20 +266,9 @@ def jaccard_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
                                      F.lit(0)))).alias("id_b"))
                   .groupBy("id_a", "id_b")
                   .agg(F.count(F.lit(1)).alias("n_common")))
-        return scope.attach(
-            common
-            .join(sizes.select(F.col("id").alias("id_a"),
-                               F.col("n_sh").alias("n_a")), "id_a")
-            .join(sizes.select(F.col("id").alias("id_b"),
-                               F.col("n_sh").alias("n_b")), "id_b")
-            .withColumn("jaccard",
-                        F.round(F.col("n_common")
-                                / (F.col("n_a") + F.col("n_b")
-                                   - F.col("n_common")), 6))
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard"))
+        return scope.attach(_exact_jaccard(common, sizes, sizes, threshold))
 
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
+    sizes = _shingle_counts(sh)
 
     a = sh.select(F.col("id").alias("id_a"), "shingle",
                   *([F.col("_blk")] if block_col else []))
@@ -242,17 +280,7 @@ def jaccard_pairs(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     common = (a.join(b, cond)
               .groupBy("id_a", "id_b")
               .agg(F.count(F.lit(1)).alias("n_common")))
-    out = (common
-           .join(sizes.select(F.col("id").alias("id_a"),
-                              F.col("n_sh").alias("n_a")), "id_a")
-           .join(sizes.select(F.col("id").alias("id_b"),
-                              F.col("n_sh").alias("n_b")), "id_b")
-           .withColumn("jaccard",
-                       F.round(F.col("n_common")
-                               / (F.col("n_a") + F.col("n_b") - F.col("n_common")), 6))
-           .filter(F.col("jaccard") >= threshold)
-           .select("id_a", "id_b", "jaccard"))
-    return out
+    return _exact_jaccard(common, sizes, sizes, threshold)
 
 
 # ------------------------------------------------------------------- minhash
@@ -384,26 +412,7 @@ def minhash_lsh_duplicates(df: DataFrame, id_col: str = "doc_id",
                 .unionByName(cand.select(F.col("id_b").alias("id")))
                 .distinct())
     sh_c = scope.share(sh.join(cand_ids, "id", "left_semi"))
-
-    sizes = sh_c.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
-    common = (cand
-              .join(sh_c.select(F.col("id").alias("id_a"), "shingle"), "id_a")
-              .join(sh_c.select(F.col("id").alias("id_b"), "shingle"),
-                    ["id_b", "shingle"])
-              .groupBy("id_a", "id_b")
-              .agg(F.count(F.lit(1)).alias("n_common")))
-    return scope.attach(
-        common
-        .join(sizes.select(F.col("id").alias("id_a"),
-                           F.col("n_sh").alias("n_a")), "id_a")
-        .join(sizes.select(F.col("id").alias("id_b"),
-                           F.col("n_sh").alias("n_b")), "id_b")
-        .withColumn("jaccard",
-                    F.round(F.col("n_common")
-                            / (F.col("n_a") + F.col("n_b")
-                               - F.col("n_common")), 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard"))
+    return scope.attach(_verify_candidates(cand, sh_c, sh_c, threshold))
 
 
 def lsh_incremental_duplicates(new_df: DataFrame, corpus_df: DataFrame,
@@ -455,25 +464,8 @@ def lsh_incremental_duplicates(new_df: DataFrame, corpus_df: DataFrame,
         .join(new_ids, "id", "left_semi"),
         shingle_rows(corpus_df, id_col, text_col, k)
         .join(old_ids, "id", "left_semi"))
-    sizes_new = sh_new.groupBy("id").agg(F.count(F.lit(1)).alias("n_new"))
-    sizes_old = sh_old.groupBy("id").agg(F.count(F.lit(1)).alias("n_old"))
-    common = (cand
-              .join(sh_new.select(F.col("id").alias("new_id"), "shingle"),
-                    "new_id")
-              .join(sh_old.select(F.col("id").alias("old_id"), "shingle"),
-                    ["old_id", "shingle"])
-              .groupBy("new_id", "old_id")
-              .agg(F.count(F.lit(1)).alias("n_common")))
-    return scope.attach(
-        common
-        .join(sizes_new.select(F.col("id").alias("new_id"), "n_new"), "new_id")
-        .join(sizes_old.select(F.col("id").alias("old_id"), "n_old"), "old_id")
-        .withColumn("jaccard",
-                    F.round(F.col("n_common")
-                            / (F.col("n_new") + F.col("n_old")
-                               - F.col("n_common")), 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("new_id", "old_id", "jaccard"))
+    return scope.attach(_verify_candidates(cand, sh_new, sh_old, threshold,
+                                           ("new_id", "old_id")))
 
 
 # ------------------------------------------------- connected components
