@@ -137,26 +137,6 @@ def container_metadata_results(clips: DataFrame,
                      decode_if=lambda row: False)
 
 
-def container_metadata_violations(clips: DataFrame,
-                                  dur_tol_ms: int = 2) -> DataFrame:
-    from drain3_spark.fixtures import CHECK_CONTAINER_META
-    res = container_metadata_results(clips, dur_tol_ms)
-    detail = (F.when(~F.col("parse_ok"), F.lit("unparseable container"))
-              .when(~F.col("sr_ok"),
-                    F.concat(F.lit("container sr_hz="),
-                             F.col("container_sr_hz").cast("string"),
-                             F.lit(" != column")))
-              .otherwise(F.concat(F.lit("container dur_ms="),
-                                  F.col("container_dur_ms").cast("string"),
-                                  F.lit(" != column"))))
-    return (res.filter(~F.col("sr_ok") | ~F.col("dur_ok")
-                       | ~F.col("parse_ok"))
-            .select("clip_id", "ds",
-                    F.lit(CHECK_CONTAINER_META).alias("check"),
-                    detail.alias("detail"))
-            .distinct())
-
-
 def audio_and_container_violations(clips: DataFrame, snr_min: float = 30.0,
                                    dur_bounds: Tuple[int, int] = (100, 5000),
                                    sr_domain: Sequence[int] = (8000, 16000, 22050, 44100, 48000),
@@ -168,15 +148,16 @@ def audio_and_container_violations(clips: DataFrame, snr_min: float = 30.0,
     """SNR decode verdicts AND container-vs-column metadata consistency
     in ONE ``bytes`` scan — the pass the ValidationEngine runs.
 
-    The standalone :func:`container_metadata_violations` plans its own
-    scan of the payload column; unioned next to the decode check that
-    DOUBLES the engine's bytes I/O (measured +51% on the 4M-clip
-    validation job: 97.2s vs 64.3s per iteration at local[8] —
-    row-group pruning cannot save it because codecs are mixed within
-    every row group).  Here the container header is parsed from the
-    same Arrow batch the decode check already holds — microseconds per
-    wav/flac row, zero extra scan.  Detail strings are byte-identical
-    to the standalone checks' (exact-match contract).  Scope note: the
+    A separate container pass would plan its own scan of the payload
+    column; unioned next to the decode check that DOUBLES the engine's
+    bytes I/O (measured +51% on the 4M-clip validation job: 97.2s vs
+    64.3s per iteration at local[8] — row-group pruning cannot save it
+    because codecs are mixed within every row group).  Here the
+    container header is parsed from the same Arrow batch the decode
+    check already holds — microseconds per wav/flac row, zero extra
+    scan.  The container details are ``unparseable container``,
+    ``container sr_hz=<n> != column`` and ``container dur_ms=<n> !=
+    column`` (exact-match contract).  Scope note: the
     engine path checks containers on STRUCTURALLY VALID rows (the same
     filter as the decode check); rows that are already dur/sr-domain
     findings are their own checks' responsibility.

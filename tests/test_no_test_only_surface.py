@@ -21,8 +21,6 @@ ALLOWED = {
     "EngineProfiler": "observability direction: engine profiler",
     "profile_report": "observability direction: profiler report",
     "audio_lsh_buckets": "perfbench/run.py wraps it by name",
-    "container_metadata_violations": "kept for a later deletion pass",
-    "stratified_take": "kept for a later deletion pass",
 }
 
 

@@ -1,16 +1,13 @@
 """Deterministic stratified sampling: exact cross-engine (DuckDB)
-oracle on the shared parquet corpus, partitioning-independence,
-per-stratum exactness of stratified_take, and the prefilter's
-identical-output guarantee."""
+oracle on the shared parquet corpus, partitioning-independence, seed
+sensitivity, rate validation, and the scan-side plan shape."""
 
 import duckdb
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from drain3_spark.pipeline.sampling import (oracle_sample_hash_sql,
-                                            sample_hash, stratified_sample,
-                                            stratified_take)
+                                            sample_hash, stratified_sample)
 
 DOCS = "/root/testdata/sf0.001/documents.parquet"
 RATES = {"src0": 1.0, "src1": 0.5, "src2": 0.25, "src3": 0.0}
@@ -71,80 +68,9 @@ def test_stratified_sample_seed_changes_selection(spark):
     assert 0.4 < len(a & b) / 500 < 0.6  # seeds are independent draws
 
 
-def test_stratified_take_exact_and_deterministic(spark):
-    base = (spark.range(500)
-            .withColumn("stratum", (F.col("id") % 5).cast("string")))
-    a = stratified_take(base.repartition(11), "stratum", 7, "id")
-    b = stratified_take(base.repartition(2), "stratum", 7, "id")
-    rows_a = sorted((r.stratum, r.id) for r in a.collect())
-    assert rows_a == sorted((r.stratum, r.id) for r in b.collect())
-    per = {}
-    for s, _ in rows_a:
-        per[s] = per.get(s, 0) + 1
-    assert per == {str(k): 7 for k in range(5)}
-    # starved stratum returns all its rows
-    tiny = base.filter((F.col("id") < 3) | (F.col("stratum") != "0"))
-    got = stratified_take(tiny, "stratum", 7, "id")
-    n0 = got.filter(F.col("stratum") == "0").count()
-    assert n0 == 1  # ids 0,1,2 -> stratum 0 keeps only id 0
-
-
-def test_stratified_take_matches_duckdb(spark):
-    got = sorted(r.doc_id for r in stratified_take(
-        spark.read.parquet(DOCS), "source", 4, "doc_id", seed=11)
-        .select("doc_id").collect())
-    h = oracle_sample_hash_sql("doc_id", 11)
-    want = sorted(r[0] for r in duckdb.connect().execute(f"""
-        select doc_id from (
-          select doc_id, row_number() over (
-            partition by source order by {h}, doc_id) as rk
-          from '{DOCS}') where rk <= 4""").fetchall())
-    assert got == want and len(got) == 80
-
-
-def test_prefilter_take_identical_when_not_starved(spark):
-    """The rank orders by the hash the prefilter thresholds on, so a
-    prefilter keeping >= n rows per stratum changes NOTHING."""
-    base = (spark.range(2000)
-            .withColumn("stratum", (F.col("id") % 2).cast("string")))
-    full = sorted((r.stratum, r.id) for r in
-                  stratified_take(base, "stratum", 10, "id").collect())
-    thin = sorted((r.stratum, r.id) for r in
-                  stratified_take(base, "stratum", 10, "id",
-                                  prefilter_rate=0.1).collect())
-    assert full == thin
-
-
-def test_take_null_keys_rank_last_on_both_paths(spark):
-    """NULL keys hash to NULL: ranked first they took the top slots of
-    the unfiltered take while the prefilter dropped them, so the two
-    paths disagreed.  Ranked last, both paths return the same keyed
-    rows."""
-    keyed = (spark.range(400)
-             .withColumn("stratum", (F.col("id") % 2).cast("string")))
-    nulls = (spark.range(12)
-             .select(F.lit(None).cast("long").alias("id"),
-                     (F.col("id") % 2).cast("string").alias("stratum")))
-    base = keyed.unionByName(nulls)
-    full = sorted((r.stratum, r.id) for r in
-                  stratified_take(base, "stratum", 10, "id").collect())
-    thin = sorted((r.stratum, r.id) for r in
-                  stratified_take(base, "stratum", 10, "id",
-                                  prefilter_rate=0.5).collect())
-    assert full == thin and len(full) == 20
-    assert all(i is not None for _, i in full)
-    # a stratum with fewer than n keyed rows is topped up from its
-    # NULL-key rows: the take still returns min(n, stratum size)
-    small = keyed.filter(F.col("id") < 6).unionByName(nulls)
-    got = stratified_take(small, "stratum", 10, "id").collect()
-    assert len(got) == 18 and sum(r.id is None for r in got) == 12
-
-
 def test_rate_validation():
     with pytest.raises(ValueError):
         stratified_sample(None, "s", {"x": 1.5}, "id")
-    with pytest.raises(ValueError):
-        stratified_take(None, "s", 0, "id")
 
 
 def test_stratified_sample_plan_is_scan_side(spark):
