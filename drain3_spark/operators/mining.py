@@ -36,7 +36,7 @@ import logging
 from dataclasses import dataclass, field
 from typing import List, Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
+from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 logger = logging.getLogger(__name__)
 

@@ -34,7 +34,7 @@ a curation filter should still drop them).
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, types as T
 
 from drain3_spark.audio.runner import map_clips
 

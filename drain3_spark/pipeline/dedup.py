@@ -32,7 +32,7 @@ import time
 import weakref
 from typing import List, Optional, Sequence
 
-from pyspark.sql import Column, DataFrame, Window, functions as F, types as T
+from pyspark.sql import DataFrame, functions as F, types as T
 from pyspark.storagelevel import StorageLevel
 
 from drain3_spark.pipeline.text import fingerprint_md5, normalize_text

@@ -22,7 +22,7 @@ signal here rather than an eviction heuristic.
 from __future__ import annotations
 
 import math
-from typing import Dict, List, Optional, Tuple
+from typing import Dict, List, Optional
 
 import numpy as np
 from pyspark.sql import DataFrame, functions as F

@@ -3,7 +3,9 @@ a caller outside the tests, or a stated reason to exist without one.
 
 A name counts as called when some ``.py`` file outside any ``tests/``
 directory references it as an AST ``Name``, an ``Attribute`` or an
-import alias.  AST only: no Spark, no imports of the engine.
+import alias.  A package ``__init__.py`` re-export inside
+``drain3_spark/`` is not a caller.  Every name an engine module imports
+is used in that module.  AST only: no Spark, no imports of the engine.
 """
 
 import ast
@@ -24,26 +26,33 @@ ALLOWED = {
 }
 
 
+def _engine_modules():
+    """(path, AST) for every ``.py`` file under ``drain3_spark/``."""
+    for dirpath, _, files in os.walk(os.path.join(ROOT, "drain3_spark")):
+        for fn in files:
+            if fn.endswith(".py"):
+                path = os.path.join(dirpath, fn)
+                with open(path) as f:
+                    yield path, ast.parse(f.read(), path)
+
+
 def _public_defs():
     """name -> defining file, for every public module-level def/class."""
     out = {}
-    for dirpath, _, files in os.walk(os.path.join(ROOT, "drain3_spark")):
-        for fn in files:
-            if not fn.endswith(".py"):
-                continue
-            path = os.path.join(dirpath, fn)
-            with open(path) as f:
-                tree = ast.parse(f.read(), path)
-            for node in tree.body:
-                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
-                                     ast.ClassDef)) \
-                        and not node.name.startswith("_"):
-                    out[node.name] = os.path.relpath(path, ROOT)
+    for path, tree in _engine_modules():
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                 ast.ClassDef)) \
+                    and not node.name.startswith("_"):
+                out[node.name] = os.path.relpath(path, ROOT)
     return out
 
 
 def _referenced_names():
-    """Every Name, Attribute and import alias outside ``tests/``."""
+    """Every Name, Attribute and import alias outside ``tests/``, minus
+    the import aliases of the engine's package ``__init__.py`` files: a
+    re-export is not a caller."""
+    engine = os.path.join(ROOT, "drain3_spark") + os.sep
     refs = set()
     for dirpath, dirs, files in os.walk(ROOT):
         dirs[:] = [d for d in dirs
@@ -52,6 +61,7 @@ def _referenced_names():
             if not fn.endswith(".py"):
                 continue
             path = os.path.join(dirpath, fn)
+            reexports = fn == "__init__.py" and path.startswith(engine)
             with open(path) as f:
                 tree = ast.parse(f.read(), path)
             for node in ast.walk(tree):
@@ -59,7 +69,7 @@ def _referenced_names():
                     refs.add(node.id)
                 elif isinstance(node, ast.Attribute):
                     refs.add(node.attr)
-                elif isinstance(node, ast.alias):
+                elif isinstance(node, ast.alias) and not reexports:
                     refs.add(node.name.rsplit(".", 1)[-1])
                     if node.asname:
                         refs.add(node.asname)
@@ -78,3 +88,24 @@ def test_every_public_name_has_a_caller_outside_tests():
     assert not stale, (
         f"allowlist entries that no longer exist or now have a caller: "
         f"{sorted(stale)}")
+
+
+def test_every_import_is_used():
+    """Each name a non-``__init__`` engine module imports (at any depth)
+    is referenced somewhere in that module as an AST ``Name``."""
+    unused = []
+    for path, tree in _engine_modules():
+        if os.path.basename(path) == "__init__.py":
+            continue
+        imported, used = {}, set()
+        for node in ast.walk(tree):
+            if isinstance(node, (ast.Import, ast.ImportFrom)):
+                if getattr(node, "module", None) == "__future__":
+                    continue
+                for a in node.names:
+                    imported[a.asname or a.name.split(".")[0]] = node.lineno
+            elif isinstance(node, ast.Name):
+                used.add(node.id)
+        unused += [f"{os.path.relpath(path, ROOT)}:{line} {name}"
+                   for name, line in imported.items() if name not in used]
+    assert not unused, f"unused imports: {sorted(unused)}"

@@ -1,4 +1,4 @@
-"""Structured Streaming driver, checkpoint-store resume, table IO,
+"""Structured Streaming driver, checkpoint-store resume,
 config ini surface, diagnostics."""
 
 import os
@@ -96,21 +96,6 @@ def test_diagnostics(spark):
     report.violations.unpersist()
     res.unpersist()
     clips.unpersist()
-
-
-def test_tableio_parquet_fallback(spark, tmp_path):
-    from drain3_spark import fixtures as FX
-    from drain3_spark.io import TableIO
-    io = TableIO(spark)
-    clips = FX.gen_clips(spark, 20, dur_lo=200, dur_hi=400)
-    io.write(clips, str(tmp_path / "t"), partition_by="ds",
-             mode="overwrite", binary_safe=True)
-    back = io.read(str(tmp_path / "t"))
-    assert back.count() == 20
-    assert io.snapshot_id(str(tmp_path / "t")) is None
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        TableIO(spark, catalog="nope")
 
 
 def test_stream_replay_is_idempotent(spark, tmp_path):
