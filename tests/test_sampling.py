@@ -41,10 +41,14 @@ def test_stratified_sample_matches_duckdb_exactly(spark):
 
 def test_stratified_sample_rates_and_independence(spark):
     """Kept fraction tracks the rate, the decision is partitioning-
-    independent, and re-running is idempotent (same keys kept)."""
+    independent, re-running is idempotent (same keys kept), and NULL-key
+    rows are dropped even at rate 1.0 (their hash is NULL)."""
     n = 4000
+    nulls = spark.range(8).select(F.lit(None).cast("long").alias("id"),
+                                  F.lit("3").alias("stratum"))
     base = (spark.range(n)
-            .withColumn("stratum", (F.col("id") % 4).cast("string")))
+            .withColumn("stratum", (F.col("id") % 4).cast("string"))
+            .unionByName(nulls))
     rates = {"0": 0.3, "1": 0.8, "2": 0.0, "3": 1.0}
     a = stratified_sample(base.repartition(13), "stratum", rates, "id")
     b = stratified_sample(base.coalesce(1), "stratum", rates, "id")
