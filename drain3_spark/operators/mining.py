@@ -5,10 +5,11 @@ drain3/drain.py:188-226 and drain3/template_miner.py:134-162):
 
     scan → mask+tokenize (Catalyst, codegen) → derive group key
         → hash-shuffle on group key                       (one shuffle)
-        → applyInPandas: sequential kernel fold per group (Arrow)
-        → split assignments / cluster deltas (persisted, no recompute)
-        → renumber new clusters deterministically (tiny DF)
-        → broadcast id map back onto assignments          (no shuffle)
+        → applyInPandas: sequential kernel fold per group (Arrow, persisted)
+        → collect the bank cluster rows    (the one action; fills the cache)
+        → driver: merge salted banks, renumber new clusters, LRU bound
+        → cluster table as a local relation                     (no job)
+        → broadcast local id map onto the fold's assignments (no shuffle)
 
 Group independence is exact: in the reference the first parse-tree
 level is the token count (drain3/drain.py:288-290), so messages with
@@ -33,10 +34,10 @@ deterministic creation / recency order.
 from __future__ import annotations
 
 import logging
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import List, Optional, Sequence
 
-from pyspark.sql import DataFrame, Window, functions as F, types as T
+from pyspark.sql import DataFrame, functions as F, types as T
 
 logger = logging.getLogger(__name__)
 
@@ -65,6 +66,12 @@ CLUSTER_SCHEMA = T.StructType([
     T.StructField("routing", T.StringType()),
 ])
 
+# a fold's cluster row as the driver reads it: CLUSTER_SCHEMA's layout,
+# with the bank ref ("g:<prior id>" or "n:<created_key>") in place of
+# the final id and the creating row's ckey as created_key
+BANK_COLS = ("cluster_ref", "group_key", "token_count", "template", "size",
+             "ckey", "updated_key", "routing")
+
 
 def _pad_prior(row: tuple) -> tuple:
     """Tolerate pre-routing 7-column state tuples (routing <- template)."""
@@ -90,14 +97,10 @@ def cluster_tuples_to_state(rows) -> List[tuple]:
 @dataclass
 class MiningResult:
     assignments: DataFrame   # order cols + cluster_id, change_type, cluster_size, template_mined
-    clusters: DataFrame      # CLUSTER_SCHEMA
+    clusters: DataFrame      # CLUSTER_SCHEMA, a local relation
     raw: DataFrame           # persisted UDF output (caller unpersists via .unpersist())
     prior_max: int = 0       # counter value the batch started from
-    _counter: Optional[int] = None
-    # post-merge NEW cluster refs (tiny, derived from a persisted frame);
-    # lazily counted for the monotonic counter
-    _new_refs: Optional[DataFrame] = None
-    _extra_persisted: List[DataFrame] = field(default_factory=list)
+    new_clusters: int = 0    # clusters this batch created (after the merge)
 
     def updated_counter(self) -> int:
         """True monotonic cluster counter after this batch: prior counter
@@ -105,21 +108,10 @@ class MiningResult:
         the counter never decreases, so ids of clusters later evicted by
         the LRU bound are never reused).  ``max(live ids)`` is wrong for
         exactly that reason."""
-        if self._counter is None:
-            if self._new_refs is not None:
-                n_new = self._new_refs.count()
-            else:
-                n_new = (self.raw
-                         .filter((F.col("row_kind") == "c")
-                                 & F.col("cluster_ref").startswith("n:"))
-                         .select("cluster_ref").distinct().count())
-            self._counter = self.prior_max + n_new
-        return self._counter
+        return self.prior_max + self.new_clusters
 
     def unpersist(self) -> None:
         self.raw.unpersist()
-        for df in self._extra_persisted:
-            df.unpersist()
 
 
 _GROUP_EST_CACHE: dict = {}
@@ -250,7 +242,8 @@ def mine_templates(df: DataFrame,
         sim_th=cfg.sim_th, depth=cfg.depth, max_children=cfg.max_children,
         # per-group LRU is exact for single-group data; the global bound is
         # re-applied at commit (reference drain3/drain.py:37-51 semantics).
-        # salted banks never evict locally — the merge pass owns the bound
+        # salted banks never evict locally — the driver-side finish after
+        # the bank merge owns the bound
         max_clusters=None if salted else cfg.max_clusters,
         param_str=cfg.param_str,
         parametrize_numeric_tokens=cfg.parametrize_numeric_tokens,
@@ -357,107 +350,48 @@ def mine_templates(df: DataFrame,
               .groupBy(*gnames)
               .applyInPandas(fold_group, schema=out_schema)
               .persist())
-    # materialize the fold NOW: clusters / id_map / assignments all scan
-    # it, and a lazy persist lets one downstream action race its own
-    # subtrees into computing the fold 2-3x (measured 20s vs 6s on the
-    # jaccard mine+match entry).  The count is the mining work itself.
-    # In salted mode the merge's own materialization below fills this
-    # persist in the same job — don't pay a second action for it.
-    if not salted:
-        folded.count()
-
-    clusters_raw = folded.filter(F.col("row_kind") == "c")
-    assignments_raw = folded.filter(F.col("row_kind") == "a")
-
-    extra_persisted: List[DataFrame] = []
-    translate = None
+    # the mine's one action: it fills the fold cache with every row (the
+    # assignments below scan it, never re-running the fold) and brings
+    # the bank cluster rows to the driver, which finishes the mine
+    bank_rows = [tuple(r) for r in (folded
+                                    .filter(F.col("row_kind") == "c")
+                                    .select(*BANK_COLS).collect())]
     if salted:
-        # distributed two-phase reconciliation: per-group bank merge as a
-        # second tiny applyInPandas over the cluster rows ONLY (clusters
-        # ≪ rows; each group's merge is independent).  Nothing is
-        # collected to the driver — the former driver-side fold was
-        # bounded by clusters × salt, a multi-million-row single-threaded
-        # pass on a large cluster with max_clusters=10k.
-        merged = (clusters_raw
-                  .groupBy("group_key")
-                  .applyInPandas(_make_group_merger(cfg, bc_prior),
-                                 schema=MERGED_SCHEMA)
-                  .persist())
-        merged.count()   # materialize once; c/m splits below both scan it
-        extra_persisted.append(merged)
-        c_rows = (merged.filter(F.col("row_kind") == "c")
-                  .select("cluster_ref", "group_key", "token_count",
-                          "template", "size", "ckey", "updated_key",
-                          "routing"))
-        translate = (merged.filter(F.col("row_kind") == "m")
-                     .select(F.col("cluster_ref").alias("orig_ref"),
-                             "merged_ref"))
+        c_rows, ref_map = _merge_banks(bank_rows, cfg, prior_rows)
     else:
-        c_rows = clusters_raw.select("cluster_ref", "group_key", "token_count",
-                                     "template", "size", "ckey",
-                                     "updated_key", "routing")
+        c_rows, ref_map = bank_rows, {r[0]: r[0] for r in bank_rows}
 
+    # deterministic renumbering: prior ids are kept, new clusters continue
+    # the counter in creation-key order (reference drain3/drain.py:201-202)
+    new = sorted((r for r in c_rows if r[0].startswith("n:")),
+                 key=lambda r: r[5])
+    ids = {r[0]: prior_max + i for i, r in enumerate(new, 1)}
+    ids.update((r[0], int(r[0][2:])) for r in c_rows if r[0].startswith("g:"))
+    clusters = [(ids[r[0]],) + r[1:] for r in c_rows]
     # prior clusters whose group saw no rows this batch pass through
     # unchanged (they never reached a fold task)
-    untouched = None
-    if prior_rows:
-        prior_df = local_df(spark, prior_rows, CLUSTER_SCHEMA)
-        touched_groups = c_rows.select("group_key").distinct()
-        untouched = prior_df.join(F.broadcast(touched_groups), "group_key", "left_anti") \
-            .select(*[f.name for f in CLUSTER_SCHEMA.fields])
-
-    # deterministic global renumbering of new clusters: prior ids are kept,
-    # new ids continue the counter in creation-key order
-    # (reference drain3/drain.py:201-202).  The window is over the tiny
-    # cluster-row set, never the corpus.
-    new = c_rows.filter(F.col("cluster_ref").startswith("n:"))
-    prior = c_rows.filter(F.col("cluster_ref").startswith("g:"))
-    w = Window.orderBy("ckey")
-    new_ids = new.select(
-        "cluster_ref",
-        (F.lit(prior_max) + F.row_number().over(w)).alias("cluster_id"))
-    prior_ids_df = prior.select(
-        "cluster_ref",
-        F.substring("cluster_ref", 3, 20).cast("long").alias("cluster_id"))
-    id_map = new_ids.unionByName(prior_ids_df)
-
-    clusters = (c_rows
-                .join(F.broadcast(id_map), "cluster_ref")
-                .select("cluster_id", "group_key", "token_count", "template",
-                        F.col("size").cast("long").alias("size"),
-                        F.col("ckey").alias("created_key"), "updated_key",
-                        "routing"))
-    if untouched is not None:
-        clusters = clusters.unionByName(untouched)
-
+    touched = {r[1] for r in c_rows}
+    clusters += [r for r in prior_rows if r[1] not in touched]
     # global LRU bound re-applied at commit time: keep the max_clusters
-    # most-recently-updated clusters (reference drain3/drain.py:37-51)
+    # most-recently-updated clusters, a NULL updated_key last
+    # (reference drain3/drain.py:37-51)
     if cfg.max_clusters is not None:
-        rank_w = Window.orderBy(F.desc("updated_key"), F.desc("cluster_id"))
-        clusters = (clusters
-                    .withColumn("_r", F.row_number().over(rank_w))
-                    .filter(F.col("_r") <= cfg.max_clusters)
-                    .drop("_r"))
+        clusters.sort(key=lambda c: (c[6] is not None, c[6] or "", int(c[0])),
+                      reverse=True)
+        del clusters[cfg.max_clusters:]
+    clusters.sort(key=lambda c: int(c[0]))
 
-    # assignment rows carry ORIGINAL bank refs; in salted mode hop
-    # through the merge's ref translation first
-    if translate is not None:
-        assign_map = (translate
-                      .join(id_map.withColumnRenamed("cluster_ref",
-                                                     "merged_ref"),
-                            "merged_ref")
-                      .select(F.col("orig_ref").alias("cluster_ref"),
-                              "cluster_id"))
-    else:
-        assign_map = id_map
-
+    # assignment rows carry their BANK's refs.  The map is taken before
+    # the LRU cut, so rows of an evicted cluster keep its id.
     # change_scope surfaces the documented salted-mode approximation IN
     # DATA, not just a log line: under auto-salt, per-row change_type /
     # cluster_size are BANK-LOCAL (the cluster table stays exact and
     # salt-invariant); downstream consumers filter on scope='global'
     # when they need reference-exact per-row change semantics
-    assignments = (assignments_raw
-                   .join(F.broadcast(assign_map), "cluster_ref")
+    id_map = local_df(spark, [(ref, ids[m]) for ref, m in ref_map.items()],
+                      "cluster_ref string, cluster_id long")
+    assignments = (folded.filter(F.col("row_kind") == "a")
+                   .join(F.broadcast(id_map), "cluster_ref")
                    .select(*order_cols,
                            "cluster_id",
                            "change_type",
@@ -466,34 +400,21 @@ def mine_templates(df: DataFrame,
                            F.lit("bank" if salted else "global")
                            .alias("change_scope")))
 
-    return MiningResult(assignments=assignments, clusters=clusters, raw=folded,
-                        prior_max=prior_max, _new_refs=new.select("cluster_ref"),
-                        _extra_persisted=extra_persisted)
+    return MiningResult(assignments=assignments,
+                        clusters=local_df(spark, clusters, CLUSTER_SCHEMA),
+                        raw=folded, prior_max=prior_max,
+                        new_clusters=len(new))
 
 
-# distributed-merge output: "c" rows are merged clusters keyed by their
-# MERGED ref ("g:<prior id>" or "n:<created_key>"); "m" rows translate an
-# original bank ref (cluster_ref) to its merged ref
-MERGED_SCHEMA = T.StructType([
-    T.StructField("row_kind", T.StringType()),
-    T.StructField("cluster_ref", T.StringType()),
-    T.StructField("merged_ref", T.StringType()),
-    T.StructField("group_key", T.StringType()),
-    T.StructField("token_count", T.IntegerType()),
-    T.StructField("template", T.StringType()),
-    T.StructField("size", T.LongType()),
-    T.StructField("ckey", T.StringType()),
-    T.StructField("updated_key", T.StringType()),
-    T.StructField("routing", T.StringType()),
-])
+def _merge_banks(rows: List[tuple], cfg: EngineConfig,
+                 prior_rows: List[tuple]):
+    """Two-phase mine+merge reconciliation (SURVEY.md §7) of the salted
+    banks, on the driver, one ``group_key`` at a time.
 
-
-def _make_group_merger(cfg: EngineConfig, bc_prior):
-    """Two-phase mine+merge reconciliation (SURVEY.md §7), DISTRIBUTED:
-    one applyInPandas task per mining group, over cluster rows only
-    (clusters ≪ rows; per-group merges are independent, so nothing is
-    collected to the driver and the merge parallelism tracks the group
-    count).
+    ``rows`` are the fold's bank cluster rows (``BANK_COLS``).  The
+    driver holds all of them: Σ bank clusters ≤ clusters × salt rows.
+    They merge in (ckey, cluster_ref, template) order, so the result does
+    not depend on the order they were collected in.
 
     * bank copies of a PRIOR cluster merge with the ENGINE's template
       merge — positional for drain (associative for equal-length
@@ -506,93 +427,71 @@ def _make_group_merger(cfg: EngineConfig, bc_prior):
       new bank cluster may land in a prior cluster or found a merged new
       cluster; its bank size transfers to the target.
 
-    Global renumbering of merged-new refs happens downstream in the
-    shared finalization tail (window over the tiny cluster-row set).
+    Returns the merged cluster rows (``BANK_COLS``, keyed by merged ref:
+    ``g:<prior id>`` or ``n:<created_key>``) and the map from every bank
+    ref to its merged ref.
     """
-    engine_name = cfg.engine
+    bank_cls = TemplateBank
+    if cfg.engine == "jaccard":
+        from drain3_spark.core.kernel_jaccard import JaccardBank
+        bank_cls = JaccardBank
     kw = dict(sim_th=cfg.sim_th, depth=cfg.depth,
               max_children=cfg.max_children, max_clusters=None,
               param_str=cfg.param_str,
               parametrize_numeric_tokens=cfg.parametrize_numeric_tokens)
+    prior_by_id = {int(p[0]): p for p in prior_rows}
+    groups: dict = {}
+    for r in sorted(rows, key=lambda r: (r[5] or "", r[0], r[3] or "")):
+        groups.setdefault(r[1], []).append(r)
 
-    def merge_group(pdf):
-        import pandas as pd
-        from drain3_spark.core.kernel import ClusterRec, TemplateBank
-        bank_cls = TemplateBank
-        if engine_name == "jaccard":
-            from drain3_spark.core.kernel_jaccard import JaccardBank
-            bank_cls = JaccardBank
-
-        gkey = str(pdf.iloc[0]["group_key"])
-        prior_by_id = {int(p[0]): p for p in bc_prior.value}
-        pdf = pdf.sort_values("ckey", kind="mergesort")
-        rows = pdf.to_dict("records")
-
+    merged: List[tuple] = []
+    ref_map: dict = {}
+    for gkey, grows in groups.items():
         bank = bank_cls(**kw)
-        out = {name: [] for name in MERGED_SCHEMA.names}
-
-        def emit(kind, ref, merged_ref, token_count, template, size,
-                 ckey, updated_key, routing):
-            out["row_kind"].append(kind)
-            out["cluster_ref"].append(ref)
-            out["merged_ref"].append(merged_ref)
-            out["group_key"].append(gkey)
-            out["token_count"].append(int(token_count))
-            out["template"].append(template)
-            out["size"].append(int(size))
-            out["ckey"].append(ckey)
-            out["updated_key"].append(updated_key)
-            out["routing"].append(routing)
-
         merged_prior: dict = {}
-        for r in rows:
-            if not r["cluster_ref"].startswith("g:"):
+        for ref, _, _, template, size, _, upd, _ in grows:
+            if not ref.startswith("g:"):
                 continue
-            pid = int(r["cluster_ref"][2:])
-            tks = r["template"].split(" ") if r["template"] else []
+            pid = int(ref[2:])
+            tks = template.split(" ") if template else []
             mp = merged_prior.get(pid)
             if mp is None:
-                merged_prior[pid] = {"tokens": tks, "delta": 0,
-                                     "upd": r["updated_key"] or ""}
+                mp = merged_prior[pid] = {"tokens": tks, "delta": 0,
+                                          "upd": upd or ""}
             else:
                 mp["tokens"] = list(bank.merge_template(tks, mp["tokens"]))
-                mp["upd"] = max(mp["upd"], r["updated_key"] or "")
-            merged_prior[pid]["delta"] += \
-                int(r["size"]) - int(prior_by_id[pid][4])
+                mp["upd"] = max(mp["upd"], upd or "")
+            mp["delta"] += int(size) - int(prior_by_id[pid][4])
 
         for pid in sorted(merged_prior):
-            p = prior_by_id[pid]
-            routing = (p[7] or "").split(" ") if p[7] else []
-            rec = ClusterRec(pid, merged_prior[pid]["tokens"],
-                             created_key=p[5] or "",
-                             size=int(p[4]) + merged_prior[pid]["delta"],
-                             routing=routing)
-            rec.updated_key = max(p[6] or "", merged_prior[pid]["upd"])
+            p, mp = prior_by_id[pid], merged_prior[pid]
+            rec = ClusterRec(pid, mp["tokens"], created_key=p[5] or "",
+                             size=int(p[4]) + mp["delta"],
+                             routing=p[7].split(" ") if p[7] else [])
+            rec.updated_key = max(p[6] or "", mp["upd"])
             bank.registry[rec.cid] = rec
             bank._insert_path(rec)
-            emit("m", f"g:{pid}", f"g:{pid}", 0, "", 0, "", "", "")
+            ref_map[f"g:{pid}"] = f"g:{pid}"
         prior_ids = set(bank.registry)
 
         def merged_ref_of(rec: ClusterRec) -> str:
             return (f"g:{rec.cid}" if rec.cid in prior_ids
                     else f"n:{rec.created_key}")
 
-        for r in rows:
-            if not r["cluster_ref"].startswith("n:"):
+        for ref, _, _, template, size, ckey, upd, routing in grows:
+            if not ref.startswith("n:"):
                 continue
-            tks = r["template"].split(" ") if r["template"] else []
-            routing = r["routing"].split(" ") if r["routing"] else []
-            res = bank.ingest_tokens(tks, order_key=r["ckey"] or "",
-                                     routing_tokens=routing)
+            res = bank.ingest_tokens(
+                template.split(" ") if template else [],
+                order_key=ckey or "",
+                routing_tokens=routing.split(" ") if routing else [])
             rec = bank.registry[int(res["cluster_id"])]
-            rec.size += int(r["size"]) - 1  # ingest counted 1; bank size owns it
-            rec.updated_key = max(rec.updated_key, r["updated_key"] or "")
-            emit("m", r["cluster_ref"], merged_ref_of(rec), 0, "", 0, "", "", "")
+            rec.size += int(size) - 1  # ingest counted 1; bank size owns it
+            rec.updated_key = max(rec.updated_key, upd or "")
+            ref_map[ref] = merged_ref_of(rec)
 
-        for rec in bank.registry.values():
-            emit("c", merged_ref_of(rec), None, len(rec.tokens), rec.template,
-                 rec.size, rec.created_key, rec.updated_key,
-                 " ".join(rec.routing))
-        return pd.DataFrame(out, columns=MERGED_SCHEMA.names)
-
-    return merge_group
+        merged += [(merged_ref_of(rec), gkey, len(rec.tokens), rec.template,
+                    rec.size, rec.created_key, rec.updated_key,
+                    " ".join(rec.routing))
+                   for rec in bank.registry.values()]
+    return merged, ref_map
