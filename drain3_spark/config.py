@@ -64,8 +64,6 @@ class EngineConfig:
     # time, so the post-shuffle mining stage is never bounded by the
     # handful of distinct token-count groups (~6-13 on template corpora).
     mining_salt: int = 1
-    shuffle_partitions: int = 32
-    arrow_max_records_per_batch: int = 2048
 
     @property
     def param_str(self) -> str:

@@ -30,8 +30,9 @@ from drain3_spark.operators.mining import (CLUSTER_SCHEMA, MiningResult,
                                            mine_templates)
 from drain3_spark.state.store import CheckpointStore
 from drain3_spark.util import local_df
-from drain3_spark.validation.runner import (ValidationConfig, ValidationEngine,
-                                            ValidationReport)
+from drain3_spark.validation.runner import (PARTITION_REPORT_SCHEMA,
+                                            ValidationConfig, ValidationEngine,
+                                            ValidationReport, drift_pass)
 
 
 @dataclass
@@ -231,21 +232,8 @@ def run_incremental(spark: SparkSession,
             corpus_orphan_violations(clips, transcripts_ref) \
                 .write.mode("overwrite").parquet(f"{out_dir}/violations_corpus")
         if vcfg.with_drift:
-            from drain3_spark.validation.drift import chisq_drift, ks_drift
-            from drain3_spark.validation.runner import PARTITION_REPORT_SCHEMA
-            drift_rows = []
-            for rec in (ks_drift(clips, "dur_ms", vcfg.drift_baseline_ds,
-                                 vcfg.drift_alpha)
-                        + chisq_drift(clips, "codec", vcfg.drift_baseline_ds,
-                                      vcfg.drift_alpha)
-                        + chisq_drift(clips, "sr_hz", vcfg.drift_baseline_ds,
-                                      vcfg.drift_alpha)):
-                drift_rows.append((rec["ds"], rec["check"], bool(rec["passed"]),
-                                   0 if rec["passed"] else int(rec["rows"]),
-                                   int(rec["rows"]),
-                                   f"stat={rec['statistic']:.6f} "
-                                   f"thr={rec['threshold']:.6f} "
-                                   f"baseline={rec['baseline_ds']}"))
-            local_df(spark, drift_rows, PARTITION_REPORT_SCHEMA) \
+            # the same drift pass, rows and details as validate()'s
+            local_df(spark, drift_pass(clips, vcfg).report_rows,
+                     PARTITION_REPORT_SCHEMA) \
                 .write.mode("overwrite").parquet(f"{out_dir}/drift_report_corpus")
     return results

@@ -473,6 +473,9 @@ def _merge_banks(rows: List[tuple], cfg: EngineConfig,
             bank._insert_path(rec)
             ref_map[f"g:{pid}"] = f"g:{pid}"
         prior_ids = set(bank.registry)
+        # ingest resets a matched cluster's updated_key to the ingested
+        # copy's creation key: keep the running max over every copy
+        upd_max = {cid: rec.updated_key for cid, rec in bank.registry.items()}
 
         def merged_ref_of(rec: ClusterRec) -> str:
             return (f"g:{rec.cid}" if rec.cid in prior_ids
@@ -487,7 +490,8 @@ def _merge_banks(rows: List[tuple], cfg: EngineConfig,
                 routing_tokens=routing.split(" ") if routing else [])
             rec = bank.registry[int(res["cluster_id"])]
             rec.size += int(size) - 1  # ingest counted 1; bank size owns it
-            rec.updated_key = max(rec.updated_key, upd or "")
+            rec.updated_key = upd_max[rec.cid] = max(
+                upd_max.get(rec.cid, ""), rec.updated_key, upd or "")
             ref_map[ref] = merged_ref_of(rec)
 
         merged += [(merged_ref_of(rec), gkey, len(rec.tokens), rec.template,

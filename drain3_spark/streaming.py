@@ -4,7 +4,8 @@ examples/drain_stdin_demo.py recast as readStream + foreachBatch).
 Micro-batches arrive from any streaming source (file source here —
 new parquet files landing under a directory; Kafka in production);
 every micro-batch is mined through the checkpointed cluster state and
-validated, mirroring the reference's one-at-a-time
+validated with drift off (streaming drift is event-time windowed, see
+:func:`windowed_category_counts`), mirroring the reference's one-at-a-time
 ``add_log_message`` loop at micro-batch granularity
 (drain3/template_miner.py:134-162).
 
@@ -24,6 +25,7 @@ prefix.
 
 from __future__ import annotations
 
+from dataclasses import replace
 from typing import NamedTuple, Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -239,7 +241,10 @@ def run_streaming(spark: SparkSession,
     can shut down and flush (``run.stop_and_flush(spark)``).
     """
     cfg = cfg or EngineConfig()
-    engine = ValidationEngine(vcfg or ValidationConfig())
+    # a micro-batch is no drift baseline; windowed_category_counts is
+    # the stream's drift input
+    engine = ValidationEngine(replace(vcfg or ValidationConfig(),
+                                      with_drift=False))
     store = CheckpointStore(state_dir)
 
     stream = (spark.readStream.schema(schema)

@@ -1,13 +1,14 @@
 """Distribution-drift checks across time partitions (SURVEY.md C7).
 
 No scipy in the sandbox — the statistics are hand-rolled on *aggregated*
-tables: Spark does the single heavy ``groupBy`` per check, the statistic
-runs in numpy on a histogram of at most (n_ds × distinct-values) rows.
-This is the scale design too: at 10^12 rows the KS input is still a
-few-thousand-row histogram per partition — ``dur_ms`` has bounded value
-cardinality; genuinely continuous columns must pass ``bucket_width`` so
-the aggregation bins them first (the cube is only safe when the grouped
-value domain is bounded).
+tables and run in numpy on a histogram of at most (n_ds × distinct
+values) rows.  The engine's histograms come from ONE Spark aggregation,
+the bounded (ds, dur bucket, codec, sr_hz) cube of
+``runner.drift_pass``, passed in as ``hist``.  This is the scale design
+too: at 10^12 rows the KS input is still a few-hundred-row histogram per
+partition, because the cube buckets ``dur_ms`` before it groups.
+Without ``hist`` each function runs its own unbucketed ``groupBy`` of
+``clips``, which is only safe on a bounded value domain.
 
 * KS two-sample D statistic with asymptotic critical value
   ``c(alpha) * sqrt((n+m)/(n*m))``, c(0.05)=1.3581.
@@ -42,23 +43,17 @@ def _chi2_critical(dof: int, alpha: float) -> float:
 def ks_drift(clips: Optional[DataFrame], value_col: str = "dur_ms",
              baseline_ds: str | None = None,
              alpha: float = 0.05,
-             hist: Optional[List[tuple]] = None,
-             bucket_width: Optional[float] = None) -> List[dict]:
+             hist: Optional[List[tuple]] = None) -> List[dict]:
     """Two-sample KS of each ds partition against the baseline partition.
 
-    One Spark aggregation → value histogram per ds; exact D computed on
-    the merged support in numpy.  Returns one record per non-baseline ds.
-    ``hist`` short-circuits the aggregation with precomputed
-    (ds, value, n) rows (shared-cube path, runner.validate).
-    ``bucket_width`` bins a genuinely continuous column before the
-    aggregation so the histogram stays bounded (KS on binned data is the
-    standard large-N approximation; D error is at most one bin's mass).
+    Value histogram per ds; exact D computed on the merged support in
+    numpy.  Returns one record per non-baseline ds.  ``hist`` supplies
+    precomputed (ds, value, n) rows (the shared cube,
+    ``runner.drift_pass``); without it one Spark aggregation of ``clips``
+    builds them.
     """
     if hist is None:
-        vcol = F.col(value_col)
-        if bucket_width:
-            vcol = F.floor(vcol / F.lit(float(bucket_width))) * F.lit(float(bucket_width))
-        hist = (clips.groupBy("ds", vcol.alias("_v"))
+        hist = (clips.groupBy("ds", F.col(value_col).alias("_v"))
                 .agg(F.count(F.lit(1)).alias("n")).collect())
         hist = [(r["ds"], r["_v"], r["n"]) for r in hist]
     by_ds: Dict[str, Dict[float, int]] = {}

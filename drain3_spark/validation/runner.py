@@ -15,9 +15,14 @@ Pass structure (scan count matters at 100 TB):
   A. row-local checks: one narrow pass, no shuffle
   B. uniqueness: one hash aggregation
   C. referential + equality: one full-outer join
-  D. audio decode: one column-pruned pass over ``bytes``
-  E. drift: two aggregations (value histogram + contingency),
-     statistics on the tiny aggregated tables
+  D. audio decode: one column-pruned pass over ``bytes``, its own
+     persisted job (Python workers beside the JVM branches of one job
+     thrash); A-C stay lazy and run once, in the action that first
+     reads the violations
+  E. drift: one bounded aggregation, the (ds, dur bucket, codec, sr_hz)
+     cube, collected to the driver; rows_scanned, the KS and chi-square
+     statistics and the histograms fold from it (:func:`drift_pass`,
+     also the corpus drift of ``jobs.run_incremental``)
   F. (optional) template mining / match anomaly via operators.mining
 """
 
@@ -25,7 +30,7 @@ from __future__ import annotations
 
 from contextlib import nullcontext
 from dataclasses import dataclass
-from typing import List, Optional, Sequence, Tuple
+from typing import Dict, List, NamedTuple, Optional, Sequence, Tuple
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
@@ -43,6 +48,13 @@ PARTITION_REPORT_SCHEMA = T.StructType([
     T.StructField("rows_scanned", T.LongType()),
     T.StructField("detail", T.StringType()),
 ])
+
+# drift-cube duration bucketing: the cube is COLLECTED to the driver, so
+# its dur axis must stay bounded however wide the data's duration domain
+# grows.  Bucket width max(1, (hi-lo)//DRIFT_MAX_BUCKETS); KS on the
+# bucket grid is the standard large-N approximation — D error is at most
+# one bucket's mass.
+DRIFT_MAX_BUCKETS = 256
 
 
 @dataclass
@@ -69,14 +81,6 @@ class ValidationConfig:
     # default) disables each: both bounds are corpus-specific
     loudness_bounds: Optional[Tuple[float, float]] = None
     min_speech_ratio: Optional[float] = None
-    # drift-cube duration bucketing: the cube is COLLECTED to the
-    # driver, so its dur axis must stay bounded however wide the data's
-    # duration domain grows.  None = auto width
-    # max(1, (hi-lo)//drift_max_buckets); 1 = exact values (the bounded
-    # sandbox domains).  KS on the bucket grid is the standard large-N
-    # approximation — D error is at most one bucket's mass.
-    drift_dur_bucket_ms: Optional[int] = None
-    drift_max_buckets: int = 256
     # declared-schema conformance (SURVEY.md C1): when set, validate()
     # reports column presence/type drift as table-level rows
     expected_schema: Optional[T.StructType] = None
@@ -93,6 +97,79 @@ class ValidationReport:
     histograms: Optional[DataFrame] = None
 
 
+class DriftPass(NamedTuple):
+    rows_scanned: Dict[str, int]     # ds -> rows, out-of-domain included
+    report_rows: List[tuple]         # PARTITION_REPORT_SCHEMA rows
+    histograms: List[tuple]          # (ds, column, value, n)
+
+
+def drift_pass(clips: DataFrame, cfg: ValidationConfig,
+               profiler=None) -> DriftPass:
+    """The one drift pass: ONE aggregation feeds rows_scanned AND all
+    three drift statistics AND the histograms.
+
+    The (ds, dur bucket, codec, sr_hz) cube is BOUNDED by construction —
+    dur_ms is bucketed to at most ~DRIFT_MAX_BUCKETS in-domain values
+    per ds (codec and sr_hz are small domains), so the driver collect
+    stays a few hundred rows per ds at ANY duration cardinality (an
+    unbucketed cube scales linearly with distinct dur values × ds
+    count).  Out-of-domain durations get a NULL bucket: the same cube
+    still counts them for rows_scanned and the categorical histograms,
+    but they never leak into the KS histogram.  Everything after the
+    collect is driver-side numpy.
+
+    Drift measures distribution SHIFT over in-domain values:
+    out-of-domain rows are the row-local checks' findings, and a single
+    such row would make chi-square infinite (category with zero baseline
+    expectation) — double-flagging the partition for what is a per-row
+    defect."""
+    sec = (profiler.section if profiler is not None
+           else (lambda name: nullcontext()))
+    lo, hi = cfg.dur_bounds
+    width = max(1, (hi - lo) // DRIFT_MAX_BUCKETS)
+    dur_b = F.when(
+        F.col("dur_ms").between(int(lo), int(hi)),
+        (F.floor(F.col("dur_ms") / F.lit(width))
+         * F.lit(width)).cast("long")).alias("dur_ms")
+    with sec("drift_cube"):
+        cube = (clips.groupBy("ds", dur_b, "codec", "sr_hz")
+                .agg(F.count(F.lit(1)).alias("n")).collect())
+    if profiler is not None:
+        profiler.add_samples("drift_cube", sum(int(r["n"]) for r in cube))
+
+    with sec("drift_stats"):
+        rows_scanned: Dict[str, int] = {}
+        hist: Dict[tuple, int] = {}
+        for r in cube:
+            rows_scanned[r["ds"]] = rows_scanned.get(r["ds"], 0) + int(r["n"])
+            for col in ("dur_ms", "codec", "sr_hz"):
+                if col == "dur_ms" and r[col] is None:
+                    continue   # out-of-domain duration: not a histogram value
+                key = (r["ds"], col, str(r[col]))
+                hist[key] = hist.get(key, 0) + int(r["n"])
+
+        sr_dom = {int(s) for s in cfg.sr_domain}
+        # ks_drift / chisq_drift are looked up in this module's globals
+        # on each call, so a wrapper installed on the module sees them
+        recs = [("D", rec) for rec in ks_drift(
+            None, "dur_ms", cfg.drift_baseline_ds, cfg.drift_alpha,
+            hist=[(r["ds"], r["dur_ms"], r["n"]) for r in cube
+                  if r["dur_ms"] is not None])]
+        for cat in ("codec", "sr_hz"):
+            recs += [("chi2", rec) for rec in chisq_drift(
+                None, cat, cfg.drift_baseline_ds, cfg.drift_alpha,
+                hist=[(r["ds"], r[cat], r["n"]) for r in cube
+                      if cat != "sr_hz" or r["sr_hz"] in sr_dom])]
+        report_rows = [
+            (rec["ds"], rec["check"], bool(rec["passed"]),
+             0 if rec["passed"] else int(rec["rows"]), int(rec["rows"]),
+             f"{stat}={rec['statistic']:.6f} thr={rec['threshold']:.6f} "
+             f"baseline={rec['baseline_ds']}")
+            for stat, rec in recs]
+    return DriftPass(rows_scanned, report_rows,
+                     [k + (n,) for k, n in sorted(hist.items())])
+
+
 class ValidationEngine:
     def __init__(self, config: ValidationConfig | None = None) -> None:
         self.cfg = config or ValidationConfig()
@@ -100,17 +177,22 @@ class ValidationEngine:
     def violations(self, clips: DataFrame,
                    transcripts_ref: Optional[DataFrame] = None,
                    include_orphans: bool = True,
-                   materialize: bool = True,
                    profiler=None) -> DataFrame:
         """Union of all check findings.
 
-        ``materialize=True`` (default) runs the JVM-side checks and the
-        Arrow-UDF audio pass as SEPARATE jobs (each persisted) and
-        unions the cached results.  Scheduling Python-worker tasks and
-        JVM scan branches inside one union-job thrashes badly under
-        high local parallelism (measured 4x worse at local[32] on 1M
-        clips); at cluster scale the separation also keeps executor
-        python memory bounded per stage."""
+        The JVM-side checks stay lazy: the returned frame computes them
+        once, in the action that first reads it.  The Arrow-UDF audio
+        pass runs first as its OWN persisted job, which the returned
+        frame reads from the cache.  Scheduling Python-worker tasks and
+        JVM scan branches inside one union job thrashes badly under high
+        local parallelism (measured 4x worse at local[32] on 1M clips);
+        at cluster scale the separation also keeps executor python
+        memory bounded per stage.
+
+        With a ``profiler``, the JVM checks carry the ``checks_jvm``
+        in-job counter (credited by the action that reads them) and the
+        audio job is timed and counted in section ``audio_decode``
+        (A17, drain3/simple_profiler.py)."""
         cfg = self.cfg
         v = C.row_local_violations(clips, cfg.dur_bounds, cfg.sr_domain)
         if cfg.speech_rate_bounds is not None:
@@ -120,6 +202,8 @@ class ValidationEngine:
         if transcripts_ref is not None:
             v = v.unionByName(C.referential_and_equality_violations(
                 clips, transcripts_ref, include_orphans=include_orphans))
+        if profiler is not None:
+            v = profiler.observe("checks_jvm", v)
         if not cfg.with_audio:
             return v
         # SNR decode + (when enabled) container metadata, loudness and
@@ -131,30 +215,11 @@ class ValidationEngine:
             check_container=cfg.check_container_meta,
             loudness_bounds=cfg.loudness_bounds,
             min_speech_ratio=cfg.min_speech_ratio)
-        if materialize:
-            # profiler sections time each job; sample counts are in-job
-            # Observation counters (A17, drain3/simple_profiler.py)
-            if profiler is not None:
-                v = profiler.observe("checks_jvm", v)
-                a = profiler.observe("audio_decode", a)
-            v = v.persist()
-            a = a.persist()
-            # the JVM check job and the Arrow audio job are independent
-            # and resource-complementary (JVM codegen vs python workers)
-            # — run them as two CONCURRENT jobs (guide §2.6) so each
-            # fills the other's task tail.  This is job-level overlap,
-            # not the one-union-job interleaving that thrashed (the
-            # scheduler still runs each stage's tasks as a unit).
-            from concurrent.futures import ThreadPoolExecutor
-
-            def _count(df, name):
-                with profiler.section(name) if profiler else nullcontext():
-                    df.count()
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                fv = pool.submit(_count, v, "checks_jvm")
-                fa = pool.submit(_count, a, "audio_decode")
-                fv.result()
-                fa.result()
+        if profiler is not None:
+            a = profiler.observe("audio_decode", a)
+        a = a.persist()
+        with profiler.section("audio_decode") if profiler else nullcontext():
+            a.count()
         return v.unionByName(a)
 
     def validate(self, clips: DataFrame,
@@ -163,86 +228,55 @@ class ValidationEngine:
                  profiler=None) -> ValidationReport:
         cfg = self.cfg
         spark = clips.sparkSession
-        prof_sec = (profiler.section if profiler is not None
-                    else (lambda name: nullcontext()))
-        # the drift cube reads only the metadata columns of clips and is
-        # independent of every check — launch its aggregation as a
-        # concurrent job (guide §2.6) so it back-fills while the check
-        # and audio jobs materialize; it is awaited once those are done
-        # (or have failed) and harvested where the rows are first needed
-        cube_future = cube_pool = None
+        # the drift pass reads only the metadata columns of clips and is
+        # independent of every check — run it on its own thread so its
+        # cube job back-fills while the audio job runs (guide §2.6); it
+        # is awaited once the checks are done (or have failed)
+        drift_future = drift_pool = None
         if cfg.with_drift:
             from concurrent.futures import ThreadPoolExecutor
-            lo, hi = cfg.dur_bounds
-            dur_w = cfg.drift_dur_bucket_ms or max(
-                1, (hi - lo) // cfg.drift_max_buckets)
-            dur_b = F.when(
-                F.col("dur_ms").between(int(lo), int(hi)),
-                (F.floor(F.col("dur_ms") / F.lit(dur_w))
-                 * F.lit(dur_w)).cast("long")).alias("dur_ms")
-
-            def _cube():
-                with prof_sec("drift_cube"):
-                    return (clips.groupBy("ds", dur_b, "codec", "sr_hz")
-                            .agg(F.count(F.lit(1)).alias("n")).collect())
-            cube_pool = ThreadPoolExecutor(max_workers=1)
-            cube_future = cube_pool.submit(_cube)
+            drift_pool = ThreadPoolExecutor(max_workers=1)
+            drift_future = drift_pool.submit(drift_pass, clips, cfg, profiler)
         try:
             violations = self.violations(clips, transcripts_ref,
                                          include_orphans=include_orphans,
                                          profiler=profiler)
             schema_rows: List[tuple] = []
             if cfg.expected_schema is not None:
-                with prof_sec("schema_check"):
+                with (profiler.section("schema_check") if profiler
+                      else nullcontext()):
                     schema_rows = [tuple(r) for r in C.schema_violations(
                         clips, cfg.expected_schema).collect()]
                 if schema_rows:
                     violations = violations.unionByName(
                         local_df(spark, schema_rows, VIOLATION_SCHEMA))
+            violations = violations.persist()
+            if profiler is not None:
+                # the JVM checks' one job: it fills the violations cache
+                # and credits the checks_jvm in-job counter
+                with profiler.section("checks_jvm"):
+                    violations.count()
         except BaseException as err:
-            # the check error wins; the cube job is cancelled if it has
+            # the check error wins; the drift job is cancelled if it has
             # not started, else awaited and its own failure noted — never
             # left running unobserved behind the propagating error
-            if cube_future is not None and not cube_future.cancel():
-                cube_err = cube_future.exception()
-                if cube_err is not None:
-                    err.add_note(f"drift cube also failed: {cube_err!r}")
+            if drift_future is not None and not drift_future.cancel():
+                drift_err = drift_future.exception()
+                if drift_err is not None:
+                    err.add_note(f"drift cube also failed: {drift_err!r}")
             raise
         finally:
-            if cube_pool is not None:
-                cube_pool.shutdown(wait=True)
-        violations = violations.persist()
+            if drift_pool is not None:
+                drift_pool.shutdown(wait=True)
 
-        # ONE aggregation pass feeds rows_scanned AND all three drift
-        # statistics: the (ds, dur_bucket, codec, sr_hz) cube is
-        # BOUNDED by construction — dur_ms is bucketed to at most
-        # ~drift_max_buckets in-domain values per ds (codec and sr_hz
-        # are small domains), so the driver collect stays a few hundred
-        # rows per ds at ANY duration cardinality (the 100x design
-        # review: an unbucketed cube scaled linearly with distinct
-        # dur values × ds count).  Everything downstream is driver-side
-        # numpy.
-        hist_rows = None
         if cfg.with_drift:
-            # the cube was aggregated concurrently with the check jobs
-            # (launched above); out-of-domain durations did NOT leak
-            # into the KS histogram via the last partial bucket: only
-            # in-domain values are bucketed, the rest carry a NULL
-            # bucket so the same cube still counts them for
-            # rows_scanned and the categorical histograms
-            hist_rows = cube_future.result()
-            if profiler is not None:
-                profiler.add_samples("drift_cube",
-                                     sum(int(r["n"]) for r in hist_rows))
-            per_ds_counts: dict = {}
-            for r in hist_rows:
-                per_ds_counts[r["ds"]] = per_ds_counts.get(r["ds"], 0) + int(r["n"])
+            drift = drift_future.result()
             # local_df (Arrow-backed): a list-based createDataFrame here
             # is python-RDD-backed and the cross join below re-evaluates
             # it through python workers on EVERY downstream action —
             # measured ~9s per report action for a 7x7-row product at
             # local[32]; the Arrow local relation costs ~0.2s
-            rows_per_ds = local_df(spark, sorted(per_ds_counts.items()),
+            rows_per_ds = local_df(spark, sorted(drift.rows_scanned.items()),
                                    "ds string, rows_scanned long")
         else:
             rows_per_ds = clips.groupBy("ds").agg(
@@ -272,61 +306,15 @@ class ValidationEngine:
                   .select("ds", "check", "passed", "violation_count",
                           "rows_scanned", "detail"))
 
-        drift_rows: List[tuple] = []
         histograms = None
         if cfg.with_drift:
-            # drift measures distribution SHIFT over in-domain values:
-            # out-of-domain rows are the row-local checks' findings, and
-            # a single such row would make chi-square infinite (category
-            # with zero baseline expectation) — double-flagging the
-            # partition for what is a per-row defect
-            if profiler is not None:
-                profiler.start_section("drift_stats")
-            sr_dom = {int(s) for s in cfg.sr_domain}
-            # the cube bucketed only in-domain durations (out-of-domain
-            # rows carry a NULL bucket), so non-null is the whole filter
-            ks_hist = [(r["ds"], r["dur_ms"], r["n"]) for r in hist_rows
-                       if r["dur_ms"] is not None]
-            for rec in ks_drift(None, "dur_ms", cfg.drift_baseline_ds,
-                                cfg.drift_alpha, hist=ks_hist):
-                drift_rows.append((rec["ds"], rec["check"], bool(rec["passed"]),
-                                   0 if rec["passed"] else int(rec["rows"]),
-                                   int(rec["rows"]),
-                                   f"D={rec['statistic']:.6f} thr={rec['threshold']:.6f} "
-                                   f"baseline={rec['baseline_ds']}"))
-            # chi-square drift over BOTH categorical columns from the
-            # same cube (north-star: sr_hz/codec frequency histograms)
-            for cat in ("codec", "sr_hz"):
-                chisq_hist = [(r["ds"], r[cat], r["n"]) for r in hist_rows
-                              if cat != "sr_hz" or r["sr_hz"] in sr_dom]
-                for rec in chisq_drift(None, cat, cfg.drift_baseline_ds,
-                                       cfg.drift_alpha, hist=chisq_hist):
-                    drift_rows.append((rec["ds"], rec["check"], bool(rec["passed"]),
-                                       0 if rec["passed"] else int(rec["rows"]),
-                                       int(rec["rows"]),
-                                       f"chi2={rec['statistic']:.6f} "
-                                       f"thr={rec['threshold']:.6f} "
-                                       f"baseline={rec['baseline_ds']}"))
-            # per-ds frequency histograms, folded from the cube rows
-            hist_out: dict = {}
-            for r in hist_rows:
-                for col in ("dur_ms", "codec", "sr_hz"):
-                    if col == "dur_ms" and r[col] is None:
-                        # out-of-domain duration (NULL bucket): a
-                        # row-local defect, not a histogram value
-                        continue
-                    key = (r["ds"], col, str(r[col]))
-                    hist_out[key] = hist_out.get(key, 0) + int(r["n"])
-            histograms = local_df(
-                spark,
-                [(ds, col, val, n) for (ds, col, val), n in sorted(hist_out.items())],
-                "ds string, column string, value string, n long")
-            if profiler is not None:
-                profiler.end_section("drift_stats")
-        if drift_rows:
-            report = report.unionByName(
-                local_df(spark, drift_rows, PARTITION_REPORT_SCHEMA))
-        if schema_rows is not None and cfg.expected_schema is not None:
+            if drift.report_rows:
+                report = report.unionByName(
+                    local_df(spark, drift.report_rows, PARTITION_REPORT_SCHEMA))
+            # per-ds frequency histograms, folded from the same cube
+            histograms = local_df(spark, drift.histograms,
+                                  "ds string, column string, value string, n long")
+        if cfg.expected_schema is not None:
             # table-level schema verdict (C1): one row, ds='__table__'
             report = report.unionByName(local_df(spark,
                 [("__table__", "schema", len(schema_rows) == 0,

@@ -112,13 +112,13 @@ EXPECTED = {
     ("drain", 8, None): (
         dict(clusters=[(1, FAILED, 750), (2, CACHE, 750),
                        (3, JOB, 750), (4, SESSION, 750)],
-             clusters_digest="a9bc0ca3392813e3",
+             clusters_digest="ab2a01b532d44e1c",
              assign_digest="8825b42fca432b6b",
              rows_per_cluster={1: 750, 2: 750, 3: 750, 4: 750},
              scope=["bank"], counter=4),
         dict(clusters=[(1, FAILED, 250), (2, CACHE, 250),
                        (3, JOB, 250), (4, SESSION, 250)],
-             clusters_digest="795112749204f65d",
+             clusters_digest="b6cf5266e796db2f",
              assign_digest="1de0fc318d7a68c3",
              rows_per_cluster={1: 250, 2: 250, 3: 250, 4: 250},
              scope=["bank"], counter=4),
@@ -130,35 +130,35 @@ EXPECTED = {
              scope=["bank"], counter=4),
     ),
     ("drain", 8, 3): (
-        dict(clusters=[(1, FAILED, 750), (3, JOB, 750),
+        dict(clusters=[(1, FAILED, 750), (2, CACHE, 750),
                        (4, SESSION, 750)],
-             clusters_digest="503b6e36b4b39236",
+             clusters_digest="ecb58b44beec1033",
              assign_digest="8825b42fca432b6b",
              rows_per_cluster={1: 750, 2: 750, 3: 750, 4: 750},
              scope=["bank"], counter=4),
-        dict(clusters=[(1, FAILED, 250), (2, CACHE, 250),
-                       (3, JOB, 250)],
-             clusters_digest="b5549129733a7dfe",
+        dict(clusters=[(2, CACHE, 250), (3, JOB, 250),
+                       (4, SESSION, 250)],
+             clusters_digest="9225676afc578777",
              assign_digest="1de0fc318d7a68c3",
              rows_per_cluster={1: 250, 2: 250, 3: 250, 4: 250},
              scope=["bank"], counter=4),
-        dict(clusters=[(1, FAILED, 750), (2, CACHE, 750),
-                       (3, JOB, 750)],
-             clusters_digest="da27c67f143ddc84",
-             assign_digest="fe378f7fc0dd82ae",
-             rows_per_cluster={1: 500, 2: 500, 3: 500, 5: 500},
+        dict(clusters=[(2, CACHE, 750), (4, SESSION, 750),
+                       (5, FAILED, 500)],
+             clusters_digest="310f7f3cf9244aff",
+             assign_digest="87aa2476d5c9538e",
+             rows_per_cluster={2: 500, 3: 500, 4: 500, 5: 500},
              scope=["bank"], counter=5),
     ),
     ("jaccard", 8, None): (
         dict(clusters=[(1, FAILED, 750), (2, CACHE, 750),
                        (3, JOB, 750), (4, SESSION, 750)],
-             clusters_digest="ef85e3bda590bf89",
+             clusters_digest="e75f3d5d8abb0de9",
              assign_digest="8825b42fca432b6b",
              rows_per_cluster={1: 750, 2: 750, 3: 750, 4: 750},
              scope=["bank"], counter=4),
         dict(clusters=[(1, FAILED, 250), (2, CACHE, 250),
                        (3, JOB, 250), (4, SESSION, 250)],
-             clusters_digest="62c56174050970db",
+             clusters_digest="63c9c676cc4c40b1",
              assign_digest="1de0fc318d7a68c3",
              rows_per_cluster={1: 250, 2: 250, 3: 250, 4: 250},
              scope=["bank"], counter=4),

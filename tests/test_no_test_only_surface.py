@@ -1,5 +1,7 @@
 """Every public module-level function or class in ``drain3_spark/`` has
 a caller outside the tests, or a stated reason to exist without one.
+Every field of the engine's two config dataclasses is read outside the
+tests, or has a stated reason to exist unread.
 
 A name counts as called when some ``.py`` file outside any ``tests/``
 directory references it as an AST ``Name``, an ``Attribute`` or an
@@ -109,3 +111,51 @@ def test_every_import_is_used():
         unused += [f"{os.path.relpath(path, ROOT)}:{line} {name}"
                    for name, line in imported.items() if name not in used]
     assert not unused, f"unused imports: {sorted(unused)}"
+
+
+# (file, dataclass) whose every field must be read outside the tests
+CONFIGS = [("drain3_spark/config.py", "EngineConfig"),
+           ("drain3_spark/validation/runner.py", "ValidationConfig")]
+
+# field -> why it stays without a read outside the tests
+ALLOWED_FIELDS = {}
+
+
+def _read_attributes():
+    """Every attribute name read (``ast.Load``) by a ``.py`` file outside
+    ``tests/``."""
+    reads = set()
+    for dirpath, dirs, files in os.walk(ROOT):
+        dirs[:] = [d for d in dirs
+                   if d != "tests" and not d.startswith(".")]
+        for fn in files:
+            if fn.endswith(".py"):
+                path = os.path.join(dirpath, fn)
+                with open(path) as f:
+                    tree = ast.parse(f.read(), path)
+                reads |= {node.attr for node in ast.walk(tree)
+                          if isinstance(node, ast.Attribute)
+                          and isinstance(node.ctx, ast.Load)}
+    return reads
+
+
+def test_every_config_field_is_read_outside_tests():
+    reads = _read_attributes()
+    fields = []
+    for rel, cls in CONFIGS:
+        with open(os.path.join(ROOT, rel)) as f:
+            tree = ast.parse(f.read(), rel)
+        (node,) = [n for n in tree.body
+                   if isinstance(n, ast.ClassDef) and n.name == cls]
+        fields += [(cls, stmt.target.id) for stmt in node.body
+                   if isinstance(stmt, ast.AnnAssign)]
+    unread = [f"{cls}.{name}" for cls, name in fields
+              if name not in reads and name not in ALLOWED_FIELDS]
+    assert not unread, (
+        f"config fields nothing outside tests/ reads: {unread}; delete "
+        f"them or read them")
+    stale = {name for name in ALLOWED_FIELDS
+             if name not in {n for _, n in fields} or name in reads}
+    assert not stale, (
+        f"field allowlist entries that no longer exist or are now read: "
+        f"{sorted(stale)}")

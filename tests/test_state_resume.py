@@ -83,6 +83,30 @@ def test_incremental_outputs_and_lineage(spark, tmp_path):
     assert fails, "shifted partition must fail at least one drift check"
 
 
+def test_incremental_corpus_drift_equals_validate(spark, tmp_path):
+    """run_incremental's corpus drift report is validate()'s drift
+    report: same statistics, same rows, same details."""
+    from drain3_spark.validation.runner import (ValidationConfig,
+                                                ValidationEngine)
+
+    n = 300
+    clips = FX.gen_clips(spark, n, dirty=True, n_ds=3, dur_lo=200,
+                         dur_hi=500).cache()
+    vcfg = ValidationConfig(drift_alpha=0.01, with_audio=False)
+    out = str(tmp_path / "out")
+    run_incremental(spark, clips, str(tmp_path / "state"), vcfg=vcfg,
+                    out_dir=out)
+    got = {tuple(r) for r in
+           spark.read.parquet(f"{out}/drift_report_corpus").collect()}
+
+    report = ValidationEngine(vcfg).validate(clips)
+    want = {tuple(r) for r in report.partition_report.collect()
+            if r.check.startswith("drift_")}
+    assert want and got == want
+    report.violations.unpersist()
+    clips.unpersist()
+
+
 def test_incremental_snapshot_cadence(spark, tmp_path):
     """A ds batch with no cluster delta writes no new snapshot; resume
     from the last commit still converges to the uninterrupted result

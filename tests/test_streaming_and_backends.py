@@ -43,6 +43,21 @@ def test_streaming_equals_batch(spark, tmp_path):
     clips.unpersist()
 
 
+def test_streaming_batches_report_no_drift(spark, tmp_path):
+    """A micro-batch is validated with drift off under the default
+    config: one batch of three ds partitions writes no drift_* rows."""
+    clips = FX.gen_clips(spark, 60, n_ds=3, dur_lo=200, dur_hi=400)
+    src = str(tmp_path / "incoming")
+    clips.coalesce(1).write.mode("overwrite").parquet(f"{src}/f_all")
+    out = str(tmp_path / "out")
+    run_streaming(spark, f"{src}/f_*", clips.schema,
+                  state_dir=str(tmp_path / "state"), out_dir=out)
+    report = spark.read.parquet(f"{out}/partition_report").collect()
+    assert {r.ds for r in report} == {"2026-08-01", "2026-08-02",
+                                      "2026-08-03"}
+    assert not [r for r in report if r.check.startswith("drift_")]
+
+
 def test_config_ini_surface(tmp_path):
     """Reference-compatible ini loading (surface of
     tests/test_template_miner.py:18-23 over tests/drain3_test.ini)."""
