@@ -1032,54 +1032,62 @@ def _q52_spec_augment(spark, sf):
             .orderBy("codec"))
 
 
+def _q33_stream(spark, sf, work: str) -> DataFrame:
+    """Stream q33's documents subset through ``streaming.run_streaming``
+    (foreachBatch + the checkpointed cluster state) with ``work`` as the
+    source, state and output root; per-clip assignments land under
+    ``{work}/out/assignments``.  Returns the streamed subset."""
+    import time as _time
+    from drain3_spark.config import EngineConfig
+    from drain3_spark.streaming import run_streaming
+
+    # deterministic subset: a bare GlobalLimit's row selection can
+    # shift with partition layout, and mining is order-sensitive
+    clips = (_docs_as_clips(spark, sf)
+             .orderBy("ds", "clip_id").limit(1000))
+    # one file per ds, written in ds order: micro-batch arrival then
+    # respects (ds, clip_id), the order the batch miner uses.  The file
+    # source orders files by modification time, so each ds dir gets an
+    # EXPLICIT strictly increasing mtime: sequential writes landing in
+    # one coarse mtime granule must not be able to reorder the
+    # micro-batches.
+    base = _time.time()
+    for j, ds in enumerate(sorted(
+            r.ds for r in clips.select("ds").distinct().collect())):
+        path = f"{work}/src/f_{ds}"
+        (clips.filter(F.col("ds") == ds).coalesce(1)
+         .write.mode("overwrite").parquet(path))
+        for root_, _dirs, files_ in os.walk(path):
+            for fn in files_:
+                os.utime(os.path.join(root_, fn), (base + j, base + j))
+    # two ds files per micro-batch: arrival stays a ds-ordered block
+    # sequence (files are mtime-ordered) and each batch is mined in
+    # (ds, clip_id) order, so the order contract holds while halving
+    # per-batch overhead
+    run_streaming(spark, f"{work}/src/f_*",
+                  "ds string, clip_id string, transcript string",
+                  state_dir=f"{work}/state", out_dir=f"{work}/out",
+                  cfg=EngineConfig(), validate=False,
+                  max_files_per_trigger=2)
+    return clips
+
+
 def _q33_streaming_mining(spark, sf):
-    """Structured Streaming stateful mining (applyInPandasWithState):
-    the documents corpus streamed as micro-batched files through the
-    per-group state-store miner, then group-local ids renumbered to the
-    reference's global creation-order ids (rows-only: streaming +
-    sequential mining has no SQL oracle; pinned by
-    test_stateful_streaming_miner and
-    test_stateful_ids_renumber_to_reference_ids).  Deterministic: same
-    corpus, same templates, fresh checkpoint per call."""
+    """Structured Streaming template mining: the documents corpus
+    streamed as micro-batched files through the foreachBatch driver,
+    which assigns the reference's global creation-order cluster ids
+    directly (rows-only: streaming + sequential mining has no SQL
+    oracle; pinned against the batch miner by
+    test_stream_ids_match_batch_on_documents_corpus).  Deterministic:
+    same corpus, same templates, fresh state per call."""
     import shutil
     import tempfile
-    from drain3_spark.config import EngineConfig
-    from drain3_spark.streaming_stateful import (renumber_to_reference_ids,
-                                                 run_stateful_streaming)
     from drain3_spark.util import local_df
 
     work = tempfile.mkdtemp(prefix="q33_")
     try:
-        # deterministic subset: a bare GlobalLimit's row selection can
-        # shift with partition layout, and mining is order-sensitive
-        clips = (_docs_as_clips(spark, sf)
-                 .orderBy("ds", "clip_id").limit(1000))
-        # one file per ds, written in ds order: micro-batch arrival then
-        # respects (ds, clip_id) — the order contract under which the
-        # renumbered ids equal the sequential reference's (see
-        # renumber_to_reference_ids).  The file source orders files by
-        # modification time, so each ds dir gets an EXPLICIT strictly
-        # increasing mtime: sequential writes landing in one coarse
-        # mtime granule must not be able to reorder the micro-batches.
-        import time as _time
-        base = _time.time()
-        for j, ds in enumerate(sorted(
-                r.ds for r in clips.select("ds").distinct().collect())):
-            path = f"{work}/src/f_{ds}"
-            (clips.filter(F.col("ds") == ds).coalesce(1)
-             .write.mode("overwrite").parquet(path))
-            for root_, _dirs, files_ in os.walk(path):
-                for fn in files_:
-                    os.utime(os.path.join(root_, fn), (base + j, base + j))
-        schema = "ds string, clip_id string, transcript string"
-        # two ds files per micro-batch: arrival stays a ds-ordered block
-        # sequence (files are mtime-ordered) and each batch's per-group
-        # sort restores (ds, clip_id) within the block, so the order
-        # contract holds while halving per-batch overhead
-        run_stateful_streaming(spark, f"{work}/src/f_*", schema,
-                               f"{work}/ckpt", f"{work}/out",
-                               EngineConfig(), max_files_per_trigger=2)
-        out = renumber_to_reference_ids(spark.read.parquet(f"{work}/out"))
+        _q33_stream(spark, sf, work)
+        out = spark.read.parquet(f"{work}/out/assignments")
         agg = (out.agg(F.count(F.lit(1)).alias("n_rows"),
                        F.countDistinct("cluster_id").alias("n_clusters"),
                        F.countDistinct("template_mined").alias("n_templates"))

@@ -10,11 +10,9 @@ mining templates through the checkpointed state store and validating
 each partition — and is resumable: partitions at or below the store's
 high-watermark are skipped (idempotent re-run after a crash).  This is
 the ``foreachBatch`` shape of Structured Streaming with an explicit
-state table, chosen as the EXACT path for snapshot fidelity and
-batch/stream symmetry (SURVEY.md §2.B streaming row).  The
-``applyInPandasWithState`` alternative — per-group mining state in
-Spark's own state store, no driver round-trip per micro-batch — lives in
-``streaming_stateful.py`` with documented group-local ids.
+state table, chosen for snapshot fidelity and batch/stream symmetry
+(SURVEY.md §2.B streaming row); ``streaming.run_streaming`` runs the
+same step over a live stream.
 """
 
 from __future__ import annotations

@@ -53,10 +53,10 @@ class _SharedScope:
     def __init__(self):
         self._frames: List[DataFrame] = []
 
-    def share(self, df: DataFrame, eager: bool = True) -> DataFrame:
-        """Persist ``df`` for multi-branch reuse; ``eager`` (default)
-        MATERIALIZES it immediately.  Lazy persist is a trap for shared
-        subtrees: the consuming query's independent downstream stages
+    def share(self, df: DataFrame) -> DataFrame:
+        """Persist ``df`` for multi-branch reuse and MATERIALIZE it
+        immediately.  Lazy persist is a trap for shared subtrees: the
+        consuming query's independent downstream stages
         are submitted concurrently by the DAG scheduler, and each one
         computes the un-cached shared partitions (block-lock serialized,
         but every concurrent Arrow stage still spawns its own python
@@ -66,8 +66,7 @@ class _SharedScope:
         then scans cache."""
         df = df.persist(StorageLevel.MEMORY_AND_DISK)
         self._frames.append(df)
-        if eager:
-            df.count()
+        df.count()
         return df
 
     def share_all(self, *dfs: DataFrame) -> List[DataFrame]:

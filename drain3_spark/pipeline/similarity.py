@@ -22,7 +22,7 @@
 from __future__ import annotations
 
 import operator
-from typing import Callable, Iterator, Sequence, Tuple
+from typing import Callable, Sequence, Tuple
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
@@ -58,12 +58,6 @@ def cosine_topk(embeddings: DataFrame, query: Sequence[float], k: int = 10,
                     .alias("cosine"))
             .orderBy(F.desc("cosine"), F.col(id_col))
             .limit(k))
-
-
-# above this many centroids a literal expression tree would bloat the
-# plan (C x dim literals); switch to an Arrow-batched numpy argmin over
-# an executor-broadcast centroid matrix — still a narrow pass
-_IVF_LITERAL_MAX = 64
 
 
 def _collect_centroids(embeddings: DataFrame, num_centroids: int,
@@ -104,12 +98,11 @@ def assign_ivf_buckets(embeddings: DataFrame, num_centroids: int = 16,
     Centroids are the first ``num_centroids`` vectors by id —
     deterministic, no iterative k-means needed for a bucketing layout.
     The centroid table is tiny and bounded, so it is collected once and
-    pushed to executors (as a broadcast one-row array for small C, as a
-    broadcast numpy matrix above ``_IVF_LITERAL_MAX``); the argmin
-    happens per row with no shuffle.  (The naive broadcast-join + min_by
+    pushed to executors as a broadcast one-row array; the argmin happens
+    per row with no shuffle.  (The naive broadcast-join + min_by
     formulation materializes N x C rows through an Exchange — a 1024x
     row blowup at C=1024; at 10^12 rows that Exchange IS the job.)
-    Ties break to the lowest centroid id in both paths.
+    Ties break to the lowest centroid id.
     """
     return assign_ivf_buckets_multiprobe(embeddings, num_centroids, 1,
                                          id_col, vec_col).drop("probe")
@@ -132,56 +125,28 @@ def assign_ivf_buckets_multiprobe(embeddings: DataFrame,
     of a close pair have nearly equal distances to their two nearest
     centroids, so the probe sets intersect).  Index blowup is bounded:
     ``probes``× rows, never quadratic.  Ties break to the lowest
-    centroid id in both paths.
+    centroid id.
     """
     cent_rows = _collect_centroids(embeddings, num_centroids, id_col, vec_col)
     probes = min(probes, len(cent_rows))
     e = embeddings.select(id_col, F.col(vec_col).cast("array<double>").alias("vec"))
 
-    if len(cent_rows) <= _IVF_LITERAL_MAX:
-        cents = _centroid_array_df(embeddings.sparkSession, cent_rows)
-        scored = F.transform(
-            F.col("_cents"),
-            lambda c: F.struct(
-                F.aggregate(F.zip_with(F.col("vec"), c["cvec"],
-                                       lambda x, y: (x - y) * (x - y)),
-                            F.lit(0.0), lambda acc, v: acc + v).alias("d"),
-                c["cid"].alias("cid")))
-        # struct sort orders by (d, cid) — the first `probes` entries are
-        # the nearest buckets with deterministic low-cid tie-break
-        top = F.slice(F.array_sort(scored), 1, probes)
-        return (e.crossJoin(F.broadcast(cents))
-                .select(id_col, "vec",
-                        F.posexplode(top).alias("probe", "_s"))
-                .select(id_col, F.col("probe").cast("int").alias("probe"),
-                        F.col("_s")["cid"].alias("bucket"), "vec"))
-
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql import types as T
-    ids = [int(r["centroid_id"]) for r in cent_rows]
-    mat = np.asarray([r["cvec"] for r in cent_rows], dtype=np.float64)
-    bc = embeddings.sparkSession.sparkContext.broadcast((ids, mat, probes))
-
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def nearest_p(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        import numpy as _np
-        import pandas as _pd
-        cids, cmat, p = bc.value
-        cids = _np.asarray(cids, dtype=_np.int64)
-        cnorm = (cmat * cmat).sum(axis=1)
-        for series in it:
-            X = _np.asarray([list(v) for v in series], dtype=_np.float64)
-            d = cnorm[None, :] - 2.0 * (X @ cmat.T)
-            # argsort is ascending and stable; cids ascend, so equal
-            # distances tie-break to the lowest centroid id
-            idx = _np.argsort(d, axis=1, kind="stable")[:, :p]
-            yield _pd.Series(list(cids[idx]))
-
-    return (e.select(id_col, "vec", nearest_p(F.col("vec")).alias("_b"))
-            .select(id_col, "vec", F.posexplode("_b").alias("probe", "bucket"))
+    cents = _centroid_array_df(embeddings.sparkSession, cent_rows)
+    scored = F.transform(
+        F.col("_cents"),
+        lambda c: F.struct(
+            F.aggregate(F.zip_with(F.col("vec"), c["cvec"],
+                                   lambda x, y: (x - y) * (x - y)),
+                        F.lit(0.0), lambda acc, v: acc + v).alias("d"),
+            c["cid"].alias("cid")))
+    # struct sort orders by (d, cid) — the first `probes` entries are
+    # the nearest buckets with deterministic low-cid tie-break
+    top = F.slice(F.array_sort(scored), 1, probes)
+    return (e.crossJoin(F.broadcast(cents))
+            .select(id_col, "vec",
+                    F.posexplode(top).alias("probe", "_s"))
             .select(id_col, F.col("probe").cast("int").alias("probe"),
-                    "bucket", "vec"))
+                    F.col("_s")["cid"].alias("bucket"), "vec"))
 
 
 def cosine_near_dup_pairs_auto(embeddings: DataFrame, threshold: float = 0.95,

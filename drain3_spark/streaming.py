@@ -332,7 +332,7 @@ def run_windowed_counts(spark: SparkSession,
     trigger keeps micro-batch arrival order equal to file mtime order,
     so watermark advancement — and therefore which late rows are
     dropped — is deterministic for a given directory layout (the same
-    discipline as the q33 stateful-mining stream)."""
+    discipline as the q33 mining stream's mtime-ordered files)."""
     stream = (spark.readStream.schema(schema)
               .option("maxFilesPerTrigger", max_files_per_trigger)
               .parquet(source_dir))

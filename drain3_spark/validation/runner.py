@@ -34,7 +34,12 @@ from typing import Dict, List, NamedTuple, Optional, Sequence, Tuple
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from drain3_spark.fixtures import VIOLATION_SCHEMA
+from drain3_spark.fixtures import (CHECK_AUDIO_DECODE, CHECK_CONTAINER_META,
+                                   CHECK_DUR_BOUNDS, CHECK_LOUDNESS,
+                                   CHECK_NULL_TRANSCRIPT, CHECK_REF_MISSING,
+                                   CHECK_SPEECH_RATE, CHECK_SPEECH_RATIO,
+                                   CHECK_SR_DOMAIN, CHECK_TRANSCRIPT_EQ,
+                                   CHECK_UNIQUENESS, VIOLATION_SCHEMA)
 from drain3_spark.validation import checks as C
 from drain3_spark.validation.audio import audio_and_container_violations
 from drain3_spark.validation.drift import chisq_drift, ks_drift
@@ -170,6 +175,28 @@ def drift_pass(clips: DataFrame, cfg: ValidationConfig,
                      [k + (n,) for k, n in sorted(hist.items())])
 
 
+def _report_checks(cfg: ValidationConfig, with_ref: bool) -> List[str]:
+    """The per-partition checks :meth:`ValidationEngine.violations`
+    runs under ``cfg`` (``with_ref``: a transcripts reference is given),
+    read from the same config fields.  Every one gets a report row per
+    ``ds``, passing when it found nothing there."""
+    names = [CHECK_NULL_TRANSCRIPT, CHECK_DUR_BOUNDS, CHECK_SR_DOMAIN,
+             CHECK_UNIQUENESS]
+    if cfg.speech_rate_bounds is not None:
+        names.append(CHECK_SPEECH_RATE)
+    if with_ref:
+        names += [CHECK_REF_MISSING, CHECK_TRANSCRIPT_EQ]
+    if cfg.with_audio:
+        names.append(CHECK_AUDIO_DECODE)
+        if cfg.check_container_meta:
+            names.append(CHECK_CONTAINER_META)
+        if cfg.loudness_bounds is not None:
+            names.append(CHECK_LOUDNESS)
+        if cfg.min_speech_ratio is not None:
+            names.append(CHECK_SPEECH_RATIO)
+    return sorted(names)
+
+
 class ValidationEngine:
     def __init__(self, config: ValidationConfig | None = None) -> None:
         self.cfg = config or ValidationConfig()
@@ -285,18 +312,8 @@ class ValidationEngine:
                      .groupBy("ds", "check")
                      .agg(F.count(F.lit(1)).alias("violation_count")))
         # every (ds, check) pair appears, pass=true when count is 0
-        from drain3_spark.fixtures import (CHECK_AUDIO_DECODE, CHECK_DUR_BOUNDS,
-                                           CHECK_NULL_TRANSCRIPT, CHECK_REF_MISSING,
-                                           CHECK_SR_DOMAIN, CHECK_TRANSCRIPT_EQ,
-                                           CHECK_UNIQUENESS)
-        check_names = [CHECK_NULL_TRANSCRIPT, CHECK_DUR_BOUNDS, CHECK_SR_DOMAIN,
-                       CHECK_UNIQUENESS]
-        if transcripts_ref is not None:
-            check_names += [CHECK_REF_MISSING, CHECK_TRANSCRIPT_EQ]
-        if cfg.with_audio:
-            check_names.append(CHECK_AUDIO_DECODE)
-        all_checks = local_df(spark, [(c,) for c in sorted(check_names)],
-                              "check string")
+        checks = _report_checks(cfg, transcripts_ref is not None)
+        all_checks = local_df(spark, [(c,) for c in checks], "check string")
         grid = rows_per_ds.crossJoin(all_checks)
         report = (grid.join(per_check, ["ds", "check"], "left")
                   .withColumn("violation_count",

@@ -214,10 +214,15 @@ def _calls(rel, name):
 
 def test_one_micro_batch_step():
     """Mining against the carried state and the snapshot cadence exist
-    once, in the step both drivers call."""
+    once, in the step both drivers call, and the mining operator is the
+    only caller of the kernel's ingest outside ``core/``."""
     assert _calls("jobs.py", "mine_templates") \
         + _calls("streaming.py", "mine_templates") == 1
     callers = {p.relative_to(PKG).as_posix(): _calls(p.relative_to(PKG),
                                                      "latest_commit_time")
                for p in PKG.rglob("*.py")}
     assert {k: v for k, v in callers.items() if v} == {"jobs.py": 1}
+    assert {p.relative_to(PKG).as_posix() for p in PKG.rglob("*.py")
+            if p.relative_to(PKG).parts[0] != "core"
+            and _calls(p.relative_to(PKG), "ingest_tokens")} \
+        == {"operators/mining.py"}

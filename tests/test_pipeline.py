@@ -120,8 +120,8 @@ def test_multimodal_plumbing(spark):
 
 
 def test_ivf_assignment_narrow_and_paths_agree(spark, emb):
-    """Bucket assignment must be a narrow pass (zero Exchange) and the
-    literal-Catalyst and broadcast-numpy paths must agree exactly."""
+    """Bucket assignment must be a narrow pass (zero Exchange) and put
+    every centroid vector in its own bucket."""
     lit_df = similarity.assign_ivf_buckets(emb, num_centroids=8)
     plan = lit_df._jdf.queryExecution().executedPlan().toString()
     # the embedding side must never shuffle; the centroid table arrives
@@ -129,17 +129,6 @@ def test_ivf_assignment_narrow_and_paths_agree(spark, emb):
     # expression tree whose codegen dominated the query's first run)
     assert "Exchange" not in plan.replace("BroadcastExchange", ""), plan
     lit = {r.vec_id: r.bucket for r in lit_df.collect()}
-
-    old_max = similarity._IVF_LITERAL_MAX
-    similarity._IVF_LITERAL_MAX = 0  # force the pandas-UDF path
-    try:
-        udf_df = similarity.assign_ivf_buckets(emb, num_centroids=8)
-        uplan = udf_df._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in uplan, uplan
-        udf = {r.vec_id: r.bucket for r in udf_df.collect()}
-    finally:
-        similarity._IVF_LITERAL_MAX = old_max
-    assert lit == udf
     # every centroid vector sits in its own bucket
     for r in emb.orderBy("vec_id").limit(8).collect():
         assert lit[r.vec_id] == r.vec_id

@@ -249,55 +249,10 @@ def test_counter_monotonic_under_lru_eviction(spark):
     m1.unpersist(); m2.unpersist()
 
 
-def test_stateful_ids_renumber_to_reference_ids(spark, tmp_path):
-    """The renumbering post-pass maps group-local stateful ids to the
-    reference's GLOBAL creation-order ids: the renumbered stream output
-    must carry exactly the ids jobs.run_incremental (the exact-id
-    foreachBatch-style driver) assigns on the same corpus (reference
-    counter semantics drain3/drain.py:201-202)."""
-    from drain3_spark.jobs import run_incremental
-    from drain3_spark.streaming_stateful import (renumber_to_reference_ids,
-                                                 run_stateful_streaming)
-
-    schema = "ds string, clip_id string, transcript string"
-
-    def batch(ds, lines):
-        rows = [(ds, f"clip-{ds}-{j:08d}", t) for j, t in enumerate(lines)]
-        return spark.createDataFrame(rows, schema)
-
-    # creation order interleaves across token-count groups (3,4,3,2,5,3)
-    # so group-local and global ids genuinely differ
-    b1 = ["alpha beta one", "gamma delta run now", "alpha beta two",
-          "solo omega"]
-    b2 = ["gamma delta run later", "epsilon zeta eta theta iota",
-          "brand new thing"]
-
-    src, out, ckpt = tmp_path / "src", tmp_path / "out", tmp_path / "ckpt"
-    # two runs against one checkpoint: arrival order ds1 < ds2 is
-    # guaranteed by the stream's own progress, not file mtimes
-    batch("2026-08-01", b1).write.mode("append").parquet(str(src))
-    run_stateful_streaming(spark, str(src), schema, str(ckpt), str(out))
-    batch("2026-08-02", b2).write.mode("append").parquet(str(src))
-    run_stateful_streaming(spark, str(src), schema, str(ckpt), str(out))
-
-    renum = renumber_to_reference_ids(spark.read.parquet(str(out)))
-    got = {r.clip_id: r.cluster_id for r in renum.collect()}
-
-    full = batch("2026-08-01", b1).unionByName(batch("2026-08-02", b2))
-    run_incremental(spark, full, str(tmp_path / "state"), validate=False,
-                    out_dir=str(tmp_path / "batch_out"))
-    want = {r.clip_id: r.cluster_id
-            for r in spark.read.parquet(
-                str(tmp_path / "batch_out" / "assignments")).collect()}
-    assert got == want
-    # the interleaving really happened: ids span creation order 1..5
-    assert sorted(set(got.values())) == [1, 2, 3, 4, 5]
-
-
-def test_stateful_ids_match_batch_on_documents_corpus(spark, tmp_path):
-    """Corpus-level pin for the q33 claim: stateful streaming over the
-    real documents corpus (per-ds files, ds-ordered arrival), renumbered
-    to reference ids, carries EXACTLY the batch miner's cluster ids and
+def test_stream_ids_match_batch_on_documents_corpus(spark, tmp_path):
+    """Corpus-level pin for q33: its documents subset streamed through
+    run_streaming (per-ds files, ds-ordered arrival, two files per
+    micro-batch) carries EXACTLY the batch miner's cluster ids and
     templates for every clip."""
     import os
 
@@ -307,21 +262,11 @@ def test_stateful_ids_match_batch_on_documents_corpus(spark, tmp_path):
         pytest.skip("driver testdata not present")
     import __spark_entry__ as entry
     from drain3_spark.operators.mining import mine_templates
-    from drain3_spark.streaming_stateful import (renumber_to_reference_ids,
-                                                 run_stateful_streaming)
 
-    clips = (entry._docs_as_clips(spark, sf)
-             .orderBy("ds", "clip_id").limit(600).cache())
-    src, out, ckpt = tmp_path / "src", tmp_path / "out", tmp_path / "ckpt"
-    for ds in sorted(r.ds for r in clips.select("ds").distinct().collect()):
-        (clips.filter(F.col("ds") == ds).coalesce(1)
-         .write.mode("overwrite").parquet(f"{src}/f_{ds}"))
-    schema = "ds string, clip_id string, transcript string"
-    run_stateful_streaming(spark, f"{src}/f_*", schema, str(ckpt), str(out),
-                           EngineConfig(), max_files_per_trigger=1)
-    renum = renumber_to_reference_ids(spark.read.parquet(str(out)))
+    clips = entry._q33_stream(spark, sf, str(tmp_path)).cache()
     got = {r.clip_id: (r.cluster_id, r.template_mined)
-           for r in renum.collect()}
+           for r in spark.read.parquet(
+               str(tmp_path / "out" / "assignments")).collect()}
 
     res = mine_templates(clips, EngineConfig(mining_salt=1))
     want = {r.clip_id: (r.cluster_id, r.template_mined)
@@ -330,56 +275,6 @@ def test_stateful_ids_match_batch_on_documents_corpus(spark, tmp_path):
     assert len(got) == clips.count() >= 500
     res.unpersist()
     clips.unpersist()
-
-
-def test_stateful_streaming_miner(spark, tmp_path):
-    """applyInPandasWithState variant: mining state lives in Spark's
-    state store keyed by token count, survives across micro-batches AND
-    across query restarts via the stream checkpoint; templates equal the
-    batch miner's (group-local ids by design)."""
-    from drain3_spark.streaming_stateful import (ID_STRIDE,
-                                                 run_stateful_streaming)
-    from drain3_spark.operators.mining import mine_templates
-
-    src = tmp_path / "src"
-    out = tmp_path / "out"
-    ckpt = tmp_path / "ckpt"
-    schema = "ds string, clip_id string, transcript string"
-
-    def batch(i, lines):
-        rows = [(f"2026-08-0{i+1}", f"clip-{i:02d}{j:08d}", t)
-                for j, t in enumerate(lines)]
-        return spark.createDataFrame(rows, schema)
-
-    b1 = ["alpha beta one", "alpha beta two", "gamma delta run now"]
-    b2 = ["alpha beta three", "gamma delta run later", "omega new thing"]
-
-    batch(0, b1).write.mode("append").parquet(str(src))
-    run_stateful_streaming(spark, str(src), schema, str(ckpt), str(out))
-    first = {r.clip_id: r for r in spark.read.parquet(str(out)).collect()}
-    assert len(first) == 3
-    assert first["clip-0000000001"].template_mined == "alpha beta <*>"
-
-    # restart with new files: state restored from the checkpoint
-    batch(1, b2).write.mode("append").parquet(str(src))
-    run_stateful_streaming(spark, str(src), schema, str(ckpt), str(out))
-    rows = {r.clip_id: r for r in spark.read.parquet(str(out)).collect()}
-    assert len(rows) == 6
-    r3 = rows["clip-0100000000"]          # "alpha beta three"
-    assert r3.template_mined == "alpha beta <*>"
-    assert r3.cluster_size == 3           # sizes accumulated across restarts
-    assert r3.cluster_id == 3 * ID_STRIDE + 1
-    assert rows["clip-0100000001"].cluster_size == 2   # gamma delta run later
-    assert rows["clip-0100000002"].change_type == "cluster_created"
-
-    # templates equal the batch miner over the concatenated corpus
-    full = batch(0, b1).unionByName(batch(1, b2))
-    res = mine_templates(full, EngineConfig(mining_salt=1))
-    want = {r.clip_id: r.template_mined
-            for r in res.assignments.collect()}
-    got = {cid: r.template_mined for cid, r in rows.items()}
-    assert got == want
-    res.unpersist()
 
 
 def test_streaming_cross_batch_uniqueness(spark, tmp_path):

@@ -161,6 +161,18 @@ def test_engine_validates_wav_corpus_end_to_end(spark):
                           or cm[i % len(cm)] == "flac")}
     assert by_check.pop(CHECK_CONTAINER_META, set()) == expected_meta
     assert by_check == {}, by_check
+    # the partition report carries the container check too: one row per
+    # ds, counting exactly the planted violations there
+    ds_of = {r.clip_id: r.ds for r in clips.select("clip_id", "ds").collect()}
+    want = {ds: 0 for ds in ds_of.values()}
+    for cid in expected_meta:
+        want[ds_of[cid]] += 1
+    got = {r.ds: r.violation_count
+           for r in report.partition_report.collect()
+           if r.check == CHECK_CONTAINER_META}
+    assert got == want and sum(want.values()) > 0, (got, want)
+    assert (sum(r.violations for r in report.metrics.collect())
+            == len(expected_meta))
 
 
 def test_container_check_pushes_codec_filter(spark, tmp_path):
