@@ -94,6 +94,19 @@ def cluster_tuples_to_state(rows) -> List[tuple]:
     return out
 
 
+def make_bank(cfg: EngineConfig, rows=(), max_clusters: Optional[int] = None):
+    """The kernel bank of ``cfg.engine`` with ``cfg``'s settings, restored
+    from CLUSTER_SCHEMA tuples (LRU recency follows row order)."""
+    bank_cls = TemplateBank
+    if cfg.engine == "jaccard":
+        from drain3_spark.core.kernel_jaccard import JaccardBank as bank_cls
+    return bank_cls.from_state(
+        cluster_tuples_to_state(rows), sim_th=cfg.sim_th, depth=cfg.depth,
+        max_children=cfg.max_children, max_clusters=max_clusters,
+        param_str=cfg.param_str,
+        parametrize_numeric_tokens=cfg.parametrize_numeric_tokens)
+
+
 @dataclass
 class MiningResult:
     assignments: DataFrame   # order cols + cluster_id, change_type, cluster_size, template_mined
@@ -238,17 +251,11 @@ def mine_templates(df: DataFrame,
     bc_prior = spark.sparkContext.broadcast(prior_rows)
     prior_max = max([prior_counter] + [int(r[0]) for r in prior_rows]) if prior_rows else prior_counter
 
-    kernel_kwargs = dict(
-        sim_th=cfg.sim_th, depth=cfg.depth, max_children=cfg.max_children,
-        # per-group LRU is exact for single-group data; the global bound is
-        # re-applied at commit (reference drain3/drain.py:37-51 semantics).
-        # salted banks never evict locally — the driver-side finish after
-        # the bank merge owns the bound
-        max_clusters=None if salted else cfg.max_clusters,
-        param_str=cfg.param_str,
-        parametrize_numeric_tokens=cfg.parametrize_numeric_tokens,
-    )
-    engine_name = cfg.engine
+    # per-group LRU is exact for single-group data; the global bound is
+    # re-applied at commit (reference drain3/drain.py:37-51 semantics).
+    # salted banks never evict locally — the driver-side finish after
+    # the bank merge owns the bound
+    bank_max_clusters = None if salted else cfg.max_clusters
     extra_delims = tuple(cfg.extra_delimiters)
     out_schema = _fold_schema(df, order_cols)
 
@@ -265,14 +272,8 @@ def mine_templates(df: DataFrame,
         group_key = KEY_SEP.join(gkey_parts)
         group_token_count = int(pdf.iloc[0]["token_count"])
 
-        mine = [r for r in bc_prior.value if r[1] == group_key]
-        state_rows = cluster_tuples_to_state(mine)
-        bank_cls = TemplateBank
-        if engine_name == "jaccard":
-            from drain3_spark.core.kernel_jaccard import JaccardBank
-            bank_cls = JaccardBank
-        bank = bank_cls.from_state(state_rows, counter=None, **kernel_kwargs)
-        bank.counter = max([rec.cid for rec in bank.registry.values()] or [0])
+        bank = make_bank(cfg, [r for r in bc_prior.value if r[1] == group_key],
+                         bank_max_clusters)
         prior_ids = set(bank.registry.keys())
 
         def ref_of(rec: ClusterRec) -> str:
@@ -316,7 +317,7 @@ def mine_templates(df: DataFrame,
         # tokenize + tree walk + per-candidate scoring with one dict
         # probe (the sequential fold is the mining job's hot loop).
         # The jaccard bank keeps its own structures — no fast path.
-        use_memo = engine_name != "jaccard"
+        use_memo = cfg.engine != "jaccard"
         memo: dict = {}
         for i in range(len(pdf)):
             mstr = masked_list[i]
@@ -431,14 +432,6 @@ def _merge_banks(rows: List[tuple], cfg: EngineConfig,
     ``g:<prior id>`` or ``n:<created_key>``) and the map from every bank
     ref to its merged ref.
     """
-    bank_cls = TemplateBank
-    if cfg.engine == "jaccard":
-        from drain3_spark.core.kernel_jaccard import JaccardBank
-        bank_cls = JaccardBank
-    kw = dict(sim_th=cfg.sim_th, depth=cfg.depth,
-              max_children=cfg.max_children, max_clusters=None,
-              param_str=cfg.param_str,
-              parametrize_numeric_tokens=cfg.parametrize_numeric_tokens)
     prior_by_id = {int(p[0]): p for p in prior_rows}
     groups: dict = {}
     for r in sorted(rows, key=lambda r: (r[5] or "", r[0], r[3] or "")):
@@ -447,7 +440,7 @@ def _merge_banks(rows: List[tuple], cfg: EngineConfig,
     merged: List[tuple] = []
     ref_map: dict = {}
     for gkey, grows in groups.items():
-        bank = bank_cls(**kw)
+        bank = make_bank(cfg)
         merged_prior: dict = {}
         for ref, _, _, template, size, _, upd, _ in grows:
             if not ref.startswith("g:"):

@@ -13,7 +13,10 @@ Without ``hist`` each function runs its own unbucketed ``groupBy`` of
 * KS two-sample D statistic with asymptotic critical value
   ``c(alpha) * sqrt((n+m)/(n*m))``, c(0.05)=1.3581.
 * Pearson chi-square on the (ds × category) contingency table with a
-  Wilson–Hilferty critical-value approximation (alpha=0.05).
+  Wilson–Hilferty critical-value approximation.
+
+Both run at alpha 0.10, 0.05 or 0.01, the levels whose critical values
+are tabulated; any other alpha raises ``ValueError``.
 
 Reference precedent: the LRU "adapt to recent templates" rationale
 (README.md:246-248) — drift of the input distribution is a first-class
@@ -32,9 +35,17 @@ KS_C_ALPHA = {0.10: 1.2238, 0.05: 1.3581, 0.01: 1.6276}
 _Z = {0.10: 1.2816, 0.05: 1.6449, 0.01: 2.3263}
 
 
+def _check_alpha(alpha: float) -> None:
+    """Only the tabulated significance levels have critical values; any
+    other alpha would silently test at a different level."""
+    if alpha not in KS_C_ALPHA:
+        raise ValueError(f"unsupported drift alpha {alpha!r}; expected one "
+                         f"of {sorted(KS_C_ALPHA)}")
+
+
 def _chi2_critical(dof: int, alpha: float) -> float:
     """Wilson–Hilferty approximation of the chi-square quantile."""
-    z = _Z.get(alpha, 1.6449)
+    z = _Z[alpha]
     if dof <= 0:
         return float("inf")
     return dof * (1.0 - 2.0 / (9.0 * dof) + z * math.sqrt(2.0 / (9.0 * dof))) ** 3
@@ -52,6 +63,7 @@ def ks_drift(clips: Optional[DataFrame], value_col: str = "dur_ms",
     ``runner.drift_pass``); without it one Spark aggregation of ``clips``
     builds them.
     """
+    _check_alpha(alpha)
     if hist is None:
         hist = (clips.groupBy("ds", F.col(value_col).alias("_v"))
                 .agg(F.count(F.lit(1)).alias("n")).collect())
@@ -75,7 +87,7 @@ def ks_drift(clips: Optional[DataFrame], value_col: str = "dur_ms",
         cdf_a = np.cumsum([base.get(v, 0) for v in support]) / max(n_base, 1)
         cdf_b = np.cumsum([cur.get(v, 0) for v in support]) / max(n_cur, 1)
         d = float(np.max(np.abs(cdf_a - cdf_b))) if len(support) else 0.0
-        crit = KS_C_ALPHA.get(alpha, 1.3581) * math.sqrt(
+        crit = KS_C_ALPHA[alpha] * math.sqrt(
             (n_base + n_cur) / max(n_base * n_cur, 1))
         out.append({"ds": ds, "check": f"drift_ks_{value_col}", "statistic": d,
                     "threshold": crit, "passed": d <= crit,
@@ -90,6 +102,7 @@ def chisq_drift(clips: Optional[DataFrame], cat_col: str = "codec",
     """Pearson chi-square of each ds partition's category frequencies
     against the baseline partition's.  ``hist`` short-circuits the
     aggregation with precomputed (ds, category, n) rows."""
+    _check_alpha(alpha)
     if hist is None:
         hist = (clips.groupBy("ds", cat_col)
                 .agg(F.count(F.lit(1)).alias("n")).collect())

@@ -7,6 +7,7 @@ the step stays the only copy."""
 import ast
 import os
 import pathlib
+import re
 
 import pyarrow.parquet as pq
 import pytest
@@ -214,8 +215,9 @@ def _calls(rel, name):
 
 def test_one_micro_batch_step():
     """Mining against the carried state and the snapshot cadence exist
-    once, in the step both drivers call, and the mining operator is the
-    only caller of the kernel's ingest outside ``core/``."""
+    once, in the step both drivers call, the mining operator is the
+    only caller of the kernel's ingest outside ``core/``, and the
+    kernel's tree-node format stays inside ``core/``."""
     assert _calls("jobs.py", "mine_templates") \
         + _calls("streaming.py", "mine_templates") == 1
     callers = {p.relative_to(PKG).as_posix(): _calls(p.relative_to(PKG),
@@ -226,3 +228,6 @@ def test_one_micro_batch_step():
             if p.relative_to(PKG).parts[0] != "core"
             and _calls(p.relative_to(PKG), "ingest_tokens")} \
         == {"operators/mining.py"}
+    assert not [p.relative_to(PKG).as_posix() for p in PKG.rglob("*.py")
+                if p.relative_to(PKG).parts[0] != "core"
+                and re.search(r"\b(_CHILD|_IDS)\b", p.read_text())]

@@ -141,10 +141,11 @@ def test_unicode_whitespace_tokenize_parity(spark):
 
 
 def test_sql_match_all_strategies_equal_kernel_deep_tree(spark):
-    """SQL never/fallback must equal the kernel row-for-row on a DEEP
-    tree (depth=6 -> 3 join-unrolled descent levels), exercising numeric
-    wildcard routing, wildcard fallback at inner levels, tree misses,
-    and token counts absent from the bank."""
+    """The SQL ``always`` scan must equal the kernel row-for-row on a
+    DEEP tree (depth=6); the probes exercise numeric wildcard routing,
+    wildcard fallback at inner levels, tree misses, and token counts
+    absent from the bank.  The kernel's ``never`` descent must differ
+    from ``always`` on it, or the corpus would not gate the tree."""
     cfg = EngineConfig(depth=6, mining_salt=1)
     train = []
     for i in range(40):
@@ -156,7 +157,7 @@ def test_sql_match_all_strategies_equal_kernel_deep_tree(spark):
               # probing "job go start" then descends into the exact
               # child's leaf and must MISS under never (the perfect
               # match sits in the wildcard leaf), but hit under
-              # fallback/always (drain3/drain.py:301-314 no-backtracking)
+              # always (drain3/drain.py:301-314 no-backtracking)
               "job 5 start", "job 7 start", "job go stop"]
     res = mine_templates(clips_df(spark, train), cfg)
 
@@ -170,20 +171,24 @@ def test_sql_match_all_strategies_equal_kernel_deep_tree(spark):
     ]
     pdf = clips_df(spark, probe, ds="2026-08-02")
     cluster_rows = [tuple(r) for r in res.clusters.collect()]
-    for strategy in ("never", "fallback", "always"):
-        kern = (match_clusters(pdf, cluster_rows, cfg, strategy=strategy)
-                .orderBy("clip_id").collect())
-        sql = (match_clusters_sql(pdf, res.clusters, cfg, strategy=strategy)
-               .orderBy("clip_id").collect())
-        assert [r.matched_cluster_id for r in sql] == \
-            [r.matched_cluster_id for r in kern], strategy
-    # never differs from always somewhere on this corpus, or the test
-    # wouldn't prove the tree gate
-    never = [r.matched_cluster_id for r in
-             match_clusters_sql(pdf, res.clusters, cfg, strategy="never")
-             .orderBy("clip_id").collect()]
-    always = [r.matched_cluster_id for r in
-              match_clusters_sql(pdf, res.clusters, cfg, strategy="always")
-              .orderBy("clip_id").collect()]
-    assert never != always
+
+    def kernel(strategy):
+        return [r.matched_cluster_id for r in
+                match_clusters(pdf, cluster_rows, cfg, strategy=strategy)
+                .orderBy("clip_id").collect()]
+
+    sql = [r.matched_cluster_id for r in
+           match_clusters_sql(pdf, res.clusters, cfg)
+           .orderBy("clip_id").collect()]
+    always = kernel("always")
+    assert sql == always
+    assert kernel("never") != always
     res.unpersist()
+
+
+def test_match_clusters_rejects_unknown_strategy(spark):
+    """A misspelt strategy is an error, not a silent ``fallback``."""
+    cfg = EngineConfig(mining_salt=1)
+    df = clips_df(spark, ["alpha beta gamma"])
+    with pytest.raises(ValueError, match="Never"):
+        match_clusters(df, [], cfg, strategy="Never")

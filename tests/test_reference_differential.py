@@ -95,14 +95,13 @@ def test_differential_match_kernel(mined, strategy):
     assert [o.matched_cluster_id for o in out] == ref_ids
 
 
-@pytest.mark.parametrize("strategy", ["never", "fallback", "always"])
-def test_differential_match_sql(mined, strategy):
+def test_differential_match_sql(mined):
     rows, tm, ref, cfg, clips, res = mined
     ref_ids = []
     for r in rows:
-        m = tm.match(r["text"], full_search_strategy=strategy)
+        m = tm.match(r["text"], full_search_strategy="always")
         ref_ids.append(m.cluster_id if m is not None else None)
-    out = (match_clusters_sql(clips, res.clusters, cfg, strategy=strategy)
+    out = (match_clusters_sql(clips, res.clusters, cfg)
            .orderBy("ds", "clip_id").collect())
     assert [o.matched_cluster_id for o in out] == ref_ids
 

@@ -12,13 +12,24 @@ from drain3_spark.streaming import run_streaming
 
 
 def test_streaming_equals_batch(spark, tmp_path):
-    """Files arriving as a stream produce the same final cluster state as
-    one batch run (batch/stream symmetry, SURVEY.md §2.B streaming row)."""
+    """Files arriving as a stream produce the same final cluster state,
+    and the same per-clip cluster id, template and change type, as one
+    batch run (batch/stream symmetry, SURVEY.md §2.B streaming row) on a
+    corpus whose clusters merge templates across micro-batches."""
+    import time
+
     clips = FX.gen_clips(spark, 90, n_ds=3, dur_lo=200, dur_hi=400).cache()
     src = str(tmp_path / "incoming")
-    for ds in ("2026-08-01", "2026-08-02", "2026-08-03"):
+    # the file source orders files by mtime: explicit increasing mtimes
+    # keep one micro-batch per ds, in ds order
+    base = time.time()
+    for j, ds in enumerate(("2026-08-01", "2026-08-02", "2026-08-03")):
+        path = f"{src}/f_{ds}"
         clips.filter(F.col("ds") == ds).coalesce(1) \
-            .write.mode("overwrite").parquet(f"{src}/f_{ds}")
+            .write.mode("overwrite").parquet(path)
+        for root, _dirs, files in os.walk(path):
+            for fn in files:
+                os.utime(os.path.join(root, fn), (base + j, base + j))
 
     schema = clips.schema
     run = run_streaming(
@@ -33,10 +44,19 @@ def test_streaming_equals_batch(spark, tmp_path):
     assert hw is not None and key.startswith("stream-")
 
     from drain3_spark.operators.mining import mine_templates
-    batch = mine_templates(clips, EngineConfig())
+    batch = mine_templates(clips, EngineConfig(mining_salt=1))
     want = {(r.group_key, r.template, r.size) for r in batch.clusters.collect()}
     got = {(r[1], r[3], r[4]) for r in rows}
     assert got == want
+
+    def per_clip(df):
+        return {r.clip_id: (r.cluster_id, r.template_mined, r.change_type)
+                for r in df.collect()}
+
+    streamed = per_clip(spark.read.parquet(str(tmp_path / "out" / "assignments")))
+    assert streamed == per_clip(batch.assignments)
+    assert len(streamed) == 90
+    assert "cluster_template_changed" in {v[2] for v in streamed.values()}
     # streamed violations exist per batch
     assert os.path.exists(str(tmp_path / "out" / "violations"))
     batch.unpersist()

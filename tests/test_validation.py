@@ -71,6 +71,16 @@ def test_drift_clean_table_passes(spark):
         assert rec["passed"], rec
 
 
+def test_drift_rejects_untabulated_alpha():
+    """An alpha without a tabulated critical value is an error: it must
+    not be tested at the 0.05 level instead."""
+    hist = [("2026-08-01", 100, 5), ("2026-08-02", 120, 5)]
+    for drift, col in ((ks_drift, "dur_ms"), (chisq_drift, "codec")):
+        with pytest.raises(ValueError, match="alpha"):
+            drift(None, col, alpha=0.001, hist=hist)
+        assert drift(None, col, alpha=0.01, hist=hist)
+
+
 def test_schema_check(spark):
     clips = FX.gen_clips(spark, 10, dirty=False, dur_lo=200, dur_hi=400)
     from drain3_spark.validation.checks import schema_violations
