@@ -37,6 +37,13 @@ def _new_node() -> list:
     return [{}, []]
 
 
+def check_strategy(strategy: str) -> None:
+    """Reject a match strategy other than never / fallback / always."""
+    if strategy not in ("never", "fallback", "always"):
+        raise ValueError(f"unknown match strategy {strategy!r}; expected "
+                         f"'never', 'fallback' or 'always'")
+
+
 def tokenize(content: str, extra_delimiters: Sequence[str] = ()) -> List[str]:
     """Whitespace tokenization after stripping and extra-delimiter
     replacement (reference drain3/drain.py:181-186; ``"".split() == []``)."""
@@ -325,7 +332,7 @@ class TemplateBank:
     def match_tokens(self, tokens: Sequence[str],
                      strategy: str = "never") -> Optional[ClusterRec]:
         """Read-only perfect match (reference drain3/drain.py:427-472)."""
-        assert strategy in ("never", "fallback", "always")
+        check_strategy(strategy)
         if strategy == "always":
             return self._best_of(self._ids_for_token_count(len(tokens)),
                                  tokens, 1.0, include_params=True)

@@ -19,7 +19,8 @@ from __future__ import annotations
 
 from typing import List, Optional, Sequence, Tuple
 
-from drain3_spark.core.kernel import ClusterRec, TemplateBank, _CHILD, _IDS, _new_node
+from drain3_spark.core.kernel import (ClusterRec, TemplateBank, _CHILD, _IDS,
+                                      _new_node, check_strategy)
 
 
 class JaccardBank(TemplateBank):
@@ -131,7 +132,7 @@ class JaccardBank(TemplateBank):
 
     def match_tokens(self, tokens: Sequence[str],
                      strategy: str = "never") -> Optional[ClusterRec]:
-        assert strategy in ("never", "fallback", "always")
+        check_strategy(strategy)
         required = 0.8  # drain3/jaccard_drain.py:209
         first = tokens[0] if tokens else ""
 

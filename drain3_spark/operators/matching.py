@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, functions as F, types as T
 from pyspark.sql.functions import pandas_udf
 
 from drain3_spark.config import EngineConfig
+from drain3_spark.core.kernel import check_strategy
 from drain3_spark.operators.masking import mask_col
 from drain3_spark.operators.tokenize import tokens_col
 
@@ -127,9 +128,7 @@ def match_clusters(df: DataFrame,
     the bank is rebuilt once per task and reused across its Arrow
     batches.  An unknown ``strategy`` raises ``ValueError``.
     """
-    if strategy not in ("never", "fallback", "always"):
-        raise ValueError(f"unknown match strategy {strategy!r}; expected "
-                         f"'never', 'fallback' or 'always'")
+    check_strategy(strategy)
     spark = df.sparkSession
     from drain3_spark.shipping import ship_package
     from drain3_spark.util import widen_small_scan

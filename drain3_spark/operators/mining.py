@@ -4,7 +4,10 @@ Spark lifecycle (SURVEY.md §3.1; semantics per reference
 drain3/drain.py:188-226 and drain3/template_miner.py:134-162):
 
     scan → mask+tokenize (Catalyst, codegen) → derive group key
-        → hash-shuffle on group key                       (one shuffle)
+        → hash-shuffle on group key into defaultParallelism partitions
+          (one shuffle; one Python task per core: each task pays a
+          fixed worker cost, and by default AQE does not coalesce the
+          partitions of a persisted plan)
         → applyInPandas: sequential kernel fold per group (Arrow, persisted)
         → collect the bank cluster rows    (the one action; fills the cache)
         → driver: merge salted banks, renumber new clusters, LRU bound
@@ -212,10 +215,10 @@ def mine_templates(df: DataFrame,
         keyed = keyed.withColumn("token_count", F.size(toks))
     else:
         gnames = ["token_count"] + (["prefix_key"] if len(gcols) > 1 else [])
-    # salt resolution: 0 = auto — make the post-shuffle mining stage's
-    # task count track the cluster, not the corpus's group count (~6-13
-    # distinct token counts on template corpora would otherwise cap it
-    # forever, regardless of cluster size).
+    # salt resolution: 0 = auto — the fold always runs defaultParallelism
+    # tasks; salt only spreads large groups across them (~6-13 distinct
+    # token counts on template corpora would otherwise leave some of
+    # those tasks with one huge group and others idle).
     # salt = ceil(2*parallelism / est_groups) so groups*salt ≈ 2x cores.
     # Corpora that already have many groups resolve to salt=1 and skip
     # the merge pass entirely.  The group-count estimate is:
@@ -346,8 +349,14 @@ def mine_templates(df: DataFrame,
                  token_count=len(rec.tokens), routing=" ".join(rec.routing))
         return pd.DataFrame(out, columns=out_schema.names)
 
-    # groupBy+applyInPandas inserts exactly one hash Exchange on the key
+    # one Python task per core: the fold is persisted, and AQE does not
+    # coalesce a cached plan's shuffle partitions (spark.sql.optimizer.
+    # canChangeCachedPlanOutputPartitioning is off by default), so a bare
+    # groupBy would run spark.sql.shuffle.partitions tasks, each paying
+    # the Python worker's fixed per-task cost.  The groupBy reuses this
+    # hash partitioning: still one Exchange.
     folded = (keyed
+              .repartition(spark.sparkContext.defaultParallelism, *gnames)
               .groupBy(*gnames)
               .applyInPandas(fold_group, schema=out_schema)
               .persist())

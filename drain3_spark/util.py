@@ -4,8 +4,9 @@ from __future__ import annotations
 
 from typing import Sequence, Union
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 def local_df(spark: SparkSession, rows: Sequence[tuple],
@@ -16,18 +17,23 @@ def local_df(spark: SparkSession, rows: Sequence[tuple],
     plan: EVERY re-evaluation (each action over a join/union that
     references it) pays python-worker round-trips per partition — a
     7x7-row cross join of two such frames measured ~8 s at local[32].
-    Routing the same rows through a pandas DataFrame plans them as
-    Arrow-backed local data instead (~0.2 s for the same join).  Use for
-    every driver-created table that participates in a join or union
-    (report grids, cluster id maps, prior-state pass-throughs).
+    Handing the same rows over as a ``pyarrow.Table`` plans them as
+    Arrow-backed local data (``LocalTableScan``; ~0.2 s for the same
+    join) under any session: unlike pandas input, a table takes the
+    Arrow path whatever ``spark.sql.execution.arrow.pyspark.enabled``
+    says.  Use for every driver-created table that participates in a
+    join or union (report grids, cluster id maps, prior-state
+    pass-throughs).
     """
     if isinstance(schema, str):
         schema = T._parse_datatype_string(schema)
-    names = [f.name for f in schema.fields]
-    pdf = pd.DataFrame(list(rows), columns=names, dtype=object)
-    # object dtype keeps None as None (no NaN coercion); Spark casts
-    # per-column to the declared schema during Arrow conversion
-    return spark.createDataFrame(pdf, schema=schema)
+    # naive datetimes are read as UTC instants
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(cols, arrow_schema)],
+        schema=arrow_schema)
+    return spark.createDataFrame(table, schema=schema)
 
 
 def widen_small_scan(df: DataFrame) -> DataFrame:

@@ -1,6 +1,9 @@
 """Golden tests for the Jaccard kernel — expectations copied from the
 reference suite (/root/reference/tests/test_jaccard_drain.py)."""
 
+import pytest
+
+from drain3_spark.core.kernel import TemplateBank
 from drain3_spark.core.kernel_jaccard import JaccardBank
 
 SSH_LINES = [
@@ -145,3 +148,15 @@ def test_from_state_legacy_rows_without_routing():
     bank = TemplateBank.from_state(rows, counter=1)
     assert bank.registry[1].routing == ("user", "<*>", "logged", "in")
     assert bank.match("user u9 logged in", "fallback") is not None
+
+
+@pytest.mark.parametrize("bank_cls", [TemplateBank, JaccardBank])
+def test_match_rejects_unknown_strategy(bank_cls):
+    """A misspelt strategy is an error, not a silent ``fallback``, on
+    both kernel banks (``python -O`` would drop an ``assert``)."""
+    bank = bank_cls(depth=5)
+    for line in ("job 5 start", "job 7 start", "job go stop"):
+        bank.ingest(line)
+    assert bank.match("job go start", "never") is None
+    with pytest.raises(ValueError, match="Never"):
+        bank.match("job go start", "Never")

@@ -192,3 +192,36 @@ def test_match_clusters_rejects_unknown_strategy(spark):
     df = clips_df(spark, ["alpha beta gamma"])
     with pytest.raises(ValueError, match="Never"):
         match_clusters(df, [], cfg, strategy="Never")
+
+
+def test_local_tables_plan_local_scan_without_arrow_conf(spark):
+    """``local_df`` and the candidate side of ``match_clusters_sql`` plan
+    a ``LocalTableScan``, not a Python-RDD scan, even when the session
+    leaves pandas-to-Arrow conversion off."""
+    from drain3_spark.util import local_df
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        cands = local_df(
+            spark, [(3, [(0, 1, "a <*> c"), (1, None, None)]), (None, None)],
+            "_cands_tc long, "
+            "_cands array<struct<rank:int,cid:long,template:string>>")
+        assert "LocalTableScan" in plan(cands)
+        assert cands.collect()[0]._cands[1].template is None
+        empty = local_df(spark, [], "a long, b string")
+        assert "LocalTableScan" in plan(empty) and empty.collect() == []
+
+        cfg = EngineConfig(mining_salt=1)
+        df = clips_df(spark, SSH_LINES)
+        res = mine_templates(df, cfg)
+        matched = plan(match_clusters_sql(df, res.clusters, cfg))
+        assert "LocalTableScan [_cands_tc" in matched
+        assert "ExistingRDD[_cands_tc" not in matched
+        res.unpersist()
+    finally:
+        spark.conf.set(key, before)
