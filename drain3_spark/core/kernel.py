@@ -1,9 +1,9 @@
 """Sequential template-mining kernel.
 
 This is the per-group compute kernel that runs *inside* an Arrow
-``applyInPandas`` task (see drain3_spark.operators.mining).  Spark owns all
-distribution: rows are hash-partitioned by the mining group key and each
-group is folded sequentially here, which reproduces the reference
+``mapInArrow`` task (see drain3_spark.operators.mining).  Spark owns all
+distribution: rows are hash-partitioned by the mining group key, sorted,
+and each group is folded sequentially here, which reproduces the reference
 algorithm's semantics exactly per group (groups never interact in the
 reference either — the first parse-tree level is the token count,
 reference drain3/drain.py:288-290).

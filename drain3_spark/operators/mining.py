@@ -8,7 +8,9 @@ drain3/drain.py:188-226 and drain3/template_miner.py:134-162):
           (one shuffle; one Python task per core: each task pays a
           fixed worker cost, and by default AQE does not coalesce the
           partitions of a persisted plan)
-        → applyInPandas: sequential kernel fold per group (Arrow, persisted)
+        → sort within partitions on (group key, order key)       (JVM)
+        → mapInArrow: one Python call per task folds the stream of
+          Arrow batches, one kernel bank per run of a group key (persisted)
         → collect the bank cluster rows    (the one action; fills the cache)
         → driver: merge salted banks, renumber new clusters, LRU bound
         → cluster table as a local relation                     (no job)
@@ -41,6 +43,7 @@ from dataclasses import dataclass
 from typing import List, Optional, Sequence
 
 from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 logger = logging.getLogger(__name__)
 
@@ -215,6 +218,8 @@ def mine_templates(df: DataFrame,
         keyed = keyed.withColumn("token_count", F.size(toks))
     else:
         gnames = ["token_count"] + (["prefix_key"] if len(gcols) > 1 else [])
+    # the bank's group_key joins the group-key columns before the salt
+    n_key = len(gnames)
     # salt resolution: 0 = auto — the fold always runs defaultParallelism
     # tasks; salt only spreads large groups across them (~6-13 distinct
     # token counts on template corpora would otherwise leave some of
@@ -261,31 +266,23 @@ def mine_templates(df: DataFrame,
     bank_max_clusters = None if salted else cfg.max_clusters
     extra_delims = tuple(cfg.extra_delimiters)
     out_schema = _fold_schema(df, order_cols)
+    arrow_schema = to_arrow_schema(out_schema)
 
-    def fold_group(pdf):
-        import pandas as pd
+    def fold_partition(batches):
+        import pyarrow as pa
 
-        pdf = pdf.sort_values(order_cols, kind="mergesort")
-        if "first_token" in pdf.columns:
-            gkey_parts = [str(pdf.iloc[0]["first_token"])]
-        else:
-            gkey_parts = [str(pdf.iloc[0]["token_count"])]
-            if "prefix_key" in pdf.columns:
-                gkey_parts.append(str(pdf.iloc[0]["prefix_key"]))
-        group_key = KEY_SEP.join(gkey_parts)
-        group_token_count = int(pdf.iloc[0]["token_count"])
+        # tokenize in-task from the masked string (kernel.tokenize is
+        # parity-locked to the Catalyst tokenizer): the shuffle moved
+        # one string per row instead of a list<string> column
+        from drain3_spark.core.kernel import tokenize as _tokenize
 
-        bank = make_bank(cfg, [r for r in bc_prior.value if r[1] == group_key],
-                         bank_max_clusters)
-        prior_ids = set(bank.registry.keys())
-
-        def ref_of(rec: ClusterRec) -> str:
-            return f"g:{rec.cid}" if rec.cid in prior_ids else f"n:{rec.created_key}"
-
+        prior_by_group: dict = {}
+        for r in bc_prior.value:
+            prior_by_group.setdefault(r[1], []).append(r)
         out = {name: [] for name in out_schema.names}
 
-        def emit(kind, ovals, ckey, cref, change, size, template, updated_key,
-                 token_count=None, routing=""):
+        def emit(kind, ovals, ckey, cref, change, size, template, token_count,
+                 updated_key, routing=""):
             out["row_kind"].append(kind)
             for c, v in zip(order_cols, ovals):
                 out[c].append(v)
@@ -295,19 +292,27 @@ def mine_templates(df: DataFrame,
             out["size"].append(size)
             out["template"].append(template)
             out["group_key"].append(group_key)
-            out["token_count"].append(group_token_count
-                                       if token_count is None else int(token_count))
+            out["token_count"].append(token_count)
             out["updated_key"].append(updated_key)
             out["routing"].append(routing)
 
-        ovals_cols = [pdf[c].tolist() for c in order_cols]
-        ckeys = pdf["ckey"].tolist()
-        # tokenize in-UDF from the masked string (kernel.tokenize is
-        # parity-locked to the Catalyst tokenizer): the shuffle moved
-        # one string per row instead of a list<string> column
-        from drain3_spark.core.kernel import tokenize as _tokenize
-        delims = extra_delims
-        masked_list = pdf["masked"].tolist()
+        def ref_of(rec: ClusterRec) -> str:
+            return f"g:{rec.cid}" if rec.cid in prior_ids else f"n:{rec.created_key}"
+
+        def emit_bank():
+            for rec in bank.registry.values():
+                emit("c", first_ovals, rec.created_key, ref_of(rec), "",
+                     int(rec.size), rec.template, len(rec.tokens),
+                     rec.updated_key, " ".join(rec.routing))
+
+        def flush():
+            batch = pa.RecordBatch.from_arrays(
+                [pa.array(out[f.name], type=f.type) for f in arrow_schema],
+                schema=arrow_schema)
+            for col in out.values():
+                col.clear()
+            return batch
+
         # Exact-repeat fast path (drain engine): an ingest whose
         # change_type is "none" mutates nothing the tree search reads
         # (leaf id lists only grow on cluster_created; template tokens
@@ -321,44 +326,67 @@ def mine_templates(df: DataFrame,
         # probe (the sequential fold is the mining job's hot loop).
         # The jaccard bank keeps its own structures — no fast path.
         use_memo = cfg.engine != "jaccard"
-        memo: dict = {}
-        for i in range(len(pdf)):
-            mstr = masked_list[i]
-            hit = memo.get(mstr) if use_memo else None
-            if hit is not None:
-                rec, tmpl = hit
-                bank.record_hit(rec, ckeys[i])
-                emit("a", [col[i] for col in ovals_cols], ckeys[i],
-                     ref_of(rec), "none", int(rec.size), tmpl, ckeys[i])
-                continue
-            tokens = _tokenize(mstr, delims)
-            r = bank.ingest_tokens(tokens, order_key=ckeys[i])
-            rec = bank.registry[r["cluster_id"]]
-            if use_memo:
-                if r["change_type"] == "none":
-                    memo[mstr] = (rec, r["template_mined"])
-                else:
-                    memo.clear()
-            emit("a", [col[i] for col in ovals_cols], ckeys[i], ref_of(rec),
-                 r["change_type"], int(r["cluster_size"]), r["template_mined"], ckeys[i])
-
-        first_ovals = [col[0] for col in ovals_cols]
-        for rec in bank.registry.values():
-            emit("c", first_ovals, rec.created_key, ref_of(rec), "",
-                 int(rec.size), rec.template, rec.updated_key,
-                 token_count=len(rec.tokens), routing=" ".join(rec.routing))
-        return pd.DataFrame(out, columns=out_schema.names)
+        run = bank = None
+        # rows arrive sorted by (group key, order key): each run of one
+        # group key is one bank, folded in order; the bank and its memo
+        # carry across Arrow batch boundaries
+        for batch in batches:
+            ovals_cols = [batch.column(c).to_pylist() for c in order_cols]
+            ckeys = batch.column("ckey").to_pylist()
+            masked_list = batch.column("masked").to_pylist()
+            token_counts = batch.column("token_count").to_pylist()
+            keys = list(zip(*[batch.column(g).to_pylist() for g in gnames]))
+            for i, key in enumerate(keys):
+                if key != run:
+                    if bank is not None:
+                        emit_bank()
+                    run = key
+                    group_key = KEY_SEP.join(str(v) for v in key[:n_key])
+                    group_token_count = int(token_counts[i])
+                    first_ovals = [col[i] for col in ovals_cols]
+                    bank = make_bank(cfg, prior_by_group.get(group_key, ()),
+                                     bank_max_clusters)
+                    prior_ids = set(bank.registry.keys())
+                    memo: dict = {}
+                mstr = masked_list[i]
+                hit = memo.get(mstr) if use_memo else None
+                if hit is not None:
+                    rec, tmpl = hit
+                    bank.record_hit(rec, ckeys[i])
+                    emit("a", [col[i] for col in ovals_cols], ckeys[i],
+                         ref_of(rec), "none", int(rec.size), tmpl,
+                         group_token_count, ckeys[i])
+                    continue
+                r = bank.ingest_tokens(_tokenize(mstr, extra_delims),
+                                       order_key=ckeys[i])
+                rec = bank.registry[r["cluster_id"]]
+                if use_memo:
+                    if r["change_type"] == "none":
+                        memo[mstr] = (rec, r["template_mined"])
+                    else:
+                        memo.clear()
+                emit("a", [col[i] for col in ovals_cols], ckeys[i], ref_of(rec),
+                     r["change_type"], int(r["cluster_size"]),
+                     r["template_mined"], group_token_count, ckeys[i])
+            if out["row_kind"]:
+                yield flush()
+        if bank is not None:
+            emit_bank()
+            yield flush()
 
     # one Python task per core: the fold is persisted, and AQE does not
     # coalesce a cached plan's shuffle partitions (spark.sql.optimizer.
-    # canChangeCachedPlanOutputPartitioning is off by default), so a bare
-    # groupBy would run spark.sql.shuffle.partitions tasks, each paying
-    # the Python worker's fixed per-task cost.  The groupBy reuses this
-    # hash partitioning: still one Exchange.
+    # canChangeCachedPlanOutputPartitioning is off by default), so the
+    # Exchange is sized here, not by spark.sql.shuffle.partitions.  The
+    # JVM sort lays each group out as one contiguous run in order-key
+    # order (nulls last, as a pandas sort puts them), so the task folds
+    # a stream of Arrow batches with one Python call: no per-group
+    # pandas frame, and worker memory holds one batch plus the bank
     folded = (keyed
               .repartition(spark.sparkContext.defaultParallelism, *gnames)
-              .groupBy(*gnames)
-              .applyInPandas(fold_group, schema=out_schema)
+              .sortWithinPartitions(*gnames, *[F.col(c).asc_nulls_last()
+                                               for c in order_cols])
+              .mapInArrow(fold_partition, out_schema)
               .persist())
     # the mine's one action: it fills the fold cache with every row (the
     # assignments below scan it, never re-running the fold) and brings

@@ -85,13 +85,15 @@ _PREWARMED: set = set()
 
 
 def _prewarm_python_runners(spark: SparkSession) -> None:
-    """One-time per-session warm of the grouped-map and map-in-pandas
+    """One-time per-session warm of the grouped-map and map-in-batch
     Arrow runners (guide §4.5: heavyweight init once, not inside the
     first operator that needs it).  The first applyInPandas /
     mapInPandas stage of a session otherwise pays JVM Arrow-runner
     setup plus a python-worker handshake (~1-2s at local[32]) inside
-    whatever operator happens to run first — template mining and the
-    audio decode family here."""
+    whatever operator happens to run first.  The grouped-map warm
+    serves the near-dup BLAS blocks of ``audio_dedup`` (``similarity``);
+    the map warm serves the audio decode family and the mining fold,
+    whose ``mapInArrow`` runs on the same map-in-batch runner."""
     app_id = spark.sparkContext.applicationId
     if app_id in _PREWARMED:
         return

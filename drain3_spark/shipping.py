@@ -10,6 +10,8 @@ same mechanism, self-served.
 
 from __future__ import annotations
 
+import atexit
+import contextlib
 import os
 import tempfile
 import zipfile
@@ -40,5 +42,16 @@ def ship_package(spark: SparkSession) -> None:
     sc = spark.sparkContext
     if getattr(sc, _FLAG, False):
         return
-    sc.addPyFile(build_pkg_zip())
+    path = build_pkg_zip()
+    # the driver's file server serves the zip for the session's whole
+    # life, so it is removed only when the process exits
+    atexit.register(_remove, path)
+    sc.addPyFile(path)
     setattr(sc, _FLAG, True)
+
+
+def _remove(path: str) -> None:
+    # a later session in the same process rewrites and re-registers the
+    # same per-process path, so all but the first removal find it gone
+    with contextlib.suppress(FileNotFoundError):
+        os.remove(path)

@@ -18,7 +18,9 @@ Pass structure (scan count matters at 100 TB):
   D. audio decode: one column-pruned pass over ``bytes``, its own
      persisted job (Python workers beside the JVM branches of one job
      thrash); A-C stay lazy and run once, in the action that first
-     reads the violations
+     reads the violations.  The A-D union is cached coalesced to one
+     partition per core (``defaultParallelism``), so each read of it
+     runs one task per core, not one per child partition
   E. drift: one bounded aggregation, the (ds, dur bucket, codec, sr_hz)
      cube, collected to the driver; rows_scanned, the KS and chi-square
      statistics and the histograms fold from it (:func:`drift_pass`,
@@ -277,7 +279,15 @@ class ValidationEngine:
                 if schema_rows:
                     violations = violations.unionByName(
                         local_df(spark, schema_rows, VIOLATION_SCHEMA))
-            violations = violations.persist()
+            # one cached partition per core: the union concatenates its
+            # children's partitions (row-local scan, uniqueness,
+            # referential, audio cache), AQE does not coalesce a cached
+            # plan, and every later read (collect, report) would run one
+            # task per child partition.  coalesce, not repartition: an
+            # Exchange would still run every upstream task
+            violations = (violations
+                          .coalesce(spark.sparkContext.defaultParallelism)
+                          .persist())
             if profiler is not None:
                 # the JVM checks' one job: it fills the violations cache
                 # and credits the checks_jvm in-job counter

@@ -16,6 +16,29 @@ from drain3_spark.shipping import build_pkg_zip
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def test_ship_package_removes_its_zip_at_exit(tmp_path):
+    """``ship_package`` writes its zip into the temp dir and removes it
+    when the process exits, not before: the session serves it until
+    then."""
+    script = (
+        "import os, tempfile\n"
+        "from types import SimpleNamespace\n"
+        "from drain3_spark.shipping import ship_package\n"
+        "added = []\n"
+        "sc = SimpleNamespace(addPyFile=added.append)\n"
+        "ship_package(SimpleNamespace(sparkContext=sc))\n"
+        "ship_package(SimpleNamespace(sparkContext=sc))\n"
+        "assert len(added) == 1 and os.path.isfile(added[0]), added\n"
+        "assert os.path.dirname(added[0]) == tempfile.gettempdir()\n"
+        "print(added[0])\n")
+    env = dict(os.environ, TMPDIR=str(tmp_path), PYTHONPATH=REPO)
+    out = subprocess.run([sys.executable, "-c", script], env=env,
+                         capture_output=True, text=True, timeout=120)
+    assert out.returncode == 0, out.stderr
+    assert out.stdout.strip().startswith(str(tmp_path))
+    assert list(tmp_path.iterdir()) == []
+
+
 @pytest.mark.slow
 def test_spark_submit_py_files_validate_job(spark, tmp_path):
     clips_path = str(tmp_path / "clips")
