@@ -23,6 +23,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from drain3_spark.util import AppScopedCache
+
 SF_DEFAULT = "/root/testdata/sf0.001"
 
 NUM_MASK_PATTERN = r"\d+"          # shared Spark/RE2-safe mask regex
@@ -51,23 +53,20 @@ def _docs_as_clips(spark: SparkSession, sf_dir: str) -> DataFrame:
 # queries measure inference, not a re-mine (mining itself is measured by
 # q6/q26).  The MiningResult's persisted fold is shared, which also
 # means one persist per corpus instead of one per query.
-_MINE_CACHE: dict = {}
+_MINE_CACHE = AppScopedCache()
 
 
 def _mined(spark: SparkSession, sf_dir: str, engine: str = "drain"):
     # keyed by applicationId, not id(spark): a new session after a stop
-    # can reuse the same Python id() and would receive a MiningResult
-    # whose persisted frames belong to the dead JVM session
-    key = (spark.sparkContext.applicationId, sf_dir, engine)
-    res = _MINE_CACHE.get(key)
-    if res is None:
-        from drain3_spark.config import EngineConfig
-        from drain3_spark.operators.mining import mine_templates
-        cfg = (EngineConfig(engine="jaccard") if engine == "jaccard"
-               else EngineConfig(mining_mode="exact", mining_salt=0))
-        res = mine_templates(_docs_as_clips(spark, sf_dir), cfg)
-        _MINE_CACHE[key] = res
-    return res
+    # can reuse the same Python id(), and the old session's MiningResult
+    # holds persisted frames of the dead JVM context
+    from drain3_spark.config import EngineConfig
+    from drain3_spark.operators.mining import mine_templates
+    cfg = (EngineConfig(engine="jaccard") if engine == "jaccard"
+           else EngineConfig(mining_mode="exact", mining_salt=0))
+    return _MINE_CACHE.get(
+        spark, (sf_dir, engine),
+        lambda: mine_templates(_docs_as_clips(spark, sf_dir), cfg))
 
 
 def entry(spark: SparkSession) -> DataFrame:

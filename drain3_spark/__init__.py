@@ -17,6 +17,9 @@ reference is cited in docstrings (file:line) only to anchor semantics.
 """
 
 from drain3_spark.config import EngineConfig, MaskRule
+from drain3_spark.shipping import _reuse_unchanged_zip_directories
+
+_reuse_unchanged_zip_directories()
 
 __all__ = ["EngineConfig", "MaskRule"]
 __version__ = "0.1.0"

@@ -50,7 +50,7 @@ logger = logging.getLogger(__name__)
 from drain3_spark.config import EngineConfig
 from drain3_spark.core.kernel import ClusterRec, TemplateBank
 from drain3_spark.operators.masking import mask_col
-from drain3_spark.util import local_df
+from drain3_spark.util import AppScopedCache, local_df
 from drain3_spark.operators.tokenize import group_key_cols, tokens_col
 
 KEY_SEP = "\x1f"
@@ -133,27 +133,19 @@ class MiningResult:
         self.raw.unpersist()
 
 
-_GROUP_EST_CACHE: dict = {}
+_GROUP_EST_CACHE = AppScopedCache()
 
 
 def _estimate_groups(keyed: DataFrame, gnames: Sequence[str]) -> int:
     """Bounded-prefix group-count estimate, memoized per (application,
     logical plan).  It is an ESTIMATE feeding only the salt choice, so a
     scanned path whose files changed under an unchanged plan returning a
-    stale count is harmless — but a new session must not inherit entries
-    bound to a dead JVM, hence the applicationId in the key."""
+    stale count is harmless; a new application drops the old one's
+    entries (``AppScopedCache``)."""
     proj = keyed.select(*gnames)
-    try:
-        cache_key = (keyed.sparkSession.sparkContext.applicationId,
-                     proj.semanticHash())
-    except Exception:
-        cache_key = None
-    if cache_key is not None and cache_key in _GROUP_EST_CACHE:
-        return _GROUP_EST_CACHE[cache_key]
-    est = max(1, proj.limit(50000).distinct().count())
-    if cache_key is not None:
-        _GROUP_EST_CACHE[cache_key] = est
-    return est
+    return _GROUP_EST_CACHE.get(
+        keyed.sparkSession, (proj.semanticHash(),),
+        lambda: max(1, proj.limit(50000).distinct().count()))
 
 
 def _fold_schema(df: DataFrame, order_cols: Sequence[str]) -> T.StructType:

@@ -2,9 +2,14 @@
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+from drain3_spark.util import AppScopedCache
+
+logger = logging.getLogger(__name__)
 
 
 def get_spark(app_name: str = "drain3_spark",
@@ -81,11 +86,11 @@ def get_spark(app_name: str = "drain3_spark",
     return spark
 
 
-_PREWARMED: set = set()
+_PREWARMED = AppScopedCache()
 
 
 def _prewarm_python_runners(spark: SparkSession) -> None:
-    """One-time per-session warm of the grouped-map and map-in-batch
+    """One-time per-application warm of the grouped-map and map-in-batch
     Arrow runners (guide §4.5: heavyweight init once, not inside the
     first operator that needs it).  The first applyInPandas /
     mapInPandas stage of a session otherwise pays JVM Arrow-runner
@@ -93,18 +98,29 @@ def _prewarm_python_runners(spark: SparkSession) -> None:
     whatever operator happens to run first.  The grouped-map warm
     serves the near-dup BLAS blocks of ``audio_dedup`` (``similarity``);
     the map warm serves the audio decode family and the mining fold,
-    whose ``mapInArrow`` runs on the same map-in-batch runner."""
-    app_id = spark.sparkContext.applicationId
-    if app_id in _PREWARMED:
-        return
-    _PREWARMED.add(app_id)
+    whose ``mapInArrow`` runs on the same map-in-batch runner.  Both
+    call ``_same`` by reference, so each warmed worker imports the
+    package and its cheap import-cache reset (``shipping``) before its
+    first engine task."""
+    _PREWARMED.get(spark, (), lambda: _warm_runners(spark))
+
+
+def _same(x):
+    return x
+
+
+def _warm_runners(spark: SparkSession) -> bool:
+    from pyspark.sql import functions as F
     try:
-        from pyspark.sql import functions as F
         n = max(min(spark.sparkContext.defaultParallelism, 32), 1)
         df = spark.range(n * 2, numPartitions=n).select(
             (F.col("id") % n).alias("k"), "id")
-        df.groupBy("k").applyInPandas(lambda pdf: pdf,
-                                      "k long, id long").count()
-        df.mapInPandas(lambda it: it, "k long, id long").count()
-    except Exception:  # pragma: no cover - warm is best-effort
-        pass
+        df.groupBy("k").applyInPandas(_same, "k long, id long").count()
+        df.mapInPandas(_same, "k long, id long").count()
+    except Exception as e:
+        # the warm is an optimization: the first Python stage then pays
+        # the runner start-up itself
+        logger.warning("Python runner prewarm failed (%s: %s); the first "
+                       "Python stage starts the runners", type(e).__name__, e,
+                       exc_info=True)
+    return True

@@ -2,7 +2,8 @@
 
 from __future__ import annotations
 
-from typing import Sequence, Union
+import threading
+from typing import Callable, Sequence, Union
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, types as T
@@ -54,13 +55,36 @@ def widen_small_scan(df: DataFrame) -> DataFrame:
     shuffle it does add on small inputs moves only the small input
     itself.  Operators that consume this remain order-insensitive
     (mining sorts per group on the order key; set/count aggregations are
-    partition-invariant), so results are identical either way."""
+    partition-invariant), so results are identical either way.  A
+    streaming frame has no static partitioning and comes back as is."""
+    if df.isStreaming:
+        return df
     target = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        n = df.rdd.getNumPartitions()
-    except Exception:
-        return df  # e.g. streaming DataFrames: no static partitioning
-    return df.repartition(target) if n < target else df
+    return df.repartition(target) if df.rdd.getNumPartitions() < target else df
+
+
+class AppScopedCache:
+    """A process-global memo that holds only the live Spark application's
+    entries: keys are ``(applicationId, *key)``, and a lookup under a new
+    application first drops every entry of an older one, whose values
+    (persisted frames, plan-bound counts) belong to a stopped context.
+    One lock guards the dict and ``make``, so concurrent driver threads
+    never see it half-pruned and each key is made once (a second
+    ``MiningResult`` would hold a persisted frame nothing releases)."""
+
+    def __init__(self) -> None:
+        self.entries: dict = {}
+        self._lock = threading.Lock()
+
+    def get(self, spark: SparkSession, key: tuple, make: Callable):
+        app = spark.sparkContext.applicationId
+        full = (app, *key)
+        with self._lock:
+            for k in [k for k in self.entries if k[0] != app]:
+                del self.entries[k]
+            if full not in self.entries:
+                self.entries[full] = make()
+            return self.entries[full]
 
 
 def carry_schema(base: "T.StructType", df: "DataFrame",
