@@ -14,9 +14,9 @@ bucket space of ``lsh_bands * 2**lsh_bits`` keys that grows with a
 real knob, unlike a top-mel-band key whose cardinality is capped at
 ``n_mels`` regardless of corpus size; see :func:`audio_near_dup_pairs`
 for the sizing recipe), and the family's one exact cosine
-verify — :func:`drain3_spark.pipeline.similarity._verify_pairs`
-(Catalyst expressions) or ``_blas_pairs_by_block`` (one BLAS task per
-bucket, string clip ids passed straight through) — candidate-bounded
+verify — :func:`drain3_spark.pipeline.similarity._verify_pairs`, a
+block stream that scores each bucket's pairs in one ``mapInArrow`` task
+per core, string clip ids passed straight through — candidate-bounded
 at any corpus size.
 
 Key invariances of the embedding (measured, pinned by tests):
@@ -32,7 +32,6 @@ Key invariances of the embedding (measured, pinned by tests):
 
 from __future__ import annotations
 
-import operator
 from typing import Dict, Optional, Tuple
 
 import numpy as np
@@ -374,38 +373,23 @@ def audio_near_dup_pairs(clips: DataFrame, threshold: float = 0.999,
     band bucket — the hot-band pathology of a peak key (pinned by
     ``test_audio_lsh_hot_band_bounded``).
 
-    Verification is the exact per-pair cosine: ``method="catalyst"``
-    (default) as a pure expression; ``method="blas"`` one Gram-matrix
-    Arrow task per bucket.  Gain-adjusted,
-    re-encoded, noise-perturbed, and RESAMPLED copies of a clip are all
-    found (embedding invariances, module docstring)."""
-    # the decode+FFT embedding pass AND the bucket-assignment UDF feed
-    # BOTH sides of the candidate self-join — Catalyst does not reuse
-    # exchanges across DAG branches, so persist at the ASSIGNED
-    # boundary: one decode pass and one LSH pass total, instead of one
-    # decode (via an embedding-level persist) but two bucket-UDF
-    # executions
-    from drain3_spark.pipeline.dedup import _SharedScope
-    from drain3_spark.pipeline.similarity import (_blas_pairs_by_block,
-                                                  _verify_pairs)
-    scope = _SharedScope()
-    assigned = scope.share(
-        _embed_assigned(clips, n_mels, frame_ms, hop_ms, f_lo, f_hi,
-                        lsh_bits, lsh_bands, lsh_seed))
-    e = assigned.select(F.col("clip_id").alias("id"),
-                        F.col("bucket").alias("blk"), "vec")
-
-    if method == "blas":
-        pairs = (_blas_pairs_by_block(e, threshold)
-                 .dropDuplicates(["id_a", "id_b"]))
-        return scope.attach(pairs.select(F.col("id_a").alias("clip_id_a"),
-                                         F.col("id_b").alias("clip_id_b"),
-                                         "cosine"))
-
-    from drain3_spark.util import widen_small_scan
-    e = widen_small_scan(e)
-    return scope.attach(_verify_pairs(e, e, threshold, operator.lt,
-                                      ("clip_id_a", "clip_id_b")))
+    Verification is the exact per-pair cosine of
+    :func:`drain3_spark.pipeline.similarity._verify_pairs`: one block
+    stream over the ``(clip, band)`` rows, in which each embedding
+    crosses the shuffle once and each bucket's pairs are scored in one
+    pass.  ``method="catalyst"`` (default) folds each dot in Spark's
+    order; ``method="blas"`` takes it from a Gram product.  A silent
+    clip's all-zero embedding has no cosine and pairs with nothing.
+    Gain-adjusted, re-encoded, noise-perturbed, and RESAMPLED copies of
+    a clip are all found (embedding invariances, module docstring)."""
+    from drain3_spark.pipeline.similarity import _verify_pairs
+    # the embedding pass has one consumer, the verify's block stream
+    e = (_embed_assigned(clips, n_mels, frame_ms, hop_ms, f_lo, f_hi,
+                         lsh_bits, lsh_bands, lsh_seed)
+         .select(F.col("clip_id").alias("id"), F.col("bucket").alias("blk"),
+                 "vec"))
+    return _verify_pairs(e, threshold, ("clip_id_a", "clip_id_b"),
+                         method=method)
 
 
 # -------------------------------------------------- incremental dedup
@@ -442,30 +426,29 @@ def audio_incremental_duplicates(new_clips: DataFrame, index: DataFrame,
     """Near-duplicates of a NEW clip batch against an EXISTING corpus,
     touched only through its embedding index — the incremental shape a
     continuously-growing audio corpus needs.  Per-batch cost is
-    O(new_batch + candidates), never O(corpus): the corpus is neither
-    re-decoded nor re-embedded, and the verify cosine reads the
-    embedding straight off the matched index row (no payload
-    semi-join).  Returns ``(new_id, old_id, cosine)`` with the same
-    exact-cosine verify semantics as :func:`audio_near_dup_pairs`.
+    O(new_batch + touched blocks), never O(corpus): the corpus is
+    neither re-decoded nor re-embedded, only the index rows of the
+    buckets the batch touches are shuffled, and the verify cosine reads
+    the embedding straight off the index row (no payload semi-join).
+    Returns ``(new_id, old_id, cosine)`` with the same exact-cosine
+    verify semantics as :func:`audio_near_dup_pairs`.
 
     The index's ``n_mels``/frame AND LSH parameters
     (``lsh_bits``/``lsh_bands``/``lsh_seed``) must match the arguments
     here — bucket ids and embedding dimensions are only comparable
     within one parameterization."""
     from drain3_spark.pipeline.similarity import _verify_pairs
-    from drain3_spark.util import widen_small_scan
 
-    new_idx = widen_small_scan(
-        audio_embedding_index(new_clips, n_mels, frame_ms, hop_ms,
-                              f_lo, f_hi, lsh_bits, lsh_bands, lsh_seed))
+    new_idx = audio_embedding_index(new_clips, n_mels, frame_ms, hop_ms,
+                                    f_lo, f_hi, lsh_bits, lsh_bands, lsh_seed)
 
     def side(idx: DataFrame) -> DataFrame:
         return idx.select(F.col("clip_id").alias("id"),
                           F.col("bucket").alias("blk"),
                           F.col("embedding").alias("vec"))
 
-    return _verify_pairs(side(new_idx), side(index), threshold, operator.ne,
-                         ("new_id", "old_id"))
+    return _verify_pairs(side(new_idx), threshold, ("new_id", "old_id"),
+                         index=side(index))
 
 
 # --------------------------------------------------------- transformations

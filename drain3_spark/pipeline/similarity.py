@@ -14,18 +14,20 @@
 * cosine near-dup pairs within blocks (embedding dedup).  Every near-dup
   operator — labeled, self-blocking, and the audio operators in
   :mod:`drain3_spark.pipeline.audio_sim` — blocks its candidates its own
-  way and then runs ONE exact verify: :func:`_verify_pairs` (Catalyst
-  expressions, bit-reproducible against the DuckDB oracle) or
-  :func:`_blas_pairs_by_block` (one Gram-matrix Arrow task per block).
+  way and then runs ONE exact verify, :func:`_verify_pairs`: a block
+  stream (hash-partitioned on the block, sorted, one ``mapInArrow``
+  task per core) that scores each block's pairs in numpy, with the
+  dot folded in Spark's order and the rounded cosine left to Catalyst,
+  so it stays bit-reproducible against the DuckDB oracle.  Its
+  ``method="blas"`` mode takes the dot from a Gram product instead.
 """
 
 from __future__ import annotations
 
-import operator
-from typing import Callable, Sequence, Tuple
+from typing import Optional, Sequence, Tuple
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F
+import numpy as np
+from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -170,26 +172,17 @@ def cosine_near_dup_pairs_auto(embeddings: DataFrame, threshold: float = 0.95,
     exact and identical to the blocked-brute-force operator, so
     precision is 1 by construction.
 
-    ``method="catalyst"`` (default) evaluates per-pair cosines as pure
-    expressions — bit-reproducible against the DuckDB oracle.
-    ``method="blas"`` is the scale path: each bucket's pairs come out of
-    one Gram-matrix Arrow task (:func:`_blas_pairs_by_block`), then the
-    cross-probe duplicates are dropped; same pairs, cosines agree to
-    float tolerance (pinned by
+    ``method`` picks the verify's dot (:func:`_verify_pairs`):
+    ``"catalyst"`` (default) folds it in Spark's order, bit-reproducible
+    against the DuckDB oracle; ``"blas"`` takes it from a normalized
+    Gram product, with cosines that agree to float tolerance (pinned by
     ``test_auto_near_dup_blas_matches_catalyst``).
     """
     assigned = assign_ivf_buckets_multiprobe(embeddings, num_centroids,
                                              probes, id_col, vec_col)
     e = assigned.select(F.col(id_col).alias("id"),
                         F.col("bucket").alias("blk"), "vec")
-    if method == "blas":
-        return (_blas_pairs_by_block(e, threshold)
-                .dropDuplicates(["id_a", "id_b"]))
-    # the per-pair cosine is an interpreted HOF expression: widen a
-    # one-partition scan (no-op at scale, see widen_small_scan)
-    from drain3_spark.util import widen_small_scan
-    e = widen_small_scan(e)
-    return _verify_pairs(e, e, threshold, operator.lt)
+    return _verify_pairs(e, threshold, method=method)
 
 
 def ivf_topk(embeddings: DataFrame, query: Sequence[float], k: int = 10,
@@ -214,106 +207,239 @@ def ivf_topk(embeddings: DataFrame, query: Sequence[float], k: int = 10,
             .limit(k))
 
 
-def _verify_pairs(a: DataFrame, b: DataFrame, threshold: float,
-                  pair: Callable[[Column, Column], Column],
-                  names: Tuple[str, str] = ("id_a", "id_b")) -> DataFrame:
-    """The exact Catalyst cosine verify of every near-dup operator: join
-    the ``(id, blk, vec)`` sides ``a`` and ``b`` on ``blk`` where
-    ``pair(id_a, id_b)`` holds (``operator.lt`` for a self-join,
-    ``operator.ne`` for batch-vs-index), keep the pairs whose rounded
-    cosine reaches ``threshold``, and return one slim
-    ``(names[0], names[1], cosine)`` row per id pair.
+#: pair-grid cells one kernel step scores: a chunk of a block's rows
+#: meets at most this many partner rows, so a hot block's working set
+#: stays a few MiB however large the block grows
+_CHUNK_CELLS = 1 << 18
 
-    * Norms are per-ROW quantities, computed once on each side, so each
-      candidate pair evaluates the dot fold alone.  dot/(norm_a*norm_b)
-      over the SAME doubles is bit-identical to the inlined cosine — no
-      float reassociation, so the rounded cosine (and the oracle hash)
-      cannot move.
-    * The threshold sits in the join condition: candidates die inside
-      the join operator and only survivors leave it.
+
+def _verify_pairs(a: DataFrame, threshold: float,
+                  names: Tuple[str, str] = ("id_a", "id_b"),
+                  index: Optional[DataFrame] = None,
+                  method: str = "catalyst") -> DataFrame:
+    """The one exact cosine verify of every near-dup operator.
+
+    ``a`` (and ``index``) hold ``(id, blk, vec)`` rows.  Without
+    ``index``, ``a`` is paired with itself within each ``blk`` where
+    ``id_a < id_b``; with ``index``, each ``a`` row is paired with the
+    ``index`` rows of its block where ``id_a != id_b``.  A pair is kept
+    when ``round(dot / (nrm_a * nrm_b), 6) >= threshold``, and one
+    ``(names[0], names[1], cosine)`` row is returned per id pair.
+
+    One block stream: the rows are hash-partitioned on ``blk`` into one
+    task per core and sorted on ``(blk, id)``, and one ``mapInArrow``
+    call per task scores every pair of each contiguous ``blk`` run in
+    numpy (:func:`_block_stream`).  Each vector crosses the Exchange and
+    the Arrow boundary once, however many candidate pairs it is in.  The
+    ``index`` side is first semi-joined to the blocks ``a`` touches, so a
+    batch shuffles O(batch + touched blocks), not the corpus.  The
+    touched blocks are read off ``a``'s own Exchange, so ``a`` (an
+    embedding, say) is still evaluated once.
+
+    * ``method="catalyst"`` folds the dot and the squared norms in
+      Spark's order, ``acc = acc + x[d] * y[d]`` from ``acc = 0.0``,
+      vectorized across pairs: ``dot``, ``nrm_a`` and ``nrm_b`` are the
+      doubles the ``aggregate(zip_with(...))`` expressions give.  The
+      division, the rounding and the threshold stay in Catalyst, so the
+      cosines are bit-identical to the expression form and to the
+      DuckDB oracle.  The kernel emits only the pairs whose cosine could
+      round up to ``threshold`` or is NaN.
+    * ``method="blas"`` scores each block with the chunked normalized
+      Gram product (BLAS); its cosines agree to float tolerance.
+    * A pair without a cosine is dropped, not scored: a NULL vector,
+      vectors of different lengths or a NULL element (the expression's
+      dot is NULL), and a zero norm product, as for an all-zero vector
+      (the division has no value, and under ANSI mode it raises
+      ``DIVIDE_BY_ZERO``).  A NaN cosine passes any threshold, since
+      Spark orders NaN above every number.
+    * Ids compare in Spark's order (the JVM sort orders them: UTF-8
+      bytes for strings), and the output keeps the input id type.
     * A pair that shares several blocks (multi-probe IVF buckets, LSH
-      bands) is deduplicated AFTER the threshold, on the slim rows.
-      Deduplicating the raw candidates shuffled every pair WITH both
-      vectors attached (guide §2.3: shuffle keys, not payloads —
-      measured 736 s for q38 on a 20k-vector corpus).  Every occurrence
-      of a pair yields the same cosine, so the row set is identical.
+      bands) is deduplicated after the threshold, on the slim rows;
+      every occurrence has the same cosine.
     """
+    if method not in ("catalyst", "blas"):
+        raise ValueError(f"unknown verify method {method!r}")
     ia, ib = names
+    spark = a.sparkSession
+    n = spark.sparkContext.defaultParallelism
 
-    def side(df: DataFrame, id_name: str, s: str) -> DataFrame:
-        return df.select(F.col("id").alias(id_name),
-                         F.col("blk").alias(f"_blk_{s}"),
-                         F.col("vec").alias(f"_vec_{s}"),
-                         _norm(F.col("vec")).alias(f"_nrm_{s}"))
+    def blocked(df: DataFrame) -> DataFrame:
+        # one Python task per core, as in the mining fold: the JVM sort
+        # below lays each block out as one contiguous run in id order.
+        # A no-op cast would leave an alias in one consumer's Exchange
+        # only, and the Exchange would not be reused
+        vec = F.col("vec")
+        if df.schema["vec"].dataType.elementType != T.DoubleType():
+            vec = vec.cast("array<double>").alias("vec")
+        return (df.select("id", "blk", vec)
+                .filter(F.col("id").isNotNull() & F.col("blk").isNotNull()
+                        & F.col("vec").isNotNull())
+                .repartition(n, "blk"))
 
-    cosine = F.round(_dot(F.col("_vec_a"), F.col("_vec_b"))
-                     / (F.col("_nrm_a") * F.col("_nrm_b")), 6)
-    return (side(a, ia, "a")
-            .join(side(b, ib, "b"),
-                  (F.col("_blk_a") == F.col("_blk_b"))
-                  & pair(F.col(ia), F.col(ib)) & (cosine >= threshold))
-            .select(ia, ib, cosine.alias("cosine"))
+    rows = blocked(a)
+    cross = index is not None
+    if cross:
+        # the touched blocks are read off a's own Exchange: a distinct
+        # over whole rows keeps every column, so column pruning cannot
+        # slim that Exchange apart from the stream's, and AQE reuses it
+        # (a is evaluated once)
+        touched = F.broadcast(rows.dropDuplicates())
+        rows = (rows.withColumn("side", F.lit(0))
+                .unionByName(blocked(index.join(touched, "blk", "left_semi"))
+                             .withColumn("side", F.lit(1))))
+        # both sides share the hash partitioning, which the union keeps
+        # unless this conf is off
+        if spark.conf.get("spark.sql.unionOutputPartitioning") != "true":
+            rows = rows.repartition(n, "blk")
+    schema = T.StructType(
+        [T.StructField(c, rows.schema["id"].dataType) for c in ("id_a", "id_b")]
+        + [T.StructField(c, T.DoubleType()) for c in ("dot", "nrm_a", "nrm_b")])
+    stream = _block_stream(threshold, cross, method == "blas", _CHUNK_CELLS)
+    scored = rows.sortWithinPartitions("blk", "id").mapInArrow(stream, schema)
+    cosine = F.round(F.col("dot") / (F.col("nrm_a") * F.col("nrm_b")), 6)
+    return (scored.select(F.col("id_a").alias(ia), F.col("id_b").alias(ib),
+                          cosine.alias("cosine"))
+            .filter(F.col("cosine") >= threshold)
             .dropDuplicates([ia, ib]))
 
 
-def _blas_pairs_by_block(e: DataFrame, threshold: float) -> DataFrame:
-    """Gram-matrix near-dup pairs within blocks: ONE shuffle groups each
-    block's ``(id, blk, vec)`` rows into an Arrow task, numpy computes
-    the normalized ``X @ X.T`` (BLAS, dim-vectorized) and emits only
-    above-threshold pairs ``(id_a, id_b, cosine)`` with ``id_a < id_b`` —
-    per-block work is O(n² d) in native code and the quadratic
-    intermediate never leaves the task.  The Gram matrix is computed in
-    ROW CHUNKS so peak allocation is O(chunk x n), not O(n²) — a hot
-    block stays memory-bounded (n=8k with full ``triu_indices`` would
-    transiently allocate ~1 GB of index arrays alone).  The output ids
-    keep the input ``id`` type: numpy sorts strings by code point, which
-    is the UTF-8 byte order of Spark's ``<``.  Shared by the labeled
-    (:func:`cosine_near_dup_pairs`), self-blocking
-    (:func:`cosine_near_dup_pairs_auto`), and audio
-    (:func:`drain3_spark.pipeline.audio_sim.audio_near_dup_pairs`)
-    operators."""
-    import numpy as np
-    from pyspark.sql import types as T
+def _block_stream(threshold: float, cross: bool, blas: bool,
+                  chunk_cells: int):
+    """``mapInArrow`` body of :func:`_verify_pairs`: a task's batches
+    arrive sorted on ``(blk, id)``; each batch's complete ``blk`` runs
+    are scored together (:func:`_score_blocks`), and the run that may go
+    on into the next batch is held back until it ends."""
+    # round(c, 6) >= threshold needs c >= threshold - 5e-7
+    lo = threshold - 1e-6
 
-    id_type = e.schema["id"].dataType
-    out_schema = T.StructType([
-        T.StructField("id_a", id_type),
-        T.StructField("id_b", id_type),
-        T.StructField("cosine", T.DoubleType()),
-    ])
-    th = float(threshold)
+    def stream(batches):
+        open_run, key = [], None
+        for batch in batches:
+            if not batch.num_rows:
+                continue
+            blk = batch.column("blk").to_numpy(zero_copy_only=False)
+            edges = np.flatnonzero(blk[1:] != blk[:-1]) + 1
+            if len(edges):
+                done = open_run + [batch.slice(0, edges[-1])]
+                open_run = [batch.slice(edges[-1])]
+            elif open_run and blk[0] != key:
+                done, open_run = open_run, [batch]
+            else:
+                done = []
+                open_run.append(batch)
+            key = blk[-1]
+            if done:
+                yield score(done)
+        if open_run:
+            yield score(open_run)
 
-    def block_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["id"].to_numpy()
-        order = np.argsort(ids)
-        ids = ids[order]
-        # Arrow hands vec as an object column of ndarrays: stack, don't
-        # round-trip through python lists (measured: the list conversion
-        # dominated the task at 1e5 x 64-dim blocks)
-        X = np.stack(pdf["vec"].to_numpy()[order]).astype(np.float64,
-                                                          copy=False)
-        norms = np.linalg.norm(X, axis=1)
-        norms[norms == 0.0] = 1.0
-        Xn = X / norms[:, None]
-        n = len(ids)
-        chunk = 1024
-        ia, ib, cs = [ids[:0]], [ids[:0]], [np.array([], "float64")]
-        for i0 in range(0, n - 1, chunk):
-            i1 = min(i0 + chunk, n)
-            S = np.round(Xn[i0:i1] @ Xn.T, 6)        # (chunk, n)
-            # strict upper triangle of this row band: j > row index
-            jgrid = np.arange(n)[None, :]
-            igrid = np.arange(i0, i1)[:, None]
-            keep = (S >= th) & (jgrid > igrid)
-            ii, jj = np.nonzero(keep)
-            ia.append(ids[ii + i0])
-            ib.append(ids[jj])
-            cs.append(S[ii, jj])
-        return pd.DataFrame({"id_a": np.concatenate(ia),
-                             "id_b": np.concatenate(ib),
-                             "cosine": np.concatenate(cs)})
+    def score(batches):
+        import pyarrow as pa
+        # NaN, infinite and zero-norm vectors are scored like Spark does
+        with np.errstate(all="ignore"):
+            return _score_blocks(pa.Table.from_batches(batches), lo, cross,
+                                 blas, chunk_cells)
 
-    return e.groupBy("blk").applyInPandas(block_pairs, out_schema)
+    return stream
+
+
+def _score_blocks(tbl, lo: float, cross: bool, blas: bool,
+                  chunk_cells: int):
+    """``(id_a, id_b, dot, nrm_a, nrm_b)`` for the pairs of the whole
+    ``blk`` runs in ``tbl`` whose cosine is not below ``lo``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    tbl = tbl.combine_chunks()
+    ids = tbl.column("id").combine_chunks()
+    blk = tbl.column("blk").to_numpy()
+    vec = tbl.column("vec").combine_chunks()
+    n = len(ids)
+    # equal ids are adjacent, so counting id changes ranks the ids in
+    # Spark's order: id_a < id_b is rank_a < rank_b
+    rank = np.zeros(n, np.int64)
+    rank[1:] = np.cumsum(pc.not_equal(ids[1:], ids[:-1])
+                         .to_numpy(zero_copy_only=False))
+    side = tbl.column("side").to_numpy() if cross else np.zeros(n, np.int8)
+    lens = pc.list_value_length(vec).to_numpy()
+    flat = pc.list_flatten(vec)
+    vals = flat.to_numpy(zero_copy_only=False)
+    starts = np.cumsum(lens) - lens
+    holed = np.zeros(n, bool)
+    holed[pc.list_parent_indices(vec).to_numpy()[
+        flat.is_null().to_numpy(zero_copy_only=False)]] = True
+    got = []
+
+    # vectors of different lengths never pair, and an empty vector has
+    # a zero norm
+    for dim in np.unique(lens[~holed & (lens > 0)]):
+        rows = np.flatnonzero(~holed & (lens == dim))
+        b = blk[rows]
+        run = np.r_[0, np.cumsum(b[1:] != b[:-1])]
+        if cross:  # each run: its a rows, then its index rows, ids sorted
+            rows = rows[np.lexsort((side[rows], run))]
+        rk, sd = rank[rows], side[rows]
+        xt = vals[starts[rows] + np.arange(dim)[:, None]]   # (dim, rows)
+        sq = np.zeros(len(rows))
+        for x in xt:
+            sq = sq + x * x
+        nrm = np.sqrt(sq)
+        xn = (xt / np.where(nrm > 0, nrm, 1.0)).T if blas else None
+        first = np.flatnonzero(np.r_[True, run[1:] != run[:-1]])
+        ends = np.r_[first[1:], len(rows)]
+        # the a rows of run r are [first, a_end); a row's partners run to
+        # the run's end, from a_end (cross) or from the next row (self)
+        if cross:
+            a_end = first + np.add.reduceat((sd == 0).astype(np.int64), first)
+        else:
+            a_end = ends - 1
+        pend, n_pend = [], 0
+        for r in np.flatnonzero((a_end > first) & (ends > a_end)):
+            s, e, a1 = first[r], ends[r], a_end[r]
+            step = max(1, chunk_cells // (e - s))
+            for c0 in range(s, a1, step):
+                ca = np.arange(c0, min(c0 + step, a1))
+                cb = np.arange(a1 if cross else c0 + 1, e)
+                ok = ((rk[ca, None] != rk[cb]) if cross
+                      else (rk[ca, None] < rk[cb]))
+                ok &= nrm[ca, None] * nrm[cb] != 0
+                if blas:
+                    g = xn[ca] @ xn[cb].T
+                    ii, jj = np.nonzero(ok & ~(g < lo))
+                    one = np.ones(len(ii))
+                    got.append((rows[ca[ii]], rows[cb[jj]], g[ii, jj],
+                                one, one))
+                    continue
+                ii, jj = np.nonzero(ok)
+                pend.append((ca[ii], cb[jj]))
+                n_pend += len(ii)
+                if n_pend >= chunk_cells:
+                    got.append(_fold_dots(pend, xt, nrm, rows, lo))
+                    pend, n_pend = [], 0
+        if pend:
+            got.append(_fold_dots(pend, xt, nrm, rows, lo))
+
+    cols = [np.concatenate([g[k] for g in got]) if got else
+            np.zeros(0, np.int64 if k < 2 else np.float64) for k in range(5)]
+    return pa.RecordBatch.from_arrays(
+        [ids.take(pa.array(cols[0])), ids.take(pa.array(cols[1]))]
+        + [pa.array(c, pa.float64()) for c in cols[2:]],
+        names=["id_a", "id_b", "dot", "nrm_a", "nrm_b"])
+
+
+def _fold_dots(pend, xt, nrm, rows, lo: float):
+    """Spark's ``aggregate(zip_with(a, b, x * y), 0.0, acc + v)`` over
+    the pending pairs, vectorized across pairs: ``acc = acc + a[d] *
+    b[d]`` in dimension order, so each dot is the same double."""
+    ia = np.concatenate([p[0] for p in pend])
+    ib = np.concatenate([p[1] for p in pend])
+    dot = np.zeros(len(ia))
+    for x in xt:
+        dot = dot + x[ia] * x[ib]
+    na, nb = nrm[ia], nrm[ib]
+    keep = ~(dot / (na * nb) < lo)
+    return rows[ia[keep]], rows[ib[keep]], dot[keep], na[keep], nb[keep]
 
 
 def cosine_near_dup_pairs(embeddings: DataFrame, threshold: float = 0.95,
@@ -323,23 +449,14 @@ def cosine_near_dup_pairs(embeddings: DataFrame, threshold: float = 0.95,
     """Embedding near-duplicate pairs within blocks: the block column
     bounds the pair space (label, LSH bucket, or IVF bucket).
 
-    ``method="catalyst"`` (default) is the pure-expression self-join
-    (:func:`_verify_pairs`) — bit-reproducible against the DuckDB oracle
-    (sequential double sums).
-    ``method="blas"`` is the scale path: ONE shuffle groups each block
-    into an Arrow task, numpy computes the normalized Gram matrix
-    (X @ X.T — BLAS, dim-vectorized) and emits only above-threshold
-    pairs; per-block work is O(n² d) in native code instead of
-    interpreted expressions, and the quadratic intermediate never
-    leaves the task.  Same pairs; cosines agree to float tolerance.
+    Each block's pairs are scored in one block stream
+    (:func:`_verify_pairs`): ``method="catalyst"`` (default) folds each
+    dot in Spark's order, bit-reproducible against the DuckDB oracle
+    (sequential double sums); ``method="blas"`` takes the block's pairs
+    from a normalized Gram product (X @ X.T, BLAS), with the same pairs
+    and cosines that agree to float tolerance.  A vector with a zero
+    norm pairs with nothing.
     """
     e = embeddings.select(F.col(id_col).alias("id"), F.col(block_col).alias("blk"),
                           F.col(vec_col).cast("array<double>").alias("vec"))
-    if method == "blas":
-        return _blas_pairs_by_block(e, threshold)
-    # the per-pair cosine is a HOF expression (interpreted, see
-    # PLANS.md): widen the probe side so a one-partition scan doesn't
-    # serialize every pair's dot product onto a single task
-    from drain3_spark.util import widen_small_scan
-    e = widen_small_scan(e)
-    return _verify_pairs(e, e, threshold, operator.lt)
+    return _verify_pairs(e, threshold, method=method)

@@ -90,33 +90,41 @@ _PREWARMED = AppScopedCache()
 
 
 def _prewarm_python_runners(spark: SparkSession) -> None:
-    """One-time per-application warm of the grouped-map and map-in-batch
-    Arrow runners (guide §4.5: heavyweight init once, not inside the
-    first operator that needs it).  The first applyInPandas /
-    mapInPandas stage of a session otherwise pays JVM Arrow-runner
-    setup plus a python-worker handshake (~1-2s at local[32]) inside
-    whatever operator happens to run first.  The grouped-map warm
-    serves the near-dup BLAS blocks of ``audio_dedup`` (``similarity``);
-    the map warm serves the audio decode family and the mining fold,
-    whose ``mapInArrow`` runs on the same map-in-batch runner.  Both
-    call ``_same`` by reference, so each warmed worker imports the
-    package and its cheap import-cache reset (``shipping``) before its
-    first engine task."""
+    """One-time per-application warm of the map-in-batch Arrow runner
+    (guide §4.5: heavyweight init once, not inside the first operator
+    that needs it).  The first mapInPandas / mapInArrow stage of a
+    session otherwise pays JVM Arrow-runner setup plus a python-worker
+    handshake (~1-2s at local[32]) inside whatever operator happens to
+    run first: the audio decode family, the mining fold and the near-dup
+    verify all run on this runner.  Each warmed worker imports the
+    package, and with it its cheap import-cache reset (``shipping``),
+    before its first engine task, and reports where it imported it from
+    (:func:`_check_worker_package`)."""
     _PREWARMED.get(spark, (), lambda: _warm_runners(spark))
 
 
-def _same(x):
-    return x
-
-
 def _warm_runners(spark: SparkSession) -> bool:
-    from pyspark.sql import functions as F
+    def package_dir(batches):
+        # a closure, so it is pickled by value: the import below is the
+        # worker's own, from the first drain3_spark on its sys.path
+        import drain3_spark
+        import pandas as pd
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"path": [os.path.dirname(
+            os.path.abspath(drain3_spark.__file__))]})
+
     try:
         n = max(min(spark.sparkContext.defaultParallelism, 32), 1)
-        df = spark.range(n * 2, numPartitions=n).select(
-            (F.col("id") % n).alias("k"), "id")
-        df.groupBy("k").applyInPandas(_same, "k long, id long").count()
-        df.mapInPandas(_same, "k long, id long").count()
+        # through a hash Exchange and a sort, as the near-dup verify and
+        # the mining fold feed their map tasks, and into an aggregate:
+        # without them the first operation pays their JVM start-up
+        # (about 2 s of first_run_s on incremental_ingest)
+        paths = {r.path for r in spark.range(n * 2, numPartitions=n)
+                 .repartition(n, "id").sortWithinPartitions("id")
+                 .mapInPandas(package_dir, "path string")
+                 .groupBy("path").count().collect()}
+        _check_worker_package(spark, paths)
     except Exception as e:
         # the warm is an optimization: the first Python stage then pays
         # the runner start-up itself
@@ -124,3 +132,21 @@ def _warm_runners(spark: SparkSession) -> bool:
                        "Python stage starts the runners", type(e).__name__, e,
                        exc_info=True)
     return True
+
+
+def _check_worker_package(spark: SparkSession, paths) -> None:
+    """Warn when a Python worker imported ``drain3_spark`` from neither
+    the shipped zip nor the driver's own package directory.  A worker
+    puts its working directory ahead of the shipped zip on ``sys.path``,
+    so a driver started from a directory that holds another checkout
+    runs that checkout's code in its workers."""
+    import drain3_spark
+    from drain3_spark.shipping import shipped_zip
+    own = os.path.dirname(os.path.abspath(drain3_spark.__file__))
+    zip_name = os.path.basename(shipped_zip(spark) or "")
+    for path in sorted(paths):
+        if path != own and os.path.basename(os.path.dirname(path)) != zip_name:
+            logger.warning("Python workers import drain3_spark from %s, not "
+                           "from the shipped package or the driver's %s: a "
+                           "drain3_spark in the workers' working directory "
+                           "shadows the shipped one", path, own)

@@ -57,7 +57,12 @@ def ship_package(spark: SparkSession) -> None:
     # life, so it is removed only when the process exits
     atexit.register(_remove, path)
     sc.addPyFile(path)
-    setattr(sc, _FLAG, True)
+    setattr(sc, _FLAG, path)
+
+
+def shipped_zip(spark: SparkSession) -> str | None:
+    """The path of the zip :func:`ship_package` registered, if any."""
+    return getattr(spark.sparkContext, _FLAG, None)
 
 
 def _remove(path: str) -> None:

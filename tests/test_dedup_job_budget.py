@@ -8,12 +8,12 @@ from drain3_spark import fixtures as FX
 from drain3_spark.pipeline import audio_sim, dedup
 from tests.test_mining_job_budget import _jobs
 
-# the parquet read's schema job; the near-dup call materializes its
-# shared embedding scope (one count: up to three jobs under adaptive
-# execution); the group table is the pair verify's two map jobs, the
-# connected-components shuffle, the one-task union-find checkpoint and
-# the collect.  The benchmark's traced operation reads the same 9.
-DEDUP_JOBS = 9
+# the parquet read's schema job; the group table is the verify's two map
+# jobs (the block Exchange fed by the embedding pass, and the slim pair
+# dedup), the connected-components shuffle, the one-task union-find
+# checkpoint and the collect.  The near-dup call itself runs no job: its
+# embedding pass has one consumer and is not persisted.
+DEDUP_JOBS = 6
 
 
 def test_dedup_job_budget(spark, tmp_path):

@@ -1,10 +1,14 @@
 """Process-global state of the engine's session helpers: the memo
 caches keep only the live application's entries, the runner prewarm
-says why it failed, and ``widen_small_scan`` passes a streaming frame
-through without hiding planning errors of a static one."""
+says why it failed and names a worker that runs another checkout, and
+``widen_small_scan`` passes a streaming frame through without hiding
+planning errors of a static one."""
 
 import logging
+import os
+import subprocess
 import sys
+import textwrap
 import threading
 import types
 
@@ -87,6 +91,39 @@ def test_prewarm_failure_names_its_exception(caplog):
     with caplog.at_level(logging.WARNING, logger="drain3_spark.session"):
         assert session._warm_runners(NoExecutors())
     assert "RuntimeError: no executors registered" in caplog.text
+
+
+def test_prewarm_accepts_the_shipped_or_own_package(spark, caplog):
+    with caplog.at_level(logging.WARNING, logger="drain3_spark.session"):
+        assert session._warm_runners(spark)
+    assert caplog.text == ""
+
+
+def test_prewarm_names_a_worker_running_another_checkout(tmp_path):
+    """A driver started from a directory that holds another
+    ``drain3_spark`` runs that one in its Python workers, which put
+    their working directory ahead of the shipped zip; the prewarm warns
+    with both paths."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    cwd = tmp_path / "cwd"
+    (cwd / "drain3_spark").mkdir(parents=True)
+    (cwd / "drain3_spark" / "__init__.py").write_text("")
+    driver = tmp_path / "driver.py"
+    driver.write_text(textwrap.dedent(f"""
+        import logging, sys
+        sys.path.insert(0, {root!r})
+        logging.basicConfig(level=logging.WARNING, stream=sys.stdout)
+        from drain3_spark.session import get_spark
+        get_spark("stub_cwd", master="local[1]").stop()
+    """))
+    out = subprocess.run([sys.executable, str(driver)], cwd=cwd,
+                         capture_output=True, text=True, timeout=300)
+    assert out.returncode == 0, out.stderr[-2000:]
+    warned = [ln for ln in out.stdout.splitlines()
+              if "workers import drain3_spark from" in ln]
+    assert len(warned) == 1, out.stdout + out.stderr[-2000:]
+    assert os.path.realpath(cwd / "drain3_spark") in warned[0]
+    assert os.path.join(root, "drain3_spark") in warned[0]
 
 
 def test_widen_small_scan_passes_a_stream_through(spark):
