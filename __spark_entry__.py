@@ -136,11 +136,11 @@ def _q6_mine_templates(spark, sf):
 
 def _q7_match_inference(spark, sf):
     from drain3_spark.config import EngineConfig
-    from drain3_spark.operators.matching import match_clusters_sql
+    from drain3_spark.operators.matching import match_clusters
     cfg = EngineConfig(mining_mode="exact", mining_salt=0)
     clips = _docs_as_clips(spark, sf)
     res = _mined(spark, sf)
-    out = match_clusters_sql(clips, res.clusters, cfg)
+    out = match_clusters(clips, res.clusters, cfg)
     return out.select("clip_id", "matched_cluster_id")
 
 
@@ -453,13 +453,13 @@ def _q28_extract_params(spark, sf):
     test_differential_extract_parameters_spark)."""
     from drain3_spark.config import EngineConfig, MaskRule
     from drain3_spark.operators.extraction import extract_params_col
-    from drain3_spark.operators.matching import match_clusters_sql
+    from drain3_spark.operators.matching import match_clusters
     from drain3_spark.operators.mining import mine_templates
     cfg = EngineConfig(mining_mode="exact", mining_salt=0,
                        masking=[MaskRule(NUM_MASK_PATTERN, "NUM")])
     clips = _events_corpus(spark, sf)
     res = mine_templates(clips, cfg)
-    matched = match_clusters_sql(clips, res.clusters, cfg)
+    matched = match_clusters(clips, res.clusters, cfg)
     params = extract_params_col(F.col("matched_template"), F.col("transcript"), cfg)
     return (matched
             .withColumn("n_params", F.size(params))
@@ -473,7 +473,7 @@ def _q26_jaccard_mining(spark, sf):
 
 def _q29_jaccard_match(spark, sf):
     """Jaccard bulk inference via the Arrow kernel match path
-    (``match_clusters``, the engine's one Jaccard inference path;
+    (``match_clusters``, the engine's one matcher;
     rows-only: set-similarity argmax, reference
     drain3/jaccard_drain.py:204-227).  Result-pinned against a
     driver-side kernel match of the same corpus by
@@ -484,8 +484,7 @@ def _q29_jaccard_match(spark, sf):
     cfg = EngineConfig(engine="jaccard")
     clips = _docs_as_clips(spark, sf)
     res = _mined(spark, sf, engine="jaccard")
-    state = [tuple(r) for r in res.clusters.collect()]
-    out = match_clusters(clips, state, cfg, strategy="always")
+    out = match_clusters(clips, res.clusters, cfg)
     return (out.groupBy("matched_cluster_id")
             .agg(F.count(F.lit(1)).alias("n_docs")))
 

@@ -266,14 +266,6 @@ class TemplateBank:
             stack.extend(node[_CHILD].values())
         return out
 
-    def clusters_by_token_count(self) -> Dict[int, List[ClusterRec]]:
-        """Live clusters under each token-count node, in tree-walk order:
-        the ``always`` candidate order, in which the first of equally
-        good candidates wins (reference drain3/drain.py:116-150)."""
-        return {n: [self.registry[cid] for cid in self._ids_for_token_count(n)
-                    if cid in self.registry]
-                for n in self.root[_CHILD]}
-
     # ------------------------------------------------------------------ train
 
     def ingest(self, content: str, order_key: str = "") -> Dict[str, object]:

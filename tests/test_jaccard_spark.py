@@ -24,35 +24,17 @@ def test_jaccard_spark_mining_and_match(spark):
     got = {r.clip_id: r.cluster_id for r in res.assignments.collect()}
     assert got["clip-0000000000"] == got["clip-0000000001"] == got["clip-0000000002"] == 1
     # jaccard group key = first token; both "session ..." lines share a group
-    state = [tuple(r) for r in res.clusters.collect()]
     probe = spark.createDataFrame(
         [("2026-08-02", "p-0", "check pass; user boris"),
          ("2026-08-02", "p-1", "session opened for user cyrus by (uid=1)"),
          ("2026-08-02", "p-2", "nothing")],
         "ds string, clip_id string, transcript string")
     m = {r.clip_id: r.matched_cluster_id
-         for r in match_clusters(probe, state, cfg, strategy="never").collect()}
+         for r in match_clusters(probe, res.clusters, cfg,
+                                 strategy="never").collect()}
     assert m["p-0"] == 1
     assert m["p-1"] == 2
     assert m["p-2"] is None
-    res.unpersist()
-
-
-def test_match_clusters_sql_rejects_jaccard_config(spark):
-    """The Catalyst matcher encodes Drain's perfect-match semantics: a
-    Jaccard config must be refused, not matched as Drain (which missed
-    even the training line ``check pass; user li Sa``)."""
-    import pytest
-
-    from drain3_spark.operators.matching import match_clusters_sql
-
-    df = spark.createDataFrame(
-        [("2026-08-01", f"clip-{i:010d}", t) for i, t in enumerate(LINES)],
-        "ds string, clip_id string, transcript string")
-    cfg = EngineConfig(engine="jaccard")
-    res = mine_templates(df, cfg)
-    with pytest.raises(ValueError, match="use match_clusters$"):
-        match_clusters_sql(df, res.clusters, cfg)
     res.unpersist()
 
 
@@ -136,7 +118,7 @@ def test_jaccard_sql_match_equals_kernel(spark):
         "ds string, clip_id string, transcript string")
 
     want = {r.clip_id: r.matched_cluster_id
-            for r in match_clusters(probe, state, cfg, strategy="always").collect()}
+            for r in match_clusters(probe, res.clusters, cfg).collect()}
     got = dict(zip((f"p-{i:04d}" for i in range(len(probes))),
                    _driver_match_always(state, cfg, probes)))
     assert got == want, {k: (got[k], want[k]) for k in got if got[k] != want[k]}

@@ -3,12 +3,12 @@
 ``mine_templates`` runs its fold as one action and finishes on the
 driver, so the cluster table it returns is a local relation and the
 counter is known when it returns: reading either launches no Spark
-job, and neither does the cluster collect inside
-``match_clusters_sql``.  Jobs are counted from the status tracker as the
-set of new job ids around each step."""
+job, and neither does building ``match_clusters`` over it (the
+cluster collect and broadcast inside).  Jobs are counted from the
+status tracker as the set of new job ids around each step."""
 
 from drain3_spark.config import EngineConfig
-from drain3_spark.operators.matching import match_clusters_sql
+from drain3_spark.operators.matching import match_clusters
 from drain3_spark.operators.mining import mine_templates
 from tests.test_mining_salted import MASKS, corpus
 
@@ -43,7 +43,7 @@ def test_mining_job_budget(spark):
     assert n == 0 and len(rows) == 4
     counter, n = _jobs(spark, mined.updated_counter)
     assert n == 0 and counter == 4
-    _, n = _jobs(spark, lambda: match_clusters_sql(df, mined.clusters, cfg))
+    _, n = _jobs(spark, lambda: match_clusters(df, mined.clusters, cfg))
     assert n == 0
     assert {r.cluster_id for r in mined.assignments.collect()} == {1, 2, 3, 4}
     mined.unpersist()

@@ -9,8 +9,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from drain3_spark.config import EngineConfig, MaskRule
-from drain3_spark.operators.mining import mine_templates
-from drain3_spark.operators.matching import match_clusters, match_clusters_sql
+from drain3_spark.operators.mining import make_bank, mine_templates
+from drain3_spark.operators.matching import match_clusters
 from drain3_spark.operators.extraction import extract_params_col
 
 SSH_LINES = [
@@ -83,26 +83,27 @@ def test_match_and_extract_spark(spark):
     train = clips_df(spark, ["sent 5 bytes to host", "sent 9 bytes to host",
                              "connection reset by peer"])
     res = mine_templates(train, cfg)
-    state = [tuple(r) for r in res.clusters.collect()]
 
     probe = clips_df(spark, ["sent 123 bytes to host", "unseen line shape zz",
                              "connection reset by peer"], ds="2026-08-02")
-    # kernel-UDF path, tree-only strategy
+    # tree-only strategy
     got = {r.clip_id: r.matched_cluster_id
-           for r in match_clusters(probe, state, cfg, strategy="never").collect()}
+           for r in match_clusters(probe, res.clusters, cfg,
+                                   strategy="never").collect()}
     assert got["clip-0000000000"] == 1
     assert got["clip-0000000001"] is None
     assert got["clip-0000000002"] == 2
 
-    # pure-SQL broadcast-join path, 'always' strategy
+    # the default 'always' scan, over a cluster frame built from rows
     from drain3_spark.operators.mining import CLUSTER_SCHEMA
+    state = [tuple(r) for r in res.clusters.collect()]
     clusters_df = spark.createDataFrame(state, CLUSTER_SCHEMA)
-    got_sql = {r.clip_id: r.matched_cluster_id
-               for r in match_clusters_sql(probe, clusters_df, cfg).collect()}
-    assert got_sql == got
+    got_always = {r.clip_id: r.matched_cluster_id
+                  for r in match_clusters(probe, clusters_df, cfg).collect()}
+    assert got_always == got
 
     # parameter extraction over the matched template
-    matched = match_clusters_sql(probe, clusters_df, cfg) \
+    matched = match_clusters(probe, clusters_df, cfg) \
         .filter(F.col("matched_template").isNotNull()) \
         .withColumn("params", extract_params_col(
             F.col("matched_template"), F.col("transcript"), cfg))
@@ -141,11 +142,12 @@ def test_unicode_whitespace_tokenize_parity(spark):
 
 
 def test_sql_match_all_strategies_equal_kernel_deep_tree(spark):
-    """The SQL ``always`` scan must equal the kernel row-for-row on a
-    DEEP tree (depth=6); the probes exercise numeric wildcard routing,
-    wildcard fallback at inner levels, tree misses, and token counts
-    absent from the bank.  The kernel's ``never`` descent must differ
-    from ``always`` on it, or the corpus would not gate the tree."""
+    """The Spark ``always`` scan must equal a driver-side kernel loop
+    row-for-row on a DEEP tree (depth=6); the probes exercise numeric
+    wildcard routing, wildcard fallback at inner levels, tree misses,
+    and token counts absent from the bank.  The ``never`` descent must
+    differ from ``always`` on it, or the corpus would not gate the
+    tree."""
     cfg = EngineConfig(depth=6, mining_salt=1)
     train = []
     for i in range(40):
@@ -170,19 +172,19 @@ def test_sql_match_all_strategies_equal_kernel_deep_tree(spark):
         "job go start",                          # tree-gated perfect match
     ]
     pdf = clips_df(spark, probe, ds="2026-08-02")
-    cluster_rows = [tuple(r) for r in res.clusters.collect()]
+    bank = make_bank(cfg, res.clusters.collect())
+    driver = [getattr(bank.match(line, "always"), "cid", None)
+              for line in probe]
 
-    def kernel(strategy):
+    def spark_match(strategy):
         return [r.matched_cluster_id for r in
-                match_clusters(pdf, cluster_rows, cfg, strategy=strategy)
+                match_clusters(pdf, res.clusters, cfg, strategy=strategy)
                 .orderBy("clip_id").collect()]
 
-    sql = [r.matched_cluster_id for r in
-           match_clusters_sql(pdf, res.clusters, cfg)
-           .orderBy("clip_id").collect()]
-    always = kernel("always")
-    assert sql == always
-    assert kernel("never") != always
+    always = spark_match("always")
+    assert always == driver
+    assert any(c is not None for c in always) and None in always
+    assert spark_match("never") != always
     res.unpersist()
 
 
@@ -191,13 +193,12 @@ def test_match_clusters_rejects_unknown_strategy(spark):
     cfg = EngineConfig(mining_salt=1)
     df = clips_df(spark, ["alpha beta gamma"])
     with pytest.raises(ValueError, match="Never"):
-        match_clusters(df, [], cfg, strategy="Never")
+        match_clusters(df, df, cfg, strategy="Never")
 
 
 def test_local_tables_plan_local_scan_without_arrow_conf(spark):
-    """``local_df`` and the candidate side of ``match_clusters_sql`` plan
-    a ``LocalTableScan``, not a Python-RDD scan, even when the session
-    leaves pandas-to-Arrow conversion off."""
+    """``local_df`` plans a ``LocalTableScan``, not a Python-RDD scan,
+    even when the session leaves pandas-to-Arrow conversion off."""
     from drain3_spark.util import local_df
 
     def plan(df):
@@ -215,13 +216,42 @@ def test_local_tables_plan_local_scan_without_arrow_conf(spark):
         assert cands.collect()[0]._cands[1].template is None
         empty = local_df(spark, [], "a long, b string")
         assert "LocalTableScan" in plan(empty) and empty.collect() == []
-
-        cfg = EngineConfig(mining_salt=1)
-        df = clips_df(spark, SSH_LINES)
-        res = mine_templates(df, cfg)
-        matched = plan(match_clusters_sql(df, res.clusters, cfg))
-        assert "LocalTableScan [_cands_tc" in matched
-        assert "ExistingRDD[_cands_tc" not in matched
-        res.unpersist()
     finally:
         spark.conf.set(key, before)
+
+
+def test_match_null_empty_and_blank_content(spark):
+    """A NULL content matches nothing and keeps both output columns
+    NULL; an empty and a whitespace-only content tokenize to no tokens
+    and take the empty-template cluster, as the kernel does."""
+    cfg = EngineConfig(mining_salt=1)
+    res = mine_templates(clips_df(spark, ["", "hello world"]), cfg)
+    rows = [("2026-08-02", "clip-0", None), ("2026-08-02", "clip-1", ""),
+            ("2026-08-02", "clip-2", " \t "),
+            ("2026-08-02", "clip-3", "hello world")]
+    probe = spark.createDataFrame(
+        rows, "ds string, clip_id string, transcript string")
+    empty_cid = {r.template: r.cluster_id
+                 for r in res.clusters.collect()}[""]
+    for strategy in ("never", "fallback", "always"):
+        got = {r.clip_id: (r.matched_cluster_id, r.matched_template)
+               for r in match_clusters(probe, res.clusters, cfg,
+                                       strategy=strategy).collect()}
+        assert got["clip-0"] == (None, None), strategy
+        assert got["clip-1"] == got["clip-2"] == (empty_cid, ""), strategy
+        assert got["clip-3"][1] == "hello world", strategy
+    res.unpersist()
+
+
+def test_match_plan_is_one_python_eval(spark):
+    """The matcher plans one Arrow Python eval node over the scan: no
+    broadcast join and no interpreted higher-order-function lambda."""
+    cfg = EngineConfig(mining_salt=1)
+    df = clips_df(spark, SSH_LINES)
+    res = mine_templates(df, cfg)
+    plan = match_clusters(df, res.clusters, cfg) \
+        ._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert "BroadcastHashJoin" not in plan, plan
+    assert "lambdafunction" not in plan, plan
+    res.unpersist()

@@ -19,8 +19,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from drain3_spark.config import EngineConfig
-from drain3_spark.operators.matching import (match_clusters,
-                                             match_clusters_sql)
+from drain3_spark.operators.matching import match_clusters
 from drain3_spark.operators.mining import mine_templates
 
 from tests.ref_compat import install_reference_shims
@@ -89,19 +88,7 @@ def test_differential_match_kernel(mined, strategy):
     for r in rows:
         m = tm.match(r["text"], full_search_strategy=strategy)
         ref_ids.append(m.cluster_id if m is not None else None)
-    cluster_rows = [tuple(r) for r in res.clusters.collect()]
-    out = (match_clusters(clips, cluster_rows, cfg, strategy=strategy)
-           .orderBy("ds", "clip_id").collect())
-    assert [o.matched_cluster_id for o in out] == ref_ids
-
-
-def test_differential_match_sql(mined):
-    rows, tm, ref, cfg, clips, res = mined
-    ref_ids = []
-    for r in rows:
-        m = tm.match(r["text"], full_search_strategy="always")
-        ref_ids.append(m.cluster_id if m is not None else None)
-    out = (match_clusters_sql(clips, res.clusters, cfg)
+    out = (match_clusters(clips, res.clusters, cfg, strategy=strategy)
            .orderBy("ds", "clip_id").collect())
     assert [o.matched_cluster_id for o in out] == ref_ids
 
@@ -139,19 +126,18 @@ def test_differential_jaccard_mining(spark):
     for r in rows:
         m = jd.match(r["text"], full_search_strategy="always")
         ref_match.append(m.cluster_id if m is not None else None)
-    state = [tuple(r) for r in res.clusters.collect()]
-    out = (match_clusters(clips, state, cfg, strategy="always")
+    out = (match_clusters(clips, res.clusters, cfg, strategy="always")
            .orderBy("ds", "clip_id").collect())
     assert [o.matched_cluster_id for o in out] == ref_match
     res.unpersist()
 
 
 def test_differential_extract_parameters_spark(spark):
-    """Spark-path parameter extraction (match_clusters_sql +
+    """Spark-path parameter extraction (match_clusters +
     extract_params_col) vs the reference's own extract_parameters
     (template_miner.py:205-249), row-for-row over the full q28
     events-derived corpus — closes the loop the kernel property tests
-    leave open: the DISTRIBUTED path (Catalyst match, Arrow extract UDF)
+    leave open: the DISTRIBUTED path (kernel match UDF, Arrow extract UDF)
     against the reference, not just the local ParamExtractor."""
     import __spark_entry__ as entry
     from drain3_spark.config import MaskRule
@@ -175,7 +161,7 @@ def test_differential_extract_parameters_spark(spark):
     cfg = EngineConfig(mining_mode="exact", mining_salt=1,
                        masking=[MaskRule(r"\d+", "NUM")])
     res = mine_templates(clips, cfg)
-    matched = match_clusters_sql(clips, res.clusters, cfg)
+    matched = match_clusters(clips, res.clusters, cfg)
     got = (matched
            .withColumn("params", extract_params_col(
                F.col("matched_template"), F.col("transcript"), cfg))
