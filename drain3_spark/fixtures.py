@@ -4,9 +4,11 @@ Everything is a pure function of the row index / clip_id (sha1-keyed),
 so any scale regenerates identically and the audio decode check can
 rebuild each clip's reference signal without a payload table.
 
-Generation is distributed: ``spark.range(n)`` → ``mapInPandas`` synth,
-so the bench tier (millions of clips) is produced by the cluster, not
-the driver.
+Generation is distributed: each generator is a row function of the
+index, run on the executors by the one synthesis loop
+(:func:`_synthesize`: ``spark.range(n)`` mapped one pandas frame per
+Arrow batch), so the bench tier (millions of clips) is produced by the
+cluster, not the driver.
 
 Dirty mode (T3) injects exactly one labeled defect into ~2% of rows and
 emits the golden ``expected_violations`` rows alongside; the drift
@@ -17,7 +19,7 @@ the KS / chi-square checks.
 from __future__ import annotations
 
 import hashlib
-from typing import Dict, Iterator, List, Optional
+from typing import Callable, Dict, Iterator, List, Optional
 
 import numpy as np
 import pandas as pd
@@ -25,8 +27,11 @@ from pyspark.sql import DataFrame, SparkSession, types as T
 
 from drain3_spark.audio.codecs import encode
 from drain3_spark.audio.synth import (CODEC_CHOICES, CODEC_WEIGHTS, SR_CHOICES,
-                                      SR_WEIGHTS, _pick, reference_pcm,
-                                      seeded_rng)
+                                      SR_WEIGHTS, _pick, melody_pcm,
+                                      reference_pcm, seeded_rng)
+from drain3_spark.audio.wav import encode_wav
+from drain3_spark.pipeline.audio_fp import FRAME_MS, HOP_MS
+from drain3_spark.pipeline.audio_sim import stft_grid
 
 # --- check names shared with the validation runner (exact-match contract) ---
 CHECK_UNIQUENESS = "uniqueness"
@@ -94,6 +99,39 @@ DEFECT_KINDS = ("dup", "missing_ref", "orphan_ref", "null_transcript",
                 "dur_bounds", "sr_domain", "corrupt_bytes", "transcript_mismatch")
 
 
+def _synthesize(spark: SparkSession, n: int,
+                rows_of: Callable[[int], List[tuple]],
+                schema: T.StructType = CLIPS_SCHEMA,
+                partitions: Optional[int] = None,
+                cap: bool = False) -> DataFrame:
+    """The one clip-synthesis loop: ``spark.range(n)`` mapped on the
+    executors, batch by batch, through ``rows_of(i)`` (the list of
+    ``schema`` tuples index ``i`` contributes), one pandas frame per
+    Arrow batch.  ``cap`` keeps at most one partition per index."""
+    from drain3_spark.shipping import ship_package
+    ship_package(spark)
+    cols = [f.name for f in schema.fields]
+
+    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for b in batches:
+            yield pd.DataFrame([r for i in b["id"] for r in rows_of(int(i))],
+                               columns=cols)
+
+    parts = partitions or max(spark.sparkContext.defaultParallelism, 8)
+    if cap:
+        parts = min(parts, max(n, 1))
+    return spark.range(0, n, numPartitions=parts).mapInPandas(synth, schema)
+
+
+def _id_fields(clip_id: str, dur_lo: int, dur_hi: int) -> tuple:
+    """``(h, sr_hz, dur_ms, codec)`` of a clip id: its sha1 hash and the
+    fields every generator derives from it."""
+    h = int.from_bytes(hashlib.sha1(clip_id.encode()).digest()[:8], "big")
+    return (h, _pick(SR_WEIGHTS, SR_CHOICES, (h >> 16) % 100),
+            dur_lo + ((h >> 8) % max(dur_hi - dur_lo, 1)),
+            _pick(CODEC_WEIGHTS, CODEC_CHOICES, (h >> 24) % 100))
+
+
 def make_transcript(h: int) -> str:
     k = (h >> 40) % 6
     if k == 0:
@@ -115,12 +153,9 @@ def row_meta(i: int, n_ds: int = 7, dur_lo: int = 200, dur_hi: int = 3000,
              dirty: bool = False, defect_rate: int = 50) -> Dict:
     """Deterministic metadata for row ``i`` (defect kind included)."""
     clip_id = f"clip-{i:010d}"
-    h = int.from_bytes(hashlib.sha1(clip_id.encode()).digest()[:8], "big")
+    h, sr, dur, codec = _id_fields(clip_id, dur_lo, dur_hi)
     ds_idx = i % n_ds
     ds = f"2026-08-{ds_idx + 1:02d}"
-    sr = _pick(SR_WEIGHTS, SR_CHOICES, (h >> 16) % 100)
-    dur = dur_lo + ((h >> 8) % max(dur_hi - dur_lo, 1))
-    codec = _pick(CODEC_WEIGHTS, CODEC_CHOICES, (h >> 24) % 100)
     transcript = make_transcript(h)
 
     drift = dirty and ds_idx == n_ds - 1
@@ -191,20 +226,9 @@ def gen_clips(spark: SparkSession, n: int, dirty: bool = False,
               n_ds: int = 7, dur_lo: int = 200, dur_hi: int = 3000,
               partitions: Optional[int] = None) -> DataFrame:
     """T1 (clean) / T3 (dirty) clips table, synthesized on executors."""
-    from drain3_spark.shipping import ship_package
-    ship_package(spark)
     kw = dict(n_ds=n_ds, dur_lo=dur_lo, dur_hi=dur_hi, dirty=dirty)
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in CLIPS_SCHEMA.fields]
-        for b in batches:
-            rows: List[tuple] = []
-            for i in b["id"]:
-                rows.extend(_synth_row(row_meta(int(i), **kw)))
-            yield pd.DataFrame(rows, columns=cols)
-
-    parts = partitions or max(spark.sparkContext.defaultParallelism, 8)
-    return spark.range(0, n, numPartitions=parts).mapInPandas(synth, CLIPS_SCHEMA)
+    return _synthesize(spark, n, lambda i: _synth_row(row_meta(i, **kw)),
+                       partitions=partitions)
 
 
 def pad_ms(m: Dict) -> tuple:
@@ -235,37 +259,26 @@ def gen_clips_wav(spark: SparkSession, n: int, n_ds: int = 7,
     row, whose CONTAINER header lies about the rate (the table column
     stays right): the planted defect the container-metadata
     consistency check must flag, and nothing else may."""
-    from drain3_spark.shipping import ship_package
-    ship_package(spark)
+    def rows(i: int) -> List[tuple]:
+        m = row_meta(i, n_ds=n_ds, dur_lo=dur_lo, dur_hi=dur_hi)
+        codec = CODEC_MATRIX[i % len(CODEC_MATRIX)]
+        pcm = reference_pcm(m["clip_id"], m["sr_hz"], m["dur_ms"])
+        if codec.startswith("wav") or codec == "flac":
+            container_sr = m["sr_hz"]
+            if i % sr_mismatch_every == 0:
+                container_sr = _SR_FLIP[m["sr_hz"]]
+            if codec == "flac":
+                payload = encode(pcm, codec, sr_hz=container_sr)
+            else:
+                inner = codec.split(":", 1)[1] if ":" in codec \
+                    else "pcm_s16le"
+                payload = encode_wav(pcm, container_sr, inner)
+        else:
+            payload = encode(pcm, codec)
+        return [(m["clip_id"], bytearray(payload), m["sr_hz"],
+                 m["dur_ms"], codec, m["transcript"], m["ds"])]
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from drain3_spark.audio.wav import encode_wav
-        cols = [f.name for f in CLIPS_SCHEMA.fields]
-        for b in batches:
-            rows: List[tuple] = []
-            for i in b["id"]:
-                i = int(i)
-                m = row_meta(i, n_ds=n_ds, dur_lo=dur_lo, dur_hi=dur_hi)
-                codec = CODEC_MATRIX[i % len(CODEC_MATRIX)]
-                pcm = reference_pcm(m["clip_id"], m["sr_hz"], m["dur_ms"])
-                if codec.startswith("wav") or codec == "flac":
-                    container_sr = m["sr_hz"]
-                    if i % sr_mismatch_every == 0:
-                        container_sr = _SR_FLIP[m["sr_hz"]]
-                    if codec == "flac":
-                        payload = encode(pcm, codec, sr_hz=container_sr)
-                    else:
-                        inner = codec.split(":", 1)[1] if ":" in codec \
-                            else "pcm_s16le"
-                        payload = encode_wav(pcm, container_sr, inner)
-                else:
-                    payload = encode(pcm, codec)
-                rows.append((m["clip_id"], bytearray(payload), m["sr_hz"],
-                             m["dur_ms"], codec, m["transcript"], m["ds"]))
-            yield pd.DataFrame(rows, columns=cols)
-
-    parts = partitions or max(spark.sparkContext.defaultParallelism, 8)
-    return spark.range(0, n, numPartitions=parts).mapInPandas(synth, CLIPS_SCHEMA)
+    return _synthesize(spark, n, rows, partitions=partitions)
 
 
 def gen_clips_padded(spark: SparkSession, n: int, n_ds: int = 7,
@@ -275,53 +288,37 @@ def gen_clips_padded(spark: SparkSession, n: int, n_ds: int = 7,
     digital silence (zeros) around the reference tone — the fixture for
     the trim → normalize → denoise transformation pipeline (q45).
     ``dur_ms`` reflects the padded length."""
-    from drain3_spark.shipping import ship_package
-    ship_package(spark)
-    kw = dict(n_ds=n_ds, dur_lo=dur_lo, dur_hi=dur_hi, dirty=False)
+    def rows(i: int) -> List[tuple]:
+        m = row_meta(i, n_ds=n_ds, dur_lo=dur_lo, dur_hi=dur_hi)
+        sr = m["sr_hz"]
+        lead_ms, tail_ms = pad_ms(m)
+        pcm = reference_pcm(m["clip_id"], sr, m["dur_ms"])
+        padded = np.concatenate([
+            np.zeros(sr * lead_ms // 1000, np.float32), pcm,
+            np.zeros(sr * tail_ms // 1000, np.float32)])
+        return [(m["clip_id"], bytearray(encode(padded, m["codec"])),
+                 sr, m["dur_ms"] + lead_ms + tail_ms, m["codec"],
+                 m["transcript"], m["ds"])]
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in CLIPS_SCHEMA.fields]
-        for b in batches:
-            rows: List[tuple] = []
-            for i in b["id"]:
-                m = row_meta(int(i), **kw)
-                sr = m["sr_hz"]
-                lead_ms, tail_ms = pad_ms(m)
-                pcm = reference_pcm(m["clip_id"], sr, m["dur_ms"])
-                padded = np.concatenate([
-                    np.zeros(sr * lead_ms // 1000, np.float32), pcm,
-                    np.zeros(sr * tail_ms // 1000, np.float32)])
-                rows.append((m["clip_id"], bytearray(encode(padded, m["codec"])),
-                             sr, m["dur_ms"] + lead_ms + tail_ms, m["codec"],
-                             m["transcript"], m["ds"]))
-            yield pd.DataFrame(rows, columns=cols)
-
-    parts = partitions or max(spark.sparkContext.defaultParallelism, 8)
-    return spark.range(0, n, numPartitions=parts).mapInPandas(synth, CLIPS_SCHEMA)
+    return _synthesize(spark, n, rows, partitions=partitions)
 
 
 def gen_transcripts_ref(spark: SparkSession, n: int, dirty: bool = False,
                         n_ds: int = 7, dur_lo: int = 200, dur_hi: int = 3000,
                         partitions: Optional[int] = None) -> DataFrame:
     """T2 reference table (missing-ref rows dropped, orphans added)."""
-    from drain3_spark.shipping import ship_package
-    ship_package(spark)
     kw = dict(n_ds=n_ds, dur_lo=dur_lo, dur_hi=dur_hi, dirty=dirty)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for i in b["id"]:
-                m = row_meta(int(i), **kw)
-                if m["defect"] == "missing_ref":
-                    continue
-                rows.append((m["clip_id"], m["transcript"]))
-                if m["defect"] == "orphan_ref":
-                    rows.append((f"orphan-{m['i']:010d}", "orphan transcript"))
-            yield pd.DataFrame(rows, columns=["clip_id", "transcript_ref"])
+    def rows(i: int) -> List[tuple]:
+        m = row_meta(i, **kw)
+        if m["defect"] == "missing_ref":
+            return []
+        out = [(m["clip_id"], m["transcript"])]
+        if m["defect"] == "orphan_ref":
+            out.append((f"orphan-{i:010d}", "orphan transcript"))
+        return out
 
-    parts = partitions or max(spark.sparkContext.defaultParallelism, 8)
-    return spark.range(0, n, numPartitions=parts).mapInPandas(gen, REF_SCHEMA)
+    return _synthesize(spark, n, rows, REF_SCHEMA, partitions)
 
 
 def gen_expected_violations(spark: SparkSession, n: int, n_ds: int = 7,
@@ -330,22 +327,13 @@ def gen_expected_violations(spark: SparkSession, n: int, n_ds: int = 7,
                             dur_bounds=(100, 5000),
                             partitions: Optional[int] = None) -> DataFrame:
     """Golden violations table for the dirty fixture (exact-match target)."""
-    from drain3_spark.shipping import ship_package
-    ship_package(spark)
     kw = dict(n_ds=n_ds, dur_lo=dur_lo, dur_hi=dur_hi, dirty=True)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in VIOLATION_SCHEMA.fields]
-        for b in batches:
-            rows = []
-            for i in b["id"]:
-                v = expected_violation(row_meta(int(i), **kw), snr_min, dur_bounds)
-                if v is not None:
-                    rows.append(v)
-            yield pd.DataFrame(rows, columns=cols)
+    def rows(i: int) -> List[tuple]:
+        v = expected_violation(row_meta(i, **kw), snr_min, dur_bounds)
+        return [] if v is None else [v]
 
-    parts = partitions or max(spark.sparkContext.defaultParallelism, 8)
-    return spark.range(0, n, numPartitions=parts).mapInPandas(gen, VIOLATION_SCHEMA)
+    return _synthesize(spark, n, rows, VIOLATION_SCHEMA, partitions)
 
 
 def dup_meta(i: int, n_ds: int = 7, dur_lo: int = 200, dur_hi: int = 3000,
@@ -379,22 +367,11 @@ def gen_clip_dups(spark: SparkSession, n: int, every: int = 10,
     amplitude ``noise_amp``, re-encoded with the base codec.  Union
     with the base corpus to get a table whose true near-dup pairs are
     exactly {(clip-i, dup-i) : i % every == 0}."""
-    from drain3_spark.shipping import ship_package
-    ship_package(spark)
     kw = dict(n_ds=n_ds, dur_lo=dur_lo, dur_hi=dur_hi,
               gain=gain, noise_amp=noise_amp)
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in CLIPS_SCHEMA.fields]
-        for b in batches:
-            rows = [_synth_dup_row(dup_meta(int(i) * every, **kw))
-                    for i in b["id"]]
-            yield pd.DataFrame(rows, columns=cols)
-
-    n_dups = (n + every - 1) // every
-    parts = partitions or max(spark.sparkContext.defaultParallelism, 8)
-    return (spark.range(0, n_dups, numPartitions=min(parts, max(n_dups, 1)))
-            .mapInPandas(synth, CLIPS_SCHEMA))
+    return _synthesize(spark, (n + every - 1) // every,
+                       lambda i: [_synth_dup_row(dup_meta(i * every, **kw))],
+                       partitions=partitions, cap=True)
 
 
 def melody_meta(i: int, n_ds: int = 7, dur_lo: int = 2000,
@@ -403,12 +380,10 @@ def melody_meta(i: int, n_ds: int = 7, dur_lo: int = 2000,
     ``mel-%010d`` — a separate namespace from the tone corpora, so
     fingerprint fixtures never collide with the near-dup ones)."""
     clip_id = f"mel-{i:010d}"
-    h = int.from_bytes(hashlib.sha1(clip_id.encode()).digest()[:8], "big")
+    h, sr, dur, codec = _id_fields(clip_id, dur_lo, dur_hi)
     return {"i": i, "clip_id": clip_id, "h": h,
             "ds": f"2026-08-{i % n_ds + 1:02d}",
-            "sr_hz": _pick(SR_WEIGHTS, SR_CHOICES, (h >> 16) % 100),
-            "dur_ms": dur_lo + ((h >> 8) % max(dur_hi - dur_lo, 1)),
-            "codec": _pick(CODEC_WEIGHTS, CODEC_CHOICES, (h >> 24) % 100)}
+            "sr_hz": sr, "dur_ms": dur, "codec": codec}
 
 
 def gen_clips_melody(spark: SparkSession, n: int, n_ds: int = 7,
@@ -418,42 +393,28 @@ def gen_clips_melody(spark: SparkSession, n: int, n_ds: int = 7,
     deterministic note SEQUENCE (:func:`drain3_spark.audio.synth
     .melody_pcm`) — time-frequency structure a constellation hash can
     discriminate on, which the stationary-tone corpora lack."""
-    from drain3_spark.audio.synth import melody_pcm
-    from drain3_spark.shipping import ship_package
-    ship_package(spark)
-    kw = dict(n_ds=n_ds, dur_lo=dur_lo, dur_hi=dur_hi)
+    def rows(i: int) -> List[tuple]:
+        m = melody_meta(i, n_ds=n_ds, dur_lo=dur_lo, dur_hi=dur_hi)
+        pcm = melody_pcm(m["clip_id"], m["sr_hz"], m["dur_ms"])
+        return [(m["clip_id"], bytearray(encode(pcm, m["codec"])),
+                 m["sr_hz"], m["dur_ms"], m["codec"], "", m["ds"])]
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in CLIPS_SCHEMA.fields]
-        for b in batches:
-            rows = []
-            for i in b["id"]:
-                m = melody_meta(int(i), **kw)
-                pcm = melody_pcm(m["clip_id"], m["sr_hz"], m["dur_ms"])
-                rows.append((m["clip_id"],
-                             bytearray(encode(pcm, m["codec"])),
-                             m["sr_hz"], m["dur_ms"], m["codec"], "",
-                             m["ds"]))
-            yield pd.DataFrame(rows, columns=cols)
-
-    parts = partitions or max(spark.sparkContext.defaultParallelism, 8)
-    return spark.range(0, n, numPartitions=parts).mapInPandas(synth,
-                                                              CLIPS_SCHEMA)
+    return _synthesize(spark, n, rows, partitions=partitions)
 
 
 def fp_query_meta(i: int, every: int = 10, snip_ms: int = 1000,
-                  frame_ms: int = 64, hop_ms: int = 32,
+                  frame_ms: int = FRAME_MS, hop_ms: int = HOP_MS,
                   n_ds: int = 7, dur_lo: int = 2000,
                   dur_hi: int = 4000) -> Dict:
     """Ground truth for excerpt query ``i``: which melody clip it was
     cut from and at which STFT frame offset.  The excerpt start is
     snapped to the base clip's hop grid, so query frame j covers
     exactly the samples of base frame ``offset_frames + j`` and the
-    match offset is EXACT (closed form for the q46 pin)."""
+    match offset is EXACT (closed form for the q46 pin).  The frame
+    and hop come from the fingerprint's own STFT grid."""
     base = melody_meta(i * every, n_ds=n_ds, dur_lo=dur_lo, dur_hi=dur_hi)
     sr = base["sr_hz"]
-    frame = max(sr * frame_ms // 1000, 2)
-    hop = max(sr * hop_ms // 1000, 1)
+    frame, hop = stft_grid(sr, frame_ms, hop_ms)
     n_base = max(sr * base["dur_ms"] // 1000, 1)
     total_frames = max((n_base - frame) // hop + 1, 1)
     snip_frames = max(snip_ms // hop_ms, 2)
@@ -469,7 +430,6 @@ def fp_query_meta(i: int, every: int = 10, snip_ms: int = 1000,
 
 def _synth_fp_query_row(m: Dict, gain: float = 0.85,
                         noise_amp: float = 0.002) -> tuple:
-    from drain3_spark.audio.synth import melody_pcm
     base = melody_pcm(m["base_clip_id"], m["sr_hz"], m["dur_ms"])
     snip = base[m["start_sample"]:m["start_sample"] + m["snip_n"]]
     rng = seeded_rng(m["h"] & 0xFFFFFFFF ^ 0xF19E1234)
@@ -490,36 +450,18 @@ def gen_fp_queries(spark: SparkSession, n: int, every: int = 10,
     truth in :func:`fp_query_meta`), plus ``n_negatives`` whole
     melodies NOT in the corpus (ids ``fpneg-%010d``) that must match
     nothing."""
-    from drain3_spark.audio.synth import melody_pcm
-    from drain3_spark.shipping import ship_package
-    ship_package(spark)
     n_pos = (n + every - 1) // every
     kw = dict(every=every, snip_ms=snip_ms, n_ds=n_ds,
               dur_lo=dur_lo, dur_hi=dur_hi)
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in CLIPS_SCHEMA.fields]
-        for b in batches:
-            rows = []
-            for i in b["id"]:
-                i = int(i)
-                if i < n_pos:
-                    rows.append(_synth_fp_query_row(fp_query_meta(i, **kw)))
-                else:
-                    j = i - n_pos
-                    cid = f"fpneg-{j:010d}"
-                    h = int.from_bytes(
-                        hashlib.sha1(cid.encode()).digest()[:8], "big")
-                    sr = _pick(SR_WEIGHTS, SR_CHOICES, (h >> 16) % 100)
-                    dur = 1000 + ((h >> 8) % 1000)
-                    codec = _pick(CODEC_WEIGHTS, CODEC_CHOICES,
-                                  (h >> 24) % 100)
-                    pcm = melody_pcm(cid, sr, dur)
-                    rows.append((cid, bytearray(encode(pcm, codec)), sr,
-                                 dur, codec, "", f"2026-08-{j % n_ds + 1:02d}"))
-            yield pd.DataFrame(rows, columns=cols)
+    def rows(i: int) -> List[tuple]:
+        if i < n_pos:
+            return [_synth_fp_query_row(fp_query_meta(i, **kw))]
+        j = i - n_pos
+        cid = f"fpneg-{j:010d}"
+        _, sr, dur, codec = _id_fields(cid, 1000, 2000)
+        return [(cid, bytearray(encode(melody_pcm(cid, sr, dur), codec)), sr,
+                 dur, codec, "", f"2026-08-{j % n_ds + 1:02d}")]
 
-    total = n_pos + n_negatives
-    parts = partitions or max(spark.sparkContext.defaultParallelism, 8)
-    return (spark.range(0, total, numPartitions=min(parts, max(total, 1)))
-            .mapInPandas(synth, CLIPS_SCHEMA))
+    return _synthesize(spark, n_pos + n_negatives, rows,
+                       partitions=partitions, cap=True)

@@ -51,12 +51,13 @@ mirrors drain3's miner/matcher split (drain3/template_miner.py:96 vs
 
 from __future__ import annotations
 
-from typing import Dict, Tuple
+from typing import Tuple
 
 import numpy as np
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from drain3_spark.audio.runner import map_clips
+from drain3_spark.pipeline.audio_sim import power_frames, usable_rate
 
 FINGERPRINT_SCHEMA = T.StructType([
     T.StructField("clip_id", T.StringType()),
@@ -71,8 +72,6 @@ FRAME_MS = 64
 HOP_MS = 32
 F_LO = 100.0
 F_HI = 3500.0
-
-_WIN_CACHE: Dict[int, np.ndarray] = {}
 
 
 def _bin_range(frame_ms: int = FRAME_MS,
@@ -161,16 +160,7 @@ def fingerprint_kernel(pcm: np.ndarray, sr: int, frame_ms: int = FRAME_MS,
     """Local (no Spark) fingerprint of one PCM buffer — the single
     source of truth the Spark operator batches; tests and value pins
     replay it directly.  Returns (hash, t_anchor) int64 arrays."""
-    frame = max(int(sr) * frame_ms // 1000, 2)
-    hop = max(int(sr) * hop_ms // 1000, 1)
-    if len(pcm) < frame:
-        pcm = np.pad(pcm, (0, frame - len(pcm)))
-    win = _WIN_CACHE.get(frame)
-    if win is None:
-        win = _WIN_CACHE[frame] = np.hanning(frame)
-    starts = np.arange(0, len(pcm) - frame + 1, hop)
-    frames = np.lib.stride_tricks.sliding_window_view(pcm, frame)[starts]
-    P = np.abs(np.fft.rfft(frames * win, axis=1)) ** 2
+    P, _ = power_frames([pcm], sr, frame_ms, hop_ms)
     k_lo, k_hi = _bin_range(frame_ms, f_lo, f_hi)
     S = np.log(P[:, k_lo:k_hi + 1] + 1e-12)
     tt, ff = _peak_list(S, t_nb, f_nb, thresh_db, per_frame)
@@ -197,10 +187,11 @@ def audio_fingerprints(clips: DataFrame, frame_ms: int = FRAME_MS,
     def extract(rows):
         ids, hs, ts = [], [], []
         for (cid, _, sr, _c), pcm in rows:
-            if pcm is None or len(pcm) == 0 or not sr:
+            sr = usable_rate(pcm, sr)
+            if not sr:
                 continue
             hashes, anchors = fingerprint_kernel(pcm.astype(np.float64),
-                                                 int(sr), **kw)
+                                                 sr, **kw)
             ids.extend([cid] * len(hashes))
             hs.append(hashes)
             ts.append(anchors)

@@ -4,7 +4,11 @@ detection, resampling, and silence trimming.
 
 All DSP is pure numpy (rFFT + mel filterbank) inside the shared
 per-clip Arrow loop (:func:`drain3_spark.audio.runner.map_clips`) — no
-media or DSP library, no per-row JVM crossing.
+media or DSP library, no per-row JVM crossing.  The spectral operators
+here and the fingerprint (:mod:`audio_fp`) share one STFT front end,
+:func:`power_frames`: one stacked rFFT per (Arrow batch, rate), with
+any log or DCT applied to the whole stack before it is sliced per clip
+(:func:`_mel_by_rate`).
 
 The near-dup operator shares the blocked-pair shape of the embedding
 dedup family (:mod:`drain3_spark.pipeline.similarity`): a spectral
@@ -32,7 +36,7 @@ Key invariances of the embedding (measured, pinned by tests):
 
 from __future__ import annotations
 
-from typing import Dict, Optional, Tuple
+from typing import Callable, Dict, List, Optional, Tuple
 
 import numpy as np
 import pandas as pd
@@ -111,48 +115,34 @@ _FB_CACHE: Dict[Tuple, np.ndarray] = {}
 _WIN_CACHE: Dict[int, np.ndarray] = {}
 
 
-def _mel_frames(pcm: np.ndarray, sr: int, frame_ms: int, hop_ms: int,
-                n_mels: int, f_lo: float, f_hi: float) -> np.ndarray:
-    """(n_frames, n_mels) mel power energies; short clips are zero-padded
-    to one frame.  Frame length fixed in ms -> fixed Hz bin grid."""
-    frame = max(int(sr) * frame_ms // 1000, 2)
-    hop = max(int(sr) * hop_ms // 1000, 1)
-    if len(pcm) < frame:
-        pcm = np.pad(pcm, (0, frame - len(pcm)))
-    key = (int(sr), frame, n_mels, float(f_lo), float(f_hi))
-    fb = _FB_CACHE.get(key)
-    if fb is None:
-        fb = _FB_CACHE[key] = mel_filterbank(sr, frame, n_mels, f_lo, f_hi)
-    win = _WIN_CACHE.get(frame)
-    if win is None:
-        win = _WIN_CACHE[frame] = np.hanning(frame)
-    starts = np.arange(0, len(pcm) - frame + 1, hop)
-    # strided frame matrix -> ONE batched rFFT over all frames
-    frames = np.lib.stride_tricks.sliding_window_view(pcm, frame)[starts] * win
-    P = np.abs(np.fft.rfft(frames, axis=1)) ** 2
-    return P @ fb.T
+# ---------------------------------------------------------- STFT front end
+
+def stft_grid(sr: int, frame_ms: int, hop_ms: int) -> Tuple[int, int]:
+    """``(frame, hop)`` in samples at rate ``sr``.  Both are fixed in
+    MILLISECONDS, so the rFFT bin grid is the same in Hz at every rate."""
+    return max(int(sr) * frame_ms // 1000, 2), max(int(sr) * hop_ms // 1000, 1)
 
 
-def _mel_frames_many(pcms, sr: int, frame_ms: int, hop_ms: int,
-                     n_mels: int, f_lo: float, f_hi: float):
-    """Batched :func:`_mel_frames` over clips sharing a sample rate:
-    every clip's frames are stacked into ONE rFFT + ONE filterbank
-    matmul (clips at the same rate share the frame width, so the stack
-    is rectangular).  Per-clip numpy call overhead dominates short
-    clips — batching moves it to one call per (Arrow batch, rate)
-    (measured 1.6x end-to-end on the 50k-clip bench corpus,
-    where scan+decode share the clock).  Returns
-    ``(E, counts)``: the concatenated (total_frames, n_mels) energies
-    and the per-clip frame counts, in input order — equal to per-clip
-    :func:`_mel_frames` to float rounding (pocketfft vectorizes across
-    transforms, so summation order depends on batch shape; pinned at
-    1e-12 by ``test_mel_frames_many_matches_single``)."""
-    frame = max(int(sr) * frame_ms // 1000, 2)
-    hop = max(int(sr) * hop_ms // 1000, 1)
-    key = (int(sr), frame, n_mels, float(f_lo), float(f_hi))
-    fb = _FB_CACHE.get(key)
-    if fb is None:
-        fb = _FB_CACHE[key] = mel_filterbank(sr, frame, n_mels, f_lo, f_hi)
+def usable_rate(pcm: Optional[np.ndarray], sr) -> int:
+    """The clip's sample rate when it decoded to samples and has one,
+    else 0.  A NULL ``sr_hz`` reaches the workers as NaN, which is
+    truthy and cannot be cast to int."""
+    if pcm is None or not len(pcm) or not sr or sr != sr:
+        return 0
+    return int(sr)
+
+
+def power_frames(pcms, sr: int, frame_ms: int,
+                 hop_ms: int) -> Tuple[np.ndarray, List[int]]:
+    """The one STFT front end: ``(P, counts)``, the Hann-windowed rFFT
+    power of every frame of every clip in ``pcms`` (clips at ONE sample
+    rate share the frame width, so the stack is rectangular) and each
+    clip's frame count, in input order.  Clips shorter than a frame are
+    zero-padded to one frame.  All frames go through ONE rFFT: per-clip
+    numpy call overhead dominates short clips, and stacking moves it to
+    one call per (Arrow batch, rate) (measured 1.6x end-to-end on the
+    50k-clip bench corpus, where scan+decode share the clock)."""
+    frame, hop = stft_grid(sr, frame_ms, hop_ms)
     win = _WIN_CACHE.get(frame)
     if win is None:
         win = _WIN_CACHE[frame] = np.hanning(frame)
@@ -165,8 +155,52 @@ def _mel_frames_many(pcms, sr: int, frame_ms: int, hop_ms: int,
             np.lib.stride_tricks.sliding_window_view(pcm, frame)[starts])
         counts.append(len(starts))
     M = np.concatenate(stacks) * win
-    P = np.abs(np.fft.rfft(M, axis=1)) ** 2
+    return np.abs(np.fft.rfft(M, axis=1)) ** 2, counts
+
+
+def _mel_frames_many(pcms, sr: int, frame_ms: int, hop_ms: int,
+                     n_mels: int, f_lo: float, f_hi: float):
+    """``(E, counts)``: the :func:`power_frames` stack of clips sharing
+    a sample rate through ONE filterbank matmul — the concatenated
+    (total_frames, n_mels) mel power energies and the per-clip frame
+    counts.  A clip's rows can differ in the last bits with the stack
+    they ride in (pocketfft vectorizes across transforms, so summation
+    order depends on batch shape; pinned at 1e-12 by
+    ``test_mel_frames_many_matches_single``)."""
+    P, counts = power_frames(pcms, sr, frame_ms, hop_ms)
+    frame = stft_grid(sr, frame_ms, hop_ms)[0]
+    key = (int(sr), frame, n_mels, float(f_lo), float(f_hi))
+    fb = _FB_CACHE.get(key)
+    if fb is None:
+        fb = _FB_CACHE[key] = mel_filterbank(sr, frame, n_mels, f_lo, f_hi)
     return P @ fb.T, counts
+
+
+def _mel_by_rate(rows, frame_ms: int, hop_ms: int, n_mels: int,
+                 f_lo: float, f_hi: float,
+                 transform: Optional[Callable] = None):
+    """Yield ``(row index, clip_id, frames)`` for every clip of a
+    decoded batch (:func:`map_clips` rows) that has samples and a rate.
+    Clips are grouped by sample rate, each group is one
+    :func:`_mel_frames_many` stack, and ``transform`` (a log, a DCT
+    matmul) runs on the WHOLE stack before it is sliced per clip: a
+    per-clip matmul changes the last bits against the stacked product.
+    Groups come in first-seen rate order, clips in input order."""
+    by_sr: Dict[int, list] = {}        # sr -> [(row_idx, cid, pcm)]
+    for j, ((cid, _, sr, _c), pcm) in enumerate(rows):
+        rate = usable_rate(pcm, sr)
+        if rate:
+            by_sr.setdefault(rate, []).append(
+                (j, cid, pcm.astype(np.float64)))
+    for sr, items in by_sr.items():
+        E, counts = _mel_frames_many([p for _, _, p in items], sr,
+                                     frame_ms, hop_ms, n_mels, f_lo, f_hi)
+        if transform is not None:
+            E = transform(E)
+        pos = 0
+        for (j, cid, _), nf in zip(items, counts):
+            yield j, cid, E[pos:pos + nf]
+            pos += nf
 
 
 def audio_embeddings(clips: DataFrame, n_mels: int = 64,
@@ -191,27 +225,17 @@ def audio_embeddings(clips: DataFrame, n_mels: int = 64,
     operators request it so their tasks chain two python workers
     (synth-like source + this extract), not three."""
     def extract(rows):
-        out = []
-        by_sr: Dict[int, list] = {}        # sr -> [(row_idx, cid, pcm)]
-        for j, ((cid, _, sr, _c), pcm) in enumerate(rows):
-            out.append((cid, 0, None, None))
-            if pcm is not None and len(pcm) and sr:
-                by_sr.setdefault(int(sr), []).append(
-                    (j, cid, pcm.astype(np.float64)))
+        rows = list(rows)
+        out = [(row[0], 0, None, None) for row, _ in rows]
         vecs = {}
-        for sr, items in by_sr.items():
-            E, counts = _mel_frames_many([p for _, _, p in items], sr,
-                                         frame_ms, hop_ms, n_mels,
-                                         f_lo, f_hi)
-            pos = 0
-            for (j, cid, _), nf in zip(items, counts):
-                v = E[pos:pos + nf].mean(axis=0)
-                pos += nf
-                nrm = float(np.linalg.norm(v))
-                if nrm > 0.0:
-                    v = v / nrm
-                vecs[j] = v
-                out[j] = (cid, nf, [float(x) for x in v], None)
+        for j, cid, E in _mel_by_rate(rows, frame_ms, hop_ms, n_mels,
+                                      f_lo, f_hi):
+            v = E.mean(axis=0)
+            nrm = float(np.linalg.norm(v))
+            if nrm > 0.0:
+                v = v / nrm
+            vecs[j] = v
+            out[j] = (cid, len(E), [float(x) for x in v], None)
         if lsh_bits is not None and vecs:
             idxs = sorted(vecs)
             B = lsh_bucket_ids(np.vstack([vecs[j] for j in idxs]),
@@ -241,23 +265,12 @@ def audio_mfcc(clips: DataFrame, n_mfcc: int = 13, n_mels: int = 26,
     dct[0] /= np.sqrt(2.0)
 
     def extract(rows):
-        out = []
-        by_sr: Dict[int, list] = {}
-        for j, ((cid, _, sr, _c), pcm) in enumerate(rows):
-            out.append((cid, 0, None))
-            if pcm is not None and len(pcm) and sr:
-                by_sr.setdefault(int(sr), []).append(
-                    (j, cid, pcm.astype(np.float64)))
-        for sr, items in by_sr.items():
-            E, counts = _mel_frames_many([p for _, _, p in items], sr,
-                                         frame_ms, hop_ms, n_mels,
-                                         f_lo, f_hi)
-            C = np.log(E + 1e-12) @ dct.T
-            pos = 0
-            for (j, cid, _), nf in zip(items, counts):
-                co = C[pos:pos + nf].mean(axis=0)
-                pos += nf
-                out[j] = (cid, nf, [float(x) for x in co])
+        rows = list(rows)
+        out = [(row[0], 0, None) for row, _ in rows]
+        for j, cid, C in _mel_by_rate(
+                rows, frame_ms, hop_ms, n_mels, f_lo, f_hi,
+                lambda E: np.log(E + 1e-12) @ dct.T):
+            out[j] = (cid, len(C), [float(x) for x in C.mean(axis=0)])
         return out
 
     return map_clips(clips, extract, AUDIO_MFCC_SCHEMA)
@@ -763,43 +776,34 @@ def spec_augment(clips: DataFrame, n_mels: int = 64, frame_ms: int = 64,
     the pipeline is REPLAYABLE: the same clip always yields the same
     augmented features, and epoch k simply passes ``seed=k``.
 
-    100-TB shape: one decode + one batched rFFT pass per clip inside
-    the same Arrow UDF (shared `_mel_frames_many` kernel), no shuffle;
+    100-TB shape: one decode per clip and one stacked rFFT per
+    (Arrow batch, rate) inside the same Arrow UDF (the shared
+    :func:`_mel_by_rate` front end), no shuffle;
     output is written straight to the feature store.  Undecodable
     payloads are dropped (the decode CHECK family owns them)."""
     def aug(rows):
         out = []
-        by_sr: Dict[int, list] = {}
-        for (cid, _, sr, _c), pcm in rows:
-            if pcm is not None and len(pcm) and sr:
-                by_sr.setdefault(int(sr), []).append(
-                    (cid, pcm.astype(np.float64)))
-        for sr, items in by_sr.items():
-            E, counts = _mel_frames_many([p for _, p in items], sr,
-                                         frame_ms, hop_ms, n_mels,
-                                         f_lo, f_hi)
-            L = np.log(E + 1e-12)
-            pos = 0
-            for (cid, _), nf in zip(items, counts):
-                M = L[pos:pos + nf].copy()
-                pos += nf
-                t_masks, f_masks = _augment_geometry(
-                    cid, seed, nf, n_mels, n_time_masks,
-                    max_time_frames, n_freq_masks, max_freq_bands)
-                # report the UNION of masked frames/bands — summing
-                # per-mask widths double-counts overlapping masks
-                # (could even exceed nf/n_mels)
-                t_hit = np.zeros(nf, dtype=bool)
-                f_hit = np.zeros(n_mels, dtype=bool)
-                for s, w in t_masks:
-                    M[s:s + w, :] = 0.0
-                    t_hit[s:s + w] = True
-                for s, w in f_masks:
-                    M[:, s:s + w] = 0.0
-                    f_hit[s:s + w] = True
-                tm, fm = int(t_hit.sum()), int(f_hit.sum())
-                out.append((cid, nf, tm, fm,
-                            [[float(x) for x in row] for row in M]))
+        for _, cid, L in _mel_by_rate(rows, frame_ms, hop_ms, n_mels,
+                                      f_lo, f_hi,
+                                      lambda E: np.log(E + 1e-12)):
+            M, nf = L.copy(), len(L)
+            t_masks, f_masks = _augment_geometry(
+                cid, seed, nf, n_mels, n_time_masks,
+                max_time_frames, n_freq_masks, max_freq_bands)
+            # report the UNION of masked frames/bands — summing
+            # per-mask widths double-counts overlapping masks
+            # (could even exceed nf/n_mels)
+            t_hit = np.zeros(nf, dtype=bool)
+            f_hit = np.zeros(n_mels, dtype=bool)
+            for s, w in t_masks:
+                M[s:s + w, :] = 0.0
+                t_hit[s:s + w] = True
+            for s, w in f_masks:
+                M[:, s:s + w] = 0.0
+                f_hit[s:s + w] = True
+            tm, fm = int(t_hit.sum()), int(f_hit.sum())
+            out.append((cid, nf, tm, fm,
+                        [[float(x) for x in row] for row in M]))
         return out
 
     return map_clips(clips, aug, SPEC_AUGMENT_SCHEMA)

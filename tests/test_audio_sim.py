@@ -12,8 +12,8 @@ from drain3_spark.pipeline import audio_sim
 
 def _embed_np(pcm, sr, n_mels=64, frame_ms=64, hop_ms=32,
               f_lo=100.0, f_hi=3500.0):
-    E = audio_sim._mel_frames(np.asarray(pcm, np.float64), sr,
-                              frame_ms, hop_ms, n_mels, f_lo, f_hi)
+    E = audio_sim._mel_frames_many([np.asarray(pcm, np.float64)], sr,
+                                   frame_ms, hop_ms, n_mels, f_lo, f_hi)[0]
     v = E.mean(axis=0)
     n = np.linalg.norm(v)
     return v / n if n else v
@@ -209,7 +209,7 @@ def test_audio_near_dup_blas_matches_catalyst(spark):
 
 
 def test_mel_frames_many_matches_single():
-    """The batched mel kernel matches the per-clip kernel to float
+    """A many-clip mel stack matches one-clip stacks to float
     rounding (pocketfft's cross-transform vectorization reorders
     additions by batch shape), across lengths incl. sub-frame clips
     needing padding."""
@@ -220,7 +220,8 @@ def test_mel_frames_many_matches_single():
                                                100.0, 3500.0)
         pos = 0
         for pcm, nf in zip(pcms, counts):
-            single = audio_sim._mel_frames(pcm, sr, 64, 32, 64, 100.0, 3500.0)
+            single = audio_sim._mel_frames_many([pcm], sr, 64, 32, 64,
+                                                100.0, 3500.0)[0]
             assert single.shape[0] == nf
             assert np.allclose(E[pos:pos + nf], single,
                                rtol=1e-12, atol=1e-12)
@@ -468,7 +469,8 @@ def test_spec_augment_matches_local_replay(spark):
     from drain3_spark.audio.codecs import decode, encode
     from drain3_spark.audio.synth import reference_pcm
     from drain3_spark.pipeline.audio_sim import (_augment_geometry,
-                                                 _mel_frames, spec_augment)
+                                                 _mel_frames_many,
+                                                 spec_augment)
 
     clips = FX.gen_clips(spark, 12, dur_lo=250, dur_hi=500, partitions=2)
     rows = {r.clip_id: r for r in spec_augment(clips, seed=17).collect()}
@@ -479,7 +481,8 @@ def test_spec_augment_matches_local_replay(spark):
         cid = m["clip_id"]
         pcm = decode(encode(reference_pcm(cid, m["sr_hz"], m["dur_ms"]),
                             m["codec"]), m["codec"]).astype(np.float64)
-        E = _mel_frames(pcm, m["sr_hz"], 64, 32, 64, 100.0, 3500.0)
+        E = _mel_frames_many([pcm], m["sr_hz"], 64, 32, 64, 100.0,
+                             3500.0)[0]
         L = np.log(E + 1e-12)
         t_masks, f_masks = _augment_geometry(cid, 17, len(L), 64, 2, 10, 2, 8)
         for s, w in t_masks:

@@ -1,5 +1,6 @@
 """Every public module-level function or class in ``drain3_spark/`` has
 a caller outside the tests, or a stated reason to exist without one.
+Every private module-level function has a caller outside the tests.
 Every field of the engine's two config dataclasses is read outside the
 tests, or has a stated reason to exist unread.
 
@@ -38,14 +39,17 @@ def _engine_modules():
                     yield path, ast.parse(f.read(), path)
 
 
-def _public_defs():
-    """name -> defining file, for every public module-level def/class."""
+def _module_defs(private=False):
+    """name -> defining file, for every public module-level def/class,
+    or with ``private`` for every private module-level function."""
+    kinds = ((ast.FunctionDef, ast.AsyncFunctionDef) if private
+             else (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
     out = {}
     for path, tree in _engine_modules():
         for node in tree.body:
-            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
-                                 ast.ClassDef)) \
-                    and not node.name.startswith("_"):
+            if isinstance(node, kinds) \
+                    and node.name.startswith("_") == private \
+                    and not node.name.startswith("__"):
                 out[node.name] = os.path.relpath(path, ROOT)
     return out
 
@@ -79,7 +83,7 @@ def _referenced_names():
 
 
 def test_every_public_name_has_a_caller_outside_tests():
-    defs = _public_defs()
+    defs = _module_defs()
     refs = _referenced_names()
     uncalled = {name: path for name, path in defs.items()
                 if name not in refs and name not in ALLOWED}
@@ -90,6 +94,17 @@ def test_every_public_name_has_a_caller_outside_tests():
     assert not stale, (
         f"allowlist entries that no longer exist or now have a caller: "
         f"{sorted(stale)}")
+
+
+def test_every_private_function_has_a_caller_outside_tests():
+    """A private helper only the tests call is test-only surface too;
+    a call from its own module counts."""
+    refs = _referenced_names()
+    uncalled = {name: path for name, path in _module_defs(private=True)
+                .items() if name not in refs}
+    assert not uncalled, (
+        f"private functions with no caller outside tests/: {uncalled}; "
+        f"delete them or give them a caller")
 
 
 def test_every_import_is_used():

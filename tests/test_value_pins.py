@@ -153,7 +153,8 @@ def test_q40_mfcc_aggregates_pin(spark):
         pcm = reference_pcm(m["clip_id"], m["sr_hz"], m["dur_ms"])
         # codec round-trip exactly as the clips table stores it
         pcm = decode(encode(pcm, m["codec"]), m["codec"]).astype(np.float64)
-        E = audio_sim._mel_frames(pcm, m["sr_hz"], 64, 32, 26, 100.0, 3500.0)
+        E = audio_sim._mel_frames_many([pcm], m["sr_hz"], 64, 32, 26,
+                                       100.0, 3500.0)[0]
         cs.append((np.log(E + 1e-12) @ dct.T).mean(axis=0))
     C = np.array(cs)
     assert abs(row.avg_c0 - round(float(C[:, 0].mean()), 2)) <= 0.01
@@ -526,7 +527,7 @@ def test_q52_spec_augment_pin(spark):
     from drain3_spark.audio.codecs import decode, encode
     from drain3_spark.audio.synth import reference_pcm
     from drain3_spark.pipeline.audio_sim import (_augment_geometry,
-                                                 _mel_frames)
+                                                 _mel_frames_many)
 
     got = {r.codec: r for r in
            entry.queries()["q52_spec_augment"](spark, SF).collect()}
@@ -538,7 +539,8 @@ def test_q52_spec_augment_pin(spark):
         pcm = decode(encode(reference_pcm(m["clip_id"], m["sr_hz"],
                                           m["dur_ms"]), m["codec"]),
                      m["codec"]).astype(np.float64)
-        E = _mel_frames(pcm, m["sr_hz"], 64, 32, 64, 100.0, 3500.0)
+        E = _mel_frames_many([pcm], m["sr_hz"], 64, 32, 64, 100.0,
+                             3500.0)[0]
         L = np.log(E + 1e-12)
         nf = len(L)
         t_masks, f_masks = _augment_geometry(m["clip_id"], 17, nf, 64,
