@@ -6,7 +6,8 @@ table of audio clip + transcript pairs:
 
 * template mining / matching / parameter extraction (reference
   ``drain3/drain.py``, ``drain3/template_miner.py``) as DataFrame
-  transformations + grouped Arrow pandas UDFs,
+  transformations + Arrow-batch Python operators (``mapInArrow``,
+  ``arrow_udf``),
 * a validation-operator family (schema, column stats, uniqueness,
   referential integrity, distribution drift, audio payload decode),
 * a checkpointed state store mirroring the reference's persistence

@@ -6,8 +6,8 @@ rebuild each clip's reference signal without a payload table.
 
 Generation is distributed: each generator is a row function of the
 index, run on the executors by the one synthesis loop
-(:func:`_synthesize`: ``spark.range(n)`` mapped one pandas frame per
-Arrow batch), so the bench tier (millions of clips) is produced by the
+(:func:`_synthesize`: ``spark.range(n)`` mapped one Arrow batch at a
+time), so the bench tier (millions of clips) is produced by the
 cluster, not the driver.
 
 Dirty mode (T3) injects exactly one labeled defect into ~2% of rows and
@@ -19,10 +19,9 @@ the KS / chi-square checks.
 from __future__ import annotations
 
 import hashlib
-from typing import Callable, Dict, Iterator, List, Optional
+from typing import Callable, Dict, List, Optional
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, types as T
 
 from drain3_spark.audio.codecs import encode
@@ -32,6 +31,7 @@ from drain3_spark.audio.synth import (CODEC_CHOICES, CODEC_WEIGHTS, SR_CHOICES,
 from drain3_spark.audio.wav import encode_wav
 from drain3_spark.pipeline.audio_fp import FRAME_MS, HOP_MS
 from drain3_spark.pipeline.audio_sim import stft_grid
+from drain3_spark.util import arrow_batch
 
 # --- check names shared with the validation runner (exact-match contract) ---
 CHECK_UNIQUENESS = "uniqueness"
@@ -106,21 +106,20 @@ def _synthesize(spark: SparkSession, n: int,
                 cap: bool = False) -> DataFrame:
     """The one clip-synthesis loop: ``spark.range(n)`` mapped on the
     executors, batch by batch, through ``rows_of(i)`` (the list of
-    ``schema`` tuples index ``i`` contributes), one pandas frame per
+    ``schema`` tuples index ``i`` contributes), one output batch per
     Arrow batch.  ``cap`` keeps at most one partition per index."""
     from drain3_spark.shipping import ship_package
     ship_package(spark)
-    cols = [f.name for f in schema.fields]
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def synth(batches):
         for b in batches:
-            yield pd.DataFrame([r for i in b["id"] for r in rows_of(int(i))],
-                               columns=cols)
+            yield arrow_batch([r for i in b.column("id").to_pylist()
+                               for r in rows_of(i)], schema)
 
     parts = partitions or max(spark.sparkContext.defaultParallelism, 8)
     if cap:
         parts = min(parts, max(n, 1))
-    return spark.range(0, n, numPartitions=parts).mapInPandas(synth, schema)
+    return spark.range(0, n, numPartitions=parts).mapInArrow(synth, schema)
 
 
 def _id_fields(clip_id: str, dur_lo: int, dur_hi: int) -> tuple:

@@ -6,25 +6,28 @@ state mutation; strategies ``never`` (tree descent only), ``fallback``
 (tree, then linear scan of same-token-count clusters), ``always``
 (linear scan).
 
-One implementation, :func:`match_clusters`: a kernel-backed Arrow
-pandas UDF for both engines and all three strategies.  The cluster
+One implementation, :func:`match_clusters`: a kernel-backed
+``arrow_udf`` for both engines and all three strategies.  The cluster
 table is a local relation, so the driver collects it without a job and
 broadcasts the rows; each task rebuilds the kernel bank once and reuses
-it across its Arrow batches.  The kernel is the one tree search, and
-its ``always`` candidate order is the reference's first-winner-on-ties
-order (drain3/drain.py:116-150).  The per-(row, candidate) perfect-match
-test and the Jaccard set similarity run as Python over the bank, not as
-interpreted Catalyst higher-order-function lambdas (PLANS.md
-"Higher-order functions vs Arrow UDFs").
+it across its Arrow batches.  The UDF returns only the matched cluster
+id; the JVM looks its template up in a literal ``cluster_id ->
+template`` map, so no template crosses back from Python.  The kernel
+is the one tree search, and its ``always`` candidate order is the
+reference's first-winner-on-ties order (drain3/drain.py:116-150).  The
+per-(row, candidate) perfect-match test and the Jaccard set similarity
+run as Python over the bank, not as interpreted Catalyst
+higher-order-function lambdas (PLANS.md "Higher-order functions vs
+Arrow UDFs").
 """
 
 from __future__ import annotations
 
 from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
 from drain3_spark.config import EngineConfig
 from drain3_spark.core.kernel import check_strategy
@@ -56,29 +59,34 @@ def match_clusters(df: DataFrame,
     bc = spark.sparkContext.broadcast([tuple(r) for r in clusters.collect()])
     extra_delims = tuple(cfg.extra_delimiters)
 
-    @pandas_udf("cid long, template string")
-    def match_udf(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+    @arrow_udf("long")
+    def match_udf(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
         from drain3_spark.core.kernel import tokenize
         from drain3_spark.operators.mining import make_bank
         bank = make_bank(cfg, bc.value)
-        for series in it:
-            cids, templates = [], []
-            for masked in series:
+        for batch in it:
+            cids = []
+            for masked in batch.to_pylist():
                 # tokenize in-UDF: the Arrow boundary moves one string
                 # per row instead of a list<string> column (the kernel
                 # tokenizer is parity-locked to the Catalyst one)
                 rec = None if masked is None else bank.match_tokens(
                     tokenize(masked, extra_delims), strategy)
                 cids.append(None if rec is None else rec.cid)
-                templates.append(None if rec is None else rec.template)
-            yield pd.DataFrame({"cid": pd.Series(cids, dtype="object"),
-                                "template": pd.Series(templates, dtype="object")})
+            yield pa.array(cids, type=pa.int64())
 
+    # each id's template as the bank restores it (a later row of an id
+    # wins, a NULL template is ""), as one SQL literal of hex UTF-8
+    templates = {int(r[0]): r[3] or "" for r in bc.value}
+    ids = ", ".join(f"{c}L" for c in templates)
+    hexes = ", ".join(f"X'{t.encode().hex()}'" for t in templates.values())
+    template_of = F.expr(f"CAST(map_from_arrays(array({ids}), array({hexes}))"
+                         " AS MAP<BIGINT, STRING>)")
     masked = mask_col(F.col(content_col), cfg.masking, cfg.mask_prefix, cfg.mask_suffix)
-    return (df.withColumn("_match", match_udf(masked))
-            .withColumn("matched_cluster_id", F.col("_match.cid"))
-            .withColumn("matched_template", F.col("_match.template"))
-            .drop("_match"))
+    return (df.withColumn("matched_cluster_id", match_udf(masked))
+            .withColumn("matched_template",
+                        F.try_element_at(template_of,
+                                         F.col("matched_cluster_id"))))
 
 
 # perfbench (frozen with the benchmark) calls and wraps the matcher by

@@ -43,14 +43,13 @@ from dataclasses import dataclass
 from typing import List, Optional, Sequence
 
 from pyspark.sql import DataFrame, functions as F, types as T
-from pyspark.sql.pandas.types import to_arrow_schema
 
 logger = logging.getLogger(__name__)
 
 from drain3_spark.config import EngineConfig
 from drain3_spark.core.kernel import ClusterRec, TemplateBank
 from drain3_spark.operators.masking import mask_col
-from drain3_spark.util import AppScopedCache, local_df
+from drain3_spark.util import AppScopedCache, arrow_batch, local_df
 from drain3_spark.operators.tokenize import group_key_cols, tokens_col
 
 KEY_SEP = "\x1f"
@@ -258,11 +257,8 @@ def mine_templates(df: DataFrame,
     bank_max_clusters = None if salted else cfg.max_clusters
     extra_delims = tuple(cfg.extra_delimiters)
     out_schema = _fold_schema(df, order_cols)
-    arrow_schema = to_arrow_schema(out_schema)
 
     def fold_partition(batches):
-        import pyarrow as pa
-
         # tokenize in-task from the masked string (kernel.tokenize is
         # parity-locked to the Catalyst tokenizer): the shuffle moved
         # one string per row instead of a list<string> column
@@ -271,22 +267,12 @@ def mine_templates(df: DataFrame,
         prior_by_group: dict = {}
         for r in bc_prior.value:
             prior_by_group.setdefault(r[1], []).append(r)
-        out = {name: [] for name in out_schema.names}
+        out = []   # rows in out_schema order
 
         def emit(kind, ovals, ckey, cref, change, size, template, token_count,
                  updated_key, routing=""):
-            out["row_kind"].append(kind)
-            for c, v in zip(order_cols, ovals):
-                out[c].append(v)
-            out["ckey"].append(ckey)
-            out["cluster_ref"].append(cref)
-            out["change_type"].append(change)
-            out["size"].append(size)
-            out["template"].append(template)
-            out["group_key"].append(group_key)
-            out["token_count"].append(token_count)
-            out["updated_key"].append(updated_key)
-            out["routing"].append(routing)
+            out.append((kind, *ovals, ckey, cref, change, size, template,
+                        group_key, token_count, updated_key, routing))
 
         def ref_of(rec: ClusterRec) -> str:
             return f"g:{rec.cid}" if rec.cid in prior_ids else f"n:{rec.created_key}"
@@ -298,11 +284,8 @@ def mine_templates(df: DataFrame,
                      rec.updated_key, " ".join(rec.routing))
 
         def flush():
-            batch = pa.RecordBatch.from_arrays(
-                [pa.array(out[f.name], type=f.type) for f in arrow_schema],
-                schema=arrow_schema)
-            for col in out.values():
-                col.clear()
+            batch = arrow_batch(out, out_schema)
+            out.clear()
             return batch
 
         # Exact-repeat fast path (drain engine): an ingest whose
@@ -360,7 +343,7 @@ def mine_templates(df: DataFrame,
                 emit("a", [col[i] for col in ovals_cols], ckeys[i], ref_of(rec),
                      r["change_type"], int(r["cluster_size"]),
                      r["template_mined"], group_token_count, ckeys[i])
-            if out["row_kind"]:
+            if out:
                 yield flush()
         if bank is not None:
             emit_bank()

@@ -39,7 +39,7 @@ from __future__ import annotations
 from typing import Callable, Dict, List, Optional, Tuple
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from drain3_spark.audio.codecs import encode
@@ -51,8 +51,8 @@ AUDIO_EMBEDDING_SCHEMA = T.StructType([
     T.StructField("embedding", T.ArrayType(T.DoubleType())),
     # random-hyperplane LSH bucket keys, computed INSIDE the same
     # extract UDF when lsh_bits is given (one matmul per Arrow batch) —
-    # a separate bucket-assignment pandas_udf would chain a THIRD python
-    # worker behind synth+embed in every task (each mapInPandas layer
+    # a separate bucket-assignment arrow_udf would chain a THIRD python
+    # worker behind synth+embed in every task (each mapInArrow layer
     # leases its own worker; measured ~3x task overhead on small tiers)
     T.StructField("buckets", T.ArrayType(T.LongType())),
 ])
@@ -125,9 +125,8 @@ def stft_grid(sr: int, frame_ms: int, hop_ms: int) -> Tuple[int, int]:
 
 def usable_rate(pcm: Optional[np.ndarray], sr) -> int:
     """The clip's sample rate when it decoded to samples and has one,
-    else 0.  A NULL ``sr_hz`` reaches the workers as NaN, which is
-    truthy and cannot be cast to int."""
-    if pcm is None or not len(pcm) or not sr or sr != sr:
+    else 0 (a clip with a NULL ``sr_hz`` is never decoded)."""
+    if pcm is None or not len(pcm) or not sr:
         return 0
     return int(sr)
 
@@ -329,13 +328,14 @@ def audio_lsh_buckets(emb: DataFrame, lsh_bits: int = 16,
     random-hyperplane keys per clip) to an :func:`audio_embeddings`
     output.  Vectorized: one Arrow batch → one matmul over the stacked
     embedding matrix; no per-row Python."""
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def buckets_udf(col: pd.Series) -> pd.Series:
+    @F.arrow_udf(T.ArrayType(T.LongType()))
+    def buckets_udf(col: pa.Array) -> pa.Array:
         if len(col) == 0:
-            return pd.Series([], dtype=object)
-        E = np.vstack([np.asarray(v, dtype=np.float64) for v in col])
+            return pa.array([], type=pa.list_(pa.int64()))
+        E = np.vstack([np.asarray(v, dtype=np.float64)
+                       for v in col.to_pylist()])
         B = lsh_bucket_ids(E, lsh_bits, lsh_bands, lsh_seed)
-        return pd.Series([row.tolist() for row in B])
+        return pa.array(list(B), type=pa.list_(pa.int64()))
 
     return emb.withColumn("buckets", buckets_udf(F.col("embedding")))
 
@@ -553,7 +553,7 @@ def resample_clips(clips: DataFrame, target_sr: int,
 
     def rs(rows):
         for (cid, payload, sr, dur, codec), pcm in rows:
-            if int(sr) == tsr:
+            if sr == tsr:
                 yield (cid, payload, int(sr), int(dur), codec)
                 continue
             if pcm is None:
@@ -570,7 +570,7 @@ def resample_clips(clips: DataFrame, target_sr: int,
                    int(round(len(y) * 1000.0 / tsr)), codec)
 
     return map_clips(clips, rs, RESAMPLED_SCHEMA, PAYLOAD_COLS,
-                     decode_if=lambda row: int(row[2]) != tsr)
+                     decode_if=lambda row: row[2] != tsr)
 
 
 def _wiener_denoise(pcm: np.ndarray, sr: int, frame_ms: int = 32,

@@ -469,18 +469,20 @@ def lsh_incremental_duplicates(new_df: DataFrame, corpus_df: DataFrame,
 
 # ------------------------------------------------- connected components
 
-def _min_label_components(batches):
-    """``mapInPandas`` body of :func:`connected_components`: every
+def _min_label_components(batches, schema):
+    """``mapInArrow`` body of :func:`connected_components`: every
     ``(u, v)`` edge batch of the single partition in, one
-    ``(id, group_id)`` frame out."""
+    ``(id, group_id)`` batch of ``schema`` out."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+    from drain3_spark.util import arrow_batch
 
-    frames = [b for b in batches if len(b)]
-    if not frames:
+    batches = [b for b in batches if b.num_rows]
+    if not batches:
         return
-    u = np.concatenate([f["u"].to_numpy() for f in frames])
-    v = np.concatenate([f["v"].to_numpy() for f in frames])
+    edges = pa.Table.from_batches(batches)
+    u = edges.column("u").to_numpy()
+    v = edges.column("v").to_numpy()
     # sorted codes: code order is id order for longs and for strings
     # (UTF-8 byte order, Spark's string order, is code-point order)
     ids, codes = np.unique(np.concatenate([u, v]), return_inverse=True)
@@ -499,7 +501,7 @@ def _min_label_components(batches):
             if np.array_equal(jumped, label):
                 break
             label = jumped
-    yield pd.DataFrame({"id": ids, "group_id": ids[label]})
+    yield arrow_batch({"id": ids, "group_id": ids[label]}, schema)
 
 
 def connected_components(pairs: DataFrame, id_a: str = "id_a",
@@ -517,7 +519,7 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
 
     Algorithm: one Spark pass.  The pairs are projected to ``(u, v)``
     and shuffled into ONE partition (a shuffle, so the caller's
-    pair-finding stages keep their parallelism); one ``mapInPandas``
+    pair-finding stages keep their parallelism); one ``mapInArrow``
     task factorizes the ids with ``np.unique`` and runs an exact
     union-find in numpy — hook every edge's larger root under the
     smaller label, pointer-jump to a fixpoint, repeat until no edge
@@ -565,7 +567,7 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     labels = (pairs.select(ua.alias("u"), ub.alias("v"))
               .dropna()
               .repartition(1)
-              .mapInPandas(_min_label_components, schema)
+              .mapInArrow(lambda b: _min_label_components(b, schema), schema)
               .localCheckpoint(eager=True))
     if stats is not None:
         stats.update(iterations=1, converged=True,

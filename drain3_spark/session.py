@@ -21,7 +21,8 @@ def get_spark(app_name: str = "drain3_spark",
     AQE handles runtime partition coalescing and skew-join splitting
     (the distributed analog of the reference's max_children hot-key
     collapsing, drain3/drain.py:364-382); Arrow is the mandatory
-    Python boundary (vectorized pandas UDFs only, no per-row Python).
+    Python boundary: every Python operator is a ``mapInArrow`` map or
+    an ``arrow_udf`` over whole Arrow batches, never a per-row UDF.
     """
     master = master or os.environ.get("SPARK_MASTER", "local[*]")
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
@@ -90,15 +91,16 @@ _PREWARMED = AppScopedCache()
 
 
 def _prewarm_python_runners(spark: SparkSession) -> None:
-    """One-time per-application warm of the map-in-batch Arrow runner
+    """One-time per-application warm of the ``mapInArrow`` runner
     (guide §4.5: heavyweight init once, not inside the first operator
-    that needs it).  The first mapInPandas / mapInArrow stage of a
-    session otherwise pays JVM Arrow-runner setup plus a python-worker
+    that needs it).  The first ``mapInArrow`` stage of a session
+    otherwise pays JVM Arrow-runner setup plus a python-worker
     handshake (~1-2s at local[32]) inside whatever operator happens to
-    run first: the audio decode family, the mining fold and the near-dup
-    verify all run on this runner.  Each warmed worker imports the
-    package, and with it its cheap import-cache reset (``shipping``),
-    before its first engine task, and reports where it imported it from
+    run first: the audio operators, the fixture generators, the mining
+    fold, the near-dup verify and connected components all run on this
+    runner.  Each warmed worker imports the package, and with it its
+    cheap import-cache reset (``shipping``), before its first engine
+    task, and reports where it imported it from
     (:func:`_check_worker_package`)."""
     _PREWARMED.get(spark, (), lambda: _warm_runners(spark))
 
@@ -106,12 +108,13 @@ def _prewarm_python_runners(spark: SparkSession) -> None:
 def _warm_runners(spark: SparkSession) -> bool:
     def package_dir(batches):
         # a closure, so it is pickled by value: the import below is the
-        # worker's own, from the first drain3_spark on its sys.path
+        # worker's own, from the first drain3_spark on its sys.path, so
+        # the batch is built without it (it may be another checkout)
         import drain3_spark
-        import pandas as pd
+        import pyarrow as pa
         for _ in batches:
             pass
-        yield pd.DataFrame({"path": [os.path.dirname(
+        yield pa.RecordBatch.from_pydict({"path": [os.path.dirname(
             os.path.abspath(drain3_spark.__file__))]})
 
     try:
@@ -122,7 +125,7 @@ def _warm_runners(spark: SparkSession) -> bool:
         # (about 2 s of first_run_s on incremental_ingest)
         paths = {r.path for r in spark.range(n * 2, numPartitions=n)
                  .repartition(n, "id").sortWithinPartitions("id")
-                 .mapInPandas(package_dir, "path string")
+                 .mapInArrow(package_dir, "path string")
                  .groupBy("path").count().collect()}
         _check_worker_package(spark, paths)
     except Exception as e:

@@ -10,6 +10,24 @@ from pyspark.sql import DataFrame, SparkSession, types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 
+def arrow_batch(data, schema: T.StructType) -> pa.RecordBatch:
+    """The one builder of every batch the engine hands to Arrow: ``data``
+    is row tuples in ``schema`` order or a dict of columns (lists or
+    numpy arrays) by field name.  ``None`` is NULL and a NaN stays NaN.
+    An integer column is built from its values' own type and cast
+    safely, so a fractional float in it raises instead of truncating."""
+    # naive datetimes are read as UTC instants
+    schema = to_arrow_schema(schema)
+    if isinstance(data, dict):
+        cols = [data[f.name] for f in schema]
+    else:
+        cols = list(zip(*data)) or [()] * len(schema)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(col).cast(f.type) if pa.types.is_integer(f.type)
+         else pa.array(col, type=f.type) for col, f in zip(cols, schema)],
+        schema=schema)
+
+
 def local_df(spark: SparkSession, rows: Sequence[tuple],
              schema: Union[str, T.StructType]) -> DataFrame:
     """Arrow-backed small DataFrame from driver-side rows.
@@ -28,13 +46,8 @@ def local_df(spark: SparkSession, rows: Sequence[tuple],
     """
     if isinstance(schema, str):
         schema = T._parse_datatype_string(schema)
-    # naive datetimes are read as UTC instants
-    arrow_schema = to_arrow_schema(schema)
-    cols = list(zip(*rows)) or [()] * len(arrow_schema)
-    table = pa.Table.from_arrays(
-        [pa.array(col, type=f.type) for col, f in zip(cols, arrow_schema)],
-        schema=arrow_schema)
-    return spark.createDataFrame(table, schema=schema)
+    return spark.createDataFrame(
+        pa.Table.from_batches([arrow_batch(rows, schema)]), schema=schema)
 
 
 def widen_small_scan(df: DataFrame) -> DataFrame:
@@ -85,22 +98,3 @@ class AppScopedCache:
             if full not in self.entries:
                 self.entries[full] = make()
             return self.entries[full]
-
-
-def carry_schema(base: "T.StructType", df: "DataFrame",
-                 carry) -> "T.StructType":
-    """Output schema for a per-clip stats operator that passes input
-    columns through (``carry``): the base schema plus each carried
-    column's StructField copied from the input — so a ds/codec-keyed
-    rollup never re-joins the corpus on clip_id (a second full scan
-    plus a corpus-sized shuffle at 10^12 rows).  Rejects carried names
-    that collide with the operator's own output columns."""
-    from pyspark.sql import types as T
-    taken = {f.name for f in base.fields}
-    fields = list(base.fields)
-    for c in carry:
-        if c in taken:
-            raise ValueError(f"carry column collides with output: {c!r}")
-        fields.append(df.schema[c])
-        taken.add(c)
-    return T.StructType(fields)

@@ -67,9 +67,10 @@ INF = float("inf")
 # operator -> {case: outcome}.  A tuple is the one output row (a list
 # of tuples: several rows), with payloads shown as "=payload" (the
 # input bytes unchanged) or "bytes[n]", arrays as "list[n]" and floats
-# rounded to 6 places; NULL sr_hz reaches the workers as NaN, which
-# most operators cannot cast to int, so their task fails ("error");
-# the STFT operators read it as "no rate", like an undecodable payload
+# rounded to 6 places.  A row with a NULL sr_hz reaches the workers
+# undecoded (pcm None), so every operator gives it its
+# undecodable-payload outcome; resample_clips_same_sr drops it like
+# any undecodable clip whose rate differs from the target
 EXPECTED = {
     "audio_and_container_violations": {
         "flac": [
@@ -105,7 +106,7 @@ EXPECTED = {
         "flac": ("flac", 0, 0.0, 0.0, 0.0, 0),
         "g711": ("g711", 0, 0.0, 0.0, 0.0, 0),
         "law": ("law", 0, 0.0, 0.0, 0.0, 0),
-        "nullsr": ("nullsr", 8000, None, 0.353553, 0.500015, 439),
+        "nullsr": ("nullsr", 0, 0.0, 0.0, 0.0, 0),
         "pcm": ("pcm", 0, 0.0, 0.0, 0.0, 0),
         "wav": ("wav", 0, 0.0, 0.0, 0.0, 0),
     },
@@ -129,7 +130,7 @@ EXPECTED = {
         "flac": ("flac", 0, None, None, None, None, None, None, 0.0),
         "g711": ("g711", 0, None, None, None, None, None, None, 0.0),
         "law": ("law", 0, None, None, None, None, None, None, 0.0),
-        "nullsr": E,
+        "nullsr": ("nullsr", 0, None, None, None, None, None, None, 0.0),
         "pcm": ("pcm", 0, None, None, None, None, None, None, 0.0),
         "wav": ("wav", 0, None, None, None, None, None, None, 0.0),
     },
@@ -137,7 +138,7 @@ EXPECTED = {
         "flac": ("flac", 0, None, None, None, None, None, None),
         "g711": ("g711", 0, None, None, None, None, None, None),
         "law": ("law", 0, None, None, None, None, None, None),
-        "nullsr": E,
+        "nullsr": ("nullsr", 0, None, None, None, None, None, None),
         "pcm": ("pcm", 0, None, None, None, None, None, None),
         "wav": ("wav", 0, None, None, None, None, None, None),
     },
@@ -153,7 +154,7 @@ EXPECTED = {
         "flac": D,
         "g711": ("g711", "=payload", 16000, 500, "g711_mulaw"),
         "law": D,
-        "nullsr": E,
+        "nullsr": D,
         "pcm": D,
         "wav": D,
     },
@@ -161,7 +162,7 @@ EXPECTED = {
         "flac": ("flac", 0, None, None, 0, 0, None, None, "d1"),
         "g711": ("g711", 0, None, None, 0, 0, None, None, "d1"),
         "law": ("law", 0, None, None, 0, 0, None, None, "d1"),
-        "nullsr": E,
+        "nullsr": ("nullsr", 0, None, None, 0, 0, None, None, "d1"),
         "pcm": ("pcm", 0, None, None, 0, 0, None, None, "d1"),
         "wav": ("wav", 0, None, None, 0, 0, None, None, "d1"),
     },
@@ -169,7 +170,7 @@ EXPECTED = {
         "flac": D,
         "g711": ("g711", "=payload", 16000, 500, "g711_mulaw", 0.0, 0.0),
         "law": D,
-        "nullsr": E,
+        "nullsr": D,
         "pcm": D,
         "wav": D,
     },
@@ -177,7 +178,7 @@ EXPECTED = {
         "flac": ("flac", 0, 0.0, None, None, None, "d1"),
         "g711": ("g711", 0, 0.0, None, None, None, "d1"),
         "law": ("law", 0, 0.0, None, None, None, "d1"),
-        "nullsr": E,
+        "nullsr": ("nullsr", 0, 0.0, None, None, None, "d1"),
         "pcm": ("pcm", 0, 0.0, None, None, None, "d1"),
         "wav": ("wav", 0, 0.0, None, None, None, "d1"),
     },
@@ -185,7 +186,7 @@ EXPECTED = {
         "flac": D,
         "g711": E,
         "law": D,
-        "nullsr": E,
+        "nullsr": D,
         "pcm": D,
         "wav": D,
     },
@@ -193,7 +194,7 @@ EXPECTED = {
         "flac": ("flac", "=payload", 16000, 500, "flac"),
         "g711": ("g711", "=payload", 16000, 500, "g711_mulaw"),
         "law": ("law", None, 16000, 500, "alaw"),
-        "nullsr": E,
+        "nullsr": D,
         "pcm": ("pcm", "=payload", 16000, 500, "pcm_s16le"),
         "wav": ("wav", "=payload", 16000, 500, "wav"),
     },
@@ -201,7 +202,7 @@ EXPECTED = {
         "flac": D,
         "g711": D,
         "law": D,
-        "nullsr": E,
+        "nullsr": D,
         "pcm": D,
         "wav": D,
     },
@@ -217,7 +218,7 @@ EXPECTED = {
         "flac": ("flac", 500, None, None, 0.0, "d1"),
         "g711": ("g711", 500, 0, 0, 0.0, "d1"),
         "law": ("law", 500, None, None, 0.0, "d1"),
-        "nullsr": E,
+        "nullsr": ("nullsr", 500, None, None, 0.0, "d1"),
         "pcm": ("pcm", 500, None, None, 0.0, "d1"),
         "wav": ("wav", 500, None, None, 0.0, "d1"),
     },
@@ -225,7 +226,7 @@ EXPECTED = {
         "flac": D,
         "g711": ("g711", "=payload", 16000, 0, "g711_mulaw", 0, 0),
         "law": D,
-        "nullsr": E,
+        "nullsr": D,
         "pcm": D,
         "wav": D,
     },

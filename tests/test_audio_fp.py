@@ -33,7 +33,7 @@ def test_fingerprint_kernel_deterministic_and_packed():
 
 
 def test_fingerprint_spark_matches_kernel(spark):
-    """The mapInPandas pass emits exactly the kernel's rows, clip by
+    """The mapInArrow pass emits exactly the kernel's rows, clip by
     clip (decode included)."""
     n = 12
     fps = (audio_fingerprints(FX.gen_clips_melody(spark, n))

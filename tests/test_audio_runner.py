@@ -1,6 +1,7 @@
 """Guard for the one per-clip audio loop: payload decode happens only in
 :func:`drain3_spark.audio.runner.map_clips`, and no audio operator
-hand-rolls its own ``ship_package`` + ``mapInPandas`` loop again."""
+hand-rolls its own ``ship_package`` + ``mapInArrow`` (or
+``mapInPandas``) loop again."""
 
 import ast
 import pathlib
@@ -40,14 +41,15 @@ def _decode_calls(tree):
 
 
 def _loop_calls(tree):
-    """``ship_package(...)`` and ``.mapInPandas(...)`` calls."""
+    """``ship_package(...)``, ``.mapInArrow(...)`` and ``.mapInPandas(...)``
+    calls."""
     out = []
     for node in ast.walk(tree):
         if isinstance(node, ast.Call):
             f = node.func
             name = f.attr if isinstance(f, ast.Attribute) else getattr(
                 f, "id", None)
-            if name in ("ship_package", "mapInPandas"):
+            if name in ("ship_package", "mapInArrow", "mapInPandas"):
                 out.append(name)
     return out
 

@@ -5,6 +5,8 @@ The reference SSH corpus (tests/test_drain.py:29-58) is stored as
 change types, and cluster ids must match the reference expectations.
 """
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -244,14 +246,16 @@ def test_match_null_empty_and_blank_content(spark):
 
 
 def test_match_plan_is_one_python_eval(spark):
-    """The matcher plans one Arrow Python eval node over the scan: no
-    broadcast join and no interpreted higher-order-function lambda."""
+    """The matcher plans one Arrow Python eval node over the scan, which
+    returns the cluster id only (a long): no broadcast join and no
+    interpreted higher-order-function lambda."""
     cfg = EngineConfig(mining_salt=1)
     df = clips_df(spark, SSH_LINES)
     res = mine_templates(df, cfg)
     plan = match_clusters(df, res.clusters, cfg) \
         ._jdf.queryExecution().executedPlan().toString()
     assert plan.count("ArrowEvalPython") == 1, plan
+    assert re.search(r"ArrowEvalPython \[match_udf\([^]]*\)#\d+L\]", plan), plan
     assert "BroadcastHashJoin" not in plan, plan
     assert "lambdafunction" not in plan, plan
     res.unpersist()
